@@ -56,7 +56,7 @@ FORMAT_NAME = "table_snapshots"
 def _manifest_entries(location: str, snap: Snapshot) -> list[DataFileEntry]:
     from ..table.metadata import read_manifest_tree
 
-    return read_manifest_tree(location, snap.manifest_path)
+    return read_manifest_tree(location, snap)
 
 
 def _lineage(md: TableMetadata, from_id: int | None, to_id: int | None) -> list[Snapshot]:

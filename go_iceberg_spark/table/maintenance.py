@@ -106,12 +106,10 @@ def expire_snapshots(table, *, older_than: dt.datetime | int | None = None,
         snapshots; the kept/doomed set difference below keeps reused ones
         alive). In dual mode a snapshot owns a parquet tree (manifest_path)
         AND an avro tree (avro_manifest_path)."""
-        from .metadata import MANIFEST_LIST_SUFFIX, read_manifest_list
+        from .metadata import manifest_members
 
         paths = {s.manifest_path}
-        avro_list = s.avro_manifest_path or (
-            s.manifest_path if s.manifest_path.endswith(".avro") else None
-        )
+        avro_list = s.avro_list
         if avro_list is not None:
             from .manifest_avro import member_manifest_paths
 
@@ -122,10 +120,9 @@ def expire_snapshots(table, *, older_than: dt.datetime | int | None = None,
             else:
                 warnings.warn(f"avro manifest list missing for snapshot "
                               f"{s.snapshot_id}: {avro_list}")
-        if s.manifest_path.endswith(MANIFEST_LIST_SUFFIX):
-            lp = os.path.join(table.location, s.manifest_path)
-            if table.io.exists(lp):
-                paths |= {m["path"] for m in read_manifest_list(lp, table._mio)}
+        if s.manifest_path != avro_list:  # not Avro-only: parquet members too
+            if table.io.exists(os.path.join(table.location, s.manifest_path)):
+                paths |= {m["path"] for m in manifest_members(table.location, s, table._mio)}
             else:
                 # list already gone (partial earlier expire): members can't be
                 # enumerated here — the metadata-dir sweep below reclaims them
@@ -625,29 +622,23 @@ def manifests_df(table) -> DataFrame:
         T.StructField("length", T.LongType()),
         T.StructField("added_data_files_count", T.LongType()),
         T.StructField("added_delete_files_count", T.LongType()),
-        T.StructField("bounds", T.StringType()),  # r7 manifest-list bounds
+        T.StructField("bounds", T.StringType()),  # the manifest list's member bounds
     ])
     snap = table.current_snapshot()
     rows = []
     if snap is not None:
-        from .metadata import MANIFEST_LIST_SUFFIX
+        from .metadata import manifest_members
 
-        bounds_by_rel = {}
-        if snap.manifest_path.endswith(MANIFEST_LIST_SUFFIX):
-            from .metadata import read_manifest_list
-
-            members = read_manifest_list(
-                _os.path.join(table.location, snap.manifest_path), table._mio)
-            bounds_by_rel = {m["path"]: m.get("bounds") for m in members}
-            groups = table._manifest_members(snap)
+        members = manifest_members(table.location, snap, table._mio)
+        if members is None:
+            groups = [(snap.manifest_path, table.manifest_entries(snap), None)]
         else:
-            groups = [(snap.manifest_path, table.manifest_entries(snap))]
-        for rel, entries in groups:
-            full = _os.path.join(table.location, rel)
+            groups = [(m["path"], table._member_entries(m["path"]), m.get("bounds"))
+                      for m in members]
+        for rel, entries, bounds in groups:
             n_data = sum(1 for e in entries if e.content == 0)
-            n_del = sum(1 for e in entries if e.content != 0)
-            rows.append((rel, _os.path.getsize(full) if _os.path.exists(full) else 0,
-                         n_data, n_del, bounds_by_rel.get(rel)))
+            rows.append((rel, table.io.size(_os.path.join(table.location, rel)),
+                         n_data, len(entries) - n_data, bounds))
     return table.spark.createDataFrame(rows, schema)
 
 

@@ -9,12 +9,15 @@ Spark-first storage design:
   by atomic exclusive-create, giving the same optimistic concurrency the
   reference gets from REST assert-ref-snapshot-id requirements
   (reference: table/table.go:163-176, catalog/rest.go:425-445);
-- each snapshot points at ONE manifest parquet file listing every live data /
-  delete file with full per-column stats. Parquet (not Avro) because at 100 TB
-  a manifest of ~1M files is itself analytic data: the scan planner can load
+- each snapshot's live data / delete files, with full per-column stats, are
+  listed in parquet member manifests named by a JSON manifest list (a legacy
+  snapshot names one parquet manifest directly); ``manifest_members`` is the
+  one place that tells the layouts apart. Parquet because at 100 TB a
+  manifest of ~1M files is itself analytic data: the scan planner can load
   it AS a Spark DataFrame and prune distributively, while small tables prune
-  driver-side with pyarrow. (The reference's Avro manifest serde,
-  spec/avro.go:91-534, is storage detail we deliberately do not copy.)
+  driver-side with pyarrow. The Iceberg-spec Avro tree (``manifest_avro.py``)
+  is written beside the parquet members for external readers, or instead of
+  them under ``manifest-format=avro``.
 - snapshot ids are random 63-bit ints — fixing the reference's collision-prone
   wall-clock-nanos ids (reference: table/table.go:301, SURVEY §2.6.8).
 
@@ -408,21 +411,31 @@ def read_manifest_list(path: str, io=None) -> list[dict]:
         return json.load(f)
 
 
-def read_manifest_tree(location: str, manifest_rel: str, io=None) -> list[DataFileEntry]:
-    """Entries of a snapshot regardless of manifest layout: Iceberg Avro OCF
-    tree, JSON manifest list of parquet members, or a legacy single parquet
-    manifest."""
-    if manifest_rel.endswith(".avro"):
+def manifest_members(location: str, snap: Snapshot, io=None) -> list[dict] | None:
+    """A snapshot's parquet member manifests as manifest-list records
+    (``{"path", "n", "nd", "bounds"}``, paths relative to ``location``), or
+    None for an Avro-only snapshot, which has no parquet members. A legacy
+    single parquet manifest is one record without "nd" or "bounds", so no
+    bounds check can skip it."""
+    rel = snap.manifest_path
+    if rel.endswith(".avro"):
+        return None
+    path = os.path.join(location, rel)
+    if rel.endswith(MANIFEST_LIST_SUFFIX):
+        return read_manifest_list(path, io)
+    src = pa.BufferReader(io.read(path)) if io is not None else path
+    return [{"path": rel, "n": pq.read_metadata(src).num_rows}]
+
+
+def read_manifest_tree(location: str, snap: Snapshot, io=None) -> list[DataFileEntry]:
+    """Entries of a snapshot regardless of manifest layout."""
+    members = manifest_members(location, snap, io)
+    if members is None:
         from .manifest_avro import read_avro_manifest_tree
 
-        return read_avro_manifest_tree(location, manifest_rel, io=io)
-    path = os.path.join(location, manifest_rel)
-    if manifest_rel.endswith(MANIFEST_LIST_SUFFIX):
-        out: list[DataFileEntry] = []
-        for m in read_manifest_list(path, io):
-            out.extend(read_manifest(os.path.join(location, m["path"]), io))
-        return out
-    return read_manifest(path, io)
+        return read_avro_manifest_tree(location, snap.manifest_path, io=io)
+    return [e for m in members
+            for e in read_manifest(os.path.join(location, m["path"]), io)]
 
 
 def read_manifest(path: str, io=None) -> list[DataFileEntry]:
@@ -472,12 +485,15 @@ class Snapshot:
         }
         # the spec's key for the Avro manifest list, so external readers find
         # the Iceberg wire tree without knowing the engine's "manifest" key
-        avro = self.avro_manifest_path or (
-            self.manifest_path if self.manifest_path.endswith(".avro") else None
-        )
-        if avro is not None:
-            out["manifest-list"] = avro
+        if self.avro_list is not None:
+            out["manifest-list"] = self.avro_list
         return out
+
+    @property
+    def avro_list(self) -> str | None:
+        """The snapshot's Iceberg Avro manifest list, if it has one."""
+        return self.avro_manifest_path or (
+            self.manifest_path if self.manifest_path.endswith(".avro") else None)
 
     @staticmethod
     def from_json(j: dict) -> "Snapshot":

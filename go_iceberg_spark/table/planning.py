@@ -3,32 +3,38 @@
 The reference walks every manifest entry in a driver loop and stubs its
 pruning hooks to always-true (reference: table/scan.go:101-190,
 table/insert.go:255-266). That is fine at thousands of files and wrong at
-millions. This module provides the two scale paths the scan builder picks
-from (plus the snapshot-level short-circuit):
+millions. ``ScanBuilder.plan_files`` (scan.py) plans a snapshot in one of
+four tiers:
 
-1. ``prune_manifest_driver`` — read the manifest parquet with pyarrow, decode
-   bound values ONLY for filter-referenced fields, evaluate might-match per
-   row, and materialize ``DataFileEntry`` objects for survivors only. At 100k
-   entries this plans in well under a second vs several seconds for
-   full-decode-then-filter.
-2. ``plan_distributed`` — read the manifest AS a Spark DataFrame and prune
-   with a Catalyst predicate built from the filter over the parallel-array
-   stats columns (the manifest-as-analytic-data design the docstring in
-   ``metadata.py`` promises). Used above ``DISTRIBUTED_THRESHOLD`` entries,
-   where even a vectorized driver loop stops scaling; the collect returns
-   only surviving entries (bounded by what the driver must hand to
-   ``spark.read.parquet`` anyway).
+1. snapshot skip — each snapshot stores aggregate column bounds over its
+   data files in ``summary["bounds"]`` (``summary_bounds`` at commit); a
+   filter that contradicts them plans nothing and reads no manifest.
+2. Otherwise the parquet members of the snapshot's manifest list are
+   checked against their own aggregate bounds (the reference's per-manifest
+   partition summaries, spec/manifest.go:152-205) and a member they rule
+   out is never read. Members holding delete entries, members without
+   bounds and a legacy single manifest are always kept. The kept members'
+   entry count then picks the tier, for a local table whose whole entry
+   set is not already cached:
 
-Both paths are conservative in exactly the way ``expr.might_match`` is: a
+   - above ``DISTRIBUTED_THRESHOLD``: distributed — ``plan_distributed``
+     reads the members AS a Spark DataFrame and prunes with a Catalyst
+     predicate over the parallel-array stats columns, collecting only the
+     survivors;
+   - above ``ScanBuilder._CACHE_ENTRY_LIMIT``: driver prune —
+     ``prune_manifest_driver`` reads each member with pyarrow, decodes
+     bound values ONLY for filter-referenced fields, and builds
+     ``DataFileEntry`` objects for survivors only;
+   - otherwise: memory — the kept members are read through the table's
+     per-member cache and filtered with ``expr.might_match``.
+
+   Object-storage tables (``Table._mio`` set), tables whose entries are
+   already cached, and Avro-only snapshots (pruned over the whole Avro
+   tree) always plan in memory. The two large tiers never fill the cache.
+
+Every tier is conservative in exactly the way ``expr.might_match`` is: a
 file is dropped only when its stats PROVE no row can match; anything
 undecidable survives and the row-level filter finishes the job.
-
-Manifest-level summaries (reference keeps per-manifest partition summaries,
-spec/manifest.go:152-205): each snapshot stores aggregate column bounds over
-its data files in ``summary["bounds"]`` (written at commit,
-``summary_bounds``), so a scan whose filter contradicts the snapshot-wide
-bounds skips reading the manifest entirely — the analogue of skipping a
-manifest from the manifest list.
 """
 
 from __future__ import annotations
@@ -40,18 +46,17 @@ from ..expr import ColumnStats, Expression, Op, might_match, referenced_columns
 from ..schema import Schema
 from .metadata import CONTENT_DATA, DataFileEntry, _entry_from_columns
 
-# Above this many entries the driver loop is replaced by a Spark job over the
-# manifest. r8 scale soak (synthetic 10k-1M-entry manifests, local[32],
-# numbers in SOAK.md): the vectorized driver pruner runs ~2.6 µs/entry on a
-# point filter at ~223 MB arrow per 1M entries, and the Spark job NEVER wins
-# on wall time in this regime — survivors round-trip JVM→driver regardless,
-# and a single member parquet caps split parallelism — so the tier exists
-# for driver MEMORY and remote-storage I/O parallelism, not local compute.
-# 500k keeps the driver-side arrow load near 115 MB (trivial for any
-# realistic driver) while 10M-entry tables (extrapolated 2.2 GB + ~26 s
-# single-threaded) clearly belong to the job tier. Member-level bounds skip
-# (scan.py) is the first line of defense either way: a clustered
-# manifest-list prunes 99/100 members on a point scan before ANY tier runs.
+# Above this many kept entries the driver prune is replaced by a Spark job
+# over the members. On synthetic 10k-1M-entry manifests (local[32], numbers
+# in SOAK.md) the vectorized driver pruner runs ~2.6 µs/entry on a point
+# filter at ~223 MB arrow per 1M entries, and the Spark job never wins on
+# wall time — survivors round-trip JVM→driver regardless, and a single
+# member parquet caps split parallelism — so the tier exists to bound
+# driver MEMORY, not for local compute. 500k keeps the driver-side arrow
+# load near 115 MB, while 10M-entry tables (extrapolated 2.2 GB + ~26 s
+# single-threaded) clearly belong to the job tier. The member bounds skip
+# runs first either way: a clustered manifest list prunes 99/100 members on
+# a point scan before any tier runs.
 DISTRIBUTED_THRESHOLD = 500_000
 
 
@@ -523,14 +528,13 @@ def summary_bounds(entries: list[DataFileEntry]) -> str:
 
 
 def merge_summary_bounds(bounds_jsons: list[str]) -> str:
-    """Merge per-member bounds summaries into the snapshot-level summary
-    (r13): a commit already computes ``summary_bounds`` once per written
-    member (``_member_dict``), so the snapshot-wide aggregate is a merge of
-    those JSON dicts — O(members x fields) instead of a second
-    O(live entries) python pass per commit. Identical result by
-    associativity of min/max with the same None-poisoning: a field absent
-    from a member contributes nothing, exactly as its entries contributed
-    nothing to the global pass."""
+    """Merge per-member bounds summaries into the snapshot-level summary: a
+    commit already computes ``summary_bounds`` once per written member
+    (``_member_dict``), so the snapshot-wide aggregate is a merge of those
+    JSON dicts — O(members x fields), not O(live entries). The result equals
+    ``summary_bounds`` over all entries because min/max are associative
+    under the same None-poisoning: a field absent from a member contributes
+    nothing, exactly as its entries would."""
     agg: dict[str, dict[str, Any]] = {}
     for bj in bounds_jsons:
         for fid_s, mm in json.loads(bj).items():

@@ -45,7 +45,7 @@ from .metadata import (
     DataFileEntry,
     Snapshot,
     TableMetadata,
-    read_manifest,
+    manifest_members,
 )
 from .write import encode_literal
 
@@ -237,11 +237,8 @@ class ScanBuilder:
         """Manifest-driven planning with real stats pruning
         (reference: table/scan.go:101-190, pruning stubs made real).
 
-        Three metadata-scale tiers (table/planning.py): snapshot-level bounds
-        can skip the manifest read entirely; manifests already cached or
-        small are pruned in memory; large columnar manifests go through the
-        lazy driver reader or, above DISTRIBUTED_THRESHOLD entries, a Spark
-        job over the entry DataFrame."""
+        Snapshot-level bounds can skip the manifest read entirely; otherwise
+        ``_pruned_entries`` picks a planning tier (table/planning.py)."""
         snap = self._resolve_snapshot()
         if snap is None:
             return []
@@ -277,119 +274,48 @@ class ScanBuilder:
 
         return [FileScanTask(e, dels_for(e.sequence_number)) for e in data_files]
 
-    # entry counts below this use (and fill) the table's full-entry cache;
-    # above it, scans do a pruned read per planning call instead of holding
-    # every entry in driver memory
+    # kept-entry counts up to this are pruned in memory through the table's
+    # per-member cache; above it, scans do a pruned read per planning call
+    # instead of holding every entry in driver memory
     _CACHE_ENTRY_LIMIT = 10_000
 
     def _pruned_entries(self, snap, enc: Expression, md: TableMetadata,
                         proj: Schema | None = None) -> list[DataFileEntry]:
-        """Data entries surviving stats pruning, plus ALL delete entries.
-        ``proj`` is the scan's projection schema (time travel reads prune
-        against the snapshot's schema, not the current one)."""
+        """Data entries surviving stats pruning, plus ALL delete entries,
+        from the planning tier the snapshot's size picks (the tier rule is
+        stated in ``planning.py``). ``proj`` is the scan's projection schema
+        (time travel reads prune against the snapshot's schema, not the
+        current one)."""
+        from . import planning
+
         proj = proj or md.current_schema
-        import pyarrow.parquet as pq
-
-        from .metadata import MANIFEST_LIST_SUFFIX, read_manifest_list
-        from .planning import (
-            DISTRIBUTED_THRESHOLD,
-            plan_distributed,
-            prune_manifest_driver,
-        )
-
         table = self._table
-        path = os.path.join(table.location, snap.manifest_path)
-        cached = path in table._manifest_cache
-        # the pyarrow/Spark manifest tiers read local paths; object-storage
-        # metadata (table._mio set) goes through the FileIO full read below
-        if not cached and table._mio is None and not snap.manifest_path.endswith(".avro"):
-            skipped = False
-            if snap.manifest_path.endswith(MANIFEST_LIST_SUFFIX):
-                from .planning import summary_might_match
-
-                # member-level skip (Iceberg manifest-list partition
-                # summaries): a member whose aggregate bounds contradict the
-                # filter is never READ — planning I/O scales with matching
-                # members, not commits. Members holding delete entries
-                # (nd > 0) or without stamped bounds are always read.
-                all_members = read_manifest_list(path)
-                members = [
-                    m for m in all_members
-                    if m.get("nd", 1) or "bounds" not in m
-                    or summary_might_match(m["bounds"], enc, proj)
-                ]
-                skipped = len(members) < len(all_members)
+        cached = os.path.join(table.location, snap.manifest_path) in table._manifest_cache
+        members = None if cached else manifest_members(table.location, snap, table._mio)
+        if members is None:
+            # every entry already cached, or an Avro-only snapshot
+            entries = table.manifest_entries(snap)
+        else:
+            # members holding delete entries (nd > 0) or without stamped
+            # bounds are always read; entries of a skipped member provably
+            # fail might_match, since each entry's interval lies inside the
+            # member's aggregate bounds
+            members = [m for m in members if m.get("nd", 1) or "bounds" not in m
+                       or planning.summary_might_match(m["bounds"], enc, proj)]
+            if table._mio is None:
+                paths = [os.path.join(table.location, m["path"]) for m in members]
                 n = sum(m["n"] for m in members)
-                mpaths = [os.path.join(table.location, m["path"]) for m in members]
-            else:
-                n = pq.read_metadata(path).num_rows  # footer-only, ~1 ms
-                mpaths = [path]
-            if n > DISTRIBUTED_THRESHOLD:
-                from .write import resolve_bucket_fn
+                if n > planning.DISTRIBUTED_THRESHOLD:
+                    from .write import resolve_bucket_fn
 
-                return plan_distributed(
-                    table.spark, mpaths, enc, proj,
-                    specs=md.partition_specs,
-                    bucket_fn=resolve_bucket_fn(md.properties))
-            if n > self._CACHE_ENTRY_LIMIT:
-                out: list[DataFileEntry] = []
-                for p in mpaths:
-                    out.extend(prune_manifest_driver(p, enc, proj))
-                return out
-            if skipped:
-                # r13: honor the member-level skip on the SMALL path too —
-                # this used to fall through to manifest_entries(snap), which
-                # reads EVERY member and drove a whole-snapshot python prune
-                # (profiled: a 550k-entry snapshot whose huge member was
-                # bounds-skipped still paid a 550k-entry driver loop per
-                # planning call). Entries of a skipped member provably fail
-                # the per-entry might_match (each entry's interval is inside
-                # the member's aggregate bounds), so reading only the kept
-                # members is result-identical — the same logic the FileIO
-                # branch below already applies. Members cache individually
-                # (immutable), same as everywhere else.
-                from .metadata import read_manifest
-
-                entries: list[DataFileEntry] = []
-                for mpath in mpaths:
-                    if mpath not in table._manifest_cache:
-                        table._manifest_cache[mpath] = read_manifest(mpath)
-                    entries.extend(table._manifest_cache[mpath])
-                return [
-                    e for e in entries
-                    if e.content != CONTENT_DATA
-                    or might_match(enc, _stats_for_pruning(e, proj))
-                ]
-        elif (not cached and table._mio is not None
-              and snap.manifest_path.endswith(MANIFEST_LIST_SUFFIX)):
-            # object-store tables (FileIO): the same member-level bounds
-            # skip, reading ONLY the matching members — on S3 each member
-            # read is a network round-trip, so this is where skipping
-            # members matters most. Members already cached are free either
-            # way; the full-set cache under the LIST path stays untouched
-            # (it belongs to manifest_entries' whole-snapshot reads).
-            from .metadata import read_manifest
-            from .planning import summary_might_match
-
-            members = read_manifest_list(path, table._mio)
-            keep = [
-                m for m in members
-                if m.get("nd", 1) or "bounds" not in m
-                or summary_might_match(m["bounds"], enc, proj)
-            ]
-            if len(keep) < len(members):
-                entries = []
-                for m in keep:
-                    mpath = os.path.join(table.location, m["path"])
-                    if mpath not in table._manifest_cache:
-                        table._manifest_cache[mpath] = read_manifest(mpath, table._mio)
-                    entries.extend(table._manifest_cache[mpath])
-                return [
-                    e for e in entries
-                    if e.content != CONTENT_DATA
-                    or might_match(enc, _stats_for_pruning(e, proj))
-                ]
-        entries = table.manifest_entries(snap)
+                    return planning.plan_distributed(
+                        table.spark, paths, enc, proj,
+                        specs=md.partition_specs,
+                        bucket_fn=resolve_bucket_fn(md.properties))
+                if n > self._CACHE_ENTRY_LIMIT:
+                    return [e for p in paths
+                            for e in planning.prune_manifest_driver(p, enc, proj)]
+            entries = [e for m in members for e in table._member_entries(m["path"])]
         return [
             e for e in entries
             if e.content != CONTENT_DATA or might_match(enc, _stats_for_pruning(e, proj))
@@ -600,27 +526,23 @@ class ScanBuilder:
         snap = self._resolve_snapshot()
         if snap is None:
             return 0
-        path = os.path.join(self._table.location, snap.manifest_path)
-        if (path not in self._table._manifest_cache and self._table._mio is None
-                and not snap.manifest_path.endswith(".avro")):
-            # column-pruned footer read: two int64 columns, never the stats
+        table = self._table
+        members = None
+        if (os.path.join(table.location, snap.manifest_path) not in table._manifest_cache
+                and table._mio is None):
+            members = manifest_members(table.location, snap)
+        if members is None:
+            entries = table.manifest_entries(snap)
+            total = sum(e.record_count for e in entries if e.content == CONTENT_DATA)
+        else:
+            # column-pruned read: two int64 columns, never the stats
             import pyarrow.parquet as pq
 
-            from .metadata import MANIFEST_LIST_SUFFIX, read_manifest_list
-
-            if snap.manifest_path.endswith(MANIFEST_LIST_SUFFIX):
-                mpaths = [os.path.join(self._table.location, m["path"])
-                          for m in read_manifest_list(path)]
-            else:
-                mpaths = [path]
             total = 0
-            for p in mpaths:
-                t = pq.read_table(p, columns=["content", "record_count"])
-                d = t.to_pydict()
+            for m in members:
+                d = pq.read_table(os.path.join(table.location, m["path"]),
+                                  columns=["content", "record_count"]).to_pydict()
                 total += sum(rc for c, rc in zip(d["content"], d["record_count"]) if c == CONTENT_DATA)
-        else:
-            entries = self._table.manifest_entries(snap)
-            total = sum(e.record_count for e in entries if e.content == CONTENT_DATA)
         if self._limit is not None and total > self._limit:
             return self._limit
         return total

@@ -46,10 +46,10 @@ from .metadata import (
     TableMetadata,
     commit_metadata,
     load_metadata,
+    manifest_members,
     new_snapshot_id,
     now_ms,
     read_manifest,
-    read_manifest_list,
     write_manifest,
     write_manifest_list,
 )
@@ -138,36 +138,24 @@ class Table:
     def manifest_entries(self, snap: Snapshot) -> list[DataFileEntry]:
         path = os.path.join(self.location, snap.manifest_path)
         if path not in self._manifest_cache:
-            if snap.manifest_path.endswith(".avro"):
+            members = manifest_members(self.location, snap, self._mio)
+            if members is None:
                 # Iceberg wire format: manifest LIST -> manifests -> entries
                 from .manifest_avro import read_avro_manifest_tree
 
                 self._manifest_cache[path] = read_avro_manifest_tree(self.location, snap.manifest_path, io=self._mio)
-            elif snap.manifest_path.endswith(MANIFEST_LIST_SUFFIX):
-                out: list[DataFileEntry] = []
-                for mrel, mentries in self._manifest_members(snap):
-                    out.extend(mentries)
-                self._manifest_cache[path] = out
             else:
-                self._manifest_cache[path] = read_manifest(path, self._mio)
+                self._manifest_cache[path] = [
+                    e for m in members for e in self._member_entries(m["path"])]
         return self._manifest_cache[path]
 
-    def _manifest_members(self, snap: Snapshot) -> list[tuple[str, list[DataFileEntry]]]:
-        """(member rel path, entries) per member manifest — members are
-        immutable, so they cache individually and survive across commits
-        that reuse them. A legacy single-manifest snapshot is one member."""
-        if snap.manifest_path.endswith(MANIFEST_LIST_SUFFIX):
-            members = read_manifest_list(os.path.join(self.location, snap.manifest_path), self._mio)
-            rels = [m["path"] for m in members]
-        else:
-            rels = [snap.manifest_path]
-        out = []
-        for rel in rels:
-            mpath = os.path.join(self.location, rel)
-            if mpath not in self._manifest_cache:
-                self._manifest_cache[mpath] = read_manifest(mpath, self._mio)
-            out.append((rel, self._manifest_cache[mpath]))
-        return out
+    def _member_entries(self, rel: str) -> list[DataFileEntry]:
+        """Entries of one parquet member manifest. Members are immutable, so
+        they cache individually and survive across commits that reuse them."""
+        mpath = os.path.join(self.location, rel)
+        if mpath not in self._manifest_cache:
+            self._manifest_cache[mpath] = read_manifest(mpath, self._mio)
+        return self._manifest_cache[mpath]
 
     def live_entries(self) -> list[DataFileEntry]:
         snap = self.current_snapshot()
@@ -192,8 +180,9 @@ class Table:
                          compact_manifests: bool = False,
                          properties_extra: dict[str, str] | None = None,
                          manifest_groups: list[list[DataFileEntry]] | None = None) -> Snapshot:
-        """Write manifest + new metadata version. ``entries`` is the FULL live
-        file set of the new snapshot (single-manifest design, metadata.py).
+        """Write manifests + new metadata version. ``entries`` is the FULL
+        live file set of the new snapshot; ``_write_manifest_tree`` reuses
+        the parent's unchanged members.
         ``ref`` targets a branch: only that ref moves; main (and the table's
         read view) is untouched until a fast_forward publishes it.
         ``properties_extra`` merges into table properties IN THE SAME
@@ -215,18 +204,13 @@ class Table:
         if fmt in ("avro", "dual"):
             from .manifest_avro import write_avro_manifest_tree
 
-            parent_avro = None
-            if parent is not None:
-                parent_avro = parent.avro_manifest_path or (
-                    parent.manifest_path if parent.manifest_path.endswith(".avro") else None
-                )
             avro_rel = write_avro_manifest_tree(
                 self.location, "metadata", entries,
                 snapshot_id=sid, sequence_number=seq,
                 spec=md.default_spec,
                 schemas_by_id={s.schema_id: s for s in md.schemas},
                 specs_by_id={p.spec_id: p for p in md.partition_specs},
-                parent_list_rel=parent_avro,
+                parent_list_rel=parent.avro_list if parent is not None else None,
                 io=self._mio,
             )
         members_out: list[dict] | None = None
@@ -252,10 +236,10 @@ class Table:
         # snapshot-wide column bounds: the manifest-list-level summary that
         # lets scans skip the manifest read when the filter is out of range
         # (planning.py; reference keeps per-manifest partition summaries,
-        # spec/manifest.go:152-205). r13: merged from the per-member bounds
-        # the tree write just computed — drops a second O(live entries)
+        # spec/manifest.go:152-205). Merged from the per-member bounds the
+        # tree write just computed, which saves a second O(live entries)
         # driver pass per commit; the avro-only format (no member dicts)
-        # keeps the direct aggregate.
+        # aggregates the entries directly.
         from .planning import merge_summary_bounds, summary_bounds
 
         if members_out is not None and all("bounds" in m for m in members_out):
@@ -337,28 +321,23 @@ class Table:
         members: list[dict] = []
         covered: set[str] = set()
         part = 0
-        if parent is not None and not parent.manifest_path.endswith(".avro"):
-            parent_dicts: dict[str, dict] = {}
-            if parent.manifest_path.endswith(MANIFEST_LIST_SUFFIX):
-                parent_dicts = {m["path"]: m for m in read_manifest_list(
-                    os.path.join(self.location, parent.manifest_path), self._mio)}
-            for mrel, mentries in self._manifest_members(parent):
-                surv = [e for e in mentries if e.file_path in cur_by_path]
-                if not surv:
-                    continue
-                if len(surv) == len(mentries):
-                    members.append(self._member_dict(mrel, surv,
-                                                     parent_dicts.get(mrel)))
-                else:
-                    rel = os.path.join("metadata", f"m-{sid}-{part}.parquet")
-                    part += 1
-                    write_manifest(os.path.join(self.location, rel), surv, self._mio)
-                    self._manifest_cache[os.path.join(self.location, rel)] = surv
-                    members.append(self._member_dict(rel, surv))
-                covered.update(e.file_path for e in surv)
-        elif parent is not None:
-            # avro parent (manifest-format flipped): fold its full set below
-            pass
+        # an Avro-only parent (manifest-format flipped) has no parquet
+        # members: its whole live set lands in the added member below
+        parent_members = manifest_members(self.location, parent, self._mio) if parent else None
+        for pm in parent_members or ():
+            mentries = self._member_entries(pm["path"])
+            surv = [e for e in mentries if e.file_path in cur_by_path]
+            if not surv:
+                continue
+            if len(surv) == len(mentries):
+                members.append(self._member_dict(pm["path"], surv, pm))
+            else:
+                rel = os.path.join("metadata", f"m-{sid}-{part}.parquet")
+                part += 1
+                write_manifest(os.path.join(self.location, rel), surv, self._mio)
+                self._manifest_cache[os.path.join(self.location, rel)] = surv
+                members.append(self._member_dict(rel, surv))
+            covered.update(e.file_path for e in surv)
         added = [e for e in entries if e.file_path not in covered]
         if added or not members:
             rel = os.path.join("metadata", f"m-{sid}-add.parquet")

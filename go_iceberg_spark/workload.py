@@ -4405,9 +4405,7 @@ def distributed_plan_scan_q(spark, sf):
     loop, and must prune every phantom, landing on exactly the real files.
     Inline assertions pin the tier (manifest-list entry count over the
     threshold) and the survivor set."""
-    import os as _os
-
-    from .table.metadata import MANIFEST_LIST_SUFFIX, DataFileEntry, read_manifest_list
+    from .table.metadata import DataFileEntry, manifest_members
     from .table.planning import DISTRIBUTED_THRESHOLD
 
     base = load(spark, sf, "orders").filter(F.col("o_orderkey") < 2000).select(*_CRUD_COLS)
@@ -4431,27 +4429,21 @@ def distributed_plan_scan_q(spark, sf):
         )
         for i in range(DISTRIBUTED_THRESHOLD + 50_000)
     ]
-    # ONE manifest group holding real + phantom entries (r13): in separate
-    # members the phantom member's aggregate bounds (all >= 10M) contradict
-    # the o_orderkey < 2000 filter, so the member-level summary skip would
-    # plan from the real member alone and the DISTRIBUTED tier this query
-    # exists to pin would never run (it silently degraded to a driver loop
-    # when member summaries landed). Mixing real entries into the member
-    # makes its bounds overlap the filter, so planning must face all
-    # >500k entries at once — and must take the Spark-job tier.
+    # ONE manifest group holding real + phantom entries: in separate members
+    # the phantom member's aggregate bounds (all >= 10M) contradict the
+    # o_orderkey < 2000 filter, so the member-level bounds skip would plan
+    # from the real member alone and the distributed tier this query pins
+    # would never run. Mixing real entries into the member makes its bounds
+    # overlap the filter, so planning faces all >500k entries at once and
+    # must take the Spark-job tier.
     t._commit_snapshot("append", real + phantoms,
                        manifest_groups=[real + phantoms])
-    mp = t.current_snapshot().manifest_path
-    if mp.endswith(MANIFEST_LIST_SUFFIX):
-        members = read_manifest_list(_os.path.join(t.location, mp))
-        n = sum(m["n"] for m in members)
-        if len(members) != 1:
-            raise AssertionError(
-                f"fixture expects ONE mixed member (bounds overlap the "
-                f"filter -> unskippable), got {len(members)}")
-    else:
-        import pyarrow.parquet as _pq
-        n = _pq.read_metadata(_os.path.join(t.location, mp)).num_rows
+    members = manifest_members(t.location, t.current_snapshot())
+    if len(members) != 1:
+        raise AssertionError(
+            f"fixture expects ONE mixed member (bounds overlap the "
+            f"filter -> unskippable), got {len(members)}")
+    n = members[0]["n"]
     if n <= DISTRIBUTED_THRESHOLD:
         raise AssertionError(f"fixture did not cross the distributed tier: {n} entries")
     sb = t.scan().filter(C("o_orderkey").lt(2000))

@@ -7,6 +7,7 @@ these tests pin the scale behavior the engine replaces that with."""
 
 from __future__ import annotations
 
+import os
 import time
 
 import pytest
@@ -357,3 +358,71 @@ def test_member_bounds_skip_ratio_clustered_vs_path_ordered(spark, tmp_path):
     # the surviving clustered member prunes to exactly the covering entry
     ents = prune_manifest_driver(str(d_c / kept_c[0]["path"]), flt, schema)
     assert len(ents) == 1 and ents[0].file_path == "data/f2500.parquet"
+
+
+
+@pytest.mark.parametrize("layout, tier", [("legacy", "driver_prune"), ("avro", "memory")])
+def test_tier_rule_per_manifest_layout(spark, catalog, monkeypatch, layout, tier):
+    """The tier rule on the layouts beside the manifest list, with the cache
+    limit forced to 0 and the large tiers spied on (the pattern of
+    test_member_level_skip_reads_only_matching_manifests): a legacy single
+    parquet manifest is one unbounded member, so it takes the driver prune;
+    an Avro-only snapshot has no parquet members and always plans in memory.
+    Either way plan_files keeps exactly the might_match survivors."""
+    from dataclasses import replace
+
+    from pyspark.sql import Row
+
+    import go_iceberg_spark.table.planning as P
+    from go_iceberg_spark.expr import might_match
+    from go_iceberg_spark.schema import from_spark_schema
+    from go_iceberg_spark.table.metadata import Snapshot
+    from go_iceberg_spark.table.scan import ScanBuilder, _stats_for_pruning
+
+    df0 = spark.createDataFrame([Row(id=0, v=0.0)])
+    props = {"manifest-format": "avro"} if layout == "avro" else {}
+    t = catalog.create_table("db", f"tier_{layout}", from_spark_schema(df0.schema),
+                             properties=props)
+    for b in range(3):  # disjoint id ranges, so the filter prunes files
+        t.append(spark.createDataFrame([Row(id=b * 10 + i, v=float(i)) for i in range(10)]))
+    if layout == "legacy":
+        rel = "metadata/snap-legacy.parquet"
+        write_manifest(os.path.join(t.location, rel), t.live_entries())
+        snap = t.current_snapshot()
+        legacy = replace(snap, snapshot_id=snap.snapshot_id + 1,
+                         parent_snapshot_id=snap.snapshot_id, manifest_path=rel,
+                         avro_manifest_path=None)
+        md = replace(t.metadata, snapshots=(*t.metadata.snapshots, legacy),
+                     current_snapshot_id=legacy.snapshot_id)
+        t.version = t._commit_fn(md, t.version)
+        t.metadata = md
+    else:
+        assert t.current_snapshot().avro_list == t.current_snapshot().manifest_path
+
+    monkeypatch.setattr(ScanBuilder, "_CACHE_ENTRY_LIMIT", 0)
+    t._manifest_cache.clear()
+    reads = {"driver_prune": [], "distributed": []}
+    real_driver, real_distributed = P.prune_manifest_driver, P.plan_distributed
+
+    def driver(path, *a, **kw):
+        reads["driver_prune"].append(path)
+        return real_driver(path, *a, **kw)
+
+    def distributed(spark, path, *a, **kw):
+        reads["distributed"].append(path)
+        return real_distributed(spark, path, *a, **kw)
+
+    monkeypatch.setattr(P, "prune_manifest_driver", driver)
+    monkeypatch.setattr(P, "plan_distributed", distributed)
+
+    flt = gt("id", 15)
+    planned = sorted(task.file.file_path for task in t.scan().filter(flt).plan_files())
+    expected_reads = [os.path.join(t.location, t.current_snapshot().manifest_path)]
+    assert reads == {"driver_prune": expected_reads if tier == "driver_prune" else [],
+                     "distributed": []}
+    entries = t.manifest_entries(t.current_snapshot())
+    e = _encode_filter(simplify(flt), t.schema)
+    expected = sorted(x.file_path for x in entries
+                      if x.content == 0 and might_match(e, _stats_for_pruning(x, t.schema)))
+    assert planned == expected
+    assert 0 < len(expected) < len(entries)

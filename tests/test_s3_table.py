@@ -208,6 +208,23 @@ def test_s3_member_bounds_skip_reads_only_matching_manifests(spark, s3cat):
     assert t.to_df().count() == 35
 
 
+def test_s3_manifests_df_reports_object_sizes(spark, s3cat):
+    """The manifests metadata table reads member sizes from the object
+    store, not from the local filesystem."""
+    from go_iceberg_spark.table.metadata import read_manifest_list
+
+    cat, io = s3cat
+    t = cat.create_table("db", "mlen", from_spark_schema(_proto(spark).schema))
+    t.append(_proto(spark))
+    t.append(_proto(spark, 10, off=100))
+    members = read_manifest_list(
+        os.path.join(t.location, t.current_snapshot().manifest_path), io)
+    rows = t.manifests_df().collect()
+    assert sorted(r.path for r in rows) == sorted(m["path"] for m in members)
+    for r in rows:
+        assert r.length == io.size(os.path.join(t.location, r.path)) > 0
+
+
 def test_s3_metadata_version_retention(spark, s3cat):
     """r11: delete-after-commit retention must work through the S3 FileIO
     path too (listing + delete on the object store)."""
