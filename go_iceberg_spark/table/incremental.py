@@ -42,6 +42,7 @@ from .metadata import (
     OP_REPLACE,
     DataFileEntry,
     Snapshot,
+    delete_applies,
 )
 from .scan import (
     POS_DELETE_FILE_COL,
@@ -110,15 +111,10 @@ def _read_entries(table, entries: list[DataFileEntry], with_lineage: bool = Fals
     cur = md.current_schema
 
     def _applicable_idx(e: DataFileEntry) -> frozenset[int]:
-        # the scan's sequence rules, PER FILE: a position delete applies at
-        # ts >= file seq, an equality delete strictly after. Grouping by the
-        # per-file set (not any() across a schema group) keeps a delete from
-        # suppressing rows of files written AFTER it (r5 ADVICE medium #2).
+        # grouped by the per-file applicable set (not any() across a schema
+        # group), so a delete never suppresses rows of files written after it
         return frozenset(
-            i for i, d in enumerate(deletes or [])
-            if (d.sequence_number >= e.sequence_number
-                if d.content == CONTENT_POSITION_DELETES
-                else d.sequence_number > e.sequence_number))
+            i for i, d in enumerate(deletes or []) if delete_applies(d, e))
 
     groups: dict[tuple[int, frozenset[int]], list[DataFileEntry]] = {}
     for e in entries:

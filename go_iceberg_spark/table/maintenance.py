@@ -28,7 +28,7 @@ from pyspark.sql import types as T
 
 from ..errors import ValidationError
 from .metadata import MAIN_BRANCH, now_ms
-from .write import write_data_files
+from .write import data_path, write_data_files
 
 # manifest artifacts under metadata/: parquet members (m-{sid}-*.parquet),
 # avro members (m{gi}-snap-{sid}.avro), avro lists (snap-{sid}.avro), json
@@ -206,7 +206,7 @@ def expire_snapshots(table, *, older_than: dt.datetime | int | None = None,
         table._manifest_cache.clear()
 
     deleted = []
-    data_root = table._data_location()
+    data_root = data_path(table.metadata.properties)
     for rel in sorted(doomed_files | doomed_manifests):
         if _is_relative(rel):
             # table-tree file: delete through the table's FileIO
@@ -243,7 +243,7 @@ def rewrite_data_files(table, *, target_file_size_bytes: int = 128 * 1024 * 1024
 
     By default every live data file is rewritten (full compaction). At
     100 TB that is not an operation you can run — Iceberg's procedure is
-    SELECTIVE, and so is this one (r9):
+    SELECTIVE, and so is this one:
 
     - ``where`` (an expression-DSL filter): only files whose stats might
       match are rewritten — compact one partition's worth of small files
@@ -271,7 +271,7 @@ def rewrite_data_files(table, *, target_file_size_bytes: int = 128 * 1024 * 1024
     from .scan import POS_DELETE_FILE_COL, _encode_filter, _stats_for_pruning
 
     def build_and_commit():
-        # rebuilt per retry (r6): a compaction racing a writer must re-read
+        # rebuilt per retry: a compaction racing a writer must re-read
         # the RELOADED live set, or the concurrent commit's files would be
         # silently dropped from the replacement snapshot
         live = table.live_entries()
@@ -299,9 +299,9 @@ def rewrite_data_files(table, *, target_file_size_bytes: int = 128 * 1024 * 1024
         summary = {"compacted-input-files": str(len(candidates))}
         if zorder_by:
             # size the z-range partitions from the KNOWN input bytes so the
-            # rewrite honors the file-size target (r10: it used to inherit
-            # the input partition count — two big input files meant two
-            # output files no matter the target)
+            # rewrite honors the file-size target (the input partition count
+            # would give two output files for two big inputs, whatever the
+            # target)
             want = max(2, int(sum(e.file_size for e in candidates)
                               // target_file_size_bytes) + 1)
             dfz = _zorder_cluster(df, zorder_by, n_parts=want)
@@ -309,17 +309,8 @@ def rewrite_data_files(table, *, target_file_size_bytes: int = 128 * 1024 * 1024
         else:
             dfz = df
         new_entries = write_data_files(
-            table.spark, dfz, table.location, md.current_schema, md.default_spec,
-            md.default_sort_order if not zorder_by else None,
-            md.current_schema_id, table._next_sequence(),
-            target_file_size=target_file_size_bytes,
-            distribution_mode=table._distribution_mode() if not zorder_by else "none",
-            bloom_columns=table._bloom_columns(),
-            nan_count_columns=table._nan_count_columns(),
-            exact_bounds_columns=table._exact_bounds_columns(),
-            data_location=table._data_location(),
-            bucket_fn=table._bucket_fn(),
-        )
+            table, dfz, target_file_size=target_file_size_bytes,
+            keep_order=bool(zorder_by))
         if selective:
             cand_paths = {e.file_path for e in candidates}
             untouched = [e for e in data_files if e.file_path not in cand_paths]
@@ -340,8 +331,8 @@ def rewrite_data_files(table, *, target_file_size_bytes: int = 128 * 1024 * 1024
                         .filter(F.col(POS_DELETE_FILE_COL).isin(list(live_paths))
                                 if live_paths else F.lit(False))
                         .select("_src").distinct().collect())
-                # exact lookup on the normalized path (r9 ADVICE: an
-                # endswith scan could match the wrong file when one rel
+                # exact lookup on the normalized path (an endswith scan
+                # could match the wrong file when one rel
                 # path is a suffix of another's absolute path); a source
                 # path with no exact mapping keeps ALL position-delete
                 # files conservatively — never silently drop one
@@ -379,7 +370,7 @@ def rewrite_data_files(table, *, target_file_size_bytes: int = 128 * 1024 * 1024
 
 def rewrite_position_deletes(table):
     """Compact position-DELETE files (Iceberg ``rewrite_position_delete_
-    files`` procedure; r10): every micro-batch MoR delete leaves its own
+    files`` procedure): every micro-batch MoR delete leaves its own
     small tombstone file, and each one is a separate parquet read + anti-
     join build side on EVERY scan — this rewrites them into few right-sized
     files while touching ZERO data files. In the same pass it drops
@@ -401,12 +392,10 @@ def rewrite_position_deletes(table):
         CONTENT_POSITION_DELETES,
         OP_REPLACE,
     )
-    from .mutate import _pos_delete_schema
-    from .write import write_data_files
+    from .mutate import _pos_delete_schema, _pos_delete_spec
 
     def build_and_commit():
         live = table.live_entries()
-        md = table.metadata
         data = [e for e in live if e.content == CONTENT_DATA]
         pos = [e for e in live if e.content == CONTENT_POSITION_DELETES]
         other = [e for e in live
@@ -430,11 +419,8 @@ def rewrite_position_deletes(table):
                 .select("file_path", "pos").distinct()     # drops duplicates
                 .orderBy("file_path", "pos"))
         new_files = write_data_files(
-            table.spark, kept, table.location, _pos_delete_schema(),
-            md.default_spec.__class__(md.default_spec.spec_id, ()), None,
-            md.current_schema_id, table._next_sequence(),
-            content=CONTENT_POSITION_DELETES, subdir="deletes",
-            data_location=table._data_location(), bucket_fn=table._bucket_fn())
+            table, kept, CONTENT_POSITION_DELETES, _pos_delete_schema(),
+            _pos_delete_spec(table.metadata))
         return table._commit_snapshot(
             OP_REPLACE, data + other + new_files,
             summary_extra={"rows-preserved": "true",
@@ -519,7 +505,7 @@ def remove_orphan_files(table) -> list[str]:
     referenced: set[str] = set()
     for s in table.snapshots():
         referenced |= {e.file_path for e in table.manifest_entries(s)}
-    data_root = table._data_location() or table.location
+    data_root = data_path(table.metadata.properties) or table.location
     data_dir = os.path.join(data_root, "data")
     deleted = []
     from ..io.fileio import for_location

@@ -250,6 +250,16 @@ class DataFileEntry:
     equality_ids: tuple[int, ...] = ()
 
 
+def delete_applies(delete: DataFileEntry, data: DataFileEntry) -> bool:
+    """Whether a MoR delete file can remove rows of a data file, by sequence
+    number (Iceberg spec): a position delete applies to files of its own or
+    an older sequence (it names them by path), an equality delete only to
+    strictly older ones, so rows written in or after its commit survive."""
+    if delete.content == CONTENT_POSITION_DELETES:
+        return delete.sequence_number >= data.sequence_number
+    return delete.sequence_number > data.sequence_number
+
+
 _MANIFEST_ARROW_SCHEMA = pa.schema(
     [
         ("content", pa.int32()),

@@ -40,6 +40,8 @@ from .metadata import (
     OP_OVERWRITE,
     OP_REPLACE,
     DataFileEntry,
+    PartitionSpec,
+    delete_applies,
 )
 from .scan import _encode_filter, _stats_for_pruning, _align_to_schema
 from .write import write_data_files
@@ -77,17 +79,11 @@ def _read_candidates(table, candidates: list[DataFileEntry]) -> DataFrame:
     sb = ScanBuilder(table)
     dels = _other_deletes(table)
 
-    # group by (schema, per-FILE applicable delete set) — grouping on schema
-    # alone applied an equality delete to EVERY file of the group when any
-    # one file predated it, silently deleting rows re-inserted AFTER the
-    # delete from the rewrite output (r6 probe; same sequence rules as
-    # ScanBuilder._read_aligned / incremental._read_entries)
+    # group by (schema, per-FILE applicable delete set): grouping on schema
+    # alone would apply an equality delete to every file of the group when
+    # any one file predates it, deleting rows re-inserted after the delete
     def _applicable(e: DataFileEntry) -> tuple[int, ...]:
-        return tuple(
-            i for i, d in enumerate(dels)
-            if (d.content == CONTENT_POSITION_DELETES and d.sequence_number >= e.sequence_number)
-            or (d.content != CONTENT_POSITION_DELETES and d.sequence_number > e.sequence_number)
-        )
+        return tuple(i for i, d in enumerate(dels) if delete_applies(d, e))
 
     groups: dict[tuple[int, tuple[int, ...]], list[DataFileEntry]] = {}
     for e in candidates:
@@ -125,19 +121,8 @@ def rewrite_for_delete(table, filter_: Expression) -> list[DataFileEntry]:
     if not rewrite:
         remaining_deletes = _deletes_still_needed(table, untouched)
         return untouched + remaining_deletes
-    seq = table._next_sequence()
     survivors_df = _read_candidates(table, rewrite).filter(~to_column(filter_) | to_column(filter_).isNull())
-    new_files = write_data_files(
-        table.spark, survivors_df, table.location, md.current_schema, md.default_spec,
-        md.default_sort_order, md.current_schema_id, seq,
-        target_file_size=table._target_file_size(),
-        distribution_mode=table._distribution_mode(),
-        bloom_columns=table._bloom_columns(),
-        nan_count_columns=table._nan_count_columns(),
-        exact_bounds_columns=table._exact_bounds_columns(),
-        data_location=table._data_location(),
-        bucket_fn=table._bucket_fn(),
-    )
+    new_files = write_data_files(table, survivors_df)
     # rewritten files have deletes applied; keep delete files only for untouched data
     remaining_deletes = _deletes_still_needed(table, untouched)
     return untouched + remaining_deletes + new_files
@@ -146,15 +131,8 @@ def rewrite_for_delete(table, filter_: Expression) -> list[DataFileEntry]:
 def _deletes_still_needed(table, data_entries: list[DataFileEntry]) -> list[DataFileEntry]:
     """Keep MoR delete files only while some live data file can still be
     affected by them (sequence-number rules as in scan planning)."""
-    out = []
-    for d in _other_deletes(table):
-        if any(
-            (d.content == CONTENT_POSITION_DELETES and d.sequence_number >= e.sequence_number)
-            or (d.content != CONTENT_POSITION_DELETES and d.sequence_number > e.sequence_number)
-            for e in data_entries
-        ):
-            out.append(d)
-    return out
+    return [d for d in _other_deletes(table)
+            if any(delete_applies(d, e) for e in data_entries)]
 
 
 def _rebind_to_current(entry_schema, current_schema, names, what: str) -> dict[str, str]:
@@ -195,7 +173,7 @@ def _rebind_filter(entry_schema, current_schema, filter_: Expression, what: str)
 def delete(table, filter_: Expression, mode: str = COPY_ON_WRITE):
     """DELETE FROM … WHERE filter (reference: table/delete.go:56-79 dispatch).
 
-    Retries past concurrent commits like every other mutation (r6): the
+    Retries past concurrent commits like every other mutation: the
     rewrite recomputes against the RELOADED metadata on each attempt, so a
     racing append's rows survive and a racing delete's files don't
     resurrect. Conflicts are rare; recomputing the rewrite is the price of
@@ -229,7 +207,6 @@ def _delete_merge_on_read(table, filter_: Expression):
     if not candidates:
         return table._commit_snapshot(OP_DELETE, table.live_entries())
     md = table.metadata
-    seq = table._next_sequence()
 
     groups: dict[int, list[DataFileEntry]] = {}
     for e in candidates:
@@ -250,7 +227,7 @@ def _delete_merge_on_read(table, filter_: Expression):
     # don't re-tombstone rows an existing APPLICABLE position delete already
     # suppressed (the raw candidate read sees dead rows too): overlapping
     # MoR deletes would otherwise append a duplicate (file, pos) per delete
-    # — spec-legal, and the changelog reader dedups them (r8), but each
+    # — spec-legal, and the changelog reader dedups them, but each
     # duplicate inflates every later scan's anti-join build side for zero
     # information. Applicability is per data file: tombstone seq >= file seq.
     existing_pos = [d for d in table.live_entries()
@@ -273,13 +250,14 @@ def _delete_merge_on_read(table, filter_: Expression):
         deletes_df = deletes_df.join(dead, ["file_path", "pos"], "left_anti")
     deletes_df = deletes_df.orderBy("file_path", "pos")
     del_files = write_data_files(
-        table.spark, deletes_df, table.location,
-        _pos_delete_schema(), md.default_spec.__class__(md.default_spec.spec_id, ()),  # unpartitioned
-        None, md.current_schema_id, seq, content=CONTENT_POSITION_DELETES, subdir="deletes",
-        data_location=table._data_location(),
-        bucket_fn=table._bucket_fn(),
-    )
+        table, deletes_df, CONTENT_POSITION_DELETES, _pos_delete_schema(),
+        _pos_delete_spec(md))
     return table._commit_snapshot(OP_DELETE, table.live_entries() + del_files)
+
+
+def _pos_delete_spec(md):
+    """Position-delete files are unpartitioned under the default spec's id."""
+    return PartitionSpec(md.default_spec.spec_id, ())
 
 
 def _pos_delete_schema():
@@ -342,7 +320,6 @@ def update(table, filter_: Expression, assignments: dict[str, Any]):
         candidates, untouched = _split_candidates(table, flt)
         if not candidates:
             return table._commit_snapshot(OP_REPLACE, table.live_entries())
-        seq = table._next_sequence()
         df = _read_candidates(table, candidates)
         cond = to_column(flt)
         from pyspark.sql import Column as _Col
@@ -352,17 +329,7 @@ def update(table, filter_: Expression, assignments: dict[str, Any]):
             val = v if isinstance(v, _Col) else F.lit(v)
             field_type = to_spark_field_type(md.current_schema, c)
             df = df.withColumn(c, F.when(cond, val.cast(field_type)).otherwise(F.col(c)))
-        new_files = write_data_files(
-            table.spark, df, table.location, md.current_schema, md.default_spec,
-            md.default_sort_order, md.current_schema_id, seq,
-            target_file_size=table._target_file_size(),
-            distribution_mode=table._distribution_mode(),
-            bloom_columns=table._bloom_columns(),
-            nan_count_columns=table._nan_count_columns(),
-        exact_bounds_columns=table._exact_bounds_columns(),
-            data_location=table._data_location(),
-            bucket_fn=table._bucket_fn(),
-        )
+        new_files = write_data_files(table, df)
         remaining_deletes = _deletes_still_needed(table, untouched)
         return table._commit_snapshot(OP_REPLACE, untouched + remaining_deletes + new_files)
 
@@ -550,15 +517,14 @@ def merge(table, source: DataFrame, on: list[str], *,
                 elif has_nulls:
                     prune_expr = and_(prune_expr, eis_null(k))
             candidates, untouched = _split_candidates(table, prune_expr)
-        seq = table._next_sequence()
 
         target = _read_candidates(table, candidates) if candidates else table.spark.createDataFrame([], table.spark_schema())
 
         # SQL MERGE cardinality rule: multiple source rows matching ONE
-        # target row is an error, not a row multiplication (pre-r6 the
-        # full-outer join silently duplicated the matched target row once
-        # per source duplicate). Duplicate keys that match no target row
-        # remain legal — each NOT MATCHED row inserts, as in SQL.
+        # target row is an error, not a row multiplication (the full-outer
+        # join would duplicate the matched target row once per source
+        # duplicate). Duplicate keys that match no target row remain
+        # legal — each NOT MATCHED row inserts, as in SQL.
         if _card["_src_n"] != _card["_src_keys"] and candidates:
             dup_keys = (source.groupBy(*[F.col(k) for k in on])
                         .agg(F.count(F.lit(1)).alias("_n")).filter(F.col("_n") > 1))
@@ -620,17 +586,7 @@ def merge(table, source: DataFrame, on: list[str], *,
             result = result.filter(F.col("t._t_exists").isNotNull())
         result = result.select(*out_cols)
 
-        new_files = write_data_files(
-            table.spark, result, table.location, schema, md.default_spec,
-            md.default_sort_order, md.current_schema_id, seq,
-            target_file_size=table._target_file_size(),
-            distribution_mode=table._distribution_mode(),
-            bloom_columns=table._bloom_columns(),
-            nan_count_columns=table._nan_count_columns(),
-        exact_bounds_columns=table._exact_bounds_columns(),
-            data_location=table._data_location(),
-            bucket_fn=table._bucket_fn(),
-        )
+        new_files = write_data_files(table, result)
         remaining_deletes = _deletes_still_needed(table, untouched)
         return table._commit_snapshot(OP_OVERWRITE, untouched + remaining_deletes + new_files,
                                       summary_extra=summary_extra,

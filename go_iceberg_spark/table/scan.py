@@ -45,6 +45,7 @@ from .metadata import (
     DataFileEntry,
     Snapshot,
     TableMetadata,
+    delete_applies,
     manifest_members,
 )
 from .write import encode_literal
@@ -256,23 +257,21 @@ class ScanBuilder:
         entries = self._pruned_entries(snap, enc, md, proj)
         data_files = [e for e in entries if e.content == CONTENT_DATA
                       if _bucket_partition_might_match(flt, e, md)]
-        pos_deletes = [e for e in entries if e.content == CONTENT_POSITION_DELETES]
-        eq_deletes = [e for e in entries if e.content == CONTENT_EQUALITY_DELETES]
+        deletes = ([e for e in entries if e.content == CONTENT_POSITION_DELETES]
+                   + [e for e in entries if e.content == CONTENT_EQUALITY_DELETES])
 
         # delete-file applicability depends only on the data file's sequence
         # number; memoize per distinct sequence so planning is
         # O(data + sequences x deletes), not O(data x deletes)
         dels_by_seq: dict[int, list[DataFileEntry]] = {}
 
-        def dels_for(seq: int) -> list[DataFileEntry]:
-            if seq not in dels_by_seq:
-                dels_by_seq[seq] = (
-                    [d for d in pos_deletes if d.sequence_number >= seq]
-                    + [d for d in eq_deletes if d.sequence_number > seq]
-                )
-            return dels_by_seq[seq]
+        def dels_for(e: DataFileEntry) -> list[DataFileEntry]:
+            if e.sequence_number not in dels_by_seq:
+                dels_by_seq[e.sequence_number] = [
+                    d for d in deletes if delete_applies(d, e)]
+            return dels_by_seq[e.sequence_number]
 
-        return [FileScanTask(e, dels_for(e.sequence_number)) for e in data_files]
+        return [FileScanTask(e, dels_for(e)) for e in data_files]
 
     # kept-entry counts up to this are pruned in memory through the table's
     # per-member cache; above it, scans do a pruned read per planning call

@@ -35,7 +35,6 @@ from .metadata import (
     MAIN_BRANCH,
     MANIFEST_LIST_SUFFIX,
     OP_APPEND,
-    OP_DELETE,
     OP_OVERWRITE,
     OP_REPLACE,
     DataFileEntry,
@@ -182,12 +181,17 @@ class Table:
                          manifest_groups: list[list[DataFileEntry]] | None = None) -> Snapshot:
         """Write manifests + new metadata version. ``entries`` is the FULL
         live file set of the new snapshot; ``_write_manifest_tree`` reuses
-        the parent's unchanged members.
+        the parent's unchanged members. Every entry not live in the parent
+        (the ref head) is a file this commit adds and gets this commit's
+        sequence number, which MoR delete applicability keys off; a conflict
+        retry re-sequences, so no caller can stamp it up front.
         ``ref`` targets a branch: only that ref moves; main (and the table's
         read view) is untouched until a fast_forward publishes it.
         ``properties_extra`` merges into table properties IN THE SAME
         metadata commit — atomic with the snapshot (the streaming sink's
         expiry-proof batch high-water mark rides here)."""
+        from dataclasses import replace as _rpl
+
         md = self.metadata
         if ref == MAIN_BRANCH or ref not in md.refs:
             parent = md.current_snapshot()
@@ -195,6 +199,15 @@ class Table:
             parent = md.snapshot_by_id(md.refs[ref].snapshot_id)
         seq = self._next_sequence()
         sid = new_snapshot_id()
+        prev = {e.file_path for e in (self.manifest_entries(parent) if parent else [])}
+
+        def stamped(es: list[DataFileEntry]) -> list[DataFileEntry]:
+            return [e if e.sequence_number == seq or e.file_path in prev
+                    else _rpl(e, sequence_number=seq) for e in es]
+
+        entries = stamped(entries)
+        if manifest_groups is not None:
+            manifest_groups = [stamped(g) for g in manifest_groups]
         # manifest-format: dual (default) = parquet members for the engine's
         # scan/planning tiers PLUS the Iceberg-spec Avro tree for external
         # readers (both written incrementally, O(changed+added) per commit);
@@ -222,7 +235,6 @@ class Table:
                 force_compact=compact_manifests,
                 groups=manifest_groups)
 
-        prev = {e.file_path for e in (self.manifest_entries(parent) if parent else [])}
         cur = {e.file_path for e in entries}
         data_entries = [e for e in entries if e.content == CONTENT_DATA]
         summary = {
@@ -260,8 +272,6 @@ class Table:
         )
         new_md = md.with_snapshot(snap, ref=ref)
         if properties_extra:
-            from dataclasses import replace as _rpl
-
             # COMMIT_SEQ_PLACEHOLDER values resolve to THIS commit's sequence
             # number — callers (the streaming sink's high-water-seq mark)
             # can't know it up front because a conflict retry re-sequences
@@ -370,38 +380,6 @@ class Table:
                 self.refresh()
 
     # -- writes ------------------------------------------------------------
-    def _target_file_size(self) -> int:
-        """``write.target-file-size-bytes`` table property (Iceberg name;
-        reference default: table/insert.go:51), else the 128 MB default."""
-        from .write import DEFAULT_TARGET_FILE_SIZE
-
-        raw = self.metadata.properties.get("write.target-file-size-bytes")
-        return int(raw) if raw else DEFAULT_TARGET_FILE_SIZE
-
-    def _distribution_mode(self) -> str:
-        """``write.distribution-mode`` property: none (default) | range.
-        Range-shuffles on the sort key (unpartitioned) or on
-        (partition, sort key) (partitioned, r7) before the local sort, so
-        per-file bounds are disjoint and point scans prune to ~1 file.
-        Partitioned writes without range mode hash-cluster on the
-        partition columns (Iceberg's hash mode) — never the small-files
-        spray Iceberg calls none."""
-        return self.metadata.properties.get("write.distribution-mode", "none")
-
-    def _data_location(self) -> str | None:
-        """``write.data.path`` property (Iceberg name): an alternate root for
-        DATA files — e.g. metadata on s3:// with data on a path both Spark
-        and the driver can reach. None = data under the table location."""
-        return self.metadata.properties.get("write.data.path")
-
-    def _nan_count_columns(self) -> tuple[str, ...]:
-        """``write.nan-count-columns`` property: comma-separated float/double
-        columns whose per-file NaN counts are collected at write (Iceberg
-        nan_value_counts) — a proven zero re-enables metadata-only deletes
-        on float predicates (expr.must_match)."""
-        raw = self.metadata.properties.get("write.nan-count-columns", "")
-        return tuple(c.strip() for c in raw.split(",") if c.strip())
-
     def _bucket_fn(self) -> str:
         """Resolved bucket-hash mode: "spark" (F.hash, int-as-long width),
         "spark-int" (declared-legacy int-width layout), "spark-unstamped"
@@ -441,24 +419,6 @@ class Table:
                 "the existing stamp is known-wrong")
         self.set_properties({"write.bucket-hash-width": width})
 
-    def _bloom_columns(self) -> tuple[str, ...]:
-        """``write.bloom-columns`` property: comma-separated integer/string
-        columns that get a per-file bloom filter in their manifest stats —
-        point lookups on unclustered columns prune files min/max cannot."""
-        raw = self.metadata.properties.get("write.bloom-columns", "")
-        return tuple(c.strip() for c in raw.split(",") if c.strip())
-
-    def _exact_bounds_columns(self) -> tuple[str, ...]:
-        """``write.exact-bounds-columns`` property (r10): comma-separated
-        string/binary columns whose manifest bounds this engine computes
-        from the VALUES at write time (parquet writers may truncate string
-        footer bounds — incrementing the max so it stays valid for pruning
-        but may be a value present in no row). The stats carry a
-        ``bounds_exact`` marker that lets ``metadata_min_max`` serve the
-        column; unmarked stats (e.g. ``add_files`` imports) stay refused."""
-        raw = self.metadata.properties.get("write.exact-bounds-columns", "")
-        return tuple(c.strip() for c in raw.split(",") if c.strip())
-
     def append(self, df: DataFrame, summary_extra: dict[str, str] | None = None,
                properties_extra: dict[str, str] | None = None,
                pre_commit_check=None) -> Snapshot | None:
@@ -474,33 +434,12 @@ class Table:
         sink's check-then-act fix: two writers racing the same replayed
         batch must not both apply it; the loser's retry sees the winner's
         marker in the reloaded state and backs off)."""
-        md = self.metadata
-        new_files = write_data_files(
-            self.spark, df, self.location, md.current_schema, md.default_spec,
-            md.default_sort_order, md.current_schema_id, self._next_sequence(),
-            target_file_size=self._target_file_size(),
-            distribution_mode=self._distribution_mode(),
-            bloom_columns=self._bloom_columns(),
-            nan_count_columns=self._nan_count_columns(),
-                exact_bounds_columns=self._exact_bounds_columns(),
-            data_location=self._data_location(),
-            bucket_fn=self._bucket_fn(),
-        )
+        new_files = write_data_files(self, df)
 
         def commit():
-            from dataclasses import replace as _rpl
-
             if pre_commit_check is not None and not pre_commit_check():
                 return None
-            # a conflict retry reloads metadata and advances the sequence;
-            # re-stamp the (already written) files so entry sequence numbers
-            # agree with the snapshot that finally commits them — MoR delete
-            # applicability keys off these
-            seq = self._next_sequence()
-            files = ([_rpl(f, sequence_number=seq) for f in new_files]
-                     if new_files and new_files[0].sequence_number != seq else new_files)
-            live = self.live_entries()
-            return self._commit_snapshot(OP_APPEND, live + files,
+            return self._commit_snapshot(OP_APPEND, self.live_entries() + new_files,
                                          summary_extra=summary_extra,
                                          properties_extra=properties_extra)
 
@@ -550,31 +489,9 @@ class Table:
         if filter is None or filter is ALWAYS_TRUE:
             # full overwrite: the replacement files don't depend on table
             # state, so write once and only retry the metadata commit
-            new_files = write_data_files(
-                self.spark, df, self.location, self.metadata.current_schema, self.metadata.default_spec,
-                self.metadata.default_sort_order, self.metadata.current_schema_id, self._next_sequence(),
-                target_file_size=self._target_file_size(),
-                distribution_mode=self._distribution_mode(),
-                bloom_columns=self._bloom_columns(),
-                nan_count_columns=self._nan_count_columns(),
-                exact_bounds_columns=self._exact_bounds_columns(),
-                data_location=self._data_location(),
-                bucket_fn=self._bucket_fn(),
-            )
-            def commit_full():
-                from dataclasses import replace as _rpl
-
-                # same re-stamp as append: a conflict retry advances the
-                # sequence, and committing files stamped with the stale
-                # pre-conflict sequence would mis-order MoR delete
-                # applicability against concurrent eq/pos deletes
-                seq = self._next_sequence()
-                files = ([_rpl(f, sequence_number=seq) for f in new_files]
-                         if new_files and new_files[0].sequence_number != seq
-                         else new_files)
-                return self._commit_snapshot(OP_OVERWRITE, files)
-
-            return self._retrying(commit_full)
+            new_files = write_data_files(self, df)
+            return self._retrying(
+                lambda: self._commit_snapshot(OP_OVERWRITE, new_files))
 
         from .mutate import _rebind_filter
 
@@ -583,7 +500,7 @@ class Table:
 
         def build_and_commit():
             # selective overwrite races like any mutation: the CoW rewrite
-            # recomputes against reloaded metadata on each retry (r6); the
+            # recomputes against reloaded metadata on each retry; the
             # filter AND the replacement rows (authored against the entry
             # schema) re-bind by field id so a concurrent rename follows
             from .mutate import _rebind_to_current, rewrite_for_delete
@@ -598,17 +515,7 @@ class Table:
             for old, new in col_map.items():
                 new_df = new_df.withColumnRenamed(old, new)
             surviving = rewrite_for_delete(self, flt)
-            new_files = write_data_files(
-                self.spark, new_df, self.location, self.metadata.current_schema, self.metadata.default_spec,
-                self.metadata.default_sort_order, self.metadata.current_schema_id, self._next_sequence(),
-                target_file_size=self._target_file_size(),
-                distribution_mode=self._distribution_mode(),
-                bloom_columns=self._bloom_columns(),
-                nan_count_columns=self._nan_count_columns(),
-                exact_bounds_columns=self._exact_bounds_columns(),
-                data_location=self._data_location(),
-                bucket_fn=self._bucket_fn(),
-            )
+            new_files = write_data_files(self, new_df)
             return self._commit_snapshot(OP_OVERWRITE, surviving + new_files)
 
         return self._retrying(build_and_commit)
@@ -817,15 +724,9 @@ class Table:
         """Append onto a branch: the write stacks on the BRANCH head and only
         the branch ref moves — main readers never see it until
         ``fast_forward`` publishes (write-audit-publish staging)."""
-        md = self.metadata
-        if name not in md.refs:
+        if name not in self.metadata.refs:
             raise ValidationError(f"branch {name!r} does not exist")
-        new_files = write_data_files(
-            self.spark, df, self.location, md.current_schema, md.default_spec,
-            md.default_sort_order, md.current_schema_id, self._next_sequence(),
-            data_location=self._data_location(),
-            bucket_fn=self._bucket_fn(),
-        )
+        new_files = write_data_files(self, df)
 
         def commit():
             ref = self.metadata.refs.get(name)
@@ -875,7 +776,7 @@ class Table:
 
     def cherrypick(self, snapshot_id: int) -> Snapshot:
         """Apply ONE snapshot's changes onto the current head as a NEW
-        commit (Iceberg's ``cherrypick_snapshot`` procedure; r9) — the WAP
+        commit (Iceberg's ``cherrypick_snapshot`` procedure) — the WAP
         flavor ``fast_forward`` cannot express: publish a single audited
         commit from a branch whose other commits stay unpublished.
         Append-only, matching Iceberg's own restriction: a delete/
@@ -886,15 +787,13 @@ class Table:
         rewritten or copied); the pick fails if any of them are already
         live on this branch (double-pick), and conflict retries re-check
         against the reloaded live set."""
-        from dataclasses import replace as _rpl
-
         snap = self.snapshot_by_id(snapshot_id)
         if snap.operation != OP_APPEND:
             raise ValidationError(
                 f"cherrypick supports append snapshots only; "
                 f"{snapshot_id} is {snap.operation!r}")
         if snap.summary.get("parent-rewired"):
-            # expiry re-parented this snapshot across a removal gap (r10):
+            # expiry re-parented this snapshot across a removal gap:
             # its entries-minus-parent diff now includes everything the
             # expired gap added, so "what this commit added" is lost —
             # picking would silently re-register gap files (row duplication)
@@ -910,7 +809,6 @@ class Table:
         added = [e for p, e in cur.items() if p not in prev]
 
         def commit():
-            seq = self._next_sequence()
             live = self.live_entries()
             live_paths = {e.file_path for e in live}
             dup = [e.file_path for e in added if e.file_path in live_paths]
@@ -932,9 +830,8 @@ class Table:
                         f"picked onto this branch (commit {cur.snapshot_id}) "
                         "(double-pick)")
                 cur = by_id.get(cur.parent_snapshot_id)
-            files = [_rpl(e, sequence_number=seq) for e in added]
             return self._commit_snapshot(
-                OP_APPEND, live + files,
+                OP_APPEND, live + added,
                 summary_extra={"cherry-picked-from": str(snapshot_id)})
 
         return self._retrying(commit)

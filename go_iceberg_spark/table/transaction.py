@@ -23,10 +23,9 @@ import os
 from typing import Any
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..errors import ValidationError
-from ..expr import Expression, to_column
+from ..expr import Expression
 from .metadata import (
     CONTENT_EQUALITY_DELETES,
     OP_DELETE,
@@ -49,13 +48,7 @@ class Transaction:
         self._committed = False
 
     def append(self, df: DataFrame) -> "Transaction":
-        md = self.table.metadata
-        self._staged_adds += write_data_files(
-            self.table.spark, df, self.table.location, md.current_schema, md.default_spec,
-            md.default_sort_order, md.current_schema_id, self.table._next_sequence(),
-            data_location=self.table._data_location(),
-            bucket_fn=self.table._bucket_fn(),
-        )
+        self._staged_adds += write_data_files(self.table, df)
         return self
 
     def delete(self, filter_: Expression) -> "Transaction":
@@ -69,8 +62,6 @@ class Transaction:
         return self
 
     def commit(self):
-        from dataclasses import replace as _rpl
-
         from ..expr import or_
         from .mutate import _rebind_filter, rewrite_for_delete
 
@@ -80,13 +71,10 @@ class Transaction:
               else (OP_DELETE if self._staged_delete_filters else "append"))
 
         def build_and_commit():
-            # re-evaluated on each retry against the RELOADED metadata:
-            # a concurrent commit between stage and commit must not kill the
-            # transaction (r6 probe — the raw _commit_snapshot call here
-            # conflicted and orphaned the staged files while BulkWriter
-            # already retried); delete filters re-run so concurrently added
-            # matching files are rewritten too, and staged adds re-stamp
-            # their sequence numbers to the winning snapshot's
+            # re-evaluated on each retry against the RELOADED metadata, so
+            # a concurrent commit between stage and commit neither kills the
+            # transaction nor orphans its staged files; delete filters re-run
+            # so concurrently added matching files are rewritten too
             if self._staged_delete_filters:
                 # each filter re-binds from its STAGE-time schema to the
                 # reloaded current schema by field id, so a rename between
@@ -98,11 +86,7 @@ class Transaction:
                 entries = rewrite_for_delete(self.table, combined)
             else:
                 entries = self.table.live_entries()
-            seq = self.table._next_sequence()
-            adds = ([_rpl(f, sequence_number=seq) for f in self._staged_adds]
-                    if self._staged_adds and self._staged_adds[0].sequence_number != seq
-                    else self._staged_adds)
-            return self.table._commit_snapshot(op, entries + adds)
+            return self.table._commit_snapshot(op, entries + self._staged_adds)
 
         snap = self.table._retrying(build_and_commit)
         self._committed = True
@@ -120,13 +104,7 @@ class BulkWriter:
         self._rows = 0
 
     def write(self, df: DataFrame) -> "BulkWriter":
-        md = self.table.metadata
-        files = write_data_files(
-            self.table.spark, df, self.table.location, md.current_schema, md.default_spec,
-            md.default_sort_order, md.current_schema_id, self.table._next_sequence(),
-            data_location=self.table._data_location(),
-            bucket_fn=self.table._bucket_fn(),
-        )
+        files = write_data_files(self.table, df)
         self._staged += files
         self._rows += sum(f.record_count for f in files)
         if self.auto_commit_rows and self._rows >= self.auto_commit_rows:
@@ -158,33 +136,18 @@ def delete_equality(table, keys_df: DataFrame, key_columns: list[str]):
     file; rows in older-sequence data files whose key tuple matches are
     dropped at scan time (null-safe). Implements what the reference stubs
     (reference: table/delete.go:494-501)."""
-    md = table.metadata
-    schema = md.current_schema
+    schema = table.metadata.current_schema
     eq_ids = []
     for k in key_columns:
         f = schema.find_field(k)
         if f is None:
             raise ValidationError(f"equality-delete key {k!r} not in schema")
         eq_ids.append(f.field_id)
-    seq = table._next_sequence()
     files = write_data_files(
-        table.spark, keys_df.select(*key_columns).distinct(), table.location,
-        schema, UNPARTITIONED, None, md.current_schema_id, seq,
-        content=CONTENT_EQUALITY_DELETES, subdir="deletes",
-        data_location=table._data_location(),
-        bucket_fn=table._bucket_fn(),
-    )
+        table, keys_df.select(*key_columns).distinct(),
+        CONTENT_EQUALITY_DELETES, schema, UNPARTITIONED)
     files = [DataFileEntry(**{**f.__dict__, "equality_ids": tuple(eq_ids)}) for f in files]
-
-    def build_and_commit():
-        # retry past concurrent commits (r6): the delete file is already
-        # written; re-stamp its sequence to the winning snapshot's so MoR
-        # applicability (strictly-greater rule) keys off the real commit
-        from dataclasses import replace as _rpl
-
-        seq = table._next_sequence()
-        stamped = ([_rpl(f, sequence_number=seq) for f in files]
-                   if files and files[0].sequence_number != seq else files)
-        return table._commit_snapshot(OP_DELETE, table.live_entries() + stamped)
-
-    return table._retrying(build_and_commit)
+    # the delete file is written once; a retry past a concurrent commit
+    # only re-commits it
+    return table._retrying(
+        lambda: table._commit_snapshot(OP_DELETE, table.live_entries() + files))

@@ -15,6 +15,27 @@ Spark-native design:
 - file sizing honors the table's target file size by repartitioning on the
   partition key (reference default 128 MB, table/insert.go:51).
 
+``write_data_files`` reads every write setting from the table itself, so all
+data writers (append, overwrite, branch appends, transactions, bulk writers,
+row-level mutations, compaction) lay out files the same way. The table
+properties it honours, for data files only:
+
+- ``write.target-file-size-bytes``: target file size (default 128 MB);
+- ``write.distribution-mode``: ``none`` (default) or ``range`` (range-shuffle
+  on the sort key, within each partition, so per-file bounds are disjoint);
+- ``write.bloom-columns``: integer/string columns that get a per-file bloom
+  filter in their stats;
+- ``write.nan-count-columns``: float/double columns whose per-file NaN
+  counts are collected;
+- ``write.exact-bounds-columns``: string/binary columns whose bounds are
+  computed from the values and marked exact;
+- ``write.bucket-function`` / ``write.bucket-hash-width``: the bucket hash
+  (``resolve_bucket_fn``).
+
+Delete files keep the plain layout: no sort, no distribution, default size,
+footer stats only. ``write.data.path`` (an alternate root for the data and
+delete trees, ``data_path``) applies to both.
+
 Stats are encoded order-preservingly per Iceberg type (timestamps→µs,
 dates→days, decimal→string-decimal) and keyed by FIELD ID so renames keep
 pruning valid (reference: spec/manifest.go:121-136).
@@ -50,7 +71,6 @@ from .metadata import (
     UNPARTITIONED,
     DataFileEntry,
     PartitionSpec,
-    SortOrder,
 )
 
 _BUCKET_RE = re.compile(r"^bucket\[(\d+)\]$")
@@ -709,36 +729,70 @@ def _decimal_widens(have: str, want) -> bool:
     return s1 == want.scale and p1 <= want.precision
 
 
-def write_data_files(
-    spark: SparkSession,
-    df: DataFrame,
-    location: str,
-    schema: Schema,
-    spec: PartitionSpec,
-    sort_order: SortOrder | None,
-    schema_id: int,
-    sequence_number: int,
-    target_file_size: int = DEFAULT_TARGET_FILE_SIZE,
-    content: int = CONTENT_DATA,
-    subdir: str = "data",
-    distribution_mode: str = "none",
-    bloom_columns: tuple[str, ...] = (),
-    nan_count_columns: tuple[str, ...] = (),
-    exact_bounds_columns: tuple[str, ...] = (),
-    data_location: str | None = None,
-    bucket_fn: str = "spark",
-) -> list[DataFileEntry]:
-    """Write ``df`` as parquet data files under the table location and return
-    manifest entries with real stats. The write itself is fully distributed;
-    only footer harvesting results (one small dict per file) reach the driver.
+def data_path(properties: dict) -> str | None:
+    """``write.data.path``: an alternate root for the data and delete trees,
+    e.g. metadata on s3:// with data on a path both Spark and the driver can
+    reach. None keeps them under the table location."""
+    return properties.get("write.data.path")
 
-    ``data_location`` (Iceberg ``write.data.path``) points the DATA tree at a
-    different root than the table location — e.g. metadata on s3:// with data
-    on a Hadoop-visible path. Entries then carry ABSOLUTE paths (same
+
+def _column_list(properties: dict, key: str) -> tuple[str, ...]:
+    raw = properties.get(key, "")
+    return tuple(c.strip() for c in raw.split(",") if c.strip())
+
+
+def write_data_files(
+    table,
+    df: DataFrame,
+    content: int = CONTENT_DATA,
+    schema: Schema | None = None,
+    spec: PartitionSpec | None = None,
+    *,
+    target_file_size: int | None = None,
+    keep_order: bool = False,
+) -> list[DataFileEntry]:
+    """Write ``df`` as parquet files of ``table`` and return manifest entries
+    with real stats, stamped with the table's next sequence number (the
+    commit re-stamps them if it lands later). The write itself is fully
+    distributed; only footer harvesting results (one small dict per file)
+    reach the driver.
+
+    Data files take the table's current schema, default spec and sort order
+    and the ``write.*`` properties listed in the module docstring. Delete
+    files (``content`` other than data) pass their own ``schema`` and
+    ``spec`` and land under ``deletes/``. Compaction overrides the table's
+    ``target_file_size``, and ``keep_order`` writes an already clustered
+    input (a z-order rewrite) without the sort order or range distribution.
+
+    Under ``write.data.path`` entries carry ABSOLUTE paths (the same
     convention as ``add_files`` imports), which the scan resolves unchanged.
     """
+    md = table.metadata
+    props = md.properties
+    location = table.location
+    data_root = data_path(props) or location
+    bucket_fn = resolve_bucket_fn(props)
+    bloom_columns = nan_count_columns = exact_bounds_columns = ()
+    distribution_mode = "none"
+    if content == CONTENT_DATA:
+        schema, spec, subdir = md.current_schema, md.default_spec, "data"
+        sort_order = None if keep_order else md.default_sort_order
+        if target_file_size is None:
+            raw = props.get("write.target-file-size-bytes")
+            target_file_size = int(raw) if raw else DEFAULT_TARGET_FILE_SIZE
+        if not keep_order:
+            distribution_mode = props.get("write.distribution-mode", "none")
+        bloom_columns = _column_list(props, "write.bloom-columns")
+        nan_count_columns = _column_list(props, "write.nan-count-columns")
+        exact_bounds_columns = _column_list(props, "write.exact-bounds-columns")
+    else:
+        sort_order, subdir = None, "deletes"
+        target_file_size = DEFAULT_TARGET_FILE_SIZE
+    spark = table.spark
+    schema_id = md.current_schema_id
+    sequence_number = table._next_sequence()
+
     write_id = uuid_mod.uuid4().hex[:16]
-    data_root = data_location or location
     out_dir = os.path.join(data_root, subdir, write_id)
 
     # equality-delete files legitimately carry ONLY their key columns (the

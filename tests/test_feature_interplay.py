@@ -634,6 +634,27 @@ def test_transaction_commit_retries_past_concurrent_writer(spark, catalog):
     assert sorted(r.k for r in t.to_df().collect()) == [1, 2, 3, 4, 10, 11, 20, 30, 40]
 
 
+def test_bulk_writer_rows_survive_an_earlier_equality_delete(spark, catalog):
+    """A BulkWriter's staged files take the sequence number of the commit
+    that lands them: an equality delete committed between the write and
+    the commit must not remove the bulk rows, which the table receives
+    after the delete."""
+    from go_iceberg_spark.table.transaction import BulkWriter, delete_equality
+
+    df = spark.createDataFrame([Row(id=i, v=float(i)) for i in range(5)])
+    t = catalog.create_table("db", "bulk_seq", from_spark_schema(df.schema))
+    t.append(df)
+    bw = BulkWriter(t)
+    bw.write(spark.createDataFrame([Row(id=100, v=100.0)]))
+    t.append(spark.createDataFrame([Row(id=200, v=200.0)]))
+    delete_equality(t, spark.createDataFrame([Row(id=100)]), ["id"])
+    snap = bw.commit()
+    assert sorted(r.id for r in t.to_df().collect()) == [0, 1, 2, 3, 4, 100, 200]
+    prev = {e.file_path for e in t.manifest_entries(t.snapshot_by_id(snap.parent_snapshot_id))}
+    added = [e for e in t.manifest_entries(snap) if e.file_path not in prev]
+    assert added and all(e.sequence_number == snap.sequence_number for e in added)
+
+
 def test_wap_publish_after_schema_change_on_main(spark, catalog):
     """r6 probe (passed as designed, pinned): stage rows on an audit branch,
     add a column on main, then fast-forward main to the branch head — the
@@ -719,6 +740,42 @@ def test_bloom_and_nan_properties_follow_rename_and_drop(spark, catalog):
     # a dangling name
     t.update_schema().drop_column("v").commit()
     assert "write.nan-count-columns" not in t.metadata.properties
+
+
+@pytest.mark.parametrize("writer", ["append", "transaction", "bulk_writer", "branch"])
+def test_every_data_writer_honours_write_properties(spark, catalog, writer):
+    """The write.* stats properties belong to the table, not the call site:
+    files landed by a Transaction, a BulkWriter or a branch append carry the
+    same bloom filters, NaN counts and exact-bounds markers as append's."""
+    from go_iceberg_spark.table.transaction import BulkWriter, Transaction
+
+    df = spark.createDataFrame(
+        [Row(id=i, v=float(i), tag=f"t{i:03d}") for i in range(200)])
+    t = catalog.create_table(
+        "db", f"wprops_{writer}", from_spark_schema(df.schema),
+        properties={"write.bloom-columns": "id",
+                    "write.nan-count-columns": "v",
+                    "write.exact-bounds-columns": "tag"})
+    t.append(df)
+    before = {e.file_path for e in t.live_entries()}
+    more = spark.createDataFrame(
+        [Row(id=1000 + i, v=float(i), tag=f"u{i:03d}") for i in range(200)])
+    if writer == "append":
+        snap = t.append(more)
+    elif writer == "transaction":
+        snap = Transaction(t).append(more).commit()
+    elif writer == "bulk_writer":
+        snap = BulkWriter(t).write(more).commit()
+    else:
+        t.create_branch("audit")
+        snap = t.append_to_branch("audit", more)
+    new = [e for e in t.manifest_entries(snap) if e.file_path not in before]
+    fid = {f.name: f.field_id for f in t.schema.fields}
+    assert new
+    for e in new:
+        assert e.column_stats[fid["id"]].get("bloom"), writer
+        assert e.column_stats[fid["v"]].get("nan_count") == 0, writer
+        assert e.column_stats[fid["tag"]].get("bounds_exact") is True, writer
 
 
 def test_exact_bounds_property_follows_rename_and_drop(spark, catalog):
