@@ -54,15 +54,15 @@ JACCARD_MAX_SHINGLE_DF = 128
 # verification join (2 exploded rows x ~30 B per pair: 1M pairs ~ 60 MB on
 # each executor); above it the join degrades to a partitioned shuffle join
 # — correct for adversarial corpora, one signature-table exchange.
-# r13 (ADVICE): this gate is sized for ID-ONLY rows and now hints only the
-# id-only frames (the member semi-join and the pair side of the FIRST set
-# join); frames carrying shingle-set arrays are never force-broadcast —
-# near the cap, 1M pairs x a multi-KB set array is a multi-GB payload.
+# The gate is sized for ID-ONLY rows and hints only the id-only frames (the
+# member semi-join and the pair side of the FIRST set join); frames carrying
+# shingle-set arrays are never force-broadcast — near the cap, 1M pairs x a
+# multi-KB set array is a multi-GB payload.
 MINHASH_BROADCAST_CAND_MAX = 1_000_000
 
-# r13 budgeted shingle-row reuse (guide §1.2/§2.3 — don't compute twice what
-# fits materialized once): when Catalyst's size estimate of the INPUT corpus
-# is at or below this budget, the (_id, _h) shingle table from pass 1 is
+# Budgeted shingle-row reuse (don't compute twice what fits materialized
+# once): when Catalyst's size estimate of the INPUT corpus is at or below
+# this budget, the (_id, _h) shingle table from pass 1 is
 # localCheckpoint'ed and REUSED for candidate verification, removing the
 # second scan+explode+md5 pass entirely. Past the budget the two-pass shape
 # runs unchanged: at 100 TB a corpus-sized shingle checkpoint (~2-3x the
@@ -276,24 +276,18 @@ def _minhash_signature_table(df: DataFrame, id_col: str, text_col: str, n: int, 
 
 
 def _slim_signatures_from_shingles(sh: DataFrame) -> DataFrame:
-    """The k-permutation min aggregation over a prepared (_id, _h) shingle
-    table — shared by the direct path and the r13 shingle-reuse path so
-    both provably apply the identical arithmetic."""
+    """Per-doc signature rows (_id, mh_0..mh_{k-1}) from a prepared
+    (_id, _h) shingle table, WITHOUT the shingle-hash set payload — the
+    banding path needs only the k minhash values, and at corpus scale a
+    collect_set per doc dominates the signature stage's CPU and makes the
+    materialized table ~4x larger (measured at sf3: 106 MB checkpointed
+    with _hs vs ~25 MB without). Verification builds shingle sets for
+    CANDIDATE members only (see minhash_lsh_pairs)."""
     hp = F.col("_h") % MINHASH_PRIME
     return sh.groupBy("_id").agg(*[
         F.min((F.lit(a) * hp + F.lit(b)) % MINHASH_PRIME).alias(f"mh_{j}")
         for j, (a, b) in enumerate(MINHASH_COEFFS)
     ])
-
-
-def _minhash_slim_signatures(df: DataFrame, id_col: str, text_col: str, n: int, mode: str) -> DataFrame:
-    """Per-doc signature rows (_id, mh_0..mh_{k-1}) WITHOUT the shingle-hash
-    set payload — the banding path needs only the k minhash values, and at
-    corpus scale a collect_set per doc dominates the signature stage's CPU
-    and makes the materialized table ~4x larger (measured at sf3: 106 MB
-    checkpointed with _hs vs ~25 MB without). Verification recomputes
-    shingle sets for CANDIDATE members only (see minhash_lsh_pairs)."""
-    return _slim_signatures_from_shingles(_shingle_table(df, id_col, text_col, n, mode))
 
 
 def _band_rows(sig: DataFrame, payload: tuple[str, ...] = ()) -> DataFrame:
@@ -352,113 +346,88 @@ def minhash_lsh_pairs(
     n: int = 3,
     mode: str = "word",
     threshold: float = 0.6,
-    materialize: bool = True,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs via MinHash banding: ids sharing any band of the
     signature become candidates; candidates are verified with exact Jaccard.
 
-    Scale shape (r4 payload-free band join; r12 candidate-proportional
-    verification): the shingle+minhash subtree evaluates once into a
+    Scale shape: the shingle+minhash subtree evaluates once into a
     checkpointed SLIM signature table (_id + k minhash values, no per-doc
     shingle-set payload); candidate generation is a band-keyed self-join
     over (_band, _bh, _id) ONLY — the band shuffle carries 3 small columns,
-    never shingle-hash sets (the r3 shape shuffled every doc's full shingle
-    set x4 bands x2 sides, which inverted at sf1: ~8x the shingle data moved
-    per run when candidates are sparse). Verification needs shingle sets
-    for CANDIDATE MEMBERS only: under the r13 reuse budget
-    (``MINHASH_SHINGLE_REUSE_MAX_INPUT_BYTES``) they filter the
+    never shingle-hash sets (shuffling every doc's full set x4 bands x2
+    sides moves ~8x the shingle data per run when candidates are sparse).
+    Verification needs shingle sets for CANDIDATE MEMBERS only: under the
+    reuse budget (``MINHASH_SHINGLE_REUSE_MAX_INPUT_BYTES``) they filter the
     checkpointed pass-1 shingle rows; past it they are recomputed
-    (broadcast semi-join on the input while the checkpointed candidate
-    count is <= MINHASH_BROADCAST_CAND_MAX, then the same shingle pass).
-    Either way that MEMBERS-scale set table is checkpointed once and each
-    pair's two sets attach via two plain joins — the id-only pair side
-    broadcast into the first while small, the array-carrying second join
-    left to AQE's runtime-bytes decision (r12 replaced an explode-to-(pair,
-    member, side) + pair-keyed groupBy reassembly whose exchange carried
-    both set arrays per pair; r13 dropped the forced broadcast of the
-    array-carrying side). Every post-banding exchange is proportional to
-    CANDIDATES, not corpus. Hot band buckets remain skew-splittable by AQE
-    in the id-only join.
+    (semi-join of the input against the members, then the same shingle
+    pass). Either way that MEMBERS-scale set table is checkpointed once and
+    each pair's two sets attach via two plain joins. Every post-banding
+    exchange is proportional to CANDIDATES, not corpus. Hot band buckets
+    remain skew-splittable by AQE in the id-only join.
 
     Worst-case bound of the candidates-only recompute: on a corpus where
-    nearly EVERY doc is a candidate member (e.g. the legacy sf1 bench
-    fixture, where every doc sits in a 10-copy near-dup cluster) the
-    second pass approaches a full re-scan + re-shingle — a bounded <= 2x
-    shingle-CPU constant, paid instead of the old design's corpus-sized
-    per-doc collect_set state (~4x the slim table, measured 106 MB vs
-    25 MB checkpointed at sf3) and its double-shuffle pathology. On
+    nearly EVERY doc is a candidate member (e.g. the sf1 bench fixture,
+    where every doc sits in a 10-copy near-dup cluster) the second pass
+    approaches a full re-scan + re-shingle — a bounded <= 2x shingle-CPU
+    constant, paid instead of a corpus-sized per-doc collect_set state
+    (~4x the slim table, measured 106 MB vs 25 MB checkpointed at sf3). On
     sparse-candidate corpora the second pass is proportionally tiny.
 
-    ``materialize=True`` (default) computes the result eagerly
-    (localCheckpoint — executor-local blocks, freed by GC, no CacheManager
-    entry) and unpersists the signature cache before returning, so
-    long-lived sessions running many queries do not accumulate corpus-sized
-    shingle caches. Pass ``materialize=False`` to get the lazy plan (for
-    plan audits / composition); the caller then owns cleanup via
-    ``spark.catalog.clearCache()`` — the lazy path persist()s THREE frames
-    (sig, cand, csets), all released by that one call.
+    The result is computed eagerly (localCheckpoint — executor-local
+    blocks, freed by GC, no CacheManager entry), so long-lived sessions
+    running many queries do not accumulate corpus-sized caches.
 
-    ``max_bucket`` (r12): drop band buckets holding more than this many
-    docs before the self-join. A bucket of size c emits c(c-1)/2 candidate
+    ``max_bucket``: drop band buckets holding more than this many docs
+    before the self-join. A bucket of size c emits c(c-1)/2 candidate
     pairs, so one boilerplate/templated cluster of 10k docs costs 50M
-    candidate rows — measured live in the r12 scaling audit, where
-    copy-count-sized clusters shuffled 7.5 GB and OOM'd a 24 GB heap at
-    sf10. Dropping a giant bucket is a bounded approximation: any pair it
-    held still becomes a candidate through any OTHER band the two docs
-    share, and clusters that big are better served by exact dedup or
-    cluster-level policies than by materializing their quadratic pair
+    candidate rows — copy-count-sized clusters shuffled 7.5 GB and OOM'd a
+    24 GB heap at sf10. Dropping a giant bucket is a bounded approximation:
+    any pair it held still becomes a candidate through any OTHER band the
+    two docs share, and clusters that big are better served by exact dedup
+    or cluster-level policies than by materializing their quadratic pair
     list. Default None keeps exact graded behavior."""
-    # r13 budgeted shingle-row reuse: under the input-size budget (and only
-    # on the eager path — the lazy twin keeps the pure two-pass lineage for
-    # plan audits), pass 1's (_id, _h) rows are checkpointed once and feed
-    # BOTH the signature aggregation and candidate verification, removing
-    # the second scan+explode+md5 pass. Identical rows by construction:
+    # The two-pass shape evaluates ``df``'s lineage twice (signatures, then
+    # candidate-member sets), which is only correct when recomputation
+    # replays identical rows — true for parquet/table scans, false for a
+    # lineage with nondeterministic expressions (rand(), uuid(), an
+    # unseeded shuffle). Such an input is checkpointed once; on
+    # deterministic inputs the probe is one py4j call.
+    try:
+        deterministic = bool(
+            df._jdf.queryExecution().analyzed().deterministic())
+    except Exception:  # noqa: BLE001 - unknowable -> documented contract
+        deterministic = True
+    if not deterministic:
+        df = df.localCheckpoint(eager=True)
+    # Budgeted shingle-row reuse: when Catalyst's input estimate fits the
+    # budget, pass 1's (_id, _h) rows are checkpointed once and feed BOTH
+    # the signature aggregation and candidate verification, removing the
+    # second scan+explode+md5 pass. Identical rows by construction:
     # verification filters the SAME shingle table to candidate members
     # instead of re-deriving it from a semi-joined input scan.
-    sh_reuse = None
-    if materialize:
-        # r13 runtime determinism guard (VERDICT r12 #4): the pipeline
-        # evaluates ``df``'s lineage more than once (signature pass +
-        # candidate-members verification pass), which is only correct when
-        # recomputation replays identical rows — true for parquet/table
-        # scans, silently false for a lineage containing nondeterministic
-        # expressions (rand(), uuid(), an unseeded shuffle). Pin such an
-        # input ONCE instead of documenting the hazard away; the
-        # corpus-sized checkpoint is the unavoidable price of a
-        # nondeterministic source in any engine. One py4j call (~ms) on
-        # deterministic inputs; never fires for the declared queries.
-        try:
-            deterministic = bool(
-                df._jdf.queryExecution().analyzed().deterministic())
-        except Exception:  # noqa: BLE001 - unknowable -> documented contract
-            deterministic = True
-        if not deterministic:
-            df = df.localCheckpoint(eager=True)
-        try:
-            est = int(df._jdf.queryExecution().optimizedPlan()
-                      .stats().sizeInBytes())
-        except Exception:  # noqa: BLE001 - no estimate -> safe two-pass shape
-            est = None
-        if est is not None and est <= MINHASH_SHINGLE_REUSE_MAX_INPUT_BYTES:
-            sh_reuse = _shingle_table(df, id_col, text_col, n, mode) \
-                .localCheckpoint(eager=True)
-    if sh_reuse is not None:
-        sig = _slim_signatures_from_shingles(sh_reuse)
+    try:
+        est = int(df._jdf.queryExecution().optimizedPlan()
+                  .stats().sizeInBytes())
+    except Exception:  # noqa: BLE001 - no estimate -> safe two-pass shape
+        est = None
+    reuse = est is not None and est <= MINHASH_SHINGLE_REUSE_MAX_INPUT_BYTES
+    sh = _shingle_table(df, id_col, text_col, n, mode)
+    if reuse:
+        sh = sh.localCheckpoint(eager=True)
+        # the checkpoint drops sh's doc-key partitioning, and AQE may then
+        # coalesce the signature aggregate to ONE partition: a band join
+        # fed by a single map task cannot split a hot bucket (AQE skew
+        # splits by map ranges), so restore the direct path's spread
+        sig = _spread(_slim_signatures_from_shingles(sh), "_id")
     else:
-        sig = _minhash_slim_signatures(df, id_col, text_col, n, mode)
-    if materialize:
-        # Eager checkpoint, not persist: the signature table is referenced
-        # from both sides of the band self-join, and under AQE those
-        # exchange subtrees materialize CONCURRENTLY from the coordinator's
-        # thread pool — a lazily-populated cache races itself, and the r12
-        # scaling audit measured the subtree recomputed from parquet twice
-        # (two extra full-corpus scans + duplicate exchanges per run).
-        # Checkpointing materializes it exactly once; executor-local blocks,
-        # freed by GC, no CacheManager entry.
-        sig = sig.localCheckpoint(eager=True)
-    else:
-        sig = sig.persist()
+        sig = _slim_signatures_from_shingles(sh)
+    # Eager checkpoint, not persist: the signature table is referenced
+    # from both sides of the band self-join, and under AQE those exchange
+    # subtrees materialize CONCURRENTLY from the coordinator's thread pool
+    # — a lazily-populated cache races itself and recomputes the subtree
+    # from parquet twice. Checkpointing materializes it exactly once.
+    sig = sig.localCheckpoint(eager=True)
     bands = _band_rows(sig)
     if max_bucket is not None:
         bucket_sizes = bands.groupBy("_band", "_bh").agg(
@@ -472,78 +441,43 @@ def minhash_lsh_pairs(
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
+        .localCheckpoint(eager=True)
     )
-    # Verification payload ∝ CANDIDATES by construction (r12): explode each
-    # pair to two (pair, member, side) rows, join the candidate-members-only
-    # shingle-set table ONCE, then reassemble both shingle sets with a
-    # pair-keyed groupBy whose exchange carries candidate-proportional rows.
-    # The previous shape — two id-keyed joins against a signature table that
-    # carried every doc's collect_set(_h), relying on AQE to broadcast the
-    # pair side — planned as sort-merge once the signature table passed the
-    # broadcast threshold, and because AQE submits sibling exchanges
-    # concurrently, the corpus-sized _hs payload was shuffled TWICE before
-    # the runtime broadcast decision could apply (measured in SCALING_r12:
-    # 3x the corpus exchange at sf3/sf10, a 2.0 step exponent).
-    if materialize:
-        cand = cand.localCheckpoint(eager=True)
-        n_cand = cand.count()
-    else:
-        # the pair set is referenced twice below (member semi-join + pair
-        # explode) — cache it in the lazy path too so neither the plan nor
-        # a lazy execution duplicates the band self-join subtree
-        cand = cand.persist()
-    small = materialize and n_cand <= MINHASH_BROADCAST_CAND_MAX
-    # Shingle sets come from CANDIDATE MEMBERS ONLY. Under the reuse budget
-    # the members filter the checkpointed pass-1 shingle rows (no second
-    # scan, no second md5 pass); past it they are recomputed via a broadcast
-    # semi-join on the input + the same shingle pass — one extra scan of the
-    # input restricted to matched docs, instead of a collect_set over the
-    # whole corpus whose output is a corpus-sized state table. The fallback
-    # requires ``df`` to be deterministic under recomputation (parquet/table
-    # scans are; a lineage with non-deterministic columns is not — the reuse
-    # path has no such requirement, its rows are materialized blocks).
-    mem_col = "_id" if sh_reuse is not None else id_col
+    # The id-only frames (member semi-join, pair side of the first set
+    # join) broadcast while the checkpointed candidate count is small.
+    small = cand.count() <= MINHASH_BROADCAST_CAND_MAX
+    # Shingle sets come from CANDIDATE MEMBERS ONLY: the members filter the
+    # checkpointed pass-1 rows under the reuse budget; past it they
+    # semi-join the input and rerun the shingle pass on the matched docs —
+    # never a collect_set over the whole corpus.
+    mem_col = "_id" if reuse else id_col
     mem = cand.select(F.explode(F.array("id_a", "id_b")).alias(mem_col)).distinct()
     if small:
         mem = F.broadcast(mem)
-    if sh_reuse is not None:
-        csets = (sh_reuse.join(mem, "_id", "leftsemi")
-                 .groupBy("_id").agg(F.collect_set("_h").alias("_hs")))
+    if reuse:
+        csets = sh.join(mem, "_id", "leftsemi")
     else:
         csets = _shingle_table(
-            df.join(mem, id_col, "leftsemi"), id_col, text_col, n, mode
-        ).groupBy("_id").agg(F.collect_set("_h").alias("_hs"))
-    # The pair's two shingle sets attach via TWO plain joins against the
-    # members-only set table (r12; was an explode-to-(pair, member, side)
-    # + pair-keyed groupBy reassembly whose exchange carried both set
-    # arrays per pair — measured +0.6 s at sf0.1 and an extra
-    # array-payload exchange at every scale). The set table is
-    # MEMBERS-scale (bounded by candidates), so materializing it once and
-    # streaming it through both joins keeps every post-banding exchange
-    # candidate-proportional; the pair side broadcasts while the
-    # checkpointed candidate count is known-small.
-    if materialize:
-        csets = csets.localCheckpoint(eager=True)
-    else:
-        csets = csets.persist()
+            df.join(mem, id_col, "leftsemi"), id_col, text_col, n, mode)
+    # The set table is MEMBERS-scale (bounded by candidates): checkpointed
+    # once, it streams through both pair joins.
+    csets = (csets.groupBy("_id").agg(F.collect_set("_h").alias("_hs"))
+             .localCheckpoint(eager=True))
     p = cand
     if small:
         p = F.broadcast(p)
     p = p.join(csets.select(F.col("_id").alias("id_a"), F.col("_hs").alias("_hsa")), "id_a")
-    # The SECOND join is deliberately UNHINTED (r13, ADVICE): its pair side
-    # now carries the full _hsa array per row, so a forced broadcast gated
-    # on the id-only pair COUNT would ship up to 1M pairs x multi-KB sets —
-    # a multi-GB relation and a driver/executor OOM on adversarial corpora.
-    # AQE decides from the REAL runtime bytes instead: small pair tables
-    # still flip to a broadcast join at stage boundaries, large ones stay a
-    # partitioned join whose exchanges are candidate-proportional (the
-    # documented contract).
+    # The SECOND join is deliberately UNHINTED: its pair side carries the
+    # full _hsa array per row, so a forced broadcast gated on the id-only
+    # pair COUNT would ship up to 1M pairs x multi-KB sets — a multi-GB
+    # relation on adversarial corpora. AQE decides from the real runtime
+    # bytes instead: small pair tables still flip to a broadcast join at
+    # stage boundaries, large ones stay a candidate-proportional
+    # partitioned join.
     pairs = (p.join(csets.select(F.col("_id").alias("id_b"), F.col("_hs").alias("_hsb")), "id_b")
              .withColumn("_sza", F.size("_hsa")).withColumn("_szb", F.size("_hsb")))
-    out = _verified_jaccard(pairs, threshold).select("id_a", "id_b", "jaccard")
-    if materialize:
-        out = out.localCheckpoint(eager=True)
-    return out
+    return (_verified_jaccard(pairs, threshold).select("id_a", "id_b", "jaccard")
+            .localCheckpoint(eager=True))
 
 
 def fuzzy_contamination(
@@ -665,15 +599,15 @@ def simhash_wide(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def simhash_wide_pairs(
-    df: DataFrame, id_col: str, text_col: str, *, max_hamming: int = 3, materialize: bool = True
+    df: DataFrame, id_col: str, text_col: str, *, max_hamming: int = 3
 ) -> DataFrame:
     """Near-dup pairs with Hamming distance <= max_hamming over the 120-bit
     wide fingerprint — the saturation-proof scale path (see
     ``simhash_wide``). Candidates share one of four 30-bit bands (two per
     word; pigeonhole holds: <= 3 differing bits over 4 disjoint bands leave
     one band identical); verification is the exact two-word bit_count. Same
-    persisted-fingerprint band self-join shape as ``simhash_pairs`` (incl.
-    the r13 persist-vs-checkpoint A/B note there)."""
+    persisted-fingerprint band self-join shape and eager result as
+    ``simhash_pairs`` (incl. the persist-vs-checkpoint note there)."""
     fp = simhash_wide(df, id_col, text_col).persist()
     half = SIMHASH_BITS // 2  # 30-bit band keys
     mask = (1 << half) - 1
@@ -700,15 +634,14 @@ def simhash_wide_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["id_a", "id_b"])
         .select("id_a", "id_b", "hamming")
+        .localCheckpoint(eager=True)
     )
-    if materialize:
-        out = out.localCheckpoint(eager=True)
-        fp.unpersist()
+    fp.unpersist()
     return out
 
 
 def simhash_pairs(
-    df: DataFrame, id_col: str, text_col: str, *, max_hamming: int = 3, materialize: bool = True
+    df: DataFrame, id_col: str, text_col: str, *, max_hamming: int = 3
 ) -> DataFrame:
     """Near-dup pairs with Hamming(simhash_a, simhash_b) <= max_hamming.
 
@@ -720,21 +653,21 @@ def simhash_pairs(
     SELF-JOIN of the PERSISTED fingerprint table — the fingerprints are
     #docs-scale (8 bytes + id per doc), so persisting evaluates the md5
     subtree once and the join streams pairs without materializing
-    per-bucket arrays. The previous groupBy + collect_list + double-explode
-    shape (borrowed from minhash, where it wins) built k-wide arrays per
-    hot bucket and re-exploded them: with a 1.6k-doc bucket that carried
-    k²·array payloads through two Generates — 25-55% slower end-to-end
-    and an executor-memory hazard on skewed fingerprint distributions.
+    per-bucket arrays. A groupBy + collect_list + double-explode shape
+    builds k-wide arrays per hot bucket and re-explodes them: with a
+    1.6k-doc bucket that carries k²·array payloads through two Generates —
+    measured 25-55% slower end-to-end, and an executor-memory hazard on
+    skewed fingerprint distributions.
     AQE's skew-join handles hot buckets in the join shape.
 
-    ``materialize=True`` (default) computes the result eagerly
-    (localCheckpoint) and unpersists the fingerprint cache before returning
-    — see minhash_lsh_pairs for the session-cache rationale.
+    The result is computed eagerly (localCheckpoint) and the fingerprint
+    cache is unpersisted before returning, so long-lived sessions do not
+    accumulate caches.
 
-    r13 NOTE (examined, left alone): replacing this lazy persist with an
-    eager localCheckpoint — the fix that recovered hot-key detection and
-    the minhash signature table from the AQE concurrent-materialization
-    race — was A/B'd interleaved at sf0.1 and LOST consistently (best-of-6
+    Persist, not checkpoint, for the fingerprints: an eager
+    localCheckpoint — the fix for hot-key detection and the minhash
+    signature table's AQE concurrent-materialization race — was A/B'd
+    interleaved at sf0.1 and LOST consistently (best-of-6
     1.18 s persist vs 1.28 s checkpoint, persist won 5/6 rounds): here the
     doubly-referenced subtree is the WHOLE query's input, both references
     are the same band-explode scan, and BlockManager's per-block loading
@@ -764,10 +697,9 @@ def simhash_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["id_a", "id_b"])
         .select("id_a", "id_b", "hamming")
+        .localCheckpoint(eager=True)
     )
-    if materialize:
-        out = out.localCheckpoint(eager=True)
-        fp.unpersist()
+    fp.unpersist()
     return out
 
 

@@ -972,8 +972,13 @@ def knn_classify(
     Scale shape: both methods scan the corpus ONCE for scoring without
     shuffling it; the label join broadcasts the (queries x k)-row neighbor
     list back against the corpus; the vote aggregates k rows per query."""
-    topk = cosine_topk_gemm if method == "gemm" else cosine_topk
-    nn = topk(corpus, queries, id_col=id_col, vec_col=vec_col, k=k)
+    from ..errors import ValidationError
+
+    topks = {"fold": cosine_topk, "gemm": cosine_topk_gemm}
+    if method not in topks:
+        raise ValidationError(
+            f"knn_classify method must be 'fold' or 'gemm', got {method!r}")
+    nn = topks[method](corpus, queries, id_col=id_col, vec_col=vec_col, k=k)
     labels = corpus.select(F.col(id_col).alias("neighbor_id"),
                            F.col(label_col).alias("_lbl"))
     votes = (labels.join(F.broadcast(nn), "neighbor_id")
@@ -999,7 +1004,6 @@ def mmr_rerank(
     n_candidates: int = 10,
     k: int = 5,
     lam: float = 0.7,
-    materialize: bool = True,
 ) -> DataFrame:
     """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein 1998,
     see PAPERS.md) — the diversity-aware top-k behind RAG context
@@ -1010,30 +1014,30 @@ def mmr_rerank(
     Deterministic end-to-end, so the DuckDB oracle replays it
     bit-for-bit: relevance and pairwise similarities use the engine's
     sequential-fold cosine (the same doubles DuckDB's list_sum produces),
-    the greedy is UNROLLED as k identical argmax rounds (ties by
-    candidate id), and both engines multiply by the exact same
-    ``lam`` / ``1 − lam`` double constants.
+    each greedy round is an argmax with ties broken by candidate id, and
+    both engines multiply by the exact same ``lam`` / ``1 − lam`` double
+    constants.
 
-    Scale shape: one corpus scan builds the top-``n_candidates`` pool per
-    query (broadcast query side, window top-k); everything after operates
-    on pools of ≤ n_candidates rows per query — the pairwise-sim table is
-    ≤ n²/query and each greedy round is a window over it. Returns
-    (query_id, cand_id, mmr_rank).
+    Scale shape: ONE Spark job — the corpus scan that builds the
+    top-``n_candidates`` pool per query (broadcast query side, window
+    top-k) — then the greedy replays on the DRIVER over the collected
+    pool. The pool is ≤ queries × n_candidates rows by construction, the
+    same boundedness contract as ``cosine_topk_gemm``'s query collect,
+    guarded by ``MMR_MAX_POOL_ROWS`` / ``MMR_MAX_POOL_BYTES`` (raises past
+    them). Python doubles are the same IEEE 754 ops Spark executes, applied
+    in the same order, so the selection is bit-identical to the oracle
+    (measured at sf0.1: 2 Spark jobs and ~0.6 s, where k distributed
+    rounds took 41 jobs and 2.8 s). Returns (query_id, cand_id, mmr_rank)."""
+    return _mmr_greedy_driver(
+        _mmr_pool(corpus, queries, id_col=id_col, vec_col=vec_col,
+                  n_candidates=n_candidates), k=k, lam=lam)
 
-    ``materialize`` (default True): each greedy round references the
-    previous selection TWICE (anti-join + max-sim join), so the lazy plan
-    tree doubles per round — ~1300 exchanges at k=5, and the scheduler
-    cost of that tree dwarfs the actual work on the tiny pools. The
-    default runs ONE Spark job (the corpus scan that builds the candidate
-    pool) and replays the greedy on the DRIVER over the collected pool
-    (r12): the pool is ≤ queries × n_candidates rows by construction —
-    the same boundedness contract as ``cosine_topk_gemm``'s query collect,
-    guarded by ``max_pool_rows`` (raises past it) — and Python doubles are
-    the same IEEE 754 ops Spark executes, applied in the same order
-    (sequential-fold dot, ``lam·rel − (1−lam)·msim``), so the selection is
-    bit-identical to the distributed rounds and to the DuckDB oracle
-    (measured at sf0.1: 41 Spark jobs → 2, 2.8 s → ~0.6 s, same hash).
-    Pass False for the lazy distributed twin that plan audits introspect."""
+
+def _mmr_pool(corpus: DataFrame, queries: DataFrame, *, id_col: str,
+              vec_col: str, n_candidates: int) -> DataFrame:
+    """mmr_rerank's candidate pool (query_id, cand_id, _rel, _cv, _cn): the
+    top-``n_candidates`` corpus vectors per query by cosine relevance, ties
+    by cand_id. Zero-norm vectors (undefined cosine) are dropped."""
     q = _broadcast_if_small(
         queries.select(F.col(id_col).alias("query_id"),
                        F.col(vec_col).alias("_qv"),
@@ -1045,26 +1049,21 @@ def mmr_rerank(
          .filter(F.col("_cn") > 0))
     w_rel = Window.partitionBy("query_id").orderBy(
         F.col("_rel").desc(), F.col("cand_id").asc())
-    cands = (c.crossJoin(q)
-             .filter(F.col("cand_id") != F.col("query_id"))
-             .withColumn("_rel", cosine_from_norms(
-                 F.col("_qv"), F.col("_cv"), F.col("_qn"), F.col("_cn")))
-             .withColumn("_rn", F.row_number().over(w_rel))
-             .filter(F.col("_rn") <= n_candidates)
-             .select("query_id", "cand_id", "_rel", "_cv", "_cn"))
-    if materialize:
-        qid_t = queries.schema[id_col].dataType.simpleString()
-        cid_t = corpus.schema[id_col].dataType.simpleString()
-        return _mmr_greedy_driver(cands, k=k, lam=lam,
-                                  qid_t=qid_t, cid_t=cid_t)
-    return _mmr_greedy(cands, k=k, lam=lam, materialize=False)
+    return (c.crossJoin(q)
+            .filter(F.col("cand_id") != F.col("query_id"))
+            .withColumn("_rel", cosine_from_norms(
+                F.col("_qv"), F.col("_cv"), F.col("_qn"), F.col("_cn")))
+            .withColumn("_rn", F.row_number().over(w_rel))
+            .filter(F.col("_rn") <= n_candidates)
+            .select("query_id", "cand_id", "_rel", "_cv", "_cn"))
 
 
-def _mmr_greedy(cands: DataFrame, *, k: int, lam: float,
-                materialize: bool) -> DataFrame:
-    """The k greedy argmax rounds of mmr_rerank over a prepared candidate
-    pool (query_id, cand_id, _rel, _cv, _cn) — split out so the caller can
-    own the pool's persist/unpersist lifecycle."""
+def _mmr_greedy(cands: DataFrame, *, k: int, lam: float) -> DataFrame:
+    """The k greedy argmax rounds of mmr_rerank as distributed Spark
+    operators over a candidate pool from ``_mmr_pool`` — the independent
+    reference the driver greedy is tested against. Each round references
+    the previous selection twice, so the lazy plan doubles per round; keep
+    k and the pool small."""
     w_rel = Window.partitionBy("query_id").orderBy(
         F.col("_rel").desc(), F.col("cand_id").asc())
     a, b = cands.alias("_mmr_a"), cands.alias("_mmr_b")
@@ -1095,20 +1094,12 @@ def _mmr_greedy(cands: DataFrame, *, k: int, lam: float,
                 .filter(F.col("_r") == 1)
                 .select("query_id", "cand_id", F.lit(i).alias("mmr_rank")))
         selected = selected.unionByName(pick)
-        if materialize:
-            # truncate the doubling lineage: the frame is <= queries x i
-            # rows, so the per-round job is trivially small
-            selected = selected.localCheckpoint(eager=True)
-    out = selected.select("query_id", "cand_id",
-                          F.col("mmr_rank").cast("int").alias("mmr_rank"))
-    if materialize:
-        # eager: materialize BEFORE the caller drops the pool cache
-        out = out.localCheckpoint(eager=True)
-    return out
+    return selected.select("query_id", "cand_id",
+                           F.col("mmr_rank").cast("int").alias("mmr_rank"))
 
 
 MMR_MAX_POOL_ROWS = 131072  # queries × n_candidates bound for the collect
-# r13: rows alone under-guard the collect — the pool rows CARRY the
+# Rows alone under-guard the collect — the pool rows CARRY the
 # candidate vectors, so 131k rows of 1024-dim doubles are ~1 GB of driver
 # heap exactly when the row guard still passes. The byte bound is checked
 # against rows × actual vector width as the rows arrive (the transfer
@@ -1119,11 +1110,10 @@ MMR_MAX_POOL_BYTES = 256 << 20
 
 
 def _mmr_greedy_driver(cands: DataFrame, *, k: int, lam: float,
-                       qid_t: str, cid_t: str,
                        max_pool_rows: int = MMR_MAX_POOL_ROWS,
                        max_pool_bytes: int = MMR_MAX_POOL_BYTES) -> DataFrame:
     """The k greedy argmax rounds of mmr_rerank replayed on the DRIVER over
-    the collected candidate pool (r12) — ONE Spark job instead of ~8 per
+    the collected candidate pool — ONE Spark job instead of ~8 per
     round. Bit-identical to ``_mmr_greedy`` and the DuckDB oracle: the
     pairwise cosine is the same sequential fold over the same doubles
     (Python floats ARE IEEE 754 doubles; ``acc + x*y`` in source order is
@@ -1135,7 +1125,7 @@ def _mmr_greedy_driver(cands: DataFrame, *, k: int, lam: float,
     upstream caps per-query candidates); ``max_pool_rows`` turns a
     violated assumption into an error instead of a silent driver collect —
     the same contract as ``cosine_topk_gemm.max_queries``. ``max_pool_bytes``
-    (r13) additionally bounds rows × vector width: the rows carry the
+    additionally bounds rows × vector width: the rows carry the
     candidate VECTORS, so a high-dim pool can exceed driver heap while the
     row guard still passes. The bytes are tallied from the received rows
     (no extra probe job — the collect transfer itself is capped by
@@ -1148,7 +1138,7 @@ def _mmr_greedy_driver(cands: DataFrame, *, k: int, lam: float,
         raise ValidationError(
             f"mmr_rerank driver greedy collects the candidate pool: "
             f"{len(rows)}+ rows exceeds max_pool_rows={max_pool_rows}; "
-            f"lower n_candidates/queries or use materialize=False")
+            f"lower n_candidates or the number of queries")
     # ~88 B of list/float boxing per element dominates a Python-held vector;
     # count 96 B/element + 112 B/row so the budget reflects real heap, not
     # just raw doubles
@@ -1157,8 +1147,8 @@ def _mmr_greedy_driver(cands: DataFrame, *, k: int, lam: float,
         raise ValidationError(
             f"mmr_rerank driver greedy pool is ~{pool_bytes >> 20} MiB "
             f"({len(rows)} rows x vector width), over "
-            f"max_pool_bytes={max_pool_bytes}; lower n_candidates/queries, "
-            f"reduce vector dim, or use materialize=False")
+            f"max_pool_bytes={max_pool_bytes}; lower n_candidates or the "
+            f"number of queries, or reduce the vector dim")
     spark = cands.sparkSession
     one_minus = 1.0 - lam
 
@@ -1208,5 +1198,7 @@ def _mmr_greedy_driver(cands: DataFrame, *, k: int, lam: float,
                 break
             selected.append(pick)
             out.append((qid, pool[pick][0], rank))
+    qid_t = cands.schema["query_id"].dataType.simpleString()
+    cid_t = cands.schema["cand_id"].dataType.simpleString()
     return spark.createDataFrame(
         out, f"query_id {qid_t}, cand_id {cid_t}, mmr_rank int")

@@ -10,8 +10,9 @@ CI even while results stay correct.
 from __future__ import annotations
 
 import re
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def formatted_plan(df: DataFrame) -> str:
@@ -22,12 +23,44 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def count_op(df: DataFrame, op: str) -> int:
+def _plan_text(plan: DataFrame | str) -> str:
+    return plan if isinstance(plan, str) else formatted_plan(plan)
+
+
+@contextmanager
+def executed_plans(spark: SparkSession):
+    """Yield a list that, when the block exits, holds the physical plan
+    description of every SQL execution started inside it, in start order.
+
+    Operators that compute eagerly (checkpoints, counts, collects) run
+    their real work while the query is BUILT, and the returned frame's own
+    plan is only a scan of the checkpointed blocks. The SQL status store
+    keeps each execution's plan text (the final adaptive plan once it
+    finishes, in ``spark.sql.ui.explainMode`` format — formatted by
+    default), and it is registered even with the UI disabled."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        execs = store.executionsList()
+        return [execs.apply(i) for i in range(execs.size())]
+
+    seen = {e.executionId() for e in executions()}
+    plans: list[str] = []
+    yield plans
+    # the status store is fed by the listener bus; drain it so the last
+    # executions and their final adaptive plans are recorded
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    plans.extend(e.physicalPlanDescription() for e in executions()
+                 if e.executionId() not in seen)
+
+
+def count_op(plan: DataFrame | str, op: str) -> int:
     """Number of DISTINCT physical operator instances in the plan (e.g.
-    'BroadcastHashJoin', 'SortMergeJoin', 'Exchange', 'Generate').
-    formatted-explain prints each node twice (tree + detail block), so we
-    count unique node ids rather than raw substring hits."""
-    plan = formatted_plan(df)
+    'BroadcastHashJoin', 'SortMergeJoin', 'Exchange', 'Generate'), given a
+    DataFrame or formatted plan text. formatted-explain prints each node
+    twice (tree + detail block), so we count unique node ids rather than
+    raw substring hits."""
+    plan = _plan_text(plan)
     ids = set(re.findall(r"\((\d+)\) " + re.escape(op) + r"\b", plan))
     return len(ids) if ids else plan.count(op)
 
@@ -64,12 +97,12 @@ def assert_filter_pushed(df: DataFrame, fragment: str) -> None:
     assert any(fragment in p for p in pf), f"no pushed filter mentions {fragment!r}: {pf}"
 
 
-def exchange_nodes(df: DataFrame) -> list[dict]:
+def exchange_nodes(plan: DataFrame | str) -> list[dict]:
     """Detail blocks of every Exchange node: {'id', 'input', 'arguments'}.
     Lets tests assert WHAT each shuffle carries (payload columns) and on
     WHICH keys it partitions — the difference between a plan that moves
     candidate ids and one that moves the whole corpus payload."""
-    plan = formatted_plan(df)
+    plan = _plan_text(plan)
     out = []
     for block in plan.split("\n\n"):
         m = re.match(r"\((\d+)\) Exchange", block)
@@ -85,8 +118,8 @@ def exchange_nodes(df: DataFrame) -> list[dict]:
     return out
 
 
-def assert_max_op(df: DataFrame, op: str, at_most: int) -> None:
+def assert_max_op(plan: DataFrame | str, op: str, at_most: int) -> None:
     """Bound the occurrences of an operator — e.g. the shingle Generate must
     appear once, not once per LSH band."""
-    n = count_op(df, op)
+    n = count_op(plan, op)
     assert n <= at_most, f"expected <= {at_most} {op}, plan has {n}"

@@ -1461,34 +1461,9 @@ def _minhash_oracle_sql() -> str:
 def minhash_q(spark, sf):
     """MinHash+LSH near-dup: banded candidate generation + exact Jaccard
     verify — the web-scale dedup path (candidates only, no all-pairs join).
-    The default path materializes eagerly and releases the signature cache;
-    PLAN_VARIANTS carries the lazy twin for plan audits."""
+    The pairs are computed eagerly; audit the shape with
+    ``plans.inspect.executed_plans``."""
     return D.minhash_lsh_pairs(_corpus(spark, sf), "doc_id", "text", n=3, mode="word", threshold=0.6)
-
-
-# Lazy (materialize=False) twins of queries whose public path eagerly
-# checkpoints + unpersists: plan audits (tests/test_plans.py,
-# scripts/dump_plans.py) introspect THESE — the checkpointed result's plan
-# is just an RDD scan. Callers must spark.catalog.clearCache() after.
-PLAN_VARIANTS = {
-    "dedup_minhash_lsh": lambda spark, sf: D.minhash_lsh_pairs(
-        _corpus(spark, sf), "doc_id", "text", n=3, mode="word", threshold=0.6, materialize=False
-    ),
-    "dedup_simhash": lambda spark, sf: D.simhash_pairs(
-        _corpus(spark, sf), "doc_id", "text", max_hamming=3, materialize=False
-    ).select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming")),
-    "dedup_simhash_wide": lambda spark, sf: D.simhash_wide_pairs(
-        _corpus(spark, sf), "doc_id", "text", max_hamming=3, materialize=False
-    ).select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming")),
-    # r10: the default MMR path localCheckpoints each greedy round (the
-    # lazy tree doubles per round — ~1300 exchanges); audits see the lazy
-    # unrolled plan
-    "similarity_mmr_rerank": lambda spark, sf: S.mmr_rerank(
-        load(spark, sf, "embeddings"),
-        load(spark, sf, "embeddings").filter(F.col("vec_id") < 8),
-        id_col="vec_id", vec_col="embedding",
-        n_candidates=10, k=5, lam=0.7, materialize=False),
-}
 
 
 def _fuzzy_contamination_oracle_sql() -> str:
@@ -2205,14 +2180,14 @@ def _mmr_oracle_sql(qmax: int = 8, n_cand: int = 10, k: int = 5, lam: float = 0.
 
 @query("similarity_mmr_rerank", _mmr_oracle_sql(), bench=True)
 def mmr_rerank_q(spark, sf):
-    """Maximal Marginal Relevance re-ranking (r9): diversity-aware top-5
-    from a cosine top-10 candidate pool per query — the RAG context
-    selection / dedup-at-retrieval combiner. The greedy is unrolled as
-    five identical argmax rounds in BOTH engines with the same
-    sequential-fold cosine and the same double constants, so the oracle
-    replays the selection exactly. All post-candidate work operates on
-    <=10-row per-query pools (pairwise table <=90 rows/query) — the
-    corpus is scanned once."""
+    """Maximal Marginal Relevance re-ranking: diversity-aware top-5 from a
+    cosine top-10 candidate pool per query — the RAG context selection /
+    dedup-at-retrieval combiner. The oracle unrolls the greedy as five
+    argmax rounds in SQL; the engine replays the same rounds on the driver
+    over the collected pool, with the same sequential-fold cosine and the
+    same double constants, so the selection matches exactly. All
+    post-candidate work operates on <=10-row per-query pools — the corpus
+    is scanned once."""
     emb = load(spark, sf, "embeddings")
     return S.mmr_rerank(emb, emb.filter(F.col("vec_id") < 8),
                         id_col="vec_id", vec_col="embedding",

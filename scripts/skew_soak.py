@@ -27,8 +27,9 @@ Phases:
 2. cluster=10000 (~50M pairs): completion without executor OOM, cluster
    pair count == closed form for minhash AND simhash, boilerplate-only
    jaccard output matches the 128-df stop-shingle cap, and the AQE
-   executed plan of the band self-join shows skew-split handling
-   (skew=true) with the skew thresholds lowered enough to trigger.
+   plans the public minhash query executes show skew-split handling of
+   the band self-join (skew=true) with the skew thresholds lowered enough
+   to trigger.
 
 Usage: python scripts/skew_soak.py [out_dir]   (writes fixtures under /tmp)
 """
@@ -89,8 +90,9 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from go_iceberg_spark.plans.inspect import executed_plans
     from go_iceberg_spark.session import get_spark
-    from go_iceberg_spark.workload import PLAN_VARIANTS, QUERIES
+    from go_iceberg_spark.workload import QUERIES
     from scripts.parity import run_parity
 
     spark = get_spark()
@@ -150,26 +152,20 @@ def main() -> None:
         ok = False
 
     # ---- skew-split observation on the band self-join ---------------------
-    # collect() executes the DataFrame's OWN QueryExecution, so its explain
-    # afterwards shows the FINAL adaptive plan (isFinalPlan=true) with skew
-    # annotations; the post-join hash filter keeps the collect tiny and uses
-    # BOTH join outputs so Catalyst cannot push it below the band join
-    # at fixture volume the 63k-row band table broadcasts (the fast plan);
-    # disable size-based broadcast so the probe shows the shuffle-join shape
-    # a 100 TB corpus would get, where AQE's skew handling is the safety net
+    # the public query computes eagerly, so the band self-join runs while
+    # the query is built; its final adaptive plan carries the skew markers
+    # (SortMergeJoin(skew=true), "AQEShuffleRead ... skewed"). At fixture
+    # volume the 63k-row band table broadcasts (the fast plan); disable
+    # size-based broadcast so the run takes the shuffle-join shape a 100 TB
+    # corpus would get, where AQE's skew handling is the safety net
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        lazy = PLAN_VARIANTS["dedup_minhash_lsh"](spark, dir_b)
-        probe = lazy.filter(F.hash("id_a", "id_b") % 100000 == 0)
-        probe.collect()
-        # the simple executed-plan string carries the skew markers
-        # (SortMergeJoin(skew=true), "AQEShuffleRead ... skewed")
-        plan = probe._jdf.queryExecution().executedPlan().toString()
+        with executed_plans(spark) as plans:
+            QUERIES["dedup_minhash_lsh"].fn(spark, dir_b)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.catalog.clearCache()
-    skewed = "skew=true" in plan
+    skewed = any("skew=true" in p for p in plans)
     print(f"  AQE skew-split in executed band join: {skewed}", flush=True)
     if not skewed:
         print("FAIL: no skew=true in the AQE executed plan")

@@ -1135,16 +1135,16 @@ def test_cms_one_sided_guarantee_and_merge(spark):
 
 
 def test_mmr_driver_greedy_matches_distributed(spark):
-    """r12: mmr_rerank's default path replays the greedy on the driver over
-    the collected candidate pool (one Spark job instead of ~8 per round).
-    It must be BIT-IDENTICAL to the distributed unrolled rounds
-    (materialize=False) — same sequential-fold cosine, same lam constants,
-    same tie-breaks — including on a corpus with score ties and a query
-    whose pool is smaller than k."""
+    """mmr_rerank replays the greedy on the driver over the collected
+    candidate pool (one Spark job instead of ~8 per round). It must be
+    BIT-IDENTICAL to the distributed unrolled rounds (``_mmr_greedy``) on
+    the same pool — same sequential-fold cosine, same lam constants, same
+    tie-breaks — including on a corpus with score ties and a query whose
+    pool is smaller than k."""
     import random
 
-    from pyspark.sql import Row
-
+    from go_iceberg_spark.errors import ValidationError
+    from go_iceberg_spark.operators import similarity as S
     from go_iceberg_spark.operators.similarity import mmr_rerank
 
     rng = random.Random(11)
@@ -1157,9 +1157,9 @@ def test_mmr_driver_greedy_matches_distributed(spark):
     kw = dict(id_col="vec_id", vec_col="embedding", n_candidates=6, k=5, lam=0.7)
     fast = sorted((r.query_id, r.mmr_rank, r.cand_id)
                   for r in mmr_rerank(df, q, **kw).collect())
+    pool = S._mmr_pool(df, q, id_col="vec_id", vec_col="embedding", n_candidates=6)
     slow = sorted((r.query_id, r.mmr_rank, r.cand_id)
-                  for r in mmr_rerank(df, q, materialize=False, **kw).collect())
-    spark.catalog.clearCache()
+                  for r in S._mmr_greedy(pool, k=5, lam=0.7).collect())
     assert fast == slow and fast
 
     # tiny pool: a 3-vector corpus can fill at most 2 ranks per query
@@ -1168,21 +1168,16 @@ def test_mmr_driver_greedy_matches_distributed(spark):
     assert {r.mmr_rank for r in got} == {1, 2}
 
     # boundedness contract: a pool past the cap raises, never collects
-    import pytest as _pytest
-
-    from go_iceberg_spark.errors import ValidationError
-    from go_iceberg_spark.operators import similarity as S
-
     old = S.MMR_MAX_POOL_ROWS
     try:
-        with _pytest.raises(ValidationError, match="max_pool_rows"):
+        with pytest.raises(ValidationError, match="max_pool_rows"):
             S._mmr_greedy_driver(
                 df.select(F.col("vec_id").alias("query_id"),
                           F.col("vec_id").alias("cand_id"),
                           F.lit(1.0).alias("_rel"),
                           F.col("embedding").alias("_cv"),
                           F.lit(1.0).alias("_cn")),
-                k=2, lam=0.5, qid_t="long", cid_t="long", max_pool_rows=10)
+                k=2, lam=0.5, max_pool_rows=10)
     finally:
         assert S.MMR_MAX_POOL_ROWS == old
 
@@ -1191,7 +1186,9 @@ def test_knn_classify_gemm_matches_fold_on_graded_fixture(spark):
     """r12: similarity_knn_classify's graded row now scores with the GEMM
     path; fold and GEMM votes must agree on the graded fixture (they are
     pinned to the SAME oracle SQL, so any divergence is a top-k margin
-    crossed by BLAS summation noise — which this test would surface)."""
+    crossed by BLAS summation noise — which this test would surface). A
+    method outside {fold, gemm} raises instead of running the fold path."""
+    from go_iceberg_spark.errors import ValidationError
     from go_iceberg_spark.operators.similarity import knn_classify
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -1202,6 +1199,8 @@ def test_knn_classify_gemm_matches_fold_on_graded_fixture(spark):
     gemm = sorted((r.query_id, r.predicted_label, r.votes)
                   for r in knn_classify(emb, q, method="gemm", **kw).collect())
     assert fold == gemm and fold
+    with pytest.raises(ValidationError, match="'GEMM'"):
+        knn_classify(emb, q, method="GEMM", **kw)
 
 
 def test_cms_pre_aggregate_identical_counters(spark):
@@ -1226,7 +1225,9 @@ def test_minhash_shingle_reuse_matches_two_pass(spark, monkeypatch):
     pass-1 (_id, _h) shingle rows and reuses them for candidate
     verification instead of re-scanning + re-shingling the input. Results
     must be identical pair-for-pair (ids AND jaccard) to the two-pass
-    shape, and the lazy twin must be untouched by the budget."""
+    shape. Both sides band a signature table spread over
+    defaultParallelism partitions: AQE can only skew-split a hot band
+    bucket across several map tasks."""
     from go_iceberg_spark.operators import dedup as D
 
     rows = [Row(doc_id=i, text=f"alpha beta gamma delta epsilon zeta {i} "
@@ -1234,6 +1235,11 @@ def test_minhash_shingle_reuse_matches_two_pass(spark, monkeypatch):
     rows += [Row(doc_id=1000 + i, text=rows[i].text) for i in range(10)]
     rows += [Row(doc_id=2000 + i, text=rows[i].text + " zz qq") for i in range(10)]
     df = spark.createDataFrame(rows)
+
+    sig_parts = []
+    band_rows = D._band_rows
+    monkeypatch.setattr(D, "_band_rows", lambda sig, *a: (
+        sig_parts.append(sig.rdd.getNumPartitions()) or band_rows(sig, *a)))
 
     def pairs(budget):
         monkeypatch.setattr(D, "MINHASH_SHINGLE_REUSE_MAX_INPUT_BYTES", budget)
@@ -1244,14 +1250,7 @@ def test_minhash_shingle_reuse_matches_two_pass(spark, monkeypatch):
     reuse = pairs(1 << 40)   # force the reuse path
     twopass = pairs(0)       # force the recompute path
     assert reuse == twopass and reuse
-
-    # lazy twin ignores the budget: its plan must contain the raw input
-    # scan lineage for verification (no checkpoint RDD stub)
-    monkeypatch.setattr(D, "MINHASH_SHINGLE_REUSE_MAX_INPUT_BYTES", 1 << 40)
-    lazy = D.minhash_lsh_pairs(df, "doc_id", "text", n=3, mode="word",
-                               threshold=0.6, materialize=False)
-    assert sorted((r.id_a, r.id_b, r.jaccard) for r in lazy.collect()) == reuse
-    spark.catalog.clearCache()
+    assert sig_parts == [spark.sparkContext.defaultParallelism] * 2, sig_parts
 
 
 def test_mmr_pool_byte_bound(spark):
@@ -1267,11 +1266,9 @@ def test_mmr_pool_byte_bound(spark):
         F.expr("transform(sequence(1, 4096), i -> CAST(i AS DOUBLE))").alias("_cv"),
         F.lit(1.0).alias("_cn"))
     with pytest.raises(ValidationError, match="max_pool_bytes"):
-        S._mmr_greedy_driver(wide, k=2, lam=0.5, qid_t="long", cid_t="long",
-                             max_pool_bytes=1 << 20)
+        S._mmr_greedy_driver(wide, k=2, lam=0.5, max_pool_bytes=1 << 20)
     # the same pool passes under a budget that fits it
-    out = S._mmr_greedy_driver(wide, k=2, lam=0.5, qid_t="long", cid_t="long",
-                               max_pool_bytes=1 << 30)
+    out = S._mmr_greedy_driver(wide, k=2, lam=0.5, max_pool_bytes=1 << 30)
     assert out.count() == 2
 
 

@@ -86,64 +86,75 @@ def test_column_pruning_reaches_scan(spark):
         assert "l_returnflag" not in s, f"unpruned scan reads l_returnflag: {s}"
 
 
-def test_minhash_plan_single_shingle_subtree(spark):
+def _minhash_executed_plans(spark, monkeypatch, budget):
+    """The plans the public dedup_minhash_lsh query executes while it is
+    built (every stage is an eager checkpoint or count), with the
+    shingle-reuse budget forced to one side."""
+    from go_iceberg_spark.operators import dedup as D
+
+    monkeypatch.setattr(D, "MINHASH_SHINGLE_REUSE_MAX_INPUT_BYTES", budget)
+    with P.executed_plans(spark) as plans:
+        q("dedup_minhash_lsh", spark)
+    assert plans, "the minhash query ran no SQL execution while building"
+    return plans
+
+
+# both sides of the shingle-reuse budget: forced reuse, forced two-pass
+REUSE, TWO_PASS = 1 << 40, 0
+# the corpus is a union of three reads of documents.parquet (base docs +
+# planted exact and near copies), so one corpus pass is three scans
+CORPUS_SCANS = 3
+
+
+def test_minhash_plan_single_shingle_subtree(spark, monkeypatch):
     """The LSH pipeline runs the explode+md5 shingle stage once per corpus
-    pass (slim signatures + candidates-only verification sets = two passes);
-    the old union-of-bands self-join shape duplicated it 24x — once per band
-    per side. (Uses the lazy PLAN_VARIANT — the public query checkpoints
-    sig/cand eagerly, which both hides the plan AND collapses the shared
-    subtrees that formatted-explain re-expands per reference here, so the
-    lazy counts OVERSTATE the executed plan; the caps below bound the
-    per-band pathology, not the exact executed count.)"""
-    from go_iceberg_spark.workload import PLAN_VARIANTS
-
-    df = PLAN_VARIANTS["dedup_minhash_lsh"](spark, SF)
-    try:
-        # lazy-plan Generates: shingle explode (sig pass + candidate-set
-        # pass) + band explode x2 sides + member/pair explodes, some shown
-        # once per cached-subtree reference — per-band duplication would be 24+
-        P.assert_max_op(df, "Generate", 10)
-        assert P.count_op(df, "Scan parquet") <= 6, "documents scanned more than 6x"
-    finally:
-        spark.catalog.clearCache()
+    pass: one pass under the shingle-reuse budget, two past it (slim
+    signatures, then candidate-member sets). A union-of-bands self-join
+    duplicates it once per band per side — 24+ Generates. The counts are
+    summed over the executed adaptive plans, whose text lists each
+    non-leaf node in both the final and the initial plan."""
+    for budget, passes, generates in [(REUSE, 1, 5), (TWO_PASS, 2, 9)]:
+        plans = _minhash_executed_plans(spark, monkeypatch, budget)
+        scans = sum(P.count_op(p, "Scan parquet") for p in plans)
+        gens = sum(P.count_op(p, "Generate") for p in plans)
+        assert scans == passes * CORPUS_SCANS, (
+            f"budget={budget}: {scans} document scans, want {passes} corpus pass(es)")
+        assert gens == generates, (
+            f"budget={budget}: {gens} executed Generates, want {generates}")
 
 
-def test_minhash_band_shuffle_is_payload_free(spark):
-    """100 TB contract (r4): the band-keyed self-join shuffles (_band, _bh,
-    id) ONLY — no Exchange partitioned on the band key may carry the
+def test_minhash_band_shuffle_is_payload_free(spark, monkeypatch):
+    """100 TB contract: the band-keyed self-join shuffles (_band, _bh, id)
+    ONLY — no executed Exchange partitioned on the band key may carry the
     shingle-hash set (_hs); verification payload joins back by id, so
     shuffle volume tracks candidates, not corpus."""
-    from go_iceberg_spark.workload import PLAN_VARIANTS
-
     # at sf0.001 the band join broadcasts; disable size-based broadcast so
     # the plan shows the shuffle shape a 100 TB corpus would get
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        df = PLAN_VARIANTS["dedup_minhash_lsh"](spark, SF)
-        exchanges = P.exchange_nodes(df)
-        band_exchanges = [e for e in exchanges if "_band" in e["arguments"]]
-        assert band_exchanges, "expected a band-keyed Exchange in the LSH plan"
-        for e in band_exchanges:
-            assert "_hs" not in e["input"], (
-                f"band Exchange {e['id']} carries the shingle-set payload: {e['input']}"
-            )
+        for budget in (REUSE, TWO_PASS):
+            plans = _minhash_executed_plans(spark, monkeypatch, budget)
+            band_exchanges = [e for p in plans for e in P.exchange_nodes(p)
+                              if "_band" in e["arguments"]]
+            assert band_exchanges, f"budget={budget}: no band-keyed Exchange executed"
+            for e in band_exchanges:
+                assert "_hs" not in e["input"], (
+                    f"band Exchange {e['id']} carries the shingle-set payload: {e['input']}")
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.catalog.clearCache()
 
 
 def test_lsh_queries_leave_no_cache_behind(spark):
-    """The public minhash/simhash paths materialize eagerly and unpersist —
-    a 146-query session must not accumulate corpus-sized shingle caches."""
+    """The near-dup and MMR queries compute eagerly and release what they
+    persisted — a long session must not accumulate corpus-sized shingle or
+    fingerprint caches."""
     spark.catalog.clearCache()
-    df = q("dedup_minhash_lsh", spark)
-    assert df.count() >= 0
     jcache = spark._jsparkSession.sharedState().cacheManager()
-    assert jcache.isEmpty(), "minhash_lsh_pairs left a persisted table in the CacheManager"
-    df2 = q("dedup_simhash", spark)
-    assert df2.count() >= 0
-    assert jcache.isEmpty(), "simhash_pairs left a persisted table in the CacheManager"
+    for name in ["dedup_minhash_lsh", "dedup_simhash", "dedup_simhash_wide",
+                 "similarity_mmr_rerank"]:
+        assert q(name, spark).count() >= 0
+        assert jcache.isEmpty(), f"{name} left a persisted table in the CacheManager"
 
 
 def test_asof_join_is_window_not_join(spark):
