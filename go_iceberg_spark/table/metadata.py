@@ -274,8 +274,8 @@ _MANIFEST_ARROW_SCHEMA = pa.schema(
         ("equality_ids_json", pa.string()),
         # per-field stats as index-aligned parallel arrays: planners prune on
         # a single field by list position without parsing a JSON blob per
-        # entry, and Spark can evaluate bound predicates with array
-        # higher-order functions when the manifest is read as a DataFrame
+        # entry, and the distributed planner reads one field's stats with
+        # array_position and get when the manifest is read as a DataFrame
         # (table/planning.py). Bound values are individually JSON-encoded
         # scalars in the order-preserving stats encoding (write.py).
         ("stats_fids", pa.list_(pa.int32())),
@@ -290,7 +290,7 @@ _MANIFEST_ARROW_SCHEMA = pa.schema(
         # unknown; a PROVEN 0 re-enables metadata-only deletes on float
         # columns (must_match, expr.py)
         ("stats_nan_counts", pa.list_(pa.int64())),
-        # r10: per-column bounds-exactness marker — True only when the
+        # per-column bounds-exactness marker — True only when the
         # engine's writer computed the bound from the VALUES (string/binary
         # footer bounds may be writer-truncated); metadata_min_max serves
         # string/binary columns only under this marker
@@ -360,8 +360,8 @@ def _entry_from_columns(d: dict, i: int) -> DataFileEntry:
                 "max": json.loads(d["stats_max_json"][i][j]),
                 "null_count": d["stats_null_counts"][i][j],
                 "value_count": d["stats_value_counts"][i][j],
-                # blooms[i] itself can be None when a mixed pre/post-bloom
-                # manifest set is read with mergeSchema (null row-level array)
+                # blooms[i] itself is None for a pre-bloom member read under
+                # the manifest schema (null row-level array)
                 **({"bloom": blooms[i][j]}
                    if blooms is not None and blooms[i] is not None and blooms[i][j]
                    else {}),

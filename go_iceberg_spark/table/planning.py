@@ -44,19 +44,24 @@ from typing import Any
 
 from ..expr import ColumnStats, Expression, Op, might_match, referenced_columns
 from ..schema import Schema
-from .metadata import CONTENT_DATA, DataFileEntry, _entry_from_columns
+from .metadata import (
+    _MANIFEST_ARROW_SCHEMA,
+    CONTENT_DATA,
+    DataFileEntry,
+    _entry_from_columns,
+)
 
 # Above this many kept entries the driver prune is replaced by a Spark job
-# over the members. On synthetic 10k-1M-entry manifests (local[32], numbers
-# in SOAK.md) the vectorized driver pruner runs ~2.6 µs/entry on a point
-# filter at ~223 MB arrow per 1M entries, and the Spark job never wins on
-# wall time — survivors round-trip JVM→driver regardless, and a single
-# member parquet caps split parallelism — so the tier exists to bound
-# driver MEMORY, not for local compute. 500k keeps the driver-side arrow
-# load near 115 MB, while 10M-entry tables (extrapolated 2.2 GB + ~26 s
-# single-threaded) clearly belong to the job tier. The member bounds skip
-# runs first either way: a clustered manifest list prunes 99/100 members on
-# a point scan before any tier runs.
+# over the members. The job bounds driver MEMORY: the driver prune holds a
+# whole member as arrow (~280 B/entry; a legacy single manifest is one
+# member, ~150 MB at 550k entries) and builds entries in Python, while the
+# job brings only survivors to the driver. Measured on the 550k-entry
+# table_scan table (139 members, 4 cores, a point filter on an unclustered
+# column, one survivor, warm session): the driver prune takes 3.3-4.0
+# µs/entry (1.8-2.2 s), plan_distributed 2.4-3.8 µs/entry (1.3-2.1 s, of
+# which ~0.8 s is Spark's parallel listing of the member paths). The member
+# bounds skip runs first either way: a clustered manifest list prunes 99/100
+# members on a point scan before any tier runs.
 DISTRIBUTED_THRESHOLD = 500_000
 
 
@@ -78,7 +83,7 @@ class _ColArrays:
     """Per-row min/max/null/value arrays for ONE field, extracted from the
     manifest's flattened list columns without converting the whole table."""
 
-    def __init__(self, t, fid: int, numeric: bool):
+    def __init__(self, t, fid: int, boolean: bool):
         import numpy as np
 
         fids_col = t.column("stats_fids").combine_chunks()
@@ -95,14 +100,18 @@ class _ColArrays:
 
         self.present = np.zeros(n, dtype=bool)
         self.present[rows] = True
-        self.numeric = numeric
 
         def dec_num(arr):
+            # JSON bounds as float64, NaN for "null"; booleans as 0/1, the
+            # order Python (and so expr.might_match) gives False < True
             s = np.asarray(arr.to_pylist(), dtype=object)
             miss = s == "null"
-            s = s.copy()
-            s[miss] = "nan"
-            out = s.astype(np.float64)
+            if boolean:
+                out = (s == "true").astype(np.float64)
+            else:
+                s = s.copy()
+                s[miss] = "nan"
+                out = s.astype(np.float64)
             out[miss] = np.nan
             return out
 
@@ -110,8 +119,8 @@ class _ColArrays:
             a = arr.to_numpy(zero_copy_only=False).astype(np.float64)
             return a  # None -> nan
 
-        _, self.mins = pick("stats_min_json", dec_num) if numeric else (None, None)
-        _, self.maxs = pick("stats_max_json", dec_num) if numeric else (None, None)
+        _, self.mins = pick("stats_min_json", dec_num)
+        _, self.maxs = pick("stats_max_json", dec_num)
         _, self.nulls = pick("stats_null_counts", dec_int)
         _, self.vals = pick("stats_value_counts", dec_int)
         # NaN counts: -1/absent = unknown (see metadata.MANIFEST_SCHEMA)
@@ -150,7 +159,7 @@ def _vector_match(flt: Expression, t, schema: Schema):
                         "timestamp", "timestamptz", "boolean"):
             raise _NotVectorizable(f"{col}: {prim}")  # string/binary bounds
         if f.field_id not in cache:
-            ca = _ColArrays(t, f.field_id, numeric=True)
+            ca = _ColArrays(t, f.field_id, boolean=prim == "boolean")
             cache[f.field_id] = {
                 "present": ca.present,
                 "mins": ca.scatter(ca.mins),
@@ -310,36 +319,56 @@ def _stats_by_name(e: DataFileEntry, schema: Schema) -> dict[str, ColumnStats]:
 # Distributed planning: Catalyst predicate over the stats arrays
 # ---------------------------------------------------------------------------
 
-_NUMERIC_CAST = {
-    "int": "long", "long": "long", "float": "double", "double": "double",
-    "date": "long", "timestamp": "long", "timestamptz": "long", "time": "long",
-    "boolean": "long",
+# Catalyst type each bound decodes to, by field type; fields not listed
+# (string, binary, decimal) have no numeric bound predicate.
+_BOUND_TYPE = {
+    "int": "long", "long": "long", "date": "long", "time": "long",
+    "timestamp": "long", "timestamptz": "long",
+    "float": "double", "double": "double", "boolean": "boolean",
 }
+
+
+def _casts_exactly(v, bound_t: str) -> bool:
+    """Whether the literal ``v`` converts to ``bound_t`` without loss."""
+    if bound_t == "boolean":
+        return isinstance(v, bool)
+    if bound_t == "long":
+        if isinstance(v, float) and v.is_integer():
+            v = int(v)
+        return isinstance(v, int) and -(2**63) <= v < 2**63
+    return isinstance(v, float) or (isinstance(v, int) and abs(v) <= 2**53)
 
 
 def _stats_predicate(flt: Expression, schema: Schema):
     """Catalyst might-match predicate over the manifest's parallel-array
     stats columns. Conservative: anything it cannot express (NOT subtrees,
     string-typed bounds, missing stats) evaluates TRUE so the file survives.
-    Mirrors expr.might_match's numeric branch exactly."""
+    Mirrors expr.might_match's numeric branch exactly.
+
+    The expression is kept compact because its size decides its speed. Each
+    per-field value is ``get(array, array_position(stats_fids, fid) - 1)``,
+    which is NULL when the entry has no stats for the field, and bounds
+    decode with ``try_cast``, which maps the JSON ``"null"`` to NULL, so no
+    CASE guards are needed. The Filter's whole-stage codegen method must
+    stay under HotSpot's 8,000-byte huge-method limit: above it the JVM
+    never JIT-compiles the method and the filter runs in the bytecode
+    interpreter, several times slower over 550k entries. Filters of up to
+    four numeric leaves fit (two long and two double leaves: 7,923 bytes); a
+    five-leaf filter measures 9,410 bytes and runs interpreted
+    (tests/test_planning.py pins the limit for one and three leaves)."""
     from pyspark.sql import functions as F
 
     TRUE = F.lit(True)
 
-    def bound(fid: int, which: str):
-        pos = F.array_position(F.col("stats_fids"), F.lit(fid)).cast("int")
-        raw = F.when(pos > 0, F.element_at(F.col(f"stats_{which}_json"), pos))
-        # JSON-encoded None is the STRING "null" — map it to SQL NULL before
-        # any ANSI cast sees it. Latent crash pre-r6: a NaN-only float file
-        # has absent bounds but null_count < value_count, so the all_null
-        # short-circuit no longer guards the cast.
-        return F.when(raw != F.lit("null"), raw)
+    def stat(column: str, fid: int):
+        return F.get(F.col(column), F.array_position(F.col("stats_fids"), F.lit(fid)) - 1)
 
-    def counts(fid: int):
-        pos = F.array_position(F.col("stats_fids"), F.lit(fid)).cast("int")
-        nulls = F.when(pos > 0, F.element_at(F.col("stats_null_counts"), pos))
-        vals = F.when(pos > 0, F.element_at(F.col("stats_value_counts"), pos))
-        return nulls, vals
+    def param(v, t: str):
+        # read from an array literal at index ``content``, which is
+        # CONTENT_DATA = 0 on every entry the predicate decides: the
+        # generated code refers to the value instead of inlining it, so one
+        # compiled, JIT-warm class serves every literal of a filter shape
+        return F.get(F.array(F.lit(v).cast(t)), F.col("content"))
 
     def build(e: Expression):
         if e.op is Op.ALWAYS_TRUE:
@@ -357,57 +386,60 @@ def _stats_predicate(flt: Expression, schema: Schema):
                 out = out | build(c)
             return out
         if e.op is Op.NOT:
-            return TRUE  # might-match of NOT is conservative (expr.py:348)
+            return TRUE  # might-match of NOT is conservative (expr.might_match)
 
         f = schema.find_field(e.column) if e.column else None
         if f is None:
             return TRUE
         fid = f.field_id
-        nulls, vals = counts(fid)
+        nulls = stat("stats_null_counts", fid)
+        # ColumnStats.all_null; unknown counts (NULL) never prove it
+        all_null = F.coalesce(nulls >= stat("stats_value_counts", fid), F.lit(False))
 
         if e.op is Op.IS_NULL:
-            return nulls.isNull() | (nulls > 0)
+            return F.coalesce(nulls > 0, TRUE)
         if e.op is Op.NOT_NULL:
-            return vals.isNull() | nulls.isNull() | (vals > nulls)
+            return ~all_null
 
-        cast_t = _NUMERIC_CAST.get(getattr(f.type, "name", None))
-        if cast_t is None:
+        prim = getattr(f.type, "name", None)
+        bound_t = _BOUND_TYPE.get(prim)
+        if bound_t is None:
             return TRUE  # string/binary bounds: driver path prunes these
-        _vals = [e.value] if e.op is not Op.IN else list(e.values)
-        if any(isinstance(v, float) and v != v for v in _vals):
+        vals = [e.value] if e.op is not Op.IN else list(e.values)
+        if any(isinstance(v, float) and v != v for v in vals):
             return TRUE  # NaN literal: expr.might_match's NaN rules; row
             # filter finishes the job (conservative, never prunes)
-        lo = bound(fid, "min").cast(cast_t)
-        hi = bound(fid, "max").cast(cast_t)
-        # all-null file: comparisons never match (expr.py:362)
-        all_null = nulls.isNotNull() & vals.isNotNull() & (nulls == vals) & (vals > 0)
-        no_bounds = lo.isNull() | hi.isNull()
-        if getattr(f.type, "name", None) in ("float", "double"):
-            # high-side prunes need a PROVEN-zero nan count — NaN rows sort
+        if not all(_casts_exactly(v, bound_t) for v in vals):
+            return TRUE  # e.g. x < 10.5 on a long: a truncated 10 would
+            # prune the file whose min is 10
+        lo = stat("stats_min_json", fid).try_cast(bound_t)
+        hi = stat("stats_max_json", fid).try_cast(bound_t)
+        if prim in ("float", "double"):
+            # a NaN bound is degenerate: never prune on it
+            lo, hi = F.nanvl(lo, F.lit(None)), F.nanvl(hi, F.lit(None))
+            # high-side prunes need a PROVEN-zero nan count: NaN rows sort
             # above every bound and bounds exclude NaN (expr.py NaN guard)
-            pos = F.array_position(F.col("stats_fids"), F.lit(fid)).cast("int")
-            nan_ct = F.when(pos > 0, F.element_at(F.col("stats_nan_counts"), pos))
-            may_nan = nan_ct.isNull() | (nan_ct != 0)
+            may_nan = F.coalesce(stat("stats_nan_counts", fid) != 0, TRUE)
         else:
             may_nan = F.lit(False)
 
         def cmp(pred):
-            return ~all_null & (no_bounds | pred)
+            return ~all_null & (lo.isNull() | hi.isNull() | pred)
 
+        lits = [param(v, bound_t) for v in vals]
         if e.op in (Op.EQ, Op.IN):
             anyhit = F.lit(False)
-            for v in _vals:
-                lv = F.lit(v).cast(cast_t)
+            for lv in lits:
                 anyhit = anyhit | ((lo <= lv) & (lv <= hi))
             return cmp(anyhit)
         if e.op is Op.GT:
-            return cmp((hi > F.lit(e.value).cast(cast_t)) | may_nan)
+            return cmp((hi > lits[0]) | may_nan)
         if e.op is Op.GTE:
-            return cmp((hi >= F.lit(e.value).cast(cast_t)) | may_nan)
+            return cmp((hi >= lits[0]) | may_nan)
         if e.op is Op.LT:
-            return cmp(lo < F.lit(e.value).cast(cast_t))
+            return cmp(lo < lits[0])
         if e.op is Op.LTE:
-            return cmp(lo <= F.lit(e.value).cast(cast_t))
+            return cmp(lo <= lits[0])
         return TRUE  # NOT_IN, STARTS_WITH, ... — row filter finishes the job
 
     return build(flt)
@@ -472,30 +504,38 @@ def _bucket_partition_pred(flt: Expression, specs, schema: Schema, bucket_fn: st
     return out
 
 
-def plan_distributed(spark, path: str | list[str], flt: Expression, schema: Schema,
-                     specs=(), bucket_fn: str = "spark") -> list[DataFileEntry]:
-    """Prune a huge manifest (or manifest-list members) with a Spark job:
-    filter the entry DataFrame by the stats predicate, collect only
-    survivors, build entries from them."""
+def _distributed_frame(spark, paths: list[str], flt: Expression, schema: Schema,
+                       specs=(), bucket_fn: str = "spark"):
+    """The entries of columnar-stats members that might match ``flt``, as a
+    DataFrame: the stats predicate (and the bucket-partition predicate) over
+    the members, delete entries always kept. The members are read under the
+    manifest schema, so no schema-inference job runs; member manifests are
+    immutable and reused across snapshots, and a column an older member lacks
+    (pre-bloom members have no ``stats_blooms``) reads as NULL."""
     from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-    paths = path if isinstance(path, list) else [path]
-    # mergeSchema: member manifests are immutable and REUSED across snapshots,
-    # so one list can mix pre-bloom members (no stats_blooms column) with new
-    # ones. Without merging, inference from one member either drops the bloom
-    # column or yields rows where the whole stats_blooms array is null.
-    df = spark.read.option("mergeSchema", "true").parquet(*paths)
-    if "stats_json" in df.columns:  # legacy manifest: no array columns
-        out: list[DataFileEntry] = []
-        for p in paths:
-            out.extend(prune_manifest_driver(p, flt, schema))
-        return out
     pred = _stats_predicate(flt, schema)
     if specs:
         bp = _bucket_partition_pred(flt, specs, schema, bucket_fn=bucket_fn)
         if bp is not None:
             pred = pred & bp
-    rows = df.filter((F.col("content") != CONTENT_DATA) | pred).collect()
+    df = spark.read.schema(from_arrow_schema(_MANIFEST_ARROW_SCHEMA)).parquet(*paths)
+    return df.filter((F.col("content") != CONTENT_DATA) | pred)
+
+
+def plan_distributed(spark, path: str | list[str], flt: Expression, schema: Schema,
+                     specs=(), bucket_fn: str = "spark") -> list[DataFileEntry]:
+    """Prune a huge manifest (or manifest-list members) with a Spark job:
+    filter the entry DataFrame by the stats predicate, collect only
+    survivors, build entries from them."""
+    import pyarrow.parquet as pq
+
+    paths = path if isinstance(path, list) else [path]
+    if "stats_json" in pq.read_schema(paths[0]).names:  # legacy: no array columns
+        return [e for p in paths for e in prune_manifest_driver(p, flt, schema)]
+    df = _distributed_frame(spark, paths, flt, schema, specs, bucket_fn)
+    rows = df.collect()
     cols = {name: [r[name] for r in rows] for name in df.columns}
     return [_entry_from_columns(cols, i) for i in range(len(rows))]
 

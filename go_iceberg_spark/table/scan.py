@@ -534,14 +534,17 @@ class ScanBuilder:
             entries = table.manifest_entries(snap)
             total = sum(e.record_count for e in entries if e.content == CONTENT_DATA)
         else:
-            # column-pruned read: two int64 columns, never the stats
+            # column-pruned read of one member at a time: two int columns,
+            # never the stats, summed in Arrow
+            import pyarrow.compute as pc
             import pyarrow.parquet as pq
 
             total = 0
             for m in members:
-                d = pq.read_table(os.path.join(table.location, m["path"]),
-                                  columns=["content", "record_count"]).to_pydict()
-                total += sum(rc for c, rc in zip(d["content"], d["record_count"]) if c == CONTENT_DATA)
+                t = pq.read_table(os.path.join(table.location, m["path"]),
+                                  columns=["content", "record_count"])
+                data = pc.filter(t["record_count"], pc.equal(t["content"], CONTENT_DATA))
+                total += pc.sum(data).as_py() or 0
         if self._limit is not None and total > self._limit:
             return self._limit
         return total

@@ -106,8 +106,10 @@ def test_pruned_driver_is_null(manifest_100):
 
 
 def test_distributed_matches_driver(spark, manifest_100):
+    # x < 10.5 keeps part-000001 (min 10): its literal must not be
+    # truncated to the column's long type
     for f in (gt("x", 500), and_(gt("x", 100), lt("v", 20.0)), isin("x", 5, 995),
-              eq("s", "k000042x"), is_null("x")):
+              eq("s", "k000042x"), is_null("x"), lt("x", 10.5)):
         a = {e.file_path for e in prune_manifest_driver(manifest_100, enc(f), SCHEMA)}
         b = {e.file_path for e in plan_distributed(spark, manifest_100, enc(f), SCHEMA)}
         # the Catalyst predicate may be more conservative (string ops) but
@@ -119,6 +121,72 @@ def test_distributed_matches_driver(spark, manifest_100):
     a = {e.file_path for e in prune_manifest_driver(manifest_100, enc(gt("x", 500)), SCHEMA)}
     b = {e.file_path for e in plan_distributed(spark, manifest_100, enc(gt("x", 500)), SCHEMA)}
     assert a == b
+
+
+def test_boolean_bounds_on_large_tiers(spark, tmp_path):
+    """A numeric-type filter on a boolean column: its JSON bounds are
+    ``true``/``false``. The driver tier must equal might_match, the
+    distributed tier must keep at least the driver tier's survivors, and
+    neither may raise."""
+    from go_iceberg_spark.expr import ColumnStats, might_match
+    from go_iceberg_spark.schema import BOOLEAN
+
+    schema = Schema(0, StructType((NestedField(1, "b", BOOLEAN, True),)))
+    stats = {  # all false, all true, mixed, all null
+        "f": {"min": False, "max": False, "null_count": 0, "value_count": 5},
+        "t": {"min": True, "max": True, "null_count": 0, "value_count": 5},
+        "ft": {"min": False, "max": True, "null_count": 1, "value_count": 5},
+        "n": {"min": None, "max": None, "null_count": 5, "value_count": 5},
+    }
+    p = str(tmp_path / "bool.parquet")
+    write_manifest(p, [
+        DataFileEntry(content=0, file_path=name, file_format="parquet", spec_id=0,
+                      schema_id=0, record_count=5, file_size=100, partition={},
+                      column_stats={1: s}, sequence_number=1)
+        for name, s in stats.items()])
+    for f in (eq("b", True), eq("b", False), gt("b", False), lt("b", True), isin("b", True)):
+        e = _encode_filter(simplify(f), schema)
+        ref = {name for name, s in stats.items()
+               if might_match(e, {"b": ColumnStats(s["min"], s["max"], s["null_count"],
+                                                   s["value_count"])})}
+        drv = {x.file_path for x in prune_manifest_driver(p, e, schema)}
+        dist = {x.file_path for x in plan_distributed(spark, p, e, schema)}
+        assert drv == ref, f
+        assert drv <= dist, f
+
+
+def _max_codegen_method_bytes(df) -> list[int]:
+    """Largest generated method, in bytes of bytecode, of each whole-stage
+    codegen stage of the DataFrame's executed plan."""
+    jvm = df.sparkSession._jvm
+    compile_ = getattr(jvm, "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator").compile
+    out = []
+
+    def walk(node):
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if name == "WholeStageCodegenExec":
+            out.append(compile_(node.doCodeGen()._2())._2().maxMethodCodeSize())
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
+@pytest.mark.parametrize("flt", [eq("x", 42), and_(gt("x", 100), lt("x", 900), lt("v", 20.0))],
+                         ids=["one_leaf", "three_leaves"])
+def test_distributed_filter_method_is_jit_compilable(spark, manifest_100, flt):
+    """HotSpot never JIT-compiles a method over 8,000 bytes of bytecode
+    (DontCompileHugeMethods), so a stats predicate whose whole-stage codegen
+    method crosses that runs in the interpreter, several times slower over a
+    large manifest. One- and three-leaf numeric filters must stay under it."""
+    from go_iceberg_spark.table.planning import _distributed_frame
+
+    sizes = _max_codegen_method_bytes(_distributed_frame(spark, [manifest_100], enc(flt), SCHEMA))
+    assert sizes and max(sizes) < 8000, sizes
 
 
 def test_planning_100k_under_a_second(tmp_path):
@@ -159,7 +227,7 @@ def test_scan_uses_bounds_short_circuit(spark, catalog):
     assert len(t.scan().filter(gi.gt("id", 25)).plan_files()) >= 1
 
 
-def test_legacy_blob_manifest_still_reads_and_prunes(tmp_path):
+def test_legacy_blob_manifest_still_reads_and_prunes(spark, tmp_path):
     """Manifests written before the columnar-stats layout (stats_json blob
     per entry) still read and prune — tables from older engine versions keep
     working without a rewrite."""
@@ -192,6 +260,8 @@ def test_legacy_blob_manifest_still_reads_and_prunes(tmp_path):
     assert got == entries
     pruned = prune_manifest_driver(p, enc(gt("x", 100)), SCHEMA)
     assert sorted(e.file_path for e in pruned) == sorted(e.file_path for e in entries[10:])
+    # the distributed tier hands a legacy manifest to the driver prune
+    assert plan_distributed(spark, p, enc(gt("x", 100)), SCHEMA) == pruned
 
 
 def test_distributed_over_manifest_list_members(spark, tmp_path):
@@ -218,8 +288,9 @@ def test_distributed_over_manifest_list_members(spark, tmp_path):
 def test_distributed_mixed_prebloom_members(spark, tmp_path):
     """Manifest lists REUSE immutable member manifests across snapshots, so
     one plan can read members written before the stats_blooms column existed
-    next to new ones. plan_distributed must mergeSchema and entry building
-    must tolerate a null row-level blooms array."""
+    next to new ones. plan_distributed reads them under the manifest schema,
+    where a column a member lacks reads as NULL, and entry building must
+    tolerate a null row-level blooms array."""
     import pyarrow.parquet as pq
 
     p_new = str(tmp_path / "new.parquet")

@@ -76,6 +76,35 @@ def test_counts(users):
     assert users.scan().limit(7).metadata_count() == 7  # limit clamp
 
 
+def test_metadata_count_over_members_and_deletes(spark, catalog, users):
+    """metadata_count over several manifest-list members, one holding a
+    position-delete file: a freshly loaded handle sums record counts from
+    column-pruned member reads, a handle with cached entries sums them from
+    the cache, and both count data files only."""
+    from go_iceberg_spark.table.metadata import (
+        CONTENT_DATA,
+        CONTENT_POSITION_DELETES,
+        manifest_members,
+    )
+
+    users.append(users_df(spark, 50).withColumn("id", F.col("id") + 1000))
+    users.delete(E.col("id").isin(1, 2, 3), mode="merge-on-read")
+    snap = users.current_snapshot()
+    assert len(manifest_members(users.location, snap)) >= 2
+    entries = users.manifest_entries(snap)
+    assert any(e.content == CONTENT_POSITION_DELETES for e in entries)
+    expected = sum(e.record_count for e in entries if e.content == CONTENT_DATA)
+    assert expected == 150
+
+    cold = catalog.load_table("db", "users")
+    list_path = os.path.join(cold.location, snap.manifest_path)
+    assert cold.scan().metadata_count() == expected
+    assert list_path not in cold._manifest_cache  # the member reads ran
+    assert users.scan().metadata_count() == expected  # cached entries
+    assert cold.scan().limit(7).metadata_count() == 7
+    assert users.scan().limit(7).metadata_count() == 7
+
+
 def test_append_accumulates(spark, users):
     users.append(users_df(spark, 50).withColumn("id", F.col("id") + 1000))
     assert users.scan().count() == 150
