@@ -10,6 +10,7 @@ CI even while results stay correct.
 from __future__ import annotations
 
 import re
+import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,6 +53,35 @@ def executed_plans(spark: SparkSession):
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
     plans.extend(e.physicalPlanDescription() for e in executions()
                  if e.executionId() not in seen)
+
+
+@contextmanager
+def spark_jobs(spark: SparkSession):
+    """Yield a list that, when the block exits, holds the id of every Spark
+    job started inside it, in id order. The block runs under its own job
+    group, read back through the status tracker, so the jobs Spark starts
+    on its own — schema inference, broadcasts, adaptive query stages,
+    range-partition sampling — count as well as the actions. The caller's
+    job group is restored on exit."""
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    saved = {k: sc.getLocalProperty(k) for k in keys}
+    group = f"spark_jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    jobs: list[int] = []
+    try:
+        yield jobs
+    finally:
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        jobs.extend(sorted(sc.statusTracker().getJobIdsForGroup(group)))
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+
+
+def assert_max_jobs(jobs: list[int], at_most: int) -> None:
+    """Bound the Spark jobs a ``spark_jobs`` block ran — each costs a
+    driver scheduling floor whatever its data size."""
+    assert len(jobs) <= at_most, f"expected <= {at_most} Spark jobs, ran {len(jobs)}"
 
 
 def count_op(plan: DataFrame | str, op: str) -> int:

@@ -41,6 +41,7 @@ from ..table.metadata import (
     Snapshot,
     TableMetadata,
     load_metadata,
+    writer_schema,
 )
 
 try:  # pragma: no cover - exercised through Spark
@@ -267,7 +268,7 @@ class SnapshotStreamReader(DataSourceStreamReader):
 
         def emit(entries: list[DataFileEntry]) -> None:
             for e in entries:
-                file_schema = _schema_by_id(md, e.schema_id) or cur_schema
+                file_schema = writer_schema(md, e.schema_id) or cur_schema
                 src_cols: list[str | None] = []
                 for f in cur_schema.fields:
                     old = file_schema.find_field_by_id(f.field_id)
@@ -313,13 +314,6 @@ class SnapshotStreamReader(DataSourceStreamReader):
                 arrays.append(col.cast(field.type) if col.type != field.type else col)
         out = pa.Table.from_arrays(arrays, schema=partition.target)
         yield from out.to_batches()
-
-
-def _schema_by_id(md: TableMetadata, sid: int) -> Schema | None:
-    for s in md.schemas:
-        if s.schema_id == sid:
-            return s
-    return None
 
 
 class SnapshotStreamDataSource(DataSource):

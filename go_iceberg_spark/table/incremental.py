@@ -9,7 +9,7 @@ that a training-data pipeline consuming a continuously-appended table needs:
   ``start-snapshot-id``/``end-snapshot-id`` read). Planning is a lineage
   walk; each snapshot contributes the data files present in its manifest
   but not its parent's — a driver-side set difference over file paths, then
-  one vectorized parquet read per writer-schema group. No shuffle at all.
+  one read through the scan reader (``scan.read_files``). No shuffle at all.
 
 - ``changelog_scan``: row-level inserts AND deletes per snapshot (Iceberg's
   ``create_changelog_view`` procedure). Copy-on-write rewrites copy every
@@ -28,7 +28,6 @@ the CoW changelog path, each bounded by the size of one snapshot's rewrite.
 from __future__ import annotations
 
 import decimal
-import os
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -42,13 +41,9 @@ from .metadata import (
     OP_REPLACE,
     DataFileEntry,
     Snapshot,
-    delete_applies,
+    writer_schema,
 )
-from .scan import (
-    POS_DELETE_FILE_COL,
-    _align_to_schema,
-    _rel_file_expr,
-)
+from .scan import POS_DELETE_FILE_COL, read_files, read_tombstones, scan_tasks
 
 CHANGE_TYPE_COL = "_change_type"
 CHANGE_ORDINAL_COL = "_change_ordinal"
@@ -99,65 +94,6 @@ def _entry_diff(table, snap: Snapshot) -> tuple[list[DataFileEntry], list[DataFi
     return added, removed
 
 
-def _read_entries(table, entries: list[DataFileEntry], with_lineage: bool = False,
-                  deletes: list[DataFileEntry] | None = None) -> DataFrame | None:
-    """Read data-file entries aligned to the current schema (by field id,
-    same rules as scan-side ``_align_to_schema``). With ``with_lineage`` the
-    ``_file``/``_pos`` identity columns are kept so position deletes can be
-    resolved against the result. ``deletes`` applies MoR delete files (by
-    the scan's sequence rules) so callers can read the rows that were
-    LOGICALLY live, not the raw file contents."""
-    md = table.metadata
-    cur = md.current_schema
-
-    def _applicable_idx(e: DataFileEntry) -> frozenset[int]:
-        # grouped by the per-file applicable set (not any() across a schema
-        # group), so a delete never suppresses rows of files written after it
-        return frozenset(
-            i for i, d in enumerate(deletes or []) if delete_applies(d, e))
-
-    groups: dict[tuple[int, frozenset[int]], list[DataFileEntry]] = {}
-    for e in entries:
-        if e.content == CONTENT_DATA:
-            groups.setdefault((e.schema_id, _applicable_idx(e)), []).append(e)
-    if not groups:
-        return None
-    parts = []
-    for (schema_id, didx), es in groups.items():
-        try:
-            file_schema = md.schema_by_id(schema_id)
-        except Exception:
-            file_schema = cur
-        paths = [os.path.join(table.location, e.file_path) for e in es]
-        raw = table.spark.read.parquet(*paths)
-        if deletes and didx:
-            from .scan import ScanBuilder
-
-            applicable = [deletes[i] for i in sorted(didx)]
-            raw = ScanBuilder(table)._apply_deletes(table.spark, raw, applicable,
-                                                    file_schema, paths)
-        if not with_lineage:
-            parts.append(_align_to_schema(raw, file_schema, cur))
-            continue
-        aligned = []
-        for f in cur.fields:
-            old = file_schema.find_field_by_id(f.field_id)
-            spark_t = to_spark_type(f.type)
-            if old is not None and old.name in raw.columns:
-                aligned.append(F.col(old.name).cast(spark_t).alias(f.name))
-            else:
-                aligned.append(F.lit(None).cast(spark_t).alias(f.name))
-        parts.append(raw.select(
-            *aligned,
-            _rel_file_expr(table.location).alias("_file"),
-            F.col("_metadata.row_index").alias("_pos"),
-        ))
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    return df
-
-
 def incremental_append_scan(
     table,
     from_snapshot_id: int | None = None,
@@ -189,8 +125,8 @@ def incremental_append_scan(
                 f"snapshot {snap.snapshot_id} is {snap.operation!r}, not append; "
                 "pass ignore_non_append=True to skip it")
         added, _ = _entry_diff(table, snap)
-        added_entries.extend(added)
-    df = _read_entries(table, added_entries)
+        added_entries.extend(e for e in added if e.content == CONTENT_DATA)
+    df = read_files(table, scan_tasks(added_entries, []), table.metadata.current_schema)
     if df is None:
         return spark.createDataFrame([], to_spark_type(table.metadata.current_schema.struct))
     return df
@@ -200,17 +136,16 @@ def _bound_key(schema, fid: int, v):
     """Decode an ``encode_stat`` bound (write.py:362-392) into a value whose
     </> order matches the column's REAL order, or None to refuse (caller
     keeps the file). Ints/bools/dates/timestamps ride as ints; decimals as
-    unscaled ints (r9 encoding — str(Decimal) sorted '200' < '99'
-    lexicographically, the r8 ADVICE hazard; legacy str bounds from pre-r9
-    manifests decode back to Decimal, numerically comparable with the
-    ints); genuine strings and hex-encoded binary/fixed are lexicographic
-    by construction; floats are NaN-unsafe (NaN hides from min/max, the r6
-    row-loss class) and refuse."""
+    unscaled ints (str(Decimal) would sort '200' < '99' lexicographically;
+    legacy str bounds from older manifests decode back to Decimal,
+    numerically comparable with the ints); genuine strings and hex-encoded
+    binary/fixed are lexicographic by construction; floats are NaN-unsafe
+    (NaN hides from min/max, so a bound could lose rows) and refuse."""
     f = schema.find_field_by_id(fid)
     if f is None:  # dropped/unknown field: can't reason
         return None
     if isinstance(f.type, DecimalType) and isinstance(v, str):
-        try:  # pre-r9 manifest: str(Decimal) bound
+        try:  # legacy manifest: str(Decimal) bound
             return decimal.Decimal(v).scaleb(
                 f.type.scale, decimal.Context(prec=60))
         except decimal.InvalidOperation:
@@ -236,7 +171,7 @@ def files_that_may_lose_rows(
     this bounds a CDC read's I/O by the files OVERLAPPING the delete, never
     the table size. Conservative on every doubt: missing bounds, type
     mismatches, and float bounds (NaN sorts above every double and hides
-    from min/max, the r6 NaN row-loss class) all KEEP the file."""
+    from min/max, so pruning on them could lose rows) all KEEP the file."""
 
     def _may_lose_rows(d: DataFileEntry) -> bool:
         for e in new_dels:
@@ -251,8 +186,8 @@ def files_that_may_lose_rows(
             overlap = True
             # restrict the disproof to the delete's KEY columns: only
             # equality_ids participate in the match, so a disjoint non-key
-            # payload column must never prune (r8 ADVICE — enforce the
-            # contract where consumed, not implied by the writer)
+            # payload column must never prune (the contract is enforced
+            # where it is consumed, not implied by the writer)
             for fid in e.equality_ids:
                 ds = e.column_stats.get(fid)
                 s = d.column_stats.get(fid)
@@ -293,7 +228,7 @@ def changelog_scan(
     files that were live at commit time."""
     spark = table.spark
     md = table.metadata
-    cols = [f.name for f in md.current_schema.fields]
+    schema = md.current_schema
     chain = snapshots_between(table, from_snapshot_id, to_snapshot_id)
 
     parts: list[DataFrame] = []
@@ -309,12 +244,11 @@ def changelog_scan(
                 e for e in table.manifest_entries(table.snapshot_by_id(snap.parent_snapshot_id))
                 if e.content != CONTENT_DATA
             ]
-        ins = _read_entries(table, [e for e in added if e.content == CONTENT_DATA])
-        dels = _read_entries(table, [e for e in removed if e.content == CONTENT_DATA],
-                             deletes=parent_deletes)
-        del_parts: list[DataFrame] = []
-        if dels is not None:
-            del_parts.append(dels.select(*cols))
+        ins = read_files(table, scan_tasks(
+            [e for e in added if e.content == CONTENT_DATA], []), schema)
+        dels = read_files(table, scan_tasks(
+            [e for e in removed if e.content == CONTENT_DATA], parent_deletes), schema)
+        del_parts: list[DataFrame] = [] if dels is None else [dels]
 
         # MoR: delete files added in this snapshot suppress rows of files
         # that remain live — resolve them to concrete rows as the DIFF of
@@ -322,15 +256,13 @@ def changelog_scan(
         # but not under this snapshot's. A row counts as deleted exactly
         # when it transitions live → dead, which makes the read robust to
         # duplicate tombstones — the spec allows a position (or key) to be
-        # listed by multiple delete files, and overlapping MoR deletes
-        # re-tombstone already-dead rows (r8 fuzz consumer find: the old
-        # per-delete-file replay reported such rows deleted TWICE — scans
-        # never noticed because dead is dead, only changelog consumers
-        # did). Collected BEFORE the insert/delete netting below: when one
-        # diff window contains both a data file and a delete file over it
-        # (an expired-gap-compacted lineage), the inserted-then-deleted
-        # rows must net to ZERO, not surface as an insert+delete pair at
-        # the same ordinal (r6 probe find).
+        # listed by multiple delete files, so replaying each delete file on
+        # its own would report such a row deleted once per file. Collected
+        # BEFORE the insert/delete netting below: when one diff window
+        # contains both a data file and a delete file over it (an
+        # expired-gap-compacted lineage), the inserted-then-deleted rows
+        # must net to ZERO, not surface as an insert+delete pair at the
+        # same ordinal.
         new_dels = [e for e in added if e.content != CONTENT_DATA]
         if new_dels:
             live_data = [e for e in table.manifest_entries(snap)
@@ -339,25 +271,17 @@ def changelog_scan(
                 # position deletes name their target files — prune the
                 # before/after read to just those (an equality delete can
                 # hit any older file, so bounds do the pruning below)
-                hit_paths: set[str] = set()
-                for e in new_dels:
-                    pdf = spark.read.parquet(
-                        os.path.join(table.location, e.file_path))
-                    hit_paths.update(
-                        r[0] for r in
-                        pdf.select(POS_DELETE_FILE_COL).distinct().collect())
+                hit_paths = {r[0] for r in read_tombstones(table, new_dels)
+                             .select(POS_DELETE_FILE_COL).distinct().collect()}
                 live_data = [e for e in live_data if e.file_path in hit_paths]
             else:
-                live_data = files_that_may_lose_rows(
-                    md.current_schema, new_dels, live_data)
+                live_data = files_that_may_lose_rows(schema, new_dels, live_data)
             cur_deletes = [e for e in table.manifest_entries(snap)
                            if e.content != CONTENT_DATA]
-            before = _read_entries(table, live_data, deletes=parent_deletes)
-            after = _read_entries(table, live_data, deletes=cur_deletes)
-            if before is not None:
-                b = before.select(*cols)
-                a = after.select(*cols) if after is not None else b.limit(0)
-                del_parts.append(b.exceptAll(a))
+            before = read_files(table, scan_tasks(live_data, parent_deletes), schema)
+            after = read_files(table, scan_tasks(live_data, cur_deletes), schema)
+            if before is not None:  # before and after read the same files
+                del_parts.append(before.exceptAll(after))
 
         del_all = del_parts[0] if del_parts else None
         for p in del_parts[1:]:
@@ -365,11 +289,10 @@ def changelog_scan(
         if ins is not None and del_all is not None:
             # net rows appearing on both sides of ONE diff window: CoW
             # rewrite carryover AND same-window insert+MoR-delete pairs
-            ins_net = ins.select(*cols).exceptAll(del_all)
-            del_net = del_all.exceptAll(ins.select(*cols))
+            ins_net = ins.exceptAll(del_all)
+            del_net = del_all.exceptAll(ins)
         else:
-            ins_net = ins.select(*cols) if ins is not None else None
-            del_net = del_all
+            ins_net, del_net = ins, del_all
 
         for change_type, df in (("insert", ins_net), ("delete", del_net)):
             if df is not None:
@@ -377,7 +300,7 @@ def changelog_scan(
                              .withColumn(CHANGE_ORDINAL_COL, F.lit(ordinal)))
 
     if not parts:
-        base = spark.createDataFrame([], to_spark_type(md.current_schema.struct))
+        base = spark.createDataFrame([], to_spark_type(schema.struct))
         return (base.withColumn(CHANGE_TYPE_COL, F.lit(""))
                 .withColumn(CHANGE_ORDINAL_COL, F.lit(0)).limit(0))
     out = parts[0]
@@ -570,10 +493,7 @@ def incremental_agg_refresh_changelog(
         # align by field id, the stable identity
         snap = table.snapshot_by_id(to_id)
         md = table.metadata
-        try:
-            schema_at = md.schema_by_id(snap.schema_id)
-        except Exception:
-            schema_at = md.current_schema
+        schema_at = writer_schema(md, snap.schema_id) or md.current_schema
         for f_cur in md.current_schema.fields:
             old = schema_at.find_field_by_id(f_cur.field_id)
             if (old is not None and old.name != f_cur.name

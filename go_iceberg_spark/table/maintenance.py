@@ -63,8 +63,8 @@ def expire_snapshots(table, *, older_than: dt.datetime | int | None = None,
     # retain_last counts ANCESTORS of the current snapshot (Iceberg
     # expire_snapshots retainLast semantics), not newest-N by timestamp:
     # an abandoned branch head that happens to be the newest snapshot must
-    # not dodge expiry once its ref is dropped (r10 — the r9 remove_ref
-    # motivation: a forgotten audit branch pins staged files forever).
+    # not dodge expiry once its ref is dropped (otherwise a forgotten audit
+    # branch pins its staged files forever).
     keep: set[int] = set()
     cur = by_id.get(current_id) if current_id is not None else None
     while cur is not None and len(keep) < retain_last:
@@ -172,7 +172,7 @@ def expire_snapshots(table, *, older_than: dt.datetime | int | None = None,
         # retained snapshot in timestamp order", which with interleaved
         # main/branch commits wires a main snapshot onto a branch snapshot
         # and leaks branch-only rows into the main changelog as phantom
-        # insert+delete pairs (r6 probe find).
+        # insert+delete pairs.
         retained_ids = {s.snapshot_id for s in retained}
         orig_by_id = {s.snapshot_id: s for s in snaps}
 
@@ -186,7 +186,7 @@ def expire_snapshots(table, *, older_than: dt.datetime | int | None = None,
         def _fix(s):
             if s.parent_snapshot_id is None or s.parent_snapshot_id in retained_ids:
                 return s
-            # stamp the rewiring (r10): a rewired snapshot's entries-minus-
+            # stamp the rewiring: a rewired snapshot's entries-minus-
             # parent-entries diff no longer equals "what this commit added"
             # — cherrypick refuses stamped snapshots instead of silently
             # re-registering files the gap's commits added (row duplication)
@@ -266,9 +266,16 @@ def rewrite_data_files(table, *, target_file_size_bytes: int = 128 * 1024 * 1024
     output file then covers a narrow range in EVERY listed dimension, so
     multi-column filters prune files that a single-column sort cannot."""
     from ..expr import might_match, simplify
-    from .incremental import _read_entries, files_that_may_lose_rows
+    from .incremental import files_that_may_lose_rows
     from .metadata import CONTENT_DATA, CONTENT_POSITION_DELETES, OP_REPLACE
-    from .scan import POS_DELETE_FILE_COL, _encode_filter, _stats_for_pruning
+    from .scan import (
+        POS_DELETE_FILE_COL,
+        _encode_filter,
+        _stats_for_pruning,
+        read_files,
+        read_tombstones,
+        scan_tasks,
+    )
 
     def build_and_commit():
         # rebuilt per retry: a compaction racing a writer must re-read
@@ -293,7 +300,8 @@ def rewrite_data_files(table, *, target_file_size_bytes: int = 128 * 1024 * 1024
         if selective:
             # candidate rows with their applicable MoR deletes applied —
             # the rewrite materializes those tombstones
-            df = _read_entries(table, candidates, deletes=delete_files)
+            df = read_files(table, scan_tasks(candidates, delete_files),
+                            md.current_schema)
         else:
             df = table.to_df()  # scan applies MoR deletes
         summary = {"compacted-input-files": str(len(candidates))}
@@ -317,39 +325,14 @@ def rewrite_data_files(table, *, target_file_size_bytes: int = 128 * 1024 * 1024
             live_paths = {u.file_path for u in untouched}
             pos_dels = [e for e in delete_files
                         if e.content == CONTENT_POSITION_DELETES]
-            # ONE job over all position-delete files: which delete files
-            # still name a surviving data file (keep) vs only rewritten
-            # ones (drop) — per-file serial collects added O(deletes)
-            # round trips to every compaction attempt
+            # one job over all position-delete files: the ones that still
+            # name a surviving data file are kept, the ones naming only
+            # rewritten files are dropped
             keep_pos: set[str] = set()
-            if pos_dels:
-                pdf = table.spark.read.parquet(
-                    *[os.path.join(table.location, e.file_path)
-                      for e in pos_dels])
-                refs = (pdf.select(F.input_file_name().alias("_src"),
-                                   F.col(POS_DELETE_FILE_COL))
-                        .filter(F.col(POS_DELETE_FILE_COL).isin(list(live_paths))
-                                if live_paths else F.lit(False))
-                        .select("_src").distinct().collect())
-                # exact lookup on the normalized path (an endswith scan
-                # could match the wrong file when one rel
-                # path is a suffix of another's absolute path); a source
-                # path with no exact mapping keeps ALL position-delete
-                # files conservatively — never silently drop one
-                norm = {os.path.normpath(os.path.join(table.location, e.file_path)): e.file_path
-                        for e in pos_dels}
-                from urllib.parse import unquote as _unquote
-
-                unmatched = False
-                for r in refs:
-                    src = os.path.normpath(_unquote(r[0]).replace("file://", ""))
-                    rel = norm.get(src)
-                    if rel is not None:
-                        keep_pos.add(rel)
-                    else:
-                        unmatched = True
-                if unmatched:
-                    keep_pos = {e.file_path for e in pos_dels}
+            if pos_dels and live_paths:
+                keep_pos = {r[0] for r in read_tombstones(table, pos_dels)
+                            .filter(F.col(POS_DELETE_FILE_COL).isin(list(live_paths)))
+                            .select("_delete_file").distinct().collect()}
             kept_deletes = [
                 e for e in delete_files
                 if (e.file_path in keep_pos
@@ -382,17 +365,16 @@ def rewrite_position_deletes(table):
     file seq) and cannot capture later files — file paths are unique, so a
     row of a future data file can never collide with a kept (path, pos).
 
-    Scale shape: cost is O(live tombstone rows) — one union read, one
+    Scale shape: cost is O(live tombstone rows) — one read, one
     broadcast join against the (data file -> seq) map, one distinct, one
     write. The table's data is never read."""
-    from pyspark.sql import functions as F
-
     from .metadata import (
         CONTENT_DATA,
         CONTENT_POSITION_DELETES,
         OP_REPLACE,
     )
     from .mutate import _pos_delete_schema, _pos_delete_spec
+    from .scan import read_tombstones
 
     def build_and_commit():
         live = table.live_entries()
@@ -402,15 +384,7 @@ def rewrite_position_deletes(table):
                  if e.content not in (CONTENT_DATA, CONTENT_POSITION_DELETES)]
         if not pos:
             return None
-        parts = [
-            table.spark.read.parquet(os.path.join(table.location, d.file_path))
-            .select("file_path", "pos")
-            .withColumn("_dseq", F.lit(d.sequence_number))
-            for d in pos
-        ]
-        tomb = parts[0]
-        for p in parts[1:]:
-            tomb = tomb.unionByName(p)
+        tomb = read_tombstones(table, pos)
         fseq = table.spark.createDataFrame(
             [(e.file_path, e.sequence_number) for e in data],
             "file_path string, _fseq long")
@@ -450,13 +424,13 @@ def _zorder_cluster(df, cols: list[str], n_parts: int | None = None):
         """An order-preserving DOUBLE view of the column: numerics and
         temporals cast directly; STRINGS map via their first 6 bytes as a
         big-endian integer (UTF-8 byte order == string order, and 48 bits
-        fit a double exactly) — r10: string columns used to cast to NULL
-        and silently not cluster at all (a no-op z-order with no error)."""
+        fit a double exactly); a plain cast would turn strings into NULL
+        and silently not cluster at all."""
         from pyspark.sql import types as _T
 
         if isinstance(df.schema[c].dataType, _T.StringType):
-            # slice BYTES after encoding (r10 ADVICE: slicing 6 CHARACTERS
-            # first let non-ASCII prefixes reach 24 bytes, whose
+            # slice BYTES after encoding (slicing 6 CHARACTERS first would
+            # let non-ASCII prefixes reach 24 bytes, whose
             # conv(hex, 16, 10) overflows 64 bits and collapses distinct
             # strings into one bin) — 12 hex digits == 6 bytes <= 48 bits,
             # always exact in a double; '0'-rpad == trailing \x00 bytes
@@ -686,7 +660,7 @@ def _kmv_estimate(mins: list[int], k: int) -> float:
 
 def refresh_ndv_stats(table, columns: list[str], *, k: int = 64) -> dict[str, float]:
     """Refresh per-column DISTINCT-COUNT sketches stored in table
-    properties, INCREMENTALLY (r11): the first call scans the table once;
+    properties, INCREMENTALLY: the first call scans the table once;
     subsequent calls scan only rows appended since the stamped snapshot
     and merge k-min sets (the KMV property: k smallest of a union == the
     union of sketches' k smallest — so the incremental result is

@@ -260,6 +260,12 @@ def delete_applies(delete: DataFileEntry, data: DataFileEntry) -> bool:
     return delete.sequence_number > data.sequence_number
 
 
+def writer_schema(md: TableMetadata, schema_id: int) -> Schema | None:
+    """The table schema with this id (the one a file or snapshot was written
+    under), or None when the metadata no longer records it."""
+    return next((s for s in md.schemas if s.schema_id == schema_id), None)
+
+
 _MANIFEST_ARROW_SCHEMA = pa.schema(
     [
         ("content", pa.int32()),

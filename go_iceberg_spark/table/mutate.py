@@ -21,11 +21,14 @@ Reference behavior being re-expressed (and fixed where buggy):
 All mutations follow the same shape: plan candidate files from manifest stats
 (metadata-only), run one distributed job over candidates, commit one snapshot
 swapping old files for new. Sequence numbers order MoR deletes vs data.
+
+Candidate files are read through the scan reader (``scan.read_files``) with
+the live delete files that apply to them, so a rewrite compacts those
+deletes and the MoR writer never tombstones a row that is already dead.
 """
 
 from __future__ import annotations
 
-import os
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -43,7 +46,14 @@ from .metadata import (
     PartitionSpec,
     delete_applies,
 )
-from .scan import _encode_filter, _stats_for_pruning, _align_to_schema
+from .scan import (
+    POS_DELETE_FILE_COL,
+    POS_DELETE_POS_COL,
+    _encode_filter,
+    _stats_for_pruning,
+    read_files,
+    scan_tasks,
+)
 from .write import write_data_files
 
 COPY_ON_WRITE = "copy-on-write"  # reference: table/delete.go:17-25
@@ -70,37 +80,6 @@ def _other_deletes(table) -> list[DataFileEntry]:
     return [e for e in table.live_entries() if e.content != CONTENT_DATA]
 
 
-def _read_candidates(table, candidates: list[DataFileEntry]) -> DataFrame:
-    """Read candidate files aligned to the current schema, with existing MoR
-    deletes applied so a CoW rewrite also compacts them."""
-    from .scan import FileScanTask, ScanBuilder
-
-    md = table.metadata
-    sb = ScanBuilder(table)
-    dels = _other_deletes(table)
-
-    # group by (schema, per-FILE applicable delete set): grouping on schema
-    # alone would apply an equality delete to every file of the group when
-    # any one file predates it, deleting rows re-inserted after the delete
-    def _applicable(e: DataFileEntry) -> tuple[int, ...]:
-        return tuple(i for i, d in enumerate(dels) if delete_applies(d, e))
-
-    groups: dict[tuple[int, tuple[int, ...]], list[DataFileEntry]] = {}
-    for e in candidates:
-        groups.setdefault((e.schema_id, _applicable(e)), []).append(e)
-    parts = []
-    for (sid, didx), es in groups.items():
-        file_schema = md.schema_by_id(sid) if any(s.schema_id == sid for s in md.schemas) else md.current_schema
-        paths = [os.path.join(table.location, e.file_path) for e in es]
-        raw = table.spark.read.parquet(*paths)
-        raw = sb._apply_deletes(table.spark, raw, [dels[i] for i in didx], file_schema, paths)
-        parts.append(_align_to_schema(raw, file_schema, md.current_schema))
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    return df
-
-
 def rewrite_for_delete(table, filter_: Expression) -> list[DataFileEntry]:
     """Shared CoW machinery: rewrite candidate files without matching rows;
     return the full surviving live-entry set (untouched + rewritten),
@@ -121,7 +100,9 @@ def rewrite_for_delete(table, filter_: Expression) -> list[DataFileEntry]:
     if not rewrite:
         remaining_deletes = _deletes_still_needed(table, untouched)
         return untouched + remaining_deletes
-    survivors_df = _read_candidates(table, rewrite).filter(~to_column(filter_) | to_column(filter_).isNull())
+    survivors_df = read_files(table, scan_tasks(rewrite, _other_deletes(table)),
+                              md.current_schema)
+    survivors_df = survivors_df.filter(~to_column(filter_) | to_column(filter_).isNull())
     new_files = write_data_files(table, survivors_df)
     # rewritten files have deletes applied; keep delete files only for untouched data
     remaining_deletes = _deletes_still_needed(table, untouched)
@@ -207,48 +188,17 @@ def _delete_merge_on_read(table, filter_: Expression):
     if not candidates:
         return table._commit_snapshot(OP_DELETE, table.live_entries())
     md = table.metadata
-
-    groups: dict[int, list[DataFileEntry]] = {}
-    for e in candidates:
-        groups.setdefault(e.schema_id, []).append(e)
-    parts = []
-    for sid, es in groups.items():
-        file_schema = md.schema_by_id(sid) if any(s.schema_id == sid for s in md.schemas) else md.current_schema
-        raw = table.spark.read.parquet(*[os.path.join(table.location, e.file_path) for e in es])
-        aligned = _align_with_pos(raw, file_schema, md, table.location)
-        parts.append(aligned)
-    all_rows = parts[0]
-    for p in parts[1:]:
-        all_rows = all_rows.unionByName(p)
-
+    # candidates read with their applicable deletes applied: a row an
+    # earlier delete already suppressed is not tombstoned again (overlapping
+    # MoR deletes would otherwise list a duplicate (file, pos) per delete,
+    # inflating every later scan's anti-join build side for no information)
+    rows = read_files(table, scan_tasks(candidates, _other_deletes(table)),
+                      md.current_schema, lineage=True)
     # position-delete schema (file_path, pos) — reference: table/writer.go:290-293
-    deletes_df = all_rows.filter(to_column(filter_)).select(
-        F.col("_file").alias("file_path"), F.col("_pos").alias("pos"))
-    # don't re-tombstone rows an existing APPLICABLE position delete already
-    # suppressed (the raw candidate read sees dead rows too): overlapping
-    # MoR deletes would otherwise append a duplicate (file, pos) per delete
-    # — spec-legal, and the changelog reader dedups them, but each
-    # duplicate inflates every later scan's anti-join build side for zero
-    # information. Applicability is per data file: tombstone seq >= file seq.
-    existing_pos = [d for d in table.live_entries()
-                    if d.content == CONTENT_POSITION_DELETES]
-    if existing_pos:
-        fseq = table.spark.createDataFrame(
-            [(e.file_path, e.sequence_number) for e in candidates],
-            "file_path string, _fseq long")
-        tomb_parts = [
-            table.spark.read.parquet(os.path.join(table.location, d.file_path))
-            .select("file_path", "pos").withColumn("_dseq", F.lit(d.sequence_number))
-            for d in existing_pos
-        ]
-        tomb = tomb_parts[0]
-        for p in tomb_parts[1:]:
-            tomb = tomb.unionByName(p)
-        dead = (tomb.join(F.broadcast(fseq), "file_path")
-                .filter(F.col("_dseq") >= F.col("_fseq"))
-                .select("file_path", "pos").distinct())
-        deletes_df = deletes_df.join(dead, ["file_path", "pos"], "left_anti")
-    deletes_df = deletes_df.orderBy("file_path", "pos")
+    deletes_df = (rows.filter(to_column(filter_))
+                  .select(F.col("_file").alias(POS_DELETE_FILE_COL),
+                          F.col("_pos").alias(POS_DELETE_POS_COL))
+                  .orderBy(POS_DELETE_FILE_COL, POS_DELETE_POS_COL))
     del_files = write_data_files(
         table, deletes_df, CONTENT_POSITION_DELETES, _pos_delete_schema(),
         _pos_delete_spec(md))
@@ -267,32 +217,6 @@ def _pos_delete_schema():
         NestedField(2147483546, "file_path", STRING, True),
         NestedField(2147483545, "pos", LONG, True),
     )))
-
-
-def _align_with_pos(raw: DataFrame, file_schema, md, location: str) -> DataFrame:
-    """Align to current schema while carrying (_file, _pos) from _metadata;
-    _file uses the manifest's table-relative path convention."""
-    from .scan import _rel_file_expr
-
-    with_meta = raw.withColumn("_file", _rel_file_expr(location)).withColumn(
-        "_pos", F.col("_metadata.row_index")
-    )
-    return _align_to_schema_keep(with_meta, file_schema, md.current_schema)
-
-
-def _align_to_schema_keep(df: DataFrame, file_schema, current) -> DataFrame:
-    from ..schema import to_spark_type
-
-    cols = []
-    for f in current.fields:
-        old = file_schema.find_field_by_id(f.field_id)
-        spark_t = to_spark_type(f.type)
-        if old is not None and old.name in df.columns:
-            cols.append(F.col(old.name).cast(spark_t).alias(f.name))
-        else:
-            cols.append(F.lit(None).cast(spark_t).alias(f.name))
-    cols += [F.col("_file"), F.col("_pos")]
-    return df.select(*cols)
 
 
 def update(table, filter_: Expression, assignments: dict[str, Any]):
@@ -320,7 +244,8 @@ def update(table, filter_: Expression, assignments: dict[str, Any]):
         candidates, untouched = _split_candidates(table, flt)
         if not candidates:
             return table._commit_snapshot(OP_REPLACE, table.live_entries())
-        df = _read_candidates(table, candidates)
+        df = read_files(table, scan_tasks(candidates, _other_deletes(table)),
+                        md.current_schema)
         cond = to_column(flt)
         from pyspark.sql import Column as _Col
 
@@ -518,7 +443,9 @@ def merge(table, source: DataFrame, on: list[str], *,
                     prune_expr = and_(prune_expr, eis_null(k))
             candidates, untouched = _split_candidates(table, prune_expr)
 
-        target = _read_candidates(table, candidates) if candidates else table.spark.createDataFrame([], table.spark_schema())
+        target = read_files(table, scan_tasks(candidates, _other_deletes(table)), schema)
+        if target is None:
+            target = table.spark.createDataFrame([], table.spark_schema())
 
         # SQL MERGE cardinality rule: multiple source rows matching ONE
         # target row is an error, not a row multiplication (the full-outer
@@ -601,7 +528,7 @@ def scd2_apply(table, updates: DataFrame, key_cols: list[str], *,
                end_col: str = "valid_to_seq",
                current_col: str = "is_current",
                drop_unchanged: bool = False):
-    """Slowly-Changing-Dimension TYPE 2 maintenance (r11): apply a batch of
+    """Slowly-Changing-Dimension TYPE 2 maintenance: apply a batch of
     versioned updates ``(key..., attrs..., seq)`` to a history table whose
     rows carry ``[start_col, end_col)`` validity sequence bounds and an
     ``is_current`` flag. One call = ONE snapshot: the key's open row closes

@@ -9,18 +9,21 @@ the parts the reference left as stubs made real:
 - file pruning really evaluates the filter against per-file column stats and
   identity-partition values (the reference's fileMightMatch/manifestMightMatch
   always return true, reference: table/insert.go:255-266);
-- merge-on-read position deletes ARE applied, via a broadcast anti-join on
-  (file_path, row position) using Spark's ``_metadata.file_path`` /
-  ``_metadata.row_index`` hidden columns — the reference writes position
-  deletes but never applies them on scan (reference: table/scan.go:146-149,
-  SURVEY §2.6.4);
+- merge-on-read deletes ARE applied — the reference writes position deletes
+  but never applies them on scan (reference: table/scan.go:146-149, SURVEY
+  §2.6.4);
 - schema evolution: files written under older schemas are aligned to the
-  current schema by FIELD ID (rename-safe, type-widening casts, dropped/added
+  read schema by FIELD ID (rename-safe, type-widening casts, dropped/added
   columns), then unioned.
 
-Scale notes: pruning is metadata-only (no data I/O); the files that survive
-are handed to one ``spark.read.parquet(*files)`` so Catalyst still performs
-predicate pushdown, column pruning, and vectorized reads within each file;
+Every data-file read of the table layer — scans, copy-on-write rewrites, the
+merge-on-read delete writer, incremental and changelog reads, compaction —
+goes through two functions here. ``scan_tasks`` pairs data files with the
+delete files that apply to them; ``read_files`` reads the tasks under each
+file's writer schema, applies their deletes, and aligns the result to the
+caller's schema. ``read_tombstones`` reads position-delete files, all of
+them in one read. Pruning is metadata-only (no data I/O); Catalyst still
+pushes predicates, prunes columns and reads vectorized within each file;
 delete files are typically tiny → broadcast anti-joins, no shuffle of the
 data side.
 """
@@ -30,10 +33,11 @@ from __future__ import annotations
 import datetime as dt
 import os
 from dataclasses import dataclass, field as dc_field
-from typing import Any
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..errors import NoSuchSnapshotError, ValidationError
 from ..expr import ALWAYS_TRUE, ColumnStats, Expression, might_match, simplify, to_column
@@ -47,6 +51,7 @@ from .metadata import (
     TableMetadata,
     delete_applies,
     manifest_members,
+    writer_schema,
 )
 from .write import encode_literal
 
@@ -139,15 +144,152 @@ def _encode_filter(e: Expression, schema: Schema) -> Expression:
 def _rel_file_expr(location: str):
     """The current row's source file as the manifest records it: relative to
     the table location when under it, else the full normalized path
-    (``add_files`` imports, ``write.data.path`` trees). The prefix GUARD
-    matters: blindly substringing an external path would map different files
-    to colliding (or empty) keys and a position-delete anti-join keyed on it
-    would drop rows from the wrong files."""
-    norm = F.regexp_replace(F.col("_metadata.file_path"), "^file:(//)?", "")
+    (``add_files`` imports, ``write.data.path`` trees). Spark reports the
+    path URL-encoded, so a path holding an escape is decoded first ('+' is
+    literal in a path); the check keeps the per-row decode off every other
+    path. The prefix GUARD matters: blindly substringing an external path
+    would map different files to colliding (or empty) keys and a
+    position-delete anti-join keyed on it would drop rows from the wrong
+    files."""
+    path = F.col("_metadata.file_path")
     prefix = location.rstrip("/") + "/"
-    return F.when(
-        norm.startswith(F.lit(prefix)), F.substring(norm, len(prefix) + 1, 1 << 30)
-    ).otherwise(norm)
+
+    def relative(p):
+        norm = F.regexp_replace(p, "^file:(//)?", "")
+        return F.when(
+            norm.startswith(F.lit(prefix)), F.substring(norm, len(prefix) + 1, 1 << 30)
+        ).otherwise(norm)
+
+    decoded = F.url_decode(F.regexp_replace(path, "\\+", "%2B"))
+    return F.when(path.contains("%"), relative(decoded)).otherwise(relative(path))
+
+
+def scan_tasks(data_files: list[DataFileEntry],
+               deletes: list[DataFileEntry]) -> list[FileScanTask]:
+    """Pair each data file with the delete files that apply to it
+    (``delete_applies``). Applicability depends only on the data file's
+    sequence number, so it is memoized per sequence: O(data + sequences x
+    deletes), not O(data x deletes)."""
+    by_seq: dict[int, list[DataFileEntry]] = {}
+    tasks = []
+    for e in data_files:
+        if e.sequence_number not in by_seq:
+            by_seq[e.sequence_number] = [d for d in deletes if delete_applies(d, e)]
+        tasks.append(FileScanTask(e, by_seq[e.sequence_number]))
+    return tasks
+
+
+def read_tombstones(table, pos_entries: list[DataFileEntry]) -> DataFrame:
+    """Every row of the given position-delete files, in one read under the
+    position-delete schema ``(file_path string, pos long)``, with the
+    table-relative path of the delete file the row came from
+    (``_delete_file``) and that file's sequence number (``_dseq``). The
+    sequence number is looked up in a literal map keyed by that path, which
+    costs no Spark job (a broadcast join of a local frame costs one)."""
+    seqs = F.create_map(*[F.lit(x) for d in pos_entries
+                          for x in (d.file_path, d.sequence_number)])
+    return (table.spark.read
+            .schema(f"{POS_DELETE_FILE_COL} string, {POS_DELETE_POS_COL} long")
+            .parquet(*[os.path.join(table.location, d.file_path) for d in pos_entries])
+            .withColumn("_delete_file", _rel_file_expr(table.location))
+            .withColumn("_dseq", seqs[F.col("_delete_file")]))
+
+
+def read_files(table, tasks: list[FileScanTask], schema: Schema,
+               lineage: bool = False) -> DataFrame | None:
+    """The rows of the planned files with each task's delete files applied,
+    aligned to ``schema`` by field id; None when there are no tasks.
+
+    Tasks group by (writer schema, delete set, imported partition). A file
+    the engine wrote is read under its writer schema's Spark type, so the
+    read starts no schema-inference job. An imported (absolute-path) file
+    keeps inference, since its physical types only have to fit the column
+    types, and its identity-partition columns are rebuilt from the entry's
+    partition tuple: hive layouts keep them only in the directory name.
+    Position deletes come from one read of every position-delete file the
+    tasks name; each group anti-joins the rows of its own delete files on
+    (file, row index). Equality deletes cost one anti-join per key-id set,
+    keys matched null-safely by field id: a key column the data file lacks
+    reads as NULL. ``lineage=True`` keeps each row's table-relative
+    ``_file`` and its row index ``_pos``."""
+    if not tasks:
+        return None
+    md, spark, loc = table.metadata, table.spark, table.location
+    groups: dict[tuple, list[FileScanTask]] = {}
+    for t in tasks:
+        f = t.file
+        imported = ((f.spec_id, tuple(sorted(f.partition.items(), key=repr)))
+                    if os.path.isabs(f.file_path) else None)
+        key = (f.schema_id, tuple(sorted(d.file_path for d in t.delete_files)), imported)
+        groups.setdefault(key, []).append(t)
+    pos_all = {d.file_path: d for t in tasks for d in t.delete_files
+               if d.content == CONTENT_POSITION_DELETES}
+    tombstones = read_tombstones(table, list(pos_all.values())) if pos_all else None
+
+    parts: list[DataFrame] = []
+    for (sid, _, imported), ts in groups.items():
+        ws = writer_schema(md, sid)
+        file_schema = ws or schema
+        paths = [os.path.join(loc, t.file.file_path) for t in ts]
+        if imported is None and ws is not None:
+            df = spark.read.schema(to_spark_type(ws.struct)).parquet(*paths)
+        else:
+            df = spark.read.parquet(*paths)
+        if imported is not None:
+            # every row of the file shares the entry's partition tuple
+            f = ts[0].file
+            spec = next((s for s in md.partition_specs if s.spec_id == f.spec_id), None)
+            for pf in (spec.fields if spec is not None else ()):
+                src = (file_schema.find_field_by_id(pf.source_id)
+                       or md.current_schema.find_field_by_id(pf.source_id))
+                if pf.transform == "identity" and src is not None and src.name not in df.columns:
+                    df = df.withColumn(src.name, F.lit(f.partition.get(pf.name))
+                                       .cast(to_spark_type(src.type)))
+        dels = ts[0].delete_files
+        pos = [d.file_path for d in dels if d.content == CONTENT_POSITION_DELETES]
+        if lineage or pos:
+            df = (df.withColumn("_file", _rel_file_expr(loc))
+                  .withColumn("_pos", F.col("_metadata.row_index")))
+        if pos:
+            dead = (tombstones if len(pos) == len(pos_all)
+                    else tombstones.filter(F.col("_delete_file").isin(pos)))
+            dead = dead.select(F.col(POS_DELETE_FILE_COL).alias("_del_file"),
+                               F.col(POS_DELETE_POS_COL).alias("_del_pos"))
+            df = df.join(F.broadcast(dead), how="left_anti", on=[
+                F.col("_file") == F.col("_del_file"), F.col("_pos") == F.col("_del_pos")])
+        by_ids: dict[tuple[int, ...], list[DataFileEntry]] = {}
+        for d in dels:
+            if d.content == CONTENT_EQUALITY_DELETES and d.equality_ids:
+                by_ids.setdefault(tuple(d.equality_ids), []).append(d)
+        for ids, eq in by_ids.items():
+            # keys are FIELD IDS: each delete file's columns resolve against
+            # its own writer schema, the data side against the file's, so a
+            # rename between them cannot desynchronize the join
+            keys = [f"_eq_key_{fid}" for fid in ids]
+            by_sid: dict[int, list[DataFileEntry]] = {}
+            for d in eq:
+                by_sid.setdefault(d.schema_id, []).append(d)
+            key_frames = []
+            for dsid, ds in by_sid.items():
+                dsch = writer_schema(md, dsid) or file_schema
+                fields = [dsch.find_field_by_id(fid) for fid in ids]
+                if None in fields:
+                    raise ValueError(
+                        f"equality-delete field ids {ids} not all in schema "
+                        f"{dsch.schema_id} (files: {[d.file_path for d in ds]})")
+                key_frames.append(
+                    spark.read.schema(T.StructType([
+                        T.StructField(k.name, to_spark_type(k.type)) for k in fields]))
+                    .parquet(*[os.path.join(loc, d.file_path) for d in ds])
+                    .select(*[F.col(k.name).alias(n) for k, n in zip(fields, keys)]))
+            data_keys = [file_schema.find_field_by_id(fid) for fid in ids]
+            df = df.join(F.broadcast(reduce(DataFrame.unionByName, key_frames)),
+                         how="left_anti", on=[
+                (F.col(k.name) if k is not None and k.name in df.columns
+                 else F.lit(None)).eqNullSafe(F.col(n)) for k, n in zip(data_keys, keys)])
+        parts.append(_align_to_schema(df, file_schema, schema,
+                                      ("_file", "_pos") if lineage else ()))
+    return reduce(DataFrame.unionByName, parts)
 
 
 class ScanBuilder:
@@ -216,10 +358,9 @@ class ScanBuilder:
         time-travel semantics — a snapshot is read as it was written, so a
         later rename/add/drop does not leak into historical reads)."""
         md = self._table.metadata
-        if (self._schema_from_snapshot and snap is not None
-                and _has_schema(md, snap.schema_id)):
-            return md.schema_by_id(snap.schema_id)
-        return md.current_schema
+        pinned = (writer_schema(md, snap.schema_id)
+                  if self._schema_from_snapshot and snap is not None else None)
+        return pinned or md.current_schema
 
     def _resolve_snapshot(self) -> Snapshot | None:
         """as-of > snapshot-id > current; None for empty table
@@ -257,21 +398,7 @@ class ScanBuilder:
         entries = self._pruned_entries(snap, enc, md, proj)
         data_files = [e for e in entries if e.content == CONTENT_DATA
                       if _bucket_partition_might_match(flt, e, md)]
-        deletes = ([e for e in entries if e.content == CONTENT_POSITION_DELETES]
-                   + [e for e in entries if e.content == CONTENT_EQUALITY_DELETES])
-
-        # delete-file applicability depends only on the data file's sequence
-        # number; memoize per distinct sequence so planning is
-        # O(data + sequences x deletes), not O(data x deletes)
-        dels_by_seq: dict[int, list[DataFileEntry]] = {}
-
-        def dels_for(e: DataFileEntry) -> list[DataFileEntry]:
-            if e.sequence_number not in dels_by_seq:
-                dels_by_seq[e.sequence_number] = [
-                    d for d in deletes if delete_applies(d, e)]
-            return dels_by_seq[e.sequence_number]
-
-        return [FileScanTask(e, dels_for(e)) for e in data_files]
+        return scan_tasks(data_files, [e for e in entries if e.content != CONTENT_DATA])
 
     # kept-entry counts up to this are pruned in memory through the table's
     # per-member cache; above it, scans do a pruned read per planning call
@@ -324,22 +451,16 @@ class ScanBuilder:
     def to_df(self) -> DataFrame:
         """Materialize the scan as a DataFrame (the reference's stubbed
         ToArrowTable, table/scan.go:202-216, made real)."""
-        spark = self._table.spark
-        md = self._table.metadata
-        tasks = self.plan_files()
         cur_schema = self._projection_schema(self._resolve_snapshot())
-        spark_schema = to_spark_type(cur_schema.struct)
-
-        if not tasks:
-            df = spark.createDataFrame([], spark_schema)
-        else:
-            df = self._read_aligned(spark, md, tasks, cur_schema)
+        df = read_files(self._table, self.plan_files(), cur_schema)
+        if df is None:
+            df = self._table.spark.createDataFrame([], to_spark_type(cur_schema.struct))
 
         if self._filter is not ALWAYS_TRUE:
             # bind filter columns against the PROJECTION schema first: a
             # filter referencing a column unknown to a time-travel/tag
             # snapshot's pinned schema gets the engine's taxonomy, not a raw
-            # Spark AnalysisException (r6 probe)
+            # Spark AnalysisException
             from ..expr import referenced_columns
 
             known = {f.name for f in cur_schema.fields}
@@ -361,155 +482,6 @@ class ScanBuilder:
             df = df.select(*cols)
         if self._limit is not None:
             df = df.limit(self._limit)
-        return df
-
-    def _read_aligned(self, spark: SparkSession, md: TableMetadata,
-                      tasks: list[FileScanTask], target: Schema | None = None) -> DataFrame:
-        """Read planned files grouped by writer schema, align to the scan's
-        projection schema by field id, apply MoR deletes, union."""
-        cur = target or md.current_schema
-
-        # group data files by (schema_id, applicable delete-file set);
-        # IMPORTED files (absolute paths, hive-migration layout) also group
-        # by their partition tuple + spec so identity-partition columns
-        # absent from the data can be reconstituted per group — matching
-        # Iceberg's metadata-backed partition columns. Engine-written files
-        # always contain every column, so their grouping is unchanged.
-        groups: dict[tuple, list[FileScanTask]] = {}
-        for t in tasks:
-            imported = os.path.isabs(t.file.file_path)
-            pkey = (
-                (t.file.spec_id, tuple(sorted(t.file.partition.items(), key=repr)))
-                if imported else None
-            )
-            key = (t.file.schema_id,
-                   tuple(sorted(d.file_path for d in t.delete_files)), pkey)
-            groups.setdefault(key, []).append(t)
-
-        parts: list[DataFrame] = []
-        loc = self._table.location
-        for (schema_id, _del_key, pkey), ts in groups.items():
-            file_schema = md.schema_by_id(schema_id) if _has_schema(md, schema_id) else cur
-            paths = [os.path.join(loc, t.file.file_path) for t in ts]
-            dels = ts[0].delete_files
-            raw = spark.read.parquet(*paths)
-            if pkey is not None:
-                raw = self._reconstitute_partition_columns(raw, ts[0].file, file_schema, md)
-            raw = self._apply_deletes(spark, raw, dels, file_schema, paths)
-            parts.append(_align_to_schema(raw, file_schema, cur))
-
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return df
-
-    def _reconstitute_partition_columns(
-        self, raw: DataFrame, entry: DataFileEntry, file_schema: Schema, md: TableMetadata
-    ) -> DataFrame:
-        """Fill identity-partition source columns an IMPORTED data file does
-        not contain from the entry's partition metadata (every row of the
-        file shares the value) — the hive-migration read path."""
-        spec = next((s for s in md.partition_specs if s.spec_id == entry.spec_id), None)
-        if spec is None:
-            return raw
-        from ..schema import to_spark_type
-
-        for pf in spec.fields:
-            if pf.transform != "identity":
-                continue
-            src = file_schema.find_field_by_id(pf.source_id) or \
-                md.current_schema.find_field_by_id(pf.source_id)
-            if src is None or src.name in raw.columns:
-                continue
-            v = entry.partition.get(pf.name)
-            col = F.lit(v).cast(to_spark_type(src.type))
-            raw = raw.withColumn(src.name, col)
-        return raw
-
-    def _apply_deletes(
-        self,
-        spark: SparkSession,
-        df: DataFrame,
-        delete_files: list[DataFileEntry],
-        file_schema: Schema,
-        data_paths: list[str],
-    ) -> DataFrame:
-        if not delete_files:
-            return df
-        pos = [d for d in delete_files if d.content == CONTENT_POSITION_DELETES]
-        eq = [d for d in delete_files if d.content == CONTENT_EQUALITY_DELETES]
-
-        loc = self._table.location
-        if pos:
-            # (file, row_index) anti-join; Spark's hidden _metadata column
-            # gives a "file:///..." URI — normalize to the manifest's
-            # table-relative path convention.
-            deletes = spark.read.parquet(*[os.path.join(loc, d.file_path) for d in pos]).select(
-                F.col(POS_DELETE_FILE_COL).alias("_del_file"),
-                F.col(POS_DELETE_POS_COL).alias("_del_pos"),
-            )
-            df = (
-                df.withColumn("_file", _rel_file_expr(loc))
-                .withColumn("_pos", F.col("_metadata.row_index"))
-                .join(
-                    F.broadcast(deletes),
-                    on=[F.col("_file") == F.col("_del_file"), F.col("_pos") == F.col("_del_pos")],
-                    how="left_anti",
-                )
-                .drop("_file", "_pos")
-            )
-        # equality deletes: drop rows whose key tuple appears in a delete file
-        # (null-safe), only for data written before the delete (sequence
-        # filtering already done at planning time). Keys are FIELD IDS, so
-        # the physical column name inside each delete parquet is resolved
-        # against the delete file's OWN writer schema and the data side
-        # against ITS writer schema — a rename between the two (or between
-        # either and the current schema) must not desynchronize the join.
-        # Files sharing a key-id set still collapse into ONE anti-join
-        # (reads grouped per writer-schema generation, unioned after
-        # aliasing) — n delete files with the same equality_ids cost one
-        # join, not n. A key column absent from the data file's schema reads
-        # as NULL for every row (Iceberg missing-column semantics), matched
-        # null-safely.
-        md = self._table.metadata
-        by_ids: dict[tuple[int, ...], list[DataFileEntry]] = {}
-        for d in eq:
-            if d.equality_ids:
-                by_ids.setdefault(tuple(d.equality_ids), []).append(d)
-        for fid_key, ds in by_ids.items():
-            canon = []  # join-column names as the DATA side knows them
-            for fid in fid_key:
-                f = file_schema.find_field_by_id(fid)
-                if f is None:  # dropped/added around this file: any schema
-                    f = next((s.find_field_by_id(fid) for s in md.schemas
-                              if s.find_field_by_id(fid) is not None), None)
-                if f is None:
-                    raise ValueError(
-                        f"equality-delete field id {fid} unknown to every "
-                        f"table schema (files: {[x.file_path for x in ds]})")
-                canon.append(f.name)
-            parts: list[DataFrame] = []
-            by_sid: dict[int, list[DataFileEntry]] = {}
-            for d in ds:
-                by_sid.setdefault(d.schema_id, []).append(d)
-            for sid, dss in by_sid.items():
-                dsch = md.schema_by_id(sid) if _has_schema(md, sid) else file_schema
-                phys = [
-                    (g.name if (g := dsch.find_field_by_id(fid)) is not None else c)
-                    for fid, c in zip(fid_key, canon)
-                ]
-                p = spark.read.parquet(
-                    *[os.path.join(loc, d.file_path) for d in dss]).select(
-                    *[F.col(n).alias(c) for n, c in zip(phys, canon)])
-                parts.append(p)
-            del_df = parts[0]
-            for p in parts[1:]:
-                del_df = del_df.unionByName(p)
-            cond = [
-                (df[c] if c in df.columns else F.lit(None)).eqNullSafe(del_df[c])
-                for c in canon
-            ]
-            df = df.join(F.broadcast(del_df), on=cond, how="left_anti")
         return df
 
     # -- counts -----------------------------------------------------------
@@ -551,7 +523,7 @@ class ScanBuilder:
 
     def metadata_min_max(self, column: str):
         """Exact (min, max) of a column answered from manifest STATS alone
-        — zero data read, O(live files) driver metadata (r9; the natural
+        — zero data read, O(live files) driver metadata (the natural
         extension of the reference's metadata-only count,
         table/scan.go:234-250) — or None when metadata cannot PROVE
         exactness, in which case the caller falls back to the scan.
@@ -560,8 +532,7 @@ class ScanBuilder:
         every non-all-NULL data file carrying both bounds for the column;
         and for float/double columns a PROVEN-ZERO NaN count per file
         (parquet bounds exclude NaN, which Spark orders ABOVE every
-        double — an unproven max would silently be wrong, the r6 NaN
-        class). All-NULL files contribute no values; a table whose every
+        double — an unproven max would silently be wrong). All-NULL files contribute no values; a table whose every
         row is NULL returns (None, None), matching SQL MIN/MAX. Bounds
         decode from the stat space back to the column's type
         (dates/timestamps/decimals/binary)."""
@@ -577,7 +548,7 @@ class ScanBuilder:
             return (None, None)
         # resolve the name against the SAME schema to_df() would read with
         # (time-travel/tag reads pin the snapshot's schema) — the stats key
-        # is the field id, so only the name lookup switches (r9 ADVICE)
+        # is the field id, so only the name lookup switches
         f = self._projection_schema(snap).find_field(column)
         if f is None:
             return None
@@ -591,13 +562,14 @@ class ScanBuilder:
         # value-derived bounds for columns listed in
         # write.exact-bounds-columns and stamps them ``bounds_exact`` —
         # only stats carrying that marker may serve the class; unmarked
-        # stats (add_files imports, pre-r10 manifests) stay refused.
+        # stats (add_files imports, manifests written before the marker
+        # existed) stay refused.
         is_float = isinstance(f.type, PrimitiveType) and f.type.name in ("float", "double")
 
         def _nb(v):
             # normalize a bound into the current int encode space: legacy
-            # pre-r9 manifests stored decimals as str(Decimal), which
-            # compares LEXICOGRAPHICALLY — decode to the unscaled int
+            # manifests store decimals as str(Decimal), which compares
+            # LEXICOGRAPHICALLY — decode to the unscaled int
             if isinstance(f.type, DecimalType) and isinstance(v, str):
                 import decimal as _dec
 
@@ -636,20 +608,17 @@ class ScanBuilder:
         return (decode_stat(lo, f.type), decode_stat(hi, f.type))
 
 
-def _has_schema(md: TableMetadata, sid: int) -> bool:
-    return any(s.schema_id == sid for s in md.schemas)
-
-
-def _align_to_schema(df: DataFrame, file_schema: Schema, current: Schema) -> DataFrame:
+def _align_to_schema(df: DataFrame, file_schema: Schema, current: Schema,
+                     keep: tuple[str, ...] = ()) -> DataFrame:
     """Project a file-schema DataFrame onto the current schema by field id:
     renames follow ids, missing columns become NULL, changed types cast
-    (int→long / float→double widening)."""
+    (int→long / float→double widening). ``keep`` columns ride along."""
     if file_schema.schema_id == current.schema_id:
         # fast path: same schema — still select to fix column order and drop
         # any stray partition-derived columns
         names = [f.name for f in current.fields if f.name in df.columns]
         if len(names) == len(current.fields):
-            return df.select(*names)
+            return df.select(*names, *keep)
     cols = []
     for f in current.fields:
         old = file_schema.find_field_by_id(f.field_id)
@@ -658,4 +627,4 @@ def _align_to_schema(df: DataFrame, file_schema: Schema, current: Schema) -> Dat
             cols.append(F.col(old.name).cast(spark_t).alias(f.name))
         else:
             cols.append(F.lit(None).cast(spark_t).alias(f.name))
-    return df.select(*cols)
+    return df.select(*cols, *keep)

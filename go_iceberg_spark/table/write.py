@@ -887,7 +887,8 @@ def write_data_files(
         want = max(1, int(total // target_file_size) + 1)
         if want <= len(paths) // 2:
             merged_dir = out_dir + "-c"
-            spark.read.parquet(out_dir).coalesce(want).write.mode("overwrite").parquet(merged_dir)
+            (spark.read.schema(df.schema).parquet(out_dir).coalesce(want)
+             .write.mode("overwrite").parquet(merged_dir))
             shutil.rmtree(out_dir)
             os.rename(merged_dir, out_dir)
             paths = []

@@ -1026,12 +1026,13 @@ def test_transaction_delete_filter_follows_rename_between_stage_and_commit(spark
 
 
 def test_rewrite_does_not_reapply_eq_delete_to_later_files(spark, catalog):
-    """r6 probe: a CoW rewrite (update/merge/overwrite share
-    _read_candidates) grouped candidate files by schema alone and applied an
-    equality delete to EVERY file in the group when any ONE file predated
-    it — silently deleting rows re-inserted AFTER the delete. Files now
-    group by their per-file applicable delete set (scan-path sequence
-    rules)."""
+    """A CoW rewrite (update and merge read their candidates through
+    ``scan.read_files``) applies an equality delete only to the files older
+    than it: grouping candidate files by schema alone would apply it to
+    EVERY file of the group when any ONE file predated it, silently
+    deleting rows re-inserted AFTER the delete. ``scan_tasks`` assigns
+    delete files per data file by sequence number, and the reader groups
+    files by that applicable delete set."""
     from pyspark.sql import functions as F
 
     import go_iceberg_spark as gi

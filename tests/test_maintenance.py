@@ -520,6 +520,24 @@ def test_zorder_clusters_string_columns(spark, catalog):
     del n_total
 
 
+def test_position_delete_maintenance_in_a_url_special_location(spark, tmp_path):
+    """Spark reports a row's source file URL-encoded; tombstones must name
+    data files exactly as the manifest does, or rewriting them drops live
+    tombstones (resurrecting deleted rows) when the table location holds a
+    space, '%' or '+'."""
+    from go_iceberg_spark.catalog.catalog import FilesystemCatalog
+
+    catalog = FilesystemCatalog(spark, str(tmp_path / "wh a%b+c"))
+    t = mk(spark, catalog, "urlpath", batches=2, rows=10)
+    t.delete(gi.isin("id", 1, 11), mode="merge-on-read")
+    t.rewrite_position_deletes()
+    assert t.scan().count() == 18
+    t.delete(gi.isin("id", 2, 12), mode="merge-on-read")
+    t.rewrite_data_files(min_input_files=1, where=gi.gte("id", 10))
+    assert sorted(r.id for r in t.to_df().collect()) == \
+        [i for i in range(20) if i not in (1, 2, 11, 12)]
+
+
 @pytest.mark.soak
 def test_rewrite_position_deletes_merges_and_drops_dangling(spark, catalog):
     """r10: rewrite_position_deletes (Iceberg rewrite_position_delete_files

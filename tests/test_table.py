@@ -1332,6 +1332,55 @@ def test_add_files_hive_migration_reconstitutes_partition_column(spark, catalog,
     assert t.scan().count() == 50
 
 
+def _hive_migrated(spark, catalog, tmp_path, name):
+    """40 rows imported from a hive layout: ``grp`` (id % 4) is the identity
+    partition and lives only in the directory names."""
+    df = spark.range(0, 40).selectExpr("id", "id % 4 AS grp", "CAST(id AS DOUBLE) AS v")
+    schema = from_spark_schema(df.schema)
+    fid = {f.name: f.field_id for f in schema.fields}
+    spec = PartitionSpec(0, (PartitionField(fid["grp"], 1000, "identity", "grp"),))
+    t = catalog.create_table("db", name, schema, spec=spec)
+    files = []
+    for g in range(4):
+        d = tmp_path / name / f"grp={g}"
+        df.filter(F.col("grp") == g).drop("grp").coalesce(1).write.parquet(str(d))
+        files += [str(d / n) for n in os.listdir(d) if n.endswith(".parquet")]
+    t.add_files(files)
+    return t
+
+
+@pytest.mark.parametrize("case", ["cow_delete", "update", "mor_delete",
+                                  "incremental_scan", "changes"])
+def test_hive_migrated_partition_column_survives_every_read(spark, catalog, tmp_path, case):
+    """Every table-layer read of an imported hive-layout file rebuilds its
+    identity-partition column, not only the scan: rewrites must not write
+    it back as NULL, the merge-on-read writer must match on it, and
+    incremental and changelog reads must return it."""
+    t = _hive_migrated(spark, catalog, tmp_path, f"hive_{case}")
+    imported = t.current_snapshot().snapshot_id
+    if case == "cow_delete":
+        t.delete(E.eq("id", 2))
+        rows = t.to_df().collect()
+        assert len(rows) == 39 and all(r.grp == r.id % 4 for r in rows)
+        assert t.scan().filter(E.eq("grp", 2)).count() == 9
+    elif case == "update":
+        t.update(E.eq("id", 2), {"v": -1.0})
+        rows = t.to_df().collect()
+        assert len(rows) == 40 and all(r.grp == r.id % 4 for r in rows)
+        assert [r.v for r in rows if r.id == 2] == [-1.0]
+    elif case == "mor_delete":
+        t.delete(E.eq("grp", 2), mode="merge-on-read")
+        assert sorted(r.id for r in t.to_df().collect()) == \
+            [i for i in range(40) if i % 4 != 2]
+    elif case == "incremental_scan":
+        got = {(r.id, r.grp) for r in t.incremental_scan(None, imported).collect()}
+        assert got == {(i, i % 4) for i in range(40)}
+    else:
+        t.delete(E.eq("id", 2))
+        got = [(r.id, r.grp, r._change_type) for r in t.changes(imported).collect()]
+        assert got == [(2, 2, "delete")], got
+
+
 def test_add_files_rejects_already_live_paths(spark, catalog, tmp_path):
     """Re-importing a live path must raise (Iceberg semantics) instead of
     silently aliasing one file under two entries."""
@@ -2391,3 +2440,85 @@ def test_metadata_version_retention_and_log_trim(spark, catalog):
         t2.append(df2)
     files2 = glob.glob(os.path.join(t2.location, "metadata", "v*.metadata.json"))
     assert len(files2) == 6  # create + 5 appends
+
+
+def _four_appends(spark, catalog, name):
+    """A table of four 10k-row appends (ids 0..39999), one data file each."""
+    def batch(i):
+        return spark.range(i * 10_000, (i + 1) * 10_000, numPartitions=1).selectExpr(
+            "id", "id % 7 AS k", "CAST(id AS DOUBLE) AS v")
+
+    t = catalog.create_table("db", name, from_spark_schema(batch(0).schema))
+    for i in range(4):
+        t.append(batch(i))
+    return t
+
+
+def test_filtered_read_with_position_delete_job_budget(spark, catalog):
+    """Data files read under their writer schema and position deletes in
+    one tombstone read start no schema-inference job: the read is the
+    tombstone broadcast plus the action."""
+    from go_iceberg_spark.plans import inspect as P
+
+    t = _four_appends(spark, catalog, "budget_read")
+    t.delete(E.eq("id", 5), mode="merge-on-read")
+    with P.spark_jobs(spark) as jobs:
+        rows = t.scan().filter(E.lt("id", 100)).to_df().collect()
+    assert len(rows) == 99 and 5 not in {r.id for r in rows}
+    P.assert_max_jobs(jobs, 2)
+
+
+def test_mor_delete_jobs_flat_in_earlier_deletes(spark, catalog):
+    """The merge-on-read writer reads every earlier position-delete file in
+    one read, so its job count does not grow with the table's delete
+    history: the fifth delete in a row costs no more than the second (the
+    first has no tombstones to apply)."""
+    from go_iceberg_spark.plans import inspect as P
+
+    t = _four_appends(spark, catalog, "budget_mor")
+    counts = []
+    for i in range(5):
+        with P.spark_jobs(spark) as jobs:
+            t.delete(E.eq("id", 10_000 * (i % 4) + i), mode="merge-on-read")
+        counts.append(len(jobs))
+    assert t.scan().count() == 39_995
+    assert counts[4] <= counts[1], counts
+    # applying tombstones adds one broadcast, which the write plans twice
+    assert counts[1] <= counts[0] + 2, counts
+
+
+def test_rewrite_position_deletes_jobs_flat_in_tombstone_files(spark, catalog):
+    """The same tombstones rewrite in the same number of jobs whether they
+    sit in one position-delete file or in four."""
+    from go_iceberg_spark.plans import inspect as P
+
+    ids = [5, 10_005, 20_005, 30_005]
+    one = _four_appends(spark, catalog, "budget_rpd_one")
+    one.delete(E.isin("id", *ids), mode="merge-on-read")
+    four = _four_appends(spark, catalog, "budget_rpd_four")
+    for i in ids:
+        four.delete(E.eq("id", i), mode="merge-on-read")
+    counts = []
+    for t in (one, four):
+        with P.spark_jobs(spark) as jobs:
+            t.rewrite_position_deletes()
+        counts.append(len(jobs))
+        assert t.scan().count() == 39_996
+    assert counts[0] == counts[1], counts
+
+
+def test_small_file_consolidation_reads_without_inference(spark, catalog):
+    """An append of a many-partition local frame writes tiny files that the
+    writer consolidates; re-reading them under the written frame's schema
+    starts no schema-inference job."""
+    from go_iceberg_spark.plans import inspect as P
+    from go_iceberg_spark.table.metadata import CONTENT_DATA
+
+    rows = [(i, i % 7, float(i)) for i in range(2000)]
+    df = spark.createDataFrame(rows, "id long, k long, v double").repartition(8)
+    t = catalog.create_table("db", "budget_consolidate", from_spark_schema(df.schema))
+    with P.spark_jobs(spark) as jobs:
+        t.append(df)
+    assert len([e for e in t.live_entries() if e.content == CONTENT_DATA]) == 1
+    assert t.scan().count() == 2000
+    P.assert_max_jobs(jobs, 5)
