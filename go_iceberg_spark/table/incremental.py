@@ -43,7 +43,7 @@ from .metadata import (
     Snapshot,
     writer_schema,
 )
-from .scan import POS_DELETE_FILE_COL, read_files, read_tombstones, scan_tasks
+from .scan import POS_DELETE_FILE_COL, _file_key, read_files, read_tombstones, scan_tasks
 
 CHANGE_TYPE_COL = "_change_type"
 CHANGE_ORDINAL_COL = "_change_ordinal"
@@ -271,9 +271,10 @@ def changelog_scan(
                 # position deletes name their target files — prune the
                 # before/after read to just those (an equality delete can
                 # hit any older file, so bounds do the pruning below)
-                hit_paths = {r[0] for r in read_tombstones(table, new_dels)
-                             .select(POS_DELETE_FILE_COL).distinct().collect()}
-                live_data = [e for e in live_data if e.file_path in hit_paths]
+                hit = {r[0] for r in read_tombstones(table, new_dels, live_data)
+                       .select(POS_DELETE_FILE_COL).distinct().collect()}
+                live_data = [e for e in live_data
+                             if _file_key(table.location, e.file_path) in hit]
             else:
                 live_data = files_that_may_lose_rows(schema, new_dels, live_data)
             cur_deletes = [e for e in table.manifest_entries(snap)

@@ -271,6 +271,7 @@ def rewrite_data_files(table, *, target_file_size_bytes: int = 128 * 1024 * 1024
     from .scan import (
         POS_DELETE_FILE_COL,
         _encode_filter,
+        _file_key,
         _stats_for_pruning,
         read_files,
         read_tombstones,
@@ -322,20 +323,20 @@ def rewrite_data_files(table, *, target_file_size_bytes: int = 128 * 1024 * 1024
         if selective:
             cand_paths = {e.file_path for e in candidates}
             untouched = [e for e in data_files if e.file_path not in cand_paths]
-            live_paths = {u.file_path for u in untouched}
             pos_dels = [e for e in delete_files
                         if e.content == CONTENT_POSITION_DELETES]
             # one job over all position-delete files: the ones that still
             # name a surviving data file are kept, the ones naming only
             # rewritten files are dropped
             keep_pos: set[str] = set()
-            if pos_dels and live_paths:
-                keep_pos = {r[0] for r in read_tombstones(table, pos_dels)
-                            .filter(F.col(POS_DELETE_FILE_COL).isin(list(live_paths)))
+            if pos_dels and untouched:
+                live = [_file_key(table.location, u.file_path) for u in untouched]
+                keep_pos = {r[0] for r in read_tombstones(table, pos_dels, untouched)
+                            .filter(F.col(POS_DELETE_FILE_COL).isin(live))
                             .select("_delete_file").distinct().collect()}
             kept_deletes = [
                 e for e in delete_files
-                if (e.file_path in keep_pos
+                if (_file_key(table.location, e.file_path) in keep_pos
                     if e.content == CONTENT_POSITION_DELETES
                     else bool(files_that_may_lose_rows(
                         md.current_schema, [e], untouched)))
@@ -374,7 +375,7 @@ def rewrite_position_deletes(table):
         OP_REPLACE,
     )
     from .mutate import _pos_delete_schema, _pos_delete_spec
-    from .scan import read_tombstones
+    from .scan import _file_key, read_tombstones
 
     def build_and_commit():
         live = table.live_entries()
@@ -384,9 +385,9 @@ def rewrite_position_deletes(table):
                  if e.content not in (CONTENT_DATA, CONTENT_POSITION_DELETES)]
         if not pos:
             return None
-        tomb = read_tombstones(table, pos)
+        tomb = read_tombstones(table, pos, data)
         fseq = table.spark.createDataFrame(
-            [(e.file_path, e.sequence_number) for e in data],
+            [(_file_key(table.location, e.file_path), e.sequence_number) for e in data],
             "file_path string, _fseq long")
         kept = (tomb.join(F.broadcast(fseq), "file_path")  # drops dangling refs
                 .filter(F.col("_dseq") >= F.col("_fseq"))  # drops never-applicable

@@ -588,12 +588,6 @@ class TableMetadata:
                 return s
         raise ValidationError(f"current schema {self.current_schema_id} not found")
 
-    def schema_by_id(self, sid: int) -> Schema:
-        for s in self.schemas:
-            if s.schema_id == sid:
-                return s
-        raise ValidationError(f"schema {sid} not found")
-
     @property
     def default_spec(self) -> PartitionSpec:
         for s in self.partition_specs:

@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import re
 from dataclasses import dataclass, field as dc_field
 from functools import reduce
 
@@ -141,27 +142,60 @@ def _encode_filter(e: Expression, schema: Schema) -> Expression:
     )
 
 
+_URI_SCHEME = re.compile("^[A-Za-z][A-Za-z0-9+.-]*:")
+
+
+def _location_prefix(location: str) -> str:
+    """The table location, with a trailing '/', as Spark reports paths under
+    it: a local location without its ``file:`` scheme and normalized the way
+    Hadoop's ``Path`` normalizes (no empty, '.' or '..' segments); an
+    object-store URI as given."""
+    p = re.sub("^file:(//)?", "", location)
+    if _URI_SCHEME.match(p):
+        return p.rstrip("/") + "/"
+    return "/" + os.path.abspath(p).strip("/") + "/"
+
+
+def _file_key(location: str, path: str) -> str:
+    """The key ``_rel_file_expr`` yields for the file a manifest records as
+    ``path``: the manifest path itself for the engine's relative paths, and
+    the normalized absolute path for ``add_files`` imports and
+    ``write.data.path`` trees (whose recorded paths may hold '//')."""
+    prefix = _location_prefix(location)
+    p = re.sub("^file:(//)?", "", path)
+    if not _URI_SCHEME.match(p):
+        p = os.path.join(prefix, p)
+        if not _URI_SCHEME.match(p):
+            p = "/" + os.path.normpath(p).lstrip("/")
+    return p[len(prefix):] if p.startswith(prefix) else p
+
+
+def _relative(p, location: str):
+    """``p`` (a path column) without a ``file:`` scheme, relative to the
+    table location when under it. The prefix GUARD matters: blindly
+    substringing an external path would map different files to colliding
+    (or empty) keys and a position-delete anti-join keyed on it would drop
+    rows from the wrong files."""
+    prefix = _location_prefix(location)
+    norm = F.regexp_replace(p, "^file:(//)?", "")
+    return F.when(
+        norm.startswith(F.lit(prefix)), F.substring(norm, len(prefix) + 1, 1 << 30)
+    ).otherwise(norm)
+
+
+def _url_decode(p):
+    """Undo the URL encoding of a path Spark reports ('+' is literal in a
+    path, not an encoded space)."""
+    return F.url_decode(F.regexp_replace(p, "\\+", "%2B"))
+
+
 def _rel_file_expr(location: str):
-    """The current row's source file as the manifest records it: relative to
-    the table location when under it, else the full normalized path
-    (``add_files`` imports, ``write.data.path`` trees). Spark reports the
-    path URL-encoded, so a path holding an escape is decoded first ('+' is
-    literal in a path); the check keeps the per-row decode off every other
-    path. The prefix GUARD matters: blindly substringing an external path
-    would map different files to colliding (or empty) keys and a
-    position-delete anti-join keyed on it would drop rows from the wrong
-    files."""
+    """The current row's source file as ``_file_key`` names it. Spark
+    reports the path URL-encoded, so a path holding an escape is decoded
+    first; the check keeps the per-row decode off every other path."""
     path = F.col("_metadata.file_path")
-    prefix = location.rstrip("/") + "/"
-
-    def relative(p):
-        norm = F.regexp_replace(p, "^file:(//)?", "")
-        return F.when(
-            norm.startswith(F.lit(prefix)), F.substring(norm, len(prefix) + 1, 1 << 30)
-        ).otherwise(norm)
-
-    decoded = F.url_decode(F.regexp_replace(path, "\\+", "%2B"))
-    return F.when(path.contains("%"), relative(decoded)).otherwise(relative(path))
+    return F.when(path.contains("%"), _relative(_url_decode(path), location)
+                  ).otherwise(_relative(path, location))
 
 
 def scan_tasks(data_files: list[DataFileEntry],
@@ -179,19 +213,39 @@ def scan_tasks(data_files: list[DataFileEntry],
     return tasks
 
 
-def read_tombstones(table, pos_entries: list[DataFileEntry]) -> DataFrame:
+def read_tombstones(table, pos_entries: list[DataFileEntry],
+                    data_files: list[DataFileEntry]) -> DataFrame:
     """Every row of the given position-delete files, in one read under the
     position-delete schema ``(file_path string, pos long)``, with the
-    table-relative path of the delete file the row came from
-    (``_delete_file``) and that file's sequence number (``_dseq``). The
-    sequence number is looked up in a literal map keyed by that path, which
-    costs no Spark job (a broadcast join of a local frame costs one)."""
-    seqs = F.create_map(*[F.lit(x) for d in pos_entries
-                          for x in (d.file_path, d.sequence_number)])
+    ``_file_key`` of the delete file the row came from (``_delete_file``)
+    and that file's sequence number (``_dseq``, looked up in a literal map,
+    which costs no Spark job where a broadcast join of a local frame costs
+    one). A delete file whose path matches no entry of ``pos_entries``
+    raises rather than lose its tombstones.
+
+    ``file_path`` is the ``_file_key`` of the data file the row names.
+    Older versions of the engine stored the URL-encoded path Spark reports
+    instead, so a path holding '%' is decoded, unless it is the key of one
+    of ``data_files`` (a partition value with an escaped character puts a
+    literal '%' in the path). Rows naming a file outside ``data_files``
+    keep a key that may be decoded wrongly; they name no file the caller
+    matches against."""
+    loc = table.location
+    keys = [_file_key(loc, d.file_path) for d in pos_entries]
+    seqs = F.create_map(*[F.lit(x) for k, d in zip(keys, pos_entries)
+                          for x in (k, d.sequence_number)])
+    src = _rel_file_expr(loc)
+    raw = F.col(POS_DELETE_FILE_COL)
+    literal = [k for k in (_file_key(loc, e.file_path) for e in data_files) if "%" in k]
+    key = (F.when(raw.isin(literal), raw)
+           .when(raw.contains("%"), _relative(_url_decode(raw), loc))
+           .otherwise(_relative(raw, loc)))
     return (table.spark.read
             .schema(f"{POS_DELETE_FILE_COL} string, {POS_DELETE_POS_COL} long")
-            .parquet(*[os.path.join(table.location, d.file_path) for d in pos_entries])
-            .withColumn("_delete_file", _rel_file_expr(table.location))
+            .parquet(*[os.path.join(loc, d.file_path) for d in pos_entries])
+            .withColumn(POS_DELETE_FILE_COL, key)
+            .withColumn("_delete_file", F.when(src.isin(keys), src).otherwise(F.raise_error(
+                F.concat(F.lit("position-delete file not in the manifest: "), src))))
             .withColumn("_dseq", seqs[F.col("_delete_file")]))
 
 
@@ -224,7 +278,8 @@ def read_files(table, tasks: list[FileScanTask], schema: Schema,
         groups.setdefault(key, []).append(t)
     pos_all = {d.file_path: d for t in tasks for d in t.delete_files
                if d.content == CONTENT_POSITION_DELETES}
-    tombstones = read_tombstones(table, list(pos_all.values())) if pos_all else None
+    tombstones = (read_tombstones(table, list(pos_all.values()), [t.file for t in tasks])
+                  if pos_all else None)
 
     parts: list[DataFrame] = []
     for (sid, _, imported), ts in groups.items():
@@ -246,15 +301,15 @@ def read_files(table, tasks: list[FileScanTask], schema: Schema,
                     df = df.withColumn(src.name, F.lit(f.partition.get(pf.name))
                                        .cast(to_spark_type(src.type)))
         dels = ts[0].delete_files
-        pos = [d.file_path for d in dels if d.content == CONTENT_POSITION_DELETES]
+        pos = [_file_key(loc, d.file_path) for d in dels
+               if d.content == CONTENT_POSITION_DELETES]
         if lineage or pos:
             df = (df.withColumn("_file", _rel_file_expr(loc))
                   .withColumn("_pos", F.col("_metadata.row_index")))
         if pos:
-            dead = (tombstones if len(pos) == len(pos_all)
-                    else tombstones.filter(F.col("_delete_file").isin(pos)))
-            dead = dead.select(F.col(POS_DELETE_FILE_COL).alias("_del_file"),
-                               F.col(POS_DELETE_POS_COL).alias("_del_pos"))
+            dead = tombstones.filter(F.col("_delete_file").isin(pos)).select(
+                F.col(POS_DELETE_FILE_COL).alias("_del_file"),
+                F.col(POS_DELETE_POS_COL).alias("_del_pos"))
             df = df.join(F.broadcast(dead), how="left_anti", on=[
                 F.col("_file") == F.col("_del_file"), F.col("_pos") == F.col("_del_pos")])
         by_ids: dict[tuple[int, ...], list[DataFileEntry]] = {}

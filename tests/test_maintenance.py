@@ -5,6 +5,7 @@ rewrite_data_files / remove_orphan_files procedure equivalents)."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import Row
@@ -520,22 +521,90 @@ def test_zorder_clusters_string_columns(spark, catalog):
     del n_total
 
 
-def test_position_delete_maintenance_in_a_url_special_location(spark, tmp_path):
-    """Spark reports a row's source file URL-encoded; tombstones must name
-    data files exactly as the manifest does, or rewriting them drops live
-    tombstones (resurrecting deleted rows) when the table location holds a
-    space, '%' or '+'."""
-    from go_iceberg_spark.catalog.catalog import FilesystemCatalog
+def _rewrite_tombstones_in_earlier_format(spark, t):
+    """Rewrite every position-delete file of ``t`` the way earlier versions
+    of the engine wrote tombstones: the data file as Spark reports it
+    (URL-encoded), without its ``file:`` scheme, and relative to the table
+    location only when that encoded path starts with the location."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    catalog = FilesystemCatalog(spark, str(tmp_path / "wh a%b+c"))
-    t = mk(spark, catalog, "urlpath", batches=2, rows=10)
-    t.delete(gi.isin("id", 1, 11), mode="merge-on-read")
-    t.rewrite_position_deletes()
-    assert t.scan().count() == 18
-    t.delete(gi.isin("id", 2, 12), mode="merge-on-read")
+    from go_iceberg_spark.table.metadata import CONTENT_DATA, CONTENT_POSITION_DELETES
+
+    prefix = t.location.rstrip("/") + "/"
+    earlier = {}
+    for e in t.live_entries():
+        if e.content == CONTENT_DATA:
+            reported = spark.read.parquet(os.path.join(t.location, e.file_path)) \
+                .select("_metadata.file_path").first()[0]
+            norm = re.sub("^file:(//)?", "", reported)
+            earlier[os.path.normpath(os.path.join(t.location, e.file_path))] = (
+                norm[len(prefix):] if norm.startswith(prefix) else norm)
+    changed = 0
+    for e in t.live_entries():
+        if e.content == CONTENT_POSITION_DELETES:
+            path = os.path.join(t.location, e.file_path)
+            tbl = pq.read_table(path)
+            old = [earlier[os.path.normpath(os.path.join(t.location, p))]
+                   for p in tbl.column("file_path").to_pylist()]
+            changed += sum(a != b for a, b in zip(old, tbl.column("file_path").to_pylist()))
+            pq.write_table(tbl.set_column(0, "file_path", pa.array(old, pa.string())), path)
+            crc = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc")
+            if os.path.exists(crc):  # Hadoop's checksum of the old bytes
+                os.remove(crc)
+    assert changed, "the layout gives every format the same tombstone paths"
+
+
+@pytest.mark.parametrize("layout,fmt", [
+    ("url_special_location", "current"),
+    ("url_special_location", "earlier"),
+    ("escaped_partition", "earlier"),
+    ("escaped_partition", "current"),
+    ("write_data_path", "earlier"),
+    ("write_data_path", "current"),
+])
+def test_tombstones_stay_applied_across_path_layouts(spark, tmp_path, layout, fmt):
+    """A merge-on-read delete stays applied through a scan, changes(), a
+    selective compaction and rewrite_position_deletes whatever the data
+    files' paths hold: a location with a space, '%' and '+'; partition
+    values Spark escapes (':' writes a literal '%3A' into the path) or
+    leaves raw (' '); and a write.data.path root outside the location,
+    recorded with '//'.
+    ``earlier`` first rewrites the tombstones as earlier versions stored
+    them (URL-encoded); such tables keep their deletes too."""
+    from go_iceberg_spark.catalog.catalog import FilesystemCatalog
+    from go_iceberg_spark.schema import from_spark_schema
+    from go_iceberg_spark.table.metadata import PartitionField, PartitionSpec
+
+    def rows(lo):
+        return spark.createDataFrame([Row(id=i, grp="a:b" if i % 2 else "c d", v=float(i))
+                                      for i in range(lo, lo + 10)])
+
+    root = tmp_path / ("wh a%b+c" if layout == "url_special_location" else "wh")
+    catalog = FilesystemCatalog(spark, str(root))
+    schema = from_spark_schema(rows(0).schema)
+    kw = {}
+    if layout == "escaped_partition":
+        fid = schema.find_field("grp").field_id
+        kw["spec"] = PartitionSpec(0, (PartitionField(fid, 1000, "identity", "grp"),))
+    if layout == "write_data_path":
+        kw["properties"] = {"write.data.path": str(tmp_path) + "/ext//data root"}
+    t = catalog.create_table("db", "layout", schema, **kw)
+    t.append(rows(0))
+    t.append(rows(10))
+    appended = t.snapshots()[-1].snapshot_id
+    t.delete(gi.isin("id", 1, 2, 11, 12), mode="merge-on-read")
+    if fmt == "earlier":
+        _rewrite_tombstones_in_earlier_format(spark, t)
+    want = [i for i in range(20) if i not in (1, 2, 11, 12)]
+    assert sorted(r.id for r in t.to_df().collect()) == want
+    cdc = t.changes(appended, t.snapshots()[-1].snapshot_id).collect()
+    assert sorted((r.id, r.grp, r._change_type) for r in cdc) == [
+        (i, "a:b" if i % 2 else "c d", "delete") for i in (1, 2, 11, 12)]
     t.rewrite_data_files(min_input_files=1, where=gi.gte("id", 10))
-    assert sorted(r.id for r in t.to_df().collect()) == \
-        [i for i in range(20) if i not in (1, 2, 11, 12)]
+    assert sorted(r.id for r in t.to_df().collect()) == want
+    t.rewrite_position_deletes()
+    assert sorted(r.id for r in t.to_df().collect()) == want
 
 
 @pytest.mark.soak
