@@ -1,6 +1,7 @@
 """Benchmark harness: runs the headline query set at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric", "value", "unit", "queries", "sf"}.
+JSON line: {"metric", "value", "unit", "queries", "sf", "cpus",
+"warmup_failures", ...}.
 
 Each query is fully materialized via the no-op sink (no driver collect —
 measures engine execution, not pandas conversion)."""
@@ -25,9 +26,9 @@ from go_iceberg_spark.workload import bench_queries, load
 # whole dim replicated 8x — its wall time is the documented replication tax,
 # not a recommendation); join_hot_key_isolated is the production shape
 # (sampled hot-key detection, only the hot slice salted). Both are
-# oracle-pinned to the plain join's results. Likewise
-# similarity_knn_classify's fold path is retained as the bit-exact oracle
-# twin of similarity_knn_gemm — the GEMM row is the scale path.
+# oracle-pinned to the plain join's results. similarity_knn_classify and
+# similarity_knn_gemm both score neighbors with the GEMM path; the two rows
+# share one oracle.
 COMMON_21 = [
     "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier_volume",
     "q6_forecast_revenue", "q8_market_share", "q14_promo_revenue",
@@ -66,15 +67,17 @@ def main() -> None:
     # timed runs measure steady-state execution, not one-time codegen/JIT
     # compilation (standard benchmark methodology; the generated code is
     # identical across scale factors, so compilation is amortized exactly
-    # like it would be on a long-running cluster).
+    # like it would be on a long-running cluster). A query that fails here
+    # is recorded (name -> first line of its error), not hidden.
     warm_dir = "/root/testdata/sf0.001"
     if not os.path.isdir(warm_dir):
         warm_dir = sf_dir
+    warmup_failures: dict[str, str] = {}
     for name, spec in bench_queries().items():
         try:
             spec.fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
-        except Exception:
-            pass
+        except Exception as e:  # noqa: BLE001 - reported in the JSON line
+            warmup_failures[name] = (str(e).strip().splitlines() or [type(e).__name__])[0]
 
     # Best-of-N at the target sf (default 3; $SPARK_GRAFT_BENCH_RUNS
     # overrides — r5's first-run column showed 20-35% cold-start inflation
@@ -136,6 +139,8 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "cpus": spark.sparkContext.defaultParallelism,
+        "warmup_failures": warmup_failures,
         "runs_per_query": runs,
         "run_times": run_times,
         # VM-state normalizer: in-memory spark.range sum, best-of-N; compare

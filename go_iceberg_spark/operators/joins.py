@@ -543,7 +543,7 @@ def bloom_prefilter_join(
     n_bits: int | None = None,
     how: str = "inner",
 ) -> DataFrame:
-    """Join with a BLOOM PREFILTER on the probe side (r10): the small
+    """Join with a BLOOM PREFILTER on the probe side: the small
     side's join keys aggregate into one n_bits bitmap and the big side
     tests membership with pure codegen'd expressions, dropping
     provably-unmatched rows BEFORE the join shuffle (see
@@ -552,12 +552,13 @@ def bloom_prefilter_join(
     shuffle carries only rows that can match (the hand-rolled form of
     Spark's runtime bloom filter injection, here available to any join
     shape and any build side, not just selective-filter shuffle joins).
-    The win is SHUFFLE BYTES, not local CPU: on local[N] with in-memory
-    shuffles the extra hash pass can cost more wall time than it saves —
-    `scripts/bloom_join_ab.py` reports both the wall times and the
-    rows-entering-the-shuffle reduction, which is what survives the
-    100x scale-up. ``how`` supports inner/left_semi (shapes where a
-    dropped probe row provably cannot appear in the output)."""
+    The trade: one extra job builds the bitmap and every probe row pays
+    one more hash, in exchange for fewer rows entering the join shuffle.
+    On local[N] with in-memory shuffles that costs more wall time than it
+    saves; the saved shuffle bytes are what pays at scale, where
+    shuffle write, read and network dominate. ``how`` supports
+    inner/left_semi (shapes where a dropped probe row provably cannot
+    appear in the output)."""
     if how not in ("inner", "left_semi"):
         raise ValueError(f"bloom prefilter is valid for inner/left_semi joins, got {how!r}")
     return bloom_prefilter(big, small, on, n_bits=n_bits).join(small, on, how)

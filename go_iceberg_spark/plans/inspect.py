@@ -13,6 +13,7 @@ import re
 import uuid
 from contextlib import contextmanager
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -76,6 +77,38 @@ def spark_jobs(spark: SparkSession):
         jobs.extend(sorted(sc.statusTracker().getJobIdsForGroup(group)))
         for k, v in saved.items():
             sc.setLocalProperty(k, v)
+
+
+def stage_metrics(spark: SparkSession, jobs: list[int]) -> dict[str, int]:
+    """Sum stages, tasks, shuffle write/read bytes and input bytes over the
+    stages the ``jobs`` of a ``spark_jobs`` block ran. Adaptive query
+    stages and broadcasts run under the block's job group, so their bytes
+    count. A stage shared by several jobs counts once; a skipped stage
+    (its shuffle output already written) counts not at all. Read from the
+    status tracker and status store, which are kept with the UI disabled."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    store = sc._jsc.sc().statusStore()
+    stage_ids: set[int] = set()
+    for jid in jobs:
+        info = tracker.getJobInfo(jid)
+        if info is not None:
+            stage_ids.update(info.stageIds)
+    out = dict.fromkeys(("stages", "tasks", "shuffle_write_bytes",
+                         "shuffle_read_bytes", "input_bytes"), 0)
+    for sid in sorted(stage_ids):
+        try:
+            sd = store.lastStageAttempt(sid)
+        except Py4JJavaError:  # never attempted
+            continue
+        if str(sd.status()) == "SKIPPED":
+            continue
+        out["stages"] += 1
+        out["tasks"] += sd.numTasks()
+        out["shuffle_write_bytes"] += sd.shuffleWriteBytes()
+        out["shuffle_read_bytes"] += sd.shuffleReadBytes()
+        out["input_bytes"] += sd.inputBytes()
+    return out
 
 
 def assert_max_jobs(jobs: list[int], at_most: int) -> None:

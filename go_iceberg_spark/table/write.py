@@ -334,8 +334,8 @@ def transform_column(transform: str, source: Column, source_type: IcebergType,
         # int sources hash as LONG so the ordinal is a function of the VALUE,
         # not the column width: widening int->long (a legal schema evolution)
         # must not re-bucket existing data — Spark's hash(int) != hash(long)
-        # for the same value, and the pre-r4 int hashing silently lost rows
-        # to pruning after a widen (literal hashed under the new type).
+        # for the same value, and int-width hashing would lose rows to
+        # pruning after a widen (literal hashed under the new type).
         # Tables created BEFORE the width was stamped keep int-width hashing
         # ("spark-int" declared-legacy / "spark-unstamped", resolve_bucket_fn)
         # so a true-legacy layout stays consistent; widening THEIR bucket
@@ -353,7 +353,7 @@ def transform_column(transform: str, source: Column, source_type: IcebergType,
             # Iceberg-spec decimal truncate interprets W in UNSCALED units:
             # scaled_W = decimal(W, scale(v)); v - ((v % scaled_W + scaled_W)
             # % scaled_W). Spec check value: W=50, scale=2, 10.65 -> 10.50
-            # (pre-r6 this applied W in the SCALED space -> 0.00, a layout an
+            # (applying W in the SCALED space would give 0.00, a layout an
             # external spec reader could never recompute). pmod already gives
             # the floor remainder for negatives: -0.05 -> -0.50.
             # precision+1: negative values at the precision floor truncate
@@ -383,9 +383,9 @@ def encode_stat(v: Any, decimal_scale: int | None = None) -> Any:
     """Order-preserving JSON-able encoding of a stats bound value.
 
     ``decimal_scale``: the COLUMN's declared scale — a Decimal encodes into
-    that unscaled-int space (r9 ADVICE: deriving the exponent from the
-    value itself puts ``Decimal('1E+2')`` and ``Decimal('100.00')`` into
-    different spaces, breaking min/max ordering across bounds). A value not
+    that unscaled-int space (deriving the exponent from the value itself
+    would put ``Decimal('1E+2')`` and ``Decimal('100.00')`` into different
+    spaces, breaking min/max ordering across bounds). A value not
     exactly representable at the column scale yields None (no usable
     bound — quantizing could move a min up or a max down, flipping
     pruning strictness). Without the scale the value's own exponent is
@@ -403,7 +403,7 @@ def encode_stat(v: Any, decimal_scale: int | None = None) -> Any:
         # the scale per column, so the unscaled ints of one column order
         # exactly like the decimals — unlike str(Decimal), which sorts
         # '200.00' < '99.00' and would mis-prune every </> comparison and
-        # min/max merge downstream (r8 ADVICE). Literals enter this space
+        # min/max merge downstream. Literals enter this space
         # via encode_literal, which scales by the column's declared scale.
         try:
             if decimal_scale is not None:
@@ -480,7 +480,7 @@ def _collect_file_stats(paths: list[str], name_to_fid: dict[str, int],
     from the VALUES (never the footer, whose string bounds a parquet writer
     may truncate) and carry a ``bounds_exact`` marker that lets
     ``metadata_min_max`` serve the column (opt-in via the
-    write.exact-bounds-columns table property; r10)."""
+    write.exact-bounds-columns table property)."""
     import pyarrow as pa  # noqa: F401 - executor-side
     import pyarrow.parquet as pq  # re-import on executor
 
@@ -513,8 +513,7 @@ def _collect_file_stats(paths: list[str], name_to_fid: dict[str, int],
                     entry["null_count"] += s.null_count
                 if s.has_min_max:
                     # decimal bounds encode in the COLUMN's declared-scale
-                    # unscaled-int space (not the value's own exponent —
-                    # r9 ADVICE)
+                    # unscaled-int space (not the value's own exponent)
                     _fld = pf.schema_arrow.field(name) if name in pf.schema_arrow.names else None
                     _dscale = (_fld.type.scale if _fld is not None
                                and pa.types.is_decimal(_fld.type) else None)
@@ -631,9 +630,9 @@ def canonical_float_str(x: float) -> str:
 
 def canonicalize_partition_values(spec: PartitionSpec, schema: Schema,
                                   vals: dict[str, Any]) -> dict[str, Any]:
-    """Re-render float/double partition strings deterministically (r11,
-    retires the r6 ADR that kept float/double partitions [null, string] on
-    the Avro wire): the raw dir-name text is Java's legacy
+    """Re-render float/double partition strings deterministically, so
+    float/double partitions carry their typed value on the Avro wire, not
+    [null, string]: the raw dir-name text is Java's legacy
     ``Float/Double.toString`` — a rendering Python cannot regenerate from
     the typed value (e.g. ``1.23456792E8`` where repr says
     ``123456792.0``), which blocked an exact string↔typed round-trip.
@@ -667,7 +666,7 @@ def _unescape_hive(v: str) -> str:
 # Safe implicit widenings on write: (incoming Spark type simpleString ->
 # allowed table types). Everything else must match exactly or cast
 # explicitly — an incompatible frame must fail DRIVER-SIDE with a clear
-# error, not write orphan parquet and die in manifest serde (r6 probe), or
+# error, not write orphan parquet and die in manifest serde, or
 # worse, commit a file whose physical type the read path cannot cast.
 _SAFE_WIDEN = {
     "tinyint": {"smallint", "int", "bigint"},
@@ -845,15 +844,16 @@ def write_data_files(
         # reference's writer ignores its size config the same way —
         # table/writer.go:57-59). Parallelized local data reports UNKNOWN
         # (Long.MaxValue) and is handled by post-write consolidation below.
+        # The count comes from the estimate alone: asking the input for its
+        # partition count would run its adaptive plan (broadcasts, sort
+        # sampling, shuffle map stages) once before the write runs it again,
+        # and a narrow coalesce never raises the partition count anyway.
         try:
             est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-            cur = df.rdd.getNumPartitions()
-            if 0 < est < (1 << 50):
-                want = max(1, min(cur, est // target_file_size + 1))
-                if want < cur:
-                    df = df.coalesce(int(want))
         except Exception:
-            pass  # estimation is best-effort; never fail a write over it
+            est = 0  # estimation is best-effort; never fail a write over it
+        if 0 < est < (1 << 50):
+            df = df.coalesce(min(est // target_file_size + 1, (1 << 31) - 1))
     if sort_exprs:
         if distribution_mode == "range" and not part_cols:
             # Iceberg write.distribution-mode=range: range-shuffle on the
@@ -974,8 +974,8 @@ def _arrow_fits(itype: IcebergType, at) -> bool:
     """Can a parquet column of arrow type ``at`` be read AS Iceberg type
     ``itype`` without changing values or the scan's output schema? Equal or
     upward-widening physical types only — importing a double file under a
-    long column silently retyped the whole scan (schema merge widened it)
-    and let fractional values into an integer column (r6 probe)."""
+    long column would silently retype the whole scan (schema merge widens
+    it) and let fractional values into an integer column."""
     import pyarrow as pa
 
     from ..schema import DecimalType, FixedType, PrimitiveType

@@ -2131,7 +2131,8 @@ def knn_classify_gemm_q(spark, sf):
     fold — measured 22x faster at sf1 on an idle box (18.2 s -> 0.8 s,
     identical output). Grading it against the SAME oracle pins that the BLAS path's
     summation-order noise (~1e-15) never crosses a top-k margin on this
-    corpus — the fold row stays as the bit-exact reference."""
+    corpus — the fold scorer (``method="fold"``) stays as the bit-exact
+    reference in pytest."""
     emb = load(spark, sf, "embeddings")
     return S.knn_classify(emb, emb.filter((F.col("vec_id") % 17 == 0)
                                           & (F.col("vec_id") < 3400)),

@@ -1,14 +1,16 @@
-"""Empirical scale-growth audit (r12): measure how wall time and shuffled
-bytes GROW with data size for the shuffle-heaviest headline queries, instead
-of arguing linearity from plan shapes alone.
+"""Empirical scale-growth audit: measure how wall time and shuffled bytes
+GROW with data size for the shuffle-heaviest headline queries, instead of
+arguing linearity from plan shapes alone.
 
 Runs each query at several scale factors (default sf0.1 / sf1 / sf3 / sf10,
 the larger fixtures generated by scripts/make_scale.py with join-consistent
 key strides so join/dedup output scales linearly by construction), records
-best-of-N wall and per-query shuffle write bytes via the Spark UI REST API
-(attributed by a stage-id watermark around the cold run — NOT by job group,
-which loses the exchange stages AQE materializes from its own thread pool),
-then fits a log-log growth exponent. Two exponents are reported per query:
+best-of-N wall and the cold run's shuffle write and input bytes, then fits a
+log-log growth exponent. The bytes are read in-process: the cold run runs
+inside a ``plans.inspect.spark_jobs`` block, and ``stage_metrics`` sums the
+stages of its jobs from Spark's status store (adaptive query stages and
+broadcasts run under the block's job group, so they count; the Spark UI
+stays disabled). Two exponents are reported per query:
 
 - ``wall_exp_tail`` / ``shuffle_exp_tail``: least-squares slope over the
   LARGEST scales (sf >= 1), where per-query fixed overhead (session, planning,
@@ -32,13 +34,12 @@ import math
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# the eight shuffle-heaviest headline queries (VERDICT r11 task #1): a window
-# over the full fact table, the heaviest TPC-H join-agg shapes, tf-idf's
-# explode+join, the as-of join, and the three dedup families
+# the shuffle-heaviest headline queries: a window over the full fact table,
+# the heaviest TPC-H join-agg shapes, tf-idf's explode+join, the as-of join,
+# and the three dedup families
 QUERY_NAMES = [
     "window_running_and_lag",
     "q18_large_volume_customers",
@@ -47,16 +48,16 @@ QUERY_NAMES = [
     "dedup_exact",
     "dedup_minhash_lsh",
     "dedup_simhash",
-    # the r12 named fix for dedup_simhash's band-keyspace saturation —
-    # audited side by side so the artifact shows the linear replacement
+    # the wide-band variant that fixes dedup_simhash's band-keyspace
+    # saturation — audited side by side so the artifact shows its growth
     "dedup_simhash_wide",
     # ANN family: fixed 5-query probe set over the growing corpus — output
     # constant; with the query side broadcast (count-verified hint, see
     # similarity._broadcast_if_small) the shuffle is top-k-rows-only at
-    # every scale (WindowGroupLimit prunes the rank exchange). This row
-    # caught a real scale bug in r12: the hint's Catalyst size estimate
-    # scales with the INPUT table, so the 5-row query set lost its
-    # broadcast at sf10 and 54 MB of probed corpus shuffled instead.
+    # every scale (WindowGroupLimit prunes the rank exchange). The hint's
+    # Catalyst size estimate scales with the INPUT table, so without the
+    # count check the 5-row query set loses its broadcast at sf10 and this
+    # row shows the probed corpus shuffling instead.
     # Embedding DEDUP rows are deliberately NOT audited on copy-scaled
     # fixtures: at threshold 0.4 with d=64, random cross-copy cosines cross
     # the threshold at ~7e-4/pair (even under per-copy orthogonal
@@ -105,11 +106,6 @@ DEFAULT_SCALES = [
 ]
 
 
-def _rest(base: str, path: str):
-    with urllib.request.urlopen(base + path, timeout=20) as r:
-        return json.loads(r.read().decode())
-
-
 def _fit(xs: list[float], ys: list[float]) -> float | None:
     """Least-squares slope of log(y) on log(x); None when underdetermined."""
     pts = [(math.log(x), math.log(max(y, 1e-9))) for x, y in zip(xs, ys)]
@@ -138,27 +134,13 @@ def main() -> None:
     scales = ([(float(a.split("=")[0]), a.split("=")[1]) for a in argv]
               if argv else [(sf, d) for sf, d in DEFAULT_SCALES if os.path.isdir(d)])
 
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    (SparkSession.builder.master(f"local[{cpus}]")
-     .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
-     .config("spark.sql.shuffle.partitions", cpus)
-     .config("spark.ui.enabled", "true")
-     .config("spark.ui.port", "4049")
-     .config("spark.ui.retainedJobs", "5000")
-     .config("spark.ui.retainedStages", "5000").getOrCreate())
-
-    from go_iceberg_spark.session import get_spark
+    from go_iceberg_spark.plans.inspect import spark_jobs, stage_metrics
+    from go_iceberg_spark.session import EngineConfig, get_spark
     from go_iceberg_spark.workload import QUERIES
 
-    spark = get_spark()
+    spark = get_spark(EngineConfig(extra_confs={
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "24g")}))
     spark.sparkContext.setLogLevel("ERROR")
-    base = "http://localhost:4049/api/v1"
-    app_id = _rest(base, "/applications")[0]["id"]
-
-    def _stages():
-        return _rest(base, f"/applications/{app_id}/stages?status=complete")
 
     per_query: dict[str, dict] = {n: {"wall_sec": {}, "shuffle_write_bytes": {},
                                       "input_bytes": {}} for n in QUERY_NAMES}
@@ -169,23 +151,14 @@ def main() -> None:
             saved = {k: spark.conf.get(k, None) for k in confs}
             for k, v in confs.items():
                 spark.conf.set(k, v)
-            # shuffle attribution by STAGE-ID WATERMARK around the cold run,
-            # NOT by job group: AQE materializes exchange stages from its own
-            # thread pool, which does not inherit the thread-local job group,
-            # so group attribution silently drops the biggest shuffles
-            # (caught live in r12: q3's sf3 point read 6.7 MB by group where
-            # a cold run actually writes 208 MB). Queries run sequentially,
-            # so stages with id > the pre-run watermark belong to this run.
-            lo = max((s["stageId"] for s in _stages()), default=-1)
+            # bytes come from the cold run (building the query included)
             walls = []
-            t0 = time.perf_counter()
-            spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            walls.append(time.perf_counter() - t0)
-            sw = inb = 0
-            for s in _stages():
-                if s["stageId"] > lo:
-                    sw += s.get("shuffleWriteBytes", 0)
-                    inb += s.get("inputBytes", 0)
+            with spark_jobs(spark) as jobs:
+                t0 = time.perf_counter()
+                spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                walls.append(time.perf_counter() - t0)
+            stages = stage_metrics(spark, jobs)
+            sw, inb = stages["shuffle_write_bytes"], stages["input_bytes"]
             for _ in range(1, runs):  # warm runs refine the wall number only
                 t0 = time.perf_counter()
                 spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()

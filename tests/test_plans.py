@@ -541,3 +541,46 @@ def test_scd2_lookup_is_equi_join_with_interval_filter(spark):
     got = {(r.k, r.seq): r.attr for r in out.filter(F.col("seq").isin(5, 15, 50)).collect()}
     assert got[(2, 5)] == "c" and got[(0, 15)] is None
     assert got[(1, 16)] == "b" if (1, 16) in got else True
+
+
+def _stages(spark):
+    """Every stage attempt in the status store (``stageList`` of all
+    statuses, no task details)."""
+    sc = spark.sparkContext
+    stages = sc._jsc.sc().statusStore().stageList(
+        None, False, False, sc._gateway.new_array(sc._jvm.double, 0),
+        sc._jvm.java.util.ArrayList())
+    return [stages.apply(i) for i in range(stages.size())]
+
+
+def test_stage_metrics_count_every_adaptive_stage(spark):
+    """``stage_metrics`` reads a block's bytes through its job group, so
+    the adaptive query stages Spark runs from its own threads must carry
+    the group. A shuffle join plus an aggregate must report the same
+    shuffle bytes as every stage that completed while the block ran,
+    counted by stage id."""
+    keys = ("spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "-1")
+        left = spark.range(0, 20_000).withColumn("k", F.col("id") % 997)
+        right = spark.range(0, 5_000).withColumn("k", F.col("id") % 991)
+        out = left.join(right, "k").groupBy("k").count()
+        assert P.count_op(out, "SortMergeJoin") == 1
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        lo = max((s.stageId() for s in _stages(spark)), default=-1)
+        with P.spark_jobs(spark) as jobs:
+            out.write.format("noop").mode("overwrite").save()
+        got = P.stage_metrics(spark, jobs)
+        by_id = sum(s.shuffleWriteBytes() for s in _stages(spark)
+                    if s.stageId() > lo and str(s.status()) == "COMPLETE")
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert got["shuffle_write_bytes"] > 0
+    assert got["shuffle_write_bytes"] == by_id, (got, by_id)
