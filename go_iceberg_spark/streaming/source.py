@@ -331,16 +331,13 @@ class SnapshotStreamDataSource(DataSource):
         return SnapshotStreamReader(dict(self.options))
 
 
-_REGISTERED: set[int] = set()
-
-
 def read_snapshot_stream(spark, table, **options):
-    """Register the source (once per session) and open a snapshot-replay
-    stream on ``table``. Options pass through (``start-snapshot-id``,
-    ``skip-non-append``)."""
-    if id(spark) not in _REGISTERED:
+    """Register the source (once per session, marked on the session) and
+    open a snapshot-replay stream on ``table``. Options pass through
+    (``start-snapshot-id``, ``skip-non-append``)."""
+    if not getattr(spark, "_graft_snapshot_source", False):
         spark.dataSource.register(SnapshotStreamDataSource)
-        _REGISTERED.add(id(spark))
+        spark._graft_snapshot_source = True
     reader = spark.readStream.format(FORMAT_NAME).option("location", table.location)
     for k, v in options.items():
         reader = reader.option(k, str(v))

@@ -812,30 +812,37 @@ def test_minhash_lsh_max_bucket_caps_candidate_blowup(spark):
 
 
 def test_simhash_wide_banding_is_exact_to_hamming_3(spark):
-    """r12: simhash_wide_pairs' four disjoint 30-bit bands are EXACT for
-    hamming <= 3 (pigeonhole: <= 3 differing bits across 4 disjoint bands
-    leave at least one band identical) — banded output must equal the
-    brute-force all-pairs hamming filter over the same wide fingerprints,
-    and the reported hamming must equal the two-word XOR popcount."""
-    from go_iceberg_spark.operators.dedup import simhash_wide, simhash_wide_pairs
+    """The shared band join's four disjoint bands (30-bit for the 120-bit
+    fingerprint, 15-bit for the 60-bit one) are EXACT for hamming <= 3
+    (pigeonhole: <= 3 differing bits across 4 disjoint bands leave at
+    least one band identical) — at both widths the banded output must
+    equal the brute-force all-pairs hamming filter over the same
+    fingerprints, and the reported hamming must equal the XOR popcount
+    summed over the words."""
+    from go_iceberg_spark.operators.dedup import (
+        simhash, simhash_pairs, simhash_wide, simhash_wide_pairs)
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 
-    banded = {(r.id_a, r.id_b): r.hamming
-              for r in simhash_wide_pairs(docs, "doc_id", "text", max_hamming=3).collect()}
+    def brute_pairs(fp: dict) -> dict:
+        ids = sorted(fp)
+        out = {}
+        for i, a in enumerate(ids):
+            for b in ids[i + 1:]:
+                h = sum(bin(x ^ y).count("1") for x, y in zip(fp[a], fp[b]))
+                if h <= 3:
+                    out[(a, b)] = h
+        return out
 
-    fp = {r.doc_id: (r.simhash_hi, r.simhash_lo)
-          for r in simhash_wide(docs, "doc_id", "text").collect()}
-    ids = sorted(fp)
-    brute = {}
-    for i, a in enumerate(ids):
-        for b in ids[i + 1:]:
-            h = (bin(fp[a][0] ^ fp[b][0]).count("1")
-                 + bin(fp[a][1] ^ fp[b][1]).count("1"))
-            if h <= 3:
-                brute[(a, b)] = h
-    assert brute, "fixture should contain at least one wide near-dup pair"
-    assert banded == brute
+    for pairs_fn, fp_fn, words in (
+            (simhash_wide_pairs, simhash_wide, ("simhash_hi", "simhash_lo")),
+            (simhash_pairs, simhash, ("simhash",))):
+        banded = {(r.id_a, r.id_b): r.hamming
+                  for r in pairs_fn(docs, "doc_id", "text", max_hamming=3).collect()}
+        brute = brute_pairs({r.doc_id: tuple(r[w] for w in words)
+                             for r in fp_fn(docs, "doc_id", "text").collect()})
+        assert brute, f"fixture should contain at least one {words} near-dup pair"
+        assert banded == brute, words
 
 
 def test_bmp_pixel_decode_and_real_resize(spark):
@@ -1183,24 +1190,24 @@ def test_mmr_driver_greedy_matches_distributed(spark):
 
 
 def test_knn_classify_gemm_matches_fold_on_graded_fixture(spark):
-    """r12: similarity_knn_classify's graded row now scores with the GEMM
-    path; fold and GEMM votes must agree on the graded fixture (they are
-    pinned to the SAME oracle SQL, so any divergence is a top-k margin
-    crossed by BLAS summation noise — which this test would surface). A
-    method outside {fold, gemm} raises instead of running the fold path."""
-    from go_iceberg_spark.errors import ValidationError
-    from go_iceberg_spark.operators.similarity import knn_classify
+    """knn_classify scores neighbors with the GEMM path and is graded
+    against the sequential-fold oracle, so on the graded fixture the GEMM
+    top-k must equal the fold reference ``cosine_topk`` row for row (a
+    divergence is a top-k margin crossed by BLAS summation noise), and the
+    classifier must vote for exactly those queries."""
+    from go_iceberg_spark.operators.similarity import (
+        cosine_topk, cosine_topk_gemm, knn_classify)
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = emb.filter((F.col("vec_id") % 17 == 0) & (F.col("vec_id") < 3400))
-    kw = dict(id_col="vec_id", vec_col="embedding", label_col="label", k=5)
-    fold = sorted((r.query_id, r.predicted_label, r.votes)
-                  for r in knn_classify(emb, q, method="fold", **kw).collect())
-    gemm = sorted((r.query_id, r.predicted_label, r.votes)
-                  for r in knn_classify(emb, q, method="gemm", **kw).collect())
+    kw = dict(id_col="vec_id", vec_col="embedding", k=5)
+    fold = sorted((r.query_id, r.neighbor_id, r.rank)
+                  for r in cosine_topk(emb, q, **kw).collect())
+    gemm = sorted((r.query_id, r.neighbor_id, r.rank)
+                  for r in cosine_topk_gemm(emb, q, **kw).collect())
     assert fold == gemm and fold
-    with pytest.raises(ValidationError, match="'GEMM'"):
-        knn_classify(emb, q, method="GEMM", **kw)
+    voted = {r.query_id for r in knn_classify(emb, q, label_col="label", **kw).collect()}
+    assert voted == {qid for qid, _, _ in fold}
 
 
 def test_cms_pre_aggregate_identical_counters(spark):
@@ -1324,28 +1331,36 @@ def test_knn_gemm_topk_margin_exceeds_blas_noise():
     margins = top[:, k - 1] - top[:, k]
     assert margins.min() > 1e-9, (
         f"top-{k} margin {margins.min():.3e} is within BLAS noise width; "
-        "the graded rows must go back to the fold path")
+        "the graded kNN rows can no longer score through GEMM")
 
 
-def test_broadcast_verdict_cache(spark, monkeypatch):
-    """r13: _broadcast_if_small memoizes the count-verified broadcast
-    verdict per (session, plan) — the second invocation of the same plan
-    must not run the probe job."""
-    from pyspark.sql import DataFrame
-
+def _overestimated_query(spark):
+    """A tiny-output frame whose Catalyst estimate is inflated far past the
+    broadcast cap: without CBO a Filter inherits its child's size
+    estimate, and a 20M-row range estimates ~160 MB."""
     from go_iceberg_spark.operators import similarity as S
 
-    # a tiny-output frame whose Catalyst estimate is inflated far past the
-    # cap: without CBO a Filter inherits its child's size estimate, and a
-    # 20M-row range estimates ~160 MB
     q = spark.range(0, 20_000_000).filter(F.col("id") < 3)
     est = int(q._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     assert est > S.MAX_BROADCAST_QUERY_BYTES, "fixture must take the probe path"
+    return q
 
-    S._BCAST_VERDICTS.clear()
+
+def test_broadcast_verdict_cache(spark, monkeypatch):
+    """_broadcast_if_small memoizes the count-verified broadcast verdict
+    per plan on the session — the second invocation of the same plan must
+    not run the probe job."""
+    from pyspark.sql import DataFrame
+
+    from go_iceberg_spark.operators import similarity as S
+    from go_iceberg_spark.workload import invalidate_load_cache
+
+    q = _overestimated_query(spark)
+    invalidate_load_cache(spark)
     hinted = S._broadcast_if_small(q)
     assert hinted is not q  # verified small -> hinted
-    assert len(S._BCAST_VERDICTS) == 1 and all(S._BCAST_VERDICTS.values())
+    verdicts = spark._graft_bcast_verdicts
+    assert len(verdicts) == 1 and all(verdicts.values())
 
     def boom(self):  # pragma: no cover - must not be called
         raise AssertionError("probe job ran despite cached verdict")
@@ -1353,6 +1368,36 @@ def test_broadcast_verdict_cache(spark, monkeypatch):
     monkeypatch.setattr(DataFrame, "count", boom)
     hinted2 = S._broadcast_if_small(q)
     assert hinted2 is not q
+
+
+def test_invalidate_load_cache_clears_session_state(spark):
+    """invalidate_load_cache(spark) clears the session's broadcast verdicts
+    and its register_views marker along with the load() memo: the same
+    over-estimated plan pays its count probe again, and register_views
+    re-registers a directory it had already registered."""
+    from go_iceberg_spark.operators import similarity as S
+    from go_iceberg_spark.plans import inspect as P
+    from go_iceberg_spark.workload import invalidate_load_cache, register_views
+
+    q = _overestimated_query(spark)
+    invalidate_load_cache(spark)
+    counts = []
+    for invalidate in (False, False, True):
+        if invalidate:
+            invalidate_load_cache(spark)
+        with P.spark_jobs(spark) as jobs:
+            S._broadcast_if_small(q)
+        counts.append(len(jobs))
+    assert counts[0] >= 1 and counts == [counts[0], 0, counts[0]], counts
+
+    sf = "/root/testdata/sf0.001"
+    register_views(spark, sf)
+    spark.catalog.dropTempView("region")
+    register_views(spark, sf)  # marker still set: skipped
+    assert not spark.catalog.tableExists("region")
+    invalidate_load_cache(spark)
+    register_views(spark, sf)
+    assert spark.catalog.tableExists("region")
 
 
 def test_minhash_nondeterministic_input_pinned(spark):
