@@ -36,12 +36,11 @@ Mapping to the engine's model:
   [null, string] in their OCF writer schema; the reader keys off that
   schema and passes those legacy string values through unconverted.
 
-r11 (retires the r6 ADR that kept float/double and binary/fixed as
-[null, string]): the float/double blocker was Java 17's legacy
-``Float/Double.toString`` dir-name rendering (e.g. ``1.23456792E8``),
-which Python cannot regenerate from the typed value. Rather than
-reimplement ``FloatingDecimal`` (a silent near-miss would desynchronize
-the dialects), the ENGINE's partition-string space is now canonical:
+Float/double and binary/fixed partitions are typed too. Java 17's
+``Float/Double.toString`` dir-name rendering (e.g. ``1.23456792E8``)
+cannot be regenerated in Python from the typed value, and reimplementing
+``FloatingDecimal`` would risk a silent near-miss between the dialects,
+so the ENGINE's partition-string space is canonical instead:
 ``write.canonicalize_partition_values`` parses the Java text once at
 path-derivation time and re-renders it as shortest-repr (float32 values
 narrow-then-widen first), so string↔typed is an exact inverse by
@@ -49,9 +48,9 @@ construction — the dir name on disk keeps Java's spelling, the metadata
 never depends on it. binary/fixed reuse the engine's hex stat-space
 convention (Spark cannot ``partitionBy`` binary, so these arise only via
 constructed specs/manifests — the wire form is spec-typed either way).
-Tables written before r11 with float/double partitions hold legacy Java
-strings in their NATIVE metadata; their Avro manifests (written then)
-declared string and still read through unconverted, while REWRITING such
+Tables whose float/double partitions were written before that canonical
+rendering hold legacy Java strings in their NATIVE metadata; their Avro
+manifests declare string and read through unconverted, while REWRITING such
 manifests normalizes the dict to the canonical rendering (same value).
 """
 
@@ -120,9 +119,9 @@ def bound_to_bytes(t: IcebergType, enc_val: Any) -> bytes | None:
     if isinstance(t, FixedType):
         return bytes.fromhex(enc_val)  # engine stat space stores hex
     if isinstance(t, DecimalType):
-        if isinstance(enc_val, int):  # engine stat space: unscaled int (r9)
+        if isinstance(enc_val, int):  # engine stat space: unscaled int
             unscaled = enc_val
-        else:  # legacy str(Decimal) bounds from pre-r9 manifests
+        else:  # legacy str(Decimal) bounds, from before unscaled ints
             unscaled = int(decimal.Decimal(str(enc_val))
                            .scaleb(t.scale, decimal.Context(prec=60)).to_integral_value())
         length = max(1, (unscaled.bit_length() + 8) // 8)  # two's-complement minimal
@@ -155,7 +154,7 @@ def bound_from_bytes(t: IcebergType, raw: bytes | None) -> Any:
             return str(_uuid.UUID(bytes=raw))
         return None
     if isinstance(t, DecimalType):
-        # engine stat space is the unscaled int itself (r9) — identical to
+        # engine stat space is the unscaled int itself — identical to
         # the spec's two's-complement payload, just widened to a Python int
         return int.from_bytes(raw, "big", signed=True)
     from ..schema import FixedType
@@ -254,9 +253,9 @@ def _decimal_fixed_size(precision: int) -> int:
 def _typed_partition_type(pf, schema: Schema):
     """(result_type, avro_type) for a partition field; None only when the
     source field is unknown to the given schema (→ the [null, string]
-    fallback carries whatever string the engine holds). r11: every spec
-    type now has a typed wire form — float/double became exact once the
-    engine canonicalized their partition strings to a Python-derivable
+    fallback carries whatever string the engine holds). Every spec type
+    has a typed wire form: float/double are exact because the engine
+    canonicalizes their partition strings to a Python-derivable
     rendering (write.canonicalize_partition_values), and binary/fixed use
     the engine's hex string convention (same space as column stats)."""
     from ..schema import FixedType
@@ -663,9 +662,9 @@ def _write_member(
 def _grouped(entries: list[DataFileEntry]) -> list[tuple[tuple[int, int, int], list[DataFileEntry]]]:
     """Group by (content, schema_id, spec_id): an Iceberg manifest carries
     exactly ONE schema and ONE partition spec, and collapsing spec
-    generations into the default spec (the pre-r4 behavior) relabeled old
-    entries with null tuples under the NEW spec's fields — an external
-    reader pruning by partition tuple would wrongly drop those files."""
+    generations into the default spec would relabel old entries with null
+    tuples under the NEW spec's fields — an external reader pruning by
+    partition tuple would wrongly drop those files."""
     groups: dict[tuple[int, int, int], list[DataFileEntry]] = {}
     for e in entries:
         groups.setdefault((e.content, e.schema_id, e.spec_id), []).append(e)

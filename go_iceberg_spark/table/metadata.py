@@ -150,7 +150,7 @@ def validate_partition_spec(schema: Schema, spec: PartitionSpec) -> None:
                 raise ValidationError(
                     f"partition field {pf.name!r}: identity over {tname} is not "
                     f"supported (Spark cannot partitionBy binary columns; the "
-                    f"Avro wire form exists (r11) but no write path can "
+                    f"Avro wire form exists but no write path can "
                     f"produce such layouts)")
             continue
         m = _BUCKET_TRANSFORM_RE.match(tr)
@@ -403,7 +403,7 @@ MANIFEST_LIST_SUFFIX = ".manifest-list.json"
 def write_manifest_list(path: str, members: list[dict], io=None) -> None:
     """Manifest list: JSON array of {"path": <rel manifest>, "n": <entries>,
     "nd": <delete entries>, "bounds": <aggregate column-bounds JSON>}. "nd"
-    and "bounds" (stamped since r7, optional for older lists) are the
+    and "bounds" (optional: older lists lack them) are the
     Iceberg manifest-list partition-summary analogue: scans skip READING a
     delete-free member whose bounds contradict the filter (scan.py). The
     list is O(commits since last compaction); member manifests are
@@ -779,7 +779,7 @@ def load_metadata(location: str, io=None) -> tuple[TableMetadata, int]:
     # before that commit by stepping back one version. Only DECODE failures
     # take this path — a transient resource error (EMFILE, EACCES) or a
     # vanished file is a real error the caller must see, not a silent
-    # step-back to stale metadata (r10 ADVICE); and when we DO step back, say
+    # step-back to stale metadata; and when we DO step back, say
     # so: a permanently corrupt newest version would otherwise hide forever.
     last_err: Exception | None = None
     for attempt in range(5):
@@ -922,7 +922,7 @@ def commit_metadata(location: str, md: TableMetadata, expected_version: int, io=
     elif not os.path.isdir(mdir):
         # the table tree is GONE (dropped or renamed since this handle
         # loaded) — recreating it here would resurrect a zombie table
-        # directory the catalog no longer knows about (r6 probe)
+        # directory the catalog no longer knows about
         from ..errors import TableNotFoundError
         raise TableNotFoundError(
             f"table metadata directory {mdir!r} no longer exists (table "

@@ -703,7 +703,7 @@ class Table:
         self.metadata = md
 
     def remove_ref(self, name: str) -> None:
-        """Drop a branch or tag ref (Iceberg DROP BRANCH / DROP TAG; r9).
+        """Drop a branch or tag ref (Iceberg DROP BRANCH / DROP TAG).
         ``main`` is protected. The ref's exclusive snapshots survive until
         the next ``expire_snapshots`` — removing an abandoned audit branch
         is what LETS expiry reclaim its staged files (refs retain their
@@ -1104,7 +1104,7 @@ class SchemaUpdate:
         # SAME commit — otherwise write.bloom-columns / nan-count-columns
         # silently detach after a rename and every future file loses its
         # blooms/NaN counts, degrading point-lookup and metadata-delete
-        # pruning with no error anywhere (r6 probe find). Sort orders and
+        # pruning with no error anywhere. Sort orders and
         # partition specs reference field IDS and need no rewrite.
         new_by_id = {f.field_id: f.name for f in self._fields}
         renames = {

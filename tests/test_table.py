@@ -2510,7 +2510,8 @@ def test_rewrite_position_deletes_jobs_flat_in_tombstone_files(spark, catalog):
 def test_small_file_consolidation_reads_without_inference(spark, catalog):
     """An append of a many-partition local frame writes tiny files that the
     writer consolidates; re-reading them under the written frame's schema
-    starts no schema-inference job."""
+    starts no schema-inference job, and the consolidated file's footer is
+    read on the driver, so the append runs no harvest job."""
     from go_iceberg_spark.plans import inspect as P
     from go_iceberg_spark.table.metadata import CONTENT_DATA
 
@@ -2521,4 +2522,116 @@ def test_small_file_consolidation_reads_without_inference(spark, catalog):
         t.append(df)
     assert len([e for e in t.live_entries() if e.content == CONTENT_DATA]) == 1
     assert t.scan().count() == 2000
-    P.assert_max_jobs(jobs, 5)
+    P.assert_max_jobs(jobs, 3)
+
+
+def test_small_append_runs_one_spark_job(spark, catalog):
+    """A small append is the write job alone: the new file's footer stats
+    are read on the driver, not by a second Spark job."""
+    from go_iceberg_spark.plans import inspect as P
+
+    df = spark.range(0, 10_000, numPartitions=1).selectExpr(
+        "id", "id % 7 AS k", "CAST(id AS DOUBLE) AS v")
+    t = catalog.create_table("db", "budget_append", from_spark_schema(df.schema))
+    with P.spark_jobs(spark) as jobs:
+        t.append(df)
+    P.assert_max_jobs(jobs, 1)
+    (entry,) = t.live_entries()
+    fid = {f.name: f.field_id for f in t.schema.fields}
+    assert entry.record_count == 10_000
+    assert entry.column_stats[fid["id"]]["min"] == 0
+    assert entry.column_stats[fid["id"]]["max"] == 9_999
+
+
+def _force_harvest_tier(monkeypatch, tier):
+    """Pin ``_harvest_stats`` to one tier by moving both of its bounds."""
+    import go_iceberg_spark.table.write as W
+
+    bound = 1 << 62 if tier == "driver" else -1
+    monkeypatch.setattr(W, "HARVEST_DRIVER_MAX_FILES", bound)
+    monkeypatch.setattr(W, "HARVEST_DRIVER_MAX_VALUE_BYTES", bound)
+
+
+def test_harvest_tiers_agree(spark, catalog, monkeypatch):
+    """The driver tier and the Spark-job tier of ``_harvest_stats`` give the
+    same ``DataFileEntry`` list for the same files: bounds of every type,
+    bloom filters, NaN counts and exact string bounds, in the same order.
+    The driver tier starts no Spark job, the other tier exactly one."""
+    import go_iceberg_spark.table.write as W
+    from go_iceberg_spark.plans import inspect as P
+
+    df = spark.range(0, 3000, numPartitions=3).selectExpr(
+        "id",
+        "concat('g', id % 3) AS grp",
+        "CAST(id / 7 AS DECIMAL(12, 2)) AS amount",
+        "date_add(DATE'2024-01-01', CAST(id % 400 AS INT)) AS d",
+        "concat('s', lpad(CAST(id AS STRING), 5, '0')) AS s",
+        "CASE WHEN id % 11 = 0 THEN CAST('NaN' AS DOUBLE) ELSE id * 0.5 END AS v",
+    )
+    schema = from_spark_schema(df.schema)
+    fid = {f.name: f.field_id for f in schema.fields}
+    spec = PartitionSpec(0, (PartitionField(fid["grp"], 1000, "identity", "grp"),))
+    t = catalog.create_table(
+        "db", "harvest_tiers", schema, spec=spec,
+        properties={"write.bloom-columns": "id,s",
+                    "write.nan-count-columns": "v",
+                    "write.exact-bounds-columns": "s"})
+
+    real = W._harvest_stats
+    job_counts = {}
+
+    def both_tiers(spark_, paths, *args, **kwargs):
+        # entries for the job tier, then for the driver tier, over one list
+        # of written files: write_data_files builds both from the same paths
+        out = []
+        for tier in ("job", "driver"):
+            with monkeypatch.context() as m:
+                _force_harvest_tier(m, tier)
+                with P.spark_jobs(spark_) as jobs:
+                    out += real(spark_, paths, *args, **kwargs)
+            job_counts[tier] = len(jobs)
+        return out
+
+    monkeypatch.setattr(W, "_harvest_stats", both_tiers)
+    entries = W.write_data_files(t, df)
+    n = len(entries) // 2
+    assert n == 3
+    # compared as repr: the footer max of a double column holding NaN is NaN,
+    # and NaN != NaN
+    assert repr(entries[:n]) == repr(entries[n:])
+    assert job_counts == {"job": 1, "driver": 0}
+    for e in entries[:n]:
+        assert e.partition["grp"] in {"g0", "g1", "g2"}
+        assert e.column_stats[fid["id"]]["bloom"]
+        assert e.column_stats[fid["s"]]["bloom"]
+        assert e.column_stats[fid["s"]]["bounds_exact"] is True
+        assert e.column_stats[fid["v"]]["nan_count"] > 0
+        assert e.column_stats[fid["amount"]]["min"] is not None
+        assert e.column_stats[fid["d"]]["max"] is not None
+
+
+def test_add_files_type_check_same_on_both_tiers(spark, catalog, tmp_path, monkeypatch):
+    """A type-mismatched import raises the same ``ValidationError`` whether
+    the driver reads the file (no Spark job) or the executors do."""
+    from go_iceberg_spark.errors import ValidationError
+    from go_iceberg_spark.plans import inspect as P
+
+    df = spark.createDataFrame([(1, 10)], "id bigint, x bigint")
+    t = catalog.create_table("db", "afty_tiers", from_spark_schema(df.schema))
+    t.append(df)
+    bad = str(tmp_path / "bad")
+    spark.createDataFrame([(2, 2.75)], "id bigint, x double").coalesce(1)\
+        .write.mode("overwrite").parquet(bad)
+    paths = [os.path.join(bad, f) for f in os.listdir(bad) if f.endswith(".parquet")]
+
+    messages = {}
+    for tier in ("driver", "job"):
+        with monkeypatch.context() as m:
+            _force_harvest_tier(m, tier)
+            with P.spark_jobs(spark) as jobs:
+                with pytest.raises(ValidationError, match="does not fit table type") as ei:
+                    t.add_files(paths)
+        messages[tier] = (str(ei.value), len(jobs))
+    assert messages["driver"][0] == messages["job"][0]
+    assert messages["driver"][1] == 0 and messages["job"][1] == 1
+    assert t.scan().count() == 1
