@@ -19,11 +19,12 @@ from __future__ import annotations
 
 import io
 import json
-import os
 import secrets
 import struct
 import zlib
 from typing import Any
+
+from .io.fileio import LOCAL_IO, FileIO
 
 MAGIC = b"Obj\x01"
 
@@ -267,7 +268,7 @@ def write_ocf(
     *,
     metadata: dict[str, bytes] | None = None,
     codec: str = "deflate",
-    io=None,
+    io: FileIO = LOCAL_IO,
 ) -> None:
     """Write records as one OCF block (manifests are single-block files)."""
     if codec not in ("null", "deflate"):
@@ -293,23 +294,12 @@ def write_ocf(
         head.write_long(len(payload))
         head.write_fixed(payload)
         head.write_fixed(sync)
-    if io is not None:
-        io.create(path, head.getvalue(), overwrite=True)
-        return
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    with open(path, "wb") as f:
-        f.write(head.getvalue())
+    io.create(path, head.getvalue(), overwrite=True)
 
 
-def read_ocf(path: str, io=None) -> tuple[Any, dict[str, bytes], list[dict]]:
-    """Read an OCF file → (writer schema, metadata, records). ``io`` routes
-    through a FileIO (object storage); None reads the local filesystem."""
-    if io is not None:
-        data = io.read(path)
-    else:
-        with open(path, "rb") as f:
-            data = f.read()
-    dec = BinaryDecoder(data)
+def read_ocf(path: str, io: FileIO = LOCAL_IO) -> tuple[Any, dict[str, bytes], list[dict]]:
+    """Read an OCF file → (writer schema, metadata, records)."""
+    dec = BinaryDecoder(io.read(path))
     if dec.read_fixed(4) != MAGIC:
         raise ValueError(f"not an Avro OCF: {path}")
     meta = read_datum(dec, _META_SCHEMA)

@@ -182,11 +182,10 @@ class FilesystemCatalog(Catalog):
             raise TableAlreadyExistsError(f"table {new_ns}.{new} exists")
         os.makedirs(os.path.dirname(dst), exist_ok=True)
         os.rename(src, dst)
-        # rewrite metadata.location to the destination: Table.load overrides
-        # it with the directory path so engine reads kept working, but the
-        # metadata FILE still claimed the source dir — REST attachments and
-        # any external reader resolving relative paths against `location`
-        # would read (and write) under the stale directory (r7 probe find)
+        # rewrite metadata.location to the destination: Table.load uses the
+        # directory path, but the metadata FILE still names the source dir,
+        # and REST attachments and external readers resolving relative paths
+        # against `location` would read (and write) under the stale directory
         from dataclasses import replace as _rpl
 
         from ..table.metadata import load_metadata, now_ms
@@ -209,7 +208,8 @@ class ObjectStoreCatalog(Catalog):
     reference's S3 deployment, reference: io/s3.go): every byte of METADATA
     goes through a FileIO, and the table commit uses S3 conditional PUT
     (If-None-Match: *) as its optimistic-concurrency primitive — the same
-    protocol ``FilesystemCatalog`` gets from O_EXCL locally.
+    commit protocol ``FilesystemCatalog`` tables run through
+    ``LocalFileIO``'s exclusive create.
 
     Data files are written by Spark executors; without a Hadoop S3A
     deployment they cannot land on ``s3://`` directly, so tables default

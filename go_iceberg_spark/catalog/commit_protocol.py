@@ -149,7 +149,7 @@ def apply_updates(md: TableMetadata, updates: list[dict]) -> TableMetadata:
             # ANCESTOR (walking the original chain through doomed ids) — the
             # same rule expire_snapshots applies locally; without it the
             # server-side metadata keeps parents pointing at removed ids and
-            # every incremental/changelog read over the gap breaks (r6 probe)
+            # every incremental/changelog read over the gap breaks
             orig_by_id = {s.snapshot_id: s for s in md.snapshots}
 
             def _nearest_retained(s):

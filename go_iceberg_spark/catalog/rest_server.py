@@ -260,10 +260,10 @@ class _Handler(BaseHTTPRequestHandler):
         # the moved metadata still records the SOURCE location, and clients
         # attach tables at metadata.location — every relative manifest/data
         # path would resolve (and new data files would land!) under the
-        # stale directory (r7 probe: rename-then-read raised
-        # FileNotFoundError on the old path). Commit a location rewrite as
-        # a new metadata version at the destination; a concurrent commit
-        # racing the rewrite loses O_EXCL and we re-apply on its successor.
+        # stale directory, so a read after the rename fails on the old path.
+        # Commit a location rewrite as a new metadata version at the
+        # destination; when a concurrent commit takes that version first,
+        # the rewrite is re-applied on its successor.
         from dataclasses import replace as _rpl
 
         from ..table.metadata import now_ms

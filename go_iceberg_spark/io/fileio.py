@@ -1,25 +1,31 @@
 """FileIO abstraction (reference: io/fileio.go:10-76, io/local.go, io/s3.go).
 
 The reference routes ALL storage through a small interface: open-for-read
-(with range reads), create-exclusive (O_EXCL — the primitive its optimistic
-metadata commits rely on), delete, exists, size. This module reproduces that
-surface:
+(with range reads), create-exclusive (the primitive its optimistic metadata
+commits rely on), delete, exists, size. This module reproduces that surface,
+and every metadata read, write and commit of the table layer goes through it:
 
-- ``LocalFileIO`` — complete; normalizes ``file://`` URIs like
-  reference io/local.go:13-60; exclusive create via "xb" mode; range read via
-  seek+limit (reference: io/local.go range reader).
-- ``S3FileIO`` — the reference's io/s3.go shape (range GET, buffered
-  put-on-close, MinIO path-style); requires boto3, which this environment
-  does not ship, so construction raises with a clear message. Spark itself
-  reads/writes ``s3a://`` data paths via Hadoop S3A (configured in
-  session.py) — this class is only for driver-side METADATA IO on S3.
+- ``LocalFileIO`` — normalizes ``file://`` URIs like reference
+  io/local.go:13-60; range read via seek+limit. ``create`` publishes
+  atomically: the bytes go to a temp file in the target directory, which an
+  exclusive create links to the final name (``os.link`` fails with EEXIST
+  if the name exists) and an overwrite renames over it (``os.replace``), so
+  a reader never sees a partly written file.
+- ``S3FileIO`` — the reference's io/s3.go shape (range GET, single PUT,
+  MinIO path-style); exclusive create is a conditional PUT
+  (If-None-Match: *). It needs boto3. Spark itself reads and writes
+  ``s3a://`` data paths via Hadoop S3A (configured in session.py); this
+  class serves driver-side METADATA I/O.
 
+Both raise ``FileNotFoundError`` when reading a missing path and
+``FileExistsError`` when an exclusive create finds one.
 ``for_location(path)`` picks the implementation from the URI scheme.
 """
 
 from __future__ import annotations
 
 import os
+import uuid
 
 from ..errors import ValidationError
 
@@ -83,10 +89,24 @@ class LocalFileIO(FileIO):
 
     def create(self, path: str, data: bytes, *, overwrite: bool = False) -> None:
         p = self._p(path)
-        os.makedirs(os.path.dirname(p) or ".", exist_ok=True)
-        mode = "wb" if overwrite else "xb"
-        with open(p, mode) as f:
-            f.write(data)
+        d = os.path.dirname(p) or "."
+        os.makedirs(d, exist_ok=True)
+        tmp = os.path.join(d, f".{os.path.basename(p)}.{uuid.uuid4().hex}.tmp")
+        try:
+            with open(tmp, "wb") as f:
+                f.write(data)
+                if not overwrite:
+                    f.flush()
+                    os.fsync(f.fileno())
+            if overwrite:
+                os.replace(tmp, p)
+            else:
+                os.link(tmp, p)  # raises FileExistsError on EEXIST
+        finally:
+            try:
+                os.unlink(tmp)
+            except OSError:  # gone after os.replace; never fails the create
+                pass
 
     def delete(self, path: str) -> None:
         os.remove(self._p(path))
@@ -129,7 +149,7 @@ class S3FileIO(FileIO):
     io/s3.go:332-351; here ``create`` takes the full payload, same effect),
     MinIO path-style addressing. Exclusive create uses S3 conditional PUT
     (If-None-Match: *), giving the same optimistic-commit primitive as
-    O_EXCL locally. Spark executors read/write s3a:// DATA paths via Hadoop
+    ``LocalFileIO``'s link. Spark executors read/write s3a:// DATA paths via Hadoop
     S3A (session.py confs); this class serves driver-side METADATA IO."""
 
     def __init__(self, endpoint: str | None = None, access_key: str | None = None,
@@ -150,7 +170,10 @@ class S3FileIO(FileIO):
 
     def read(self, path: str) -> bytes:
         b, k = parse_s3_uri(path)
-        return self._s3.get_object(Bucket=b, Key=k)["Body"].read()
+        try:
+            return self._s3.get_object(Bucket=b, Key=k)["Body"].read()
+        except self._s3.exceptions.NoSuchKey as e:
+            raise FileNotFoundError(path) from e
 
     def read_range(self, path: str, start: int, length: int) -> bytes:
         b, k = parse_s3_uri(path)
@@ -207,8 +230,12 @@ class S3FileIO(FileIO):
         return sorted(out)
 
 
+# the FileIO of every metadata function called without one
+LOCAL_IO = LocalFileIO()
+
+
 def for_location(path: str) -> FileIO:
     """Scheme-dispatched FileIO (reference: iceberg.go:79-99 factory)."""
     if path.startswith(("s3://", "s3a://", "s3n://")):
         return S3FileIO()
-    return LocalFileIO()
+    return LOCAL_IO

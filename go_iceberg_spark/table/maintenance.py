@@ -116,13 +116,13 @@ def expire_snapshots(table, *, older_than: dt.datetime | int | None = None,
             paths.add(avro_list)
             if table.io.exists(os.path.join(table.location, avro_list)):
                 paths |= set(member_manifest_paths(table.location, avro_list,
-                                                   io=table._mio))
+                                                   io=table.io))
             else:
                 warnings.warn(f"avro manifest list missing for snapshot "
                               f"{s.snapshot_id}: {avro_list}")
         if s.manifest_path != avro_list:  # not Avro-only: parquet members too
             if table.io.exists(os.path.join(table.location, s.manifest_path)):
-                paths |= {m["path"] for m in manifest_members(table.location, s, table._mio)}
+                paths |= {m["path"] for m in manifest_members(table.location, s, table.io)}
             else:
                 # list already gone (partial earlier expire): members can't be
                 # enumerated here — the metadata-dir sweep below reclaims them
@@ -590,7 +590,7 @@ def manifests_df(table) -> DataFrame:
     if snap is not None:
         from .metadata import manifest_members
 
-        members = manifest_members(table.location, snap, table._mio)
+        members = manifest_members(table.location, snap, table.io)
         if members is None:
             groups = [(snap.manifest_path, table.manifest_entries(snap), None)]
         else:

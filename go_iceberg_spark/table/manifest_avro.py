@@ -64,6 +64,7 @@ from typing import Any
 
 from ..avro import read_ocf, write_ocf
 from ..errors import ValidationError
+from ..io.fileio import LOCAL_IO, FileIO
 from ..schema import (
     DecimalType,
     IcebergType,
@@ -613,7 +614,7 @@ def _write_member(
     spec: PartitionSpec,
     snapshot_id: int,
     sequence_number: int,
-    io=None,
+    io: FileIO = LOCAL_IO,
 ) -> dict:
     """Write ONE member manifest OCF (entries paired with their wire status)
     and return its ``manifest_file`` record for the manifest list."""
@@ -642,7 +643,7 @@ def _write_member(
     existing = [e for e, s in group if s == STATUS_EXISTING]
     return {
         "manifest_path": rel_path,
-        "manifest_length": io.size(path) if io is not None else os.path.getsize(path),
+        "manifest_length": io.size(path),
         "partition_spec_id": spec.spec_id,
         "content": 0 if content == CONTENT_DATA else 1,
         "sequence_number": sequence_number,
@@ -672,7 +673,7 @@ def _grouped(entries: list[DataFileEntry]) -> list[tuple[tuple[int, int, int], l
 
 
 def _write_list(location: str, rel_dir: str, manifest_files: list[dict],
-                snapshot_id: int, sequence_number: int, io=None) -> str:
+                snapshot_id: int, sequence_number: int, io: FileIO = LOCAL_IO) -> str:
     list_rel = os.path.join(rel_dir, f"snap-{snapshot_id}.avro")
     write_ocf(
         os.path.join(location, list_rel),
@@ -698,7 +699,7 @@ def write_avro_manifests(
     spec: PartitionSpec,
     schemas_by_id: dict[int, Schema],
     specs_by_id: dict[int, PartitionSpec] | None = None,
-    io=None,
+    io: FileIO = LOCAL_IO,
 ) -> str:
     """Write Iceberg-layout Avro manifests + manifest list for a snapshot's
     full entry listing; returns the manifest-LIST path relative to location.
@@ -747,7 +748,7 @@ def write_avro_manifest_tree(
     schemas_by_id: dict[int, Schema],
     specs_by_id: dict[int, PartitionSpec] | None = None,
     parent_list_rel: str | None = None,
-    io=None,
+    io: FileIO = LOCAL_IO,
 ) -> str:
     """INCREMENTAL Iceberg Avro tree: parent member manifests whose entries
     all survive are REUSED verbatim (their ``manifest_file`` record — counts,
@@ -766,7 +767,7 @@ def write_avro_manifest_tree(
     part = 0
     plist = os.path.join(location, parent_list_rel) if parent_list_rel else None
     parent_mfs: list[dict] = []
-    if plist is not None and (io.exists(plist) if io is not None else os.path.exists(plist)):
+    if plist is not None and io.exists(plist):
         _, _, parent_mfs = read_ocf(plist, io=io)
     if len(parent_mfs) >= AVRO_COMPACT_THRESHOLD:
         # compact BEFORE writing members so the full-rewrite path never
@@ -823,7 +824,7 @@ def write_avro_manifest_tree(
     return _write_list(location, rel_dir, manifest_files, snapshot_id, sequence_number, io=io)
 
 
-def member_manifest_paths(location: str, list_rel_path: str, io=None) -> list[str]:
+def member_manifest_paths(location: str, list_rel_path: str, io: FileIO = LOCAL_IO) -> list[str]:
     """Relative paths of the manifests a manifest list references (used by
     snapshot expiry to clean whole avro trees)."""
     _, _, manifest_files = read_ocf(os.path.join(location, list_rel_path), io=io)
@@ -911,7 +912,7 @@ def _partition_stat_value(pf, t, v):
 # ---------------------------------------------------------------------------
 
 
-def read_avro_manifest_tree(location: str, list_rel_path: str, io=None) -> list[DataFileEntry]:
+def read_avro_manifest_tree(location: str, list_rel_path: str, io: FileIO = LOCAL_IO) -> list[DataFileEntry]:
     """Manifest list → manifests → DataFileEntry list (the inverse of
     ``write_avro_manifests``; reference: spec/avro.go:178-244 + :435-534).
     The manifest-list sequence number is passed down for the spec's
@@ -944,7 +945,7 @@ def _writer_partition_types(ocf_schema) -> dict:
         return {}
 
 
-def _read_one_manifest(location: str, rel_path: str, io=None,
+def _read_one_manifest(location: str, rel_path: str, io: FileIO = LOCAL_IO,
                        inherit_seq: int | None = None) -> list[DataFileEntry]:
     ocf_schema, meta, records = read_ocf(os.path.join(location, rel_path), io=io)
     writer_types = _writer_partition_types(ocf_schema)

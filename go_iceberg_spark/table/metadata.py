@@ -39,7 +39,8 @@ from typing import Any
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from ..errors import CommitConflictError, NoSuchSnapshotError, ValidationError
+from ..errors import CommitConflictError, NoSuchSnapshotError, TableNotFoundError, ValidationError
+from ..io.fileio import LOCAL_IO, FileIO
 from ..schema import Schema, schema_from_json, schema_to_json
 
 # The engine writes V2 metadata: it uses sequence numbers, delete-file
@@ -318,7 +319,7 @@ def _jenc_scalar(v) -> str:
     return json.dumps(v)
 
 
-def write_manifest(path: str, entries: list[DataFileEntry], io=None) -> None:
+def write_manifest(path: str, entries: list[DataFileEntry], io: FileIO = LOCAL_IO) -> None:
     """Write a manifest parquet file (replaces Avro serde, spec/avro.go:91-534)."""
     cols: dict[str, list] = {n: [] for n in _MANIFEST_ARROW_SCHEMA.names}
     for e in entries:
@@ -344,14 +345,9 @@ def write_manifest(path: str, entries: list[DataFileEntry], io=None) -> None:
              for f in fids])
         cols["stats_bounds_exact"].append(
             [bool(e.column_stats[f].get("bounds_exact")) for f in fids])
-    table = pa.table(cols, schema=_MANIFEST_ARROW_SCHEMA)
-    if io is not None:
-        buf = pa.BufferOutputStream()
-        pq.write_table(table, buf, compression="snappy")
-        io.create(path, buf.getvalue().to_pybytes(), overwrite=True)
-        return
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    pq.write_table(table, path, compression="snappy")
+    buf = pa.BufferOutputStream()
+    pq.write_table(pa.table(cols, schema=_MANIFEST_ARROW_SCHEMA), buf, compression="snappy")
+    io.create(path, buf.getvalue().to_pybytes(), overwrite=True)
 
 
 def _entry_from_columns(d: dict, i: int) -> DataFileEntry:
@@ -400,7 +396,7 @@ def _entry_from_columns(d: dict, i: int) -> DataFileEntry:
 MANIFEST_LIST_SUFFIX = ".manifest-list.json"
 
 
-def write_manifest_list(path: str, members: list[dict], io=None) -> None:
+def write_manifest_list(path: str, members: list[dict], io: FileIO = LOCAL_IO) -> None:
     """Manifest list: JSON array of {"path": <rel manifest>, "n": <entries>,
     "nd": <delete entries>, "bounds": <aggregate column-bounds JSON>}. "nd"
     and "bounds" (optional: older lists lack them) are the
@@ -411,23 +407,14 @@ def write_manifest_list(path: str, members: list[dict], io=None) -> None:
     member for the added files instead of rewriting the full live set
     (single-manifest design made incremental; Iceberg's manifest-list role,
     reference: spec/manifest.go:152-205)."""
-    if io is not None:
-        io.create(path, json.dumps(members).encode(), overwrite=True)
-        return
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(members, f)
-    os.replace(tmp, path)
+    io.create(path, json.dumps(members).encode(), overwrite=True)
 
 
-def read_manifest_list(path: str, io=None) -> list[dict]:
-    if io is not None:
-        return json.loads(io.read(path))
-    with open(path) as f:
-        return json.load(f)
+def read_manifest_list(path: str, io: FileIO = LOCAL_IO) -> list[dict]:
+    return json.loads(io.read(path))
 
 
-def manifest_members(location: str, snap: Snapshot, io=None) -> list[dict] | None:
+def manifest_members(location: str, snap: Snapshot, io: FileIO = LOCAL_IO) -> list[dict] | None:
     """A snapshot's parquet member manifests as manifest-list records
     (``{"path", "n", "nd", "bounds"}``, paths relative to ``location``), or
     None for an Avro-only snapshot, which has no parquet members. A legacy
@@ -439,11 +426,10 @@ def manifest_members(location: str, snap: Snapshot, io=None) -> list[dict] | Non
     path = os.path.join(location, rel)
     if rel.endswith(MANIFEST_LIST_SUFFIX):
         return read_manifest_list(path, io)
-    src = pa.BufferReader(io.read(path)) if io is not None else path
-    return [{"path": rel, "n": pq.read_metadata(src).num_rows}]
+    return [{"path": rel, "n": pq.read_metadata(pa.BufferReader(io.read(path))).num_rows}]
 
 
-def read_manifest_tree(location: str, snap: Snapshot, io=None) -> list[DataFileEntry]:
+def read_manifest_tree(location: str, snap: Snapshot, io: FileIO = LOCAL_IO) -> list[DataFileEntry]:
     """Entries of a snapshot regardless of manifest layout."""
     members = manifest_members(location, snap, io)
     if members is None:
@@ -454,17 +440,12 @@ def read_manifest_tree(location: str, snap: Snapshot, io=None) -> list[DataFileE
             for e in read_manifest(os.path.join(location, m["path"]), io)]
 
 
-def read_manifest(path: str, io=None) -> list[DataFileEntry]:
+def read_manifest(path: str, io: FileIO = LOCAL_IO) -> list[DataFileEntry]:
     """Driver-side full manifest read (small/medium tables, mutations that
     need every live entry). Scans over large manifests use the pruned
     readers in ``planning.py`` instead, which decode stats only for
-    filter-referenced fields and only materialize surviving entries.
-    ``io`` routes object storage; None reads the local filesystem directly
-    (zero-copy mmap path)."""
-    if io is not None:
-        t = pq.read_table(pa.BufferReader(io.read(path)))
-    else:
-        t = pq.read_table(path)
+    filter-referenced fields and only materialize surviving entries."""
+    t = pq.read_table(pa.BufferReader(io.read(path)))
     d = t.to_pydict()
     return [_entry_from_columns(d, i) for i in range(t.num_rows)]
 
@@ -727,7 +708,14 @@ class TableMetadata:
 
 
 # ---------------------------------------------------------------------------
-# Filesystem commit protocol
+# Commit protocol
+#
+# A table's metadata is the highest ``v{N}.metadata.json`` in its metadata
+# directory, found by listing it through the table's FileIO. A commit
+# publishes v{N+1} with the FileIO's exclusive create, so of two writers
+# racing for one version exactly one wins, and a reader never sees a partly
+# written version (LocalFileIO links a complete temp file into place; an S3
+# PUT is atomic).
 # ---------------------------------------------------------------------------
 
 
@@ -744,55 +732,37 @@ def _version_of(name: str) -> int | None:
     return None
 
 
-def current_metadata_version(location: str, io=None) -> int:
+def current_metadata_version(location: str, io: FileIO = LOCAL_IO) -> int:
     """Highest committed version, 0 if none."""
-    mdir = metadata_dir(location)
-    if io is not None:
-        best = 0
-        for p in io.list(mdir):
-            v = _version_of(os.path.basename(p))
-            if v is not None and v > best:
-                best = v
-        return best
-    if not os.path.isdir(mdir):
-        return 0
-    best = 0
-    for name in os.listdir(mdir):
-        v = _version_of(name)
-        if v is not None and v > best:
-            best = v
-    return best
+    versions = [_version_of(os.path.basename(p)) for p in io.list(metadata_dir(location))]
+    return max((v for v in versions if v is not None), default=0)
 
 
-def load_metadata(location: str, io=None) -> tuple[TableMetadata, int]:
+def load_metadata(location: str, io: FileIO = LOCAL_IO) -> tuple[TableMetadata, int]:
     v = current_metadata_version(location, io)
     if v == 0:
         raise ValidationError(f"no metadata at {location}")
     path = os.path.join(metadata_dir(location), f"v{v}.metadata.json")
-    if io is not None:
-        return TableMetadata.from_json(json.loads(io.read(path))), v
-    # commit_metadata publishes versions via temp-write + os.link, so a final
-    # name is only ever visible with complete content. The decode-retry below
-    # is defense in depth (e.g. a file written by an older engine build that
-    # streamed into the final name): a half-readable NEWEST version provably
-    # means a commit is in flight, so wait briefly, then serialize this read
-    # before that commit by stepping back one version. Only DECODE failures
-    # take this path — a transient resource error (EMFILE, EACCES) or a
-    # vanished file is a real error the caller must see, not a silent
-    # step-back to stale metadata; and when we DO step back, say
-    # so: a permanently corrupt newest version would otherwise hide forever.
+    # Versions are published whole, so the decode-retry below is defense in
+    # depth (e.g. a file an older engine build streamed into the final
+    # name): a half-readable NEWEST version means a commit is in flight, so
+    # wait briefly, then serialize this read before that commit by stepping
+    # back one version. Only DECODE failures take this path — a transient
+    # resource error (EMFILE, EACCES) is a real error the caller must see,
+    # not a silent step-back to stale metadata; and when we DO step back,
+    # say so: a permanently corrupt newest version would otherwise hide
+    # forever.
     last_err: Exception | None = None
     for attempt in range(5):
         try:
-            with open(path) as f:
-                return TableMetadata.from_json(json.load(f)), v
+            return TableMetadata.from_json(json.loads(io.read(path))), v
         except json.JSONDecodeError as e:
             last_err = e
             time.sleep(0.01 * (attempt + 1))
         except FileNotFoundError:
             # retention race (delete-after-commit + small previous-versions
             # -max): the version we listed was trimmed by a commit that
-            # landed between our list and open — re-list; a NEWER current
+            # landed between our list and read — re-list; a NEWER current
             # version provably exists, so this converges
             nv = current_metadata_version(location, io)
             if nv <= v:
@@ -814,8 +784,7 @@ def load_metadata(location: str, io=None) -> tuple[TableMetadata, int]:
         )
         prev = os.path.join(metadata_dir(location), f"v{v - 1}.metadata.json")
         try:
-            with open(prev) as f:
-                return TableMetadata.from_json(json.load(f)), v - 1
+            return TableMetadata.from_json(json.loads(io.read(prev))), v - 1
         except FileNotFoundError:
             # v-1 trimmed by retention while v is undecodable: a commit is
             # in flight (or just landed) — tell the caller to retry rather
@@ -840,14 +809,17 @@ def _previous_versions_max(md: TableMetadata) -> int:
         return 100
 
 
-def _delete_old_metadata(location: str, md: TableMetadata, new_v: int, io=None) -> None:
+def _delete_old_metadata(location: str, md: TableMetadata, new_v: int,
+                         io: FileIO = LOCAL_IO) -> None:
     """Iceberg ``write.metadata.delete-after-commit.enabled``: after a
     successful commit, physically delete metadata versions older than the
     newest ``previous-versions-max`` — without it a long-lived table
     accumulates one metadata file PER COMMIT forever. Keeps v(new-N)..v(new),
     so the corrupt-newest step-back reader (one version) and the commit
-    zombie guard (the expected version) always find their files. Best
-    effort: a failed unlink never fails the already-durable commit."""
+    guard (the expected version) always find their files. Oldest first, so
+    no version is missing while an older one still exists, which the
+    commit guard relies on. Best effort: a failed delete never fails the
+    already-durable commit."""
     if str(md.properties.get(DELETE_AFTER_COMMIT_PROP, "false")).lower() != "true":
         return
     # the property counts PREVIOUS versions (current excluded), so
@@ -855,31 +827,37 @@ def _delete_old_metadata(location: str, md: TableMetadata, new_v: int, io=None) 
     cutoff = new_v - _previous_versions_max(md) - 1
     if cutoff < 1:
         return
-    mdir = metadata_dir(location)
     try:
-        names = ([os.path.basename(p) for p in io.list(mdir)] if io is not None
-                 else os.listdir(mdir))
+        paths = io.list(metadata_dir(location))
     except OSError:
         return
-    for name in names:
-        v = _version_of(name)
-        if v is not None and v <= cutoff:
-            try:
-                if io is not None:
-                    io.delete(os.path.join(mdir, name))
-                else:
-                    os.unlink(os.path.join(mdir, name))
-            except OSError:
-                pass
+    doomed = sorted((v, p) for p in paths
+                    if (v := _version_of(os.path.basename(p))) is not None and v <= cutoff)
+    for _, p in doomed:
+        try:
+            io.delete(p)
+        except OSError:
+            pass
 
 
-def commit_metadata(location: str, md: TableMetadata, expected_version: int, io=None) -> int:
+def commit_metadata(location: str, md: TableMetadata, expected_version: int,
+                    io: FileIO = LOCAL_IO) -> int:
     """Atomically commit metadata as version ``expected_version + 1``.
 
-    Exclusive-create ("x" mode) provides the optimistic-concurrency check the
-    reference delegates to REST assert-ref-snapshot-id requirements
-    (reference: table/table.go:163-176). On collision raises the retryable
-    CommitConflictError (reference: errors.go:115-123).
+    The FileIO's exclusive create of the new version provides the
+    optimistic-concurrency check the reference delegates to REST
+    assert-ref-snapshot-id requirements (reference: table/table.go:163-176);
+    a collision raises the retryable CommitConflictError (reference:
+    errors.go:115-123).
+
+    A guard runs first: ``v{expected_version}`` must still exist. If it is
+    gone while a newer version exists, retention trimmed it behind newer
+    commits, so this handle is stale: CommitConflictError, and the caller's
+    retry reloads. (Creating the trimmed v{expected+1} slot instead would
+    publish a version no reader ever picks over the newer ones, and the
+    commit's rows would be lost.) If no version exists, the table was
+    dropped or renamed under this handle: TableNotFoundError, before any
+    write, so no zombie metadata directory is created.
     """
     mdir = metadata_dir(location)
     new_v = expected_version + 1
@@ -896,63 +874,24 @@ def commit_metadata(location: str, md: TableMetadata, expected_version: int, io=
                    "metadata-file": f"v{expected_version}.metadata.json"},)
                if expected_version > 0 else md.metadata_log)
     md = replace(md, metadata_log=new_log[-prev_max:])
-    if io is not None:
-        # S3: conditional PUT (If-None-Match: *) gives the same exclusive-
-        # create primitive as O_EXCL locally (io/fileio.py S3FileIO.create).
-        # Same zombie guard as the local branch: the prior version must
-        # still exist, else the table was dropped/renamed under this handle.
-        if expected_version > 0 and not io.exists(
-                os.path.join(mdir, f"v{expected_version}.metadata.json")):
-            from ..errors import TableNotFoundError
-            raise TableNotFoundError(
-                f"metadata v{expected_version} gone at {location!r} (table "
-                f"dropped or renamed concurrently); reload from the catalog")
-        try:
-            io.create(path, json.dumps(md.to_json(), indent=1).encode())
-        except FileExistsError as e:
-            raise CommitConflictError(f"metadata version {new_v} already committed at {location}") from e
-        try:
-            io.create(os.path.join(mdir, "version-hint.text"), str(new_v).encode(), overwrite=True)
-        except OSError:
-            pass
-        _delete_old_metadata(location, md, new_v, io=io)
-        return new_v
-    if expected_version == 0:
-        os.makedirs(mdir, exist_ok=True)  # first commit creates the tree
-    elif not os.path.isdir(mdir):
-        # the table tree is GONE (dropped or renamed since this handle
-        # loaded) — recreating it here would resurrect a zombie table
-        # directory the catalog no longer knows about
-        from ..errors import TableNotFoundError
+    if expected_version > 0 and not io.exists(
+            os.path.join(mdir, f"v{expected_version}.metadata.json")):
+        current = current_metadata_version(location, io)
+        if current > expected_version:
+            raise CommitConflictError(
+                f"metadata v{expected_version} at {location!r} was superseded "
+                f"(current v{current}) and retention-trimmed; reload and retry")
         raise TableNotFoundError(
-            f"table metadata directory {mdir!r} no longer exists (table "
+            f"metadata v{expected_version} gone at {location!r} (table "
             f"dropped or renamed concurrently); reload from the catalog")
-    # Write the payload to a temp name, then os.link() it to the final
-    # version path: the final name becomes visible ATOMICALLY with its full
-    # content (listing-based readers can never observe a truncated file) and
-    # link(2) fails with EEXIST if the version was committed concurrently —
-    # the same optimistic-concurrency semantics open("x") gave, without the
-    # read-a-half-written-file window (judge-observed under loaded runs).
-    tmp = os.path.join(mdir, f".v{new_v}.{os.getpid()}.{uuid_mod.uuid4().hex}.tmp")
     try:
-        with open(tmp, "w") as f:
-            json.dump(md.to_json(), f, indent=1)
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, path)
-        except FileExistsError as e:
-            raise CommitConflictError(f"metadata version {new_v} already committed at {location}") from e
-    finally:
-        try:
-            os.unlink(tmp)
-        except OSError:
-            pass
+        io.create(path, json.dumps(md.to_json(), indent=1).encode())
+    except FileExistsError as e:
+        raise CommitConflictError(f"metadata version {new_v} already committed at {location}") from e
     # best-effort current pointer (readers use the version listing as truth)
     try:
-        with open(os.path.join(mdir, "version-hint.text"), "w") as f:
-            f.write(str(new_v))
+        io.create(os.path.join(mdir, "version-hint.text"), str(new_v).encode(), overwrite=True)
     except OSError:
         pass
-    _delete_old_metadata(location, md, new_v)
+    _delete_old_metadata(location, md, new_v, io)
     return new_v

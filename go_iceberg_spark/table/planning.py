@@ -28,9 +28,11 @@ four tiers:
    - otherwise: memory — the kept members are read through the table's
      per-member cache and filtered with ``expr.might_match``.
 
-   Object-storage tables (``Table._mio`` set), tables whose entries are
-   already cached, and Avro-only snapshots (pruned over the whole Avro
-   tree) always plan in memory. The two large tiers never fill the cache.
+   Object-storage tables (``Table.io`` not a ``LocalFileIO``: the large
+   tiers read per scan, which would download their members again on
+   every scan), tables whose entries are already cached, and Avro-only
+   snapshots (pruned over the whole Avro tree) always plan in memory. The
+   two large tiers never fill the cache.
 
 Every tier is conservative in exactly the way ``expr.might_match`` is: a
 file is dropped only when its stats PROVE no row can match; anything

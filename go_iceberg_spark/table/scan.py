@@ -42,6 +42,7 @@ from pyspark.sql import types as T
 
 from ..errors import NoSuchSnapshotError, ValidationError
 from ..expr import ALWAYS_TRUE, ColumnStats, Expression, might_match, simplify, to_column
+from ..io.fileio import LocalFileIO
 from ..schema import DecimalType, FixedType, PrimitiveType, Schema, to_spark_type
 from .metadata import (
     CONTENT_DATA,
@@ -472,7 +473,7 @@ class ScanBuilder:
         proj = proj or md.current_schema
         table = self._table
         cached = os.path.join(table.location, snap.manifest_path) in table._manifest_cache
-        members = None if cached else manifest_members(table.location, snap, table._mio)
+        members = None if cached else manifest_members(table.location, snap, table.io)
         if members is None:
             # every entry already cached, or an Avro-only snapshot
             entries = table.manifest_entries(snap)
@@ -483,7 +484,7 @@ class ScanBuilder:
             # member's aggregate bounds
             members = [m for m in members if m.get("nd", 1) or "bounds" not in m
                        or planning.summary_might_match(m["bounds"], enc, proj)]
-            if table._mio is None:
+            if isinstance(table.io, LocalFileIO):
                 paths = [os.path.join(table.location, m["path"]) for m in members]
                 n = sum(m["n"] for m in members)
                 if n > planning.DISTRIBUTED_THRESHOLD:
@@ -555,7 +556,7 @@ class ScanBuilder:
         table = self._table
         members = None
         if (os.path.join(table.location, snap.manifest_path) not in table._manifest_cache
-                and table._mio is None):
+                and isinstance(table.io, LocalFileIO)):
             members = manifest_members(table.location, snap)
         if members is None:
             entries = table.manifest_entries(snap)

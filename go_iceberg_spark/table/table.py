@@ -70,7 +70,7 @@ class Table:
     def __init__(self, spark: SparkSession, identifier: tuple[str, ...], location: str,
                  metadata: TableMetadata, version: int, max_retries: int = 3, retry_backoff_ms: int = 100,
                  committer=None, loader=None, io=None):
-        from ..io.fileio import LocalFileIO, for_location
+        from ..io.fileio import for_location
 
         self.spark = spark
         self.identifier = identifier
@@ -80,27 +80,25 @@ class Table:
         self.max_retries = max_retries
         self.retry_backoff_ms = retry_backoff_ms
         self._manifest_cache: dict[str, list[DataFileEntry]] = {}
-        # storage routing: all METADATA I/O (metadata JSON, manifests both
-        # dialects) goes through a FileIO picked from the location scheme, so
-        # a table whose location is s3:// commits via conditional PUT.
-        # ``_mio`` is None for local tables — metadata readers/writers then
-        # use their direct-filesystem fast paths (mmap parquet, O_EXCL).
+        # storage routing: all METADATA I/O (metadata JSON, manifests of
+        # both dialects, commits) goes through this FileIO, picked from the
+        # location scheme: a local table publishes each file by temp file
+        # and link or rename, an s3:// table by (conditional) PUT
         self.io = io or for_location(location)
-        self._mio = None if isinstance(self.io, LocalFileIO) else self.io
         # pluggable metadata pointer I/O: FileIO-routed by default; a
         # catalog service (catalog/rest.py) swaps these so the COMMIT runs
         # server-side while data/manifest files stay on shared storage
         # (reference: catalog/rest.go:425-445 CommitTable)
-        self._commit_fn = committer or (lambda md, v: commit_metadata(self.location, md, v, io=self._mio))
-        self._load_fn = loader or (lambda: load_metadata(self.location, io=self._mio))
+        self._commit_fn = committer or (lambda md, v: commit_metadata(self.location, md, v, io=self.io))
+        self._load_fn = loader or (lambda: load_metadata(self.location, io=self.io))
 
     # -- loading ----------------------------------------------------------
     @staticmethod
     def load(spark: SparkSession, location: str, identifier: tuple[str, ...] = ()) -> "Table":
-        from ..io.fileio import LocalFileIO, for_location
+        from ..io.fileio import for_location
 
         io = for_location(location)
-        md, v = load_metadata(location, io=None if isinstance(io, LocalFileIO) else io)
+        md, v = load_metadata(location, io=io)
         return Table(spark, identifier or (os.path.basename(location),), location, md, v, io=io)
 
     def refresh(self) -> "Table":
@@ -137,12 +135,12 @@ class Table:
     def manifest_entries(self, snap: Snapshot) -> list[DataFileEntry]:
         path = os.path.join(self.location, snap.manifest_path)
         if path not in self._manifest_cache:
-            members = manifest_members(self.location, snap, self._mio)
+            members = manifest_members(self.location, snap, self.io)
             if members is None:
                 # Iceberg wire format: manifest LIST -> manifests -> entries
                 from .manifest_avro import read_avro_manifest_tree
 
-                self._manifest_cache[path] = read_avro_manifest_tree(self.location, snap.manifest_path, io=self._mio)
+                self._manifest_cache[path] = read_avro_manifest_tree(self.location, snap.manifest_path, io=self.io)
             else:
                 self._manifest_cache[path] = [
                     e for m in members for e in self._member_entries(m["path"])]
@@ -153,7 +151,7 @@ class Table:
         they cache individually and survive across commits that reuse them."""
         mpath = os.path.join(self.location, rel)
         if mpath not in self._manifest_cache:
-            self._manifest_cache[mpath] = read_manifest(mpath, self._mio)
+            self._manifest_cache[mpath] = read_manifest(mpath, self.io)
         return self._manifest_cache[mpath]
 
     def live_entries(self) -> list[DataFileEntry]:
@@ -224,7 +222,7 @@ class Table:
                 schemas_by_id={s.schema_id: s for s in md.schemas},
                 specs_by_id={p.spec_id: p for p in md.partition_specs},
                 parent_list_rel=parent.avro_list if parent is not None else None,
-                io=self._mio,
+                io=self.io,
             )
         members_out: list[dict] | None = None
         if fmt == "avro":
@@ -321,11 +319,11 @@ class Table:
             members = []
             for gi, grp in enumerate(groups):
                 rel = os.path.join("metadata", f"m-{sid}-g{gi}.parquet")
-                write_manifest(os.path.join(self.location, rel), grp, self._mio)
+                write_manifest(os.path.join(self.location, rel), grp, self.io)
                 self._manifest_cache[os.path.join(self.location, rel)] = list(grp)
                 members.append(self._member_dict(rel, grp))
             manifest_rel = os.path.join("metadata", f"snap-{sid}{MANIFEST_LIST_SUFFIX}")
-            write_manifest_list(os.path.join(self.location, manifest_rel), members, self._mio)
+            write_manifest_list(os.path.join(self.location, manifest_rel), members, self.io)
             return manifest_rel, members
         cur_by_path = {e.file_path: e for e in entries}
         members: list[dict] = []
@@ -333,7 +331,7 @@ class Table:
         part = 0
         # an Avro-only parent (manifest-format flipped) has no parquet
         # members: its whole live set lands in the added member below
-        parent_members = manifest_members(self.location, parent, self._mio) if parent else None
+        parent_members = manifest_members(self.location, parent, self.io) if parent else None
         for pm in parent_members or ():
             mentries = self._member_entries(pm["path"])
             surv = [e for e in mentries if e.file_path in cur_by_path]
@@ -344,25 +342,25 @@ class Table:
             else:
                 rel = os.path.join("metadata", f"m-{sid}-{part}.parquet")
                 part += 1
-                write_manifest(os.path.join(self.location, rel), surv, self._mio)
+                write_manifest(os.path.join(self.location, rel), surv, self.io)
                 self._manifest_cache[os.path.join(self.location, rel)] = surv
                 members.append(self._member_dict(rel, surv))
             covered.update(e.file_path for e in surv)
         added = [e for e in entries if e.file_path not in covered]
         if added or not members:
             rel = os.path.join("metadata", f"m-{sid}-add.parquet")
-            write_manifest(os.path.join(self.location, rel), added, self._mio)
+            write_manifest(os.path.join(self.location, rel), added, self.io)
             self._manifest_cache[os.path.join(self.location, rel)] = added
             members.append(self._member_dict(rel, added))
 
         if force_compact or len(members) > self.MANIFEST_COMPACT_THRESHOLD:
             rel = os.path.join("metadata", f"m-{sid}-compact.parquet")
-            write_manifest(os.path.join(self.location, rel), entries, self._mio)
+            write_manifest(os.path.join(self.location, rel), entries, self.io)
             self._manifest_cache[os.path.join(self.location, rel)] = list(entries)
             members = [self._member_dict(rel, entries)]
 
         manifest_rel = os.path.join("metadata", f"snap-{sid}{MANIFEST_LIST_SUFFIX}")
-        write_manifest_list(os.path.join(self.location, manifest_rel), members, self._mio)
+        write_manifest_list(os.path.join(self.location, manifest_rel), members, self.io)
         return manifest_rel, members
 
     def _retrying(self, build_and_commit) -> Snapshot:

@@ -499,6 +499,7 @@ def _collect_file_stats(paths: list[str], name_to_fid: dict[str, int],
         nrows = meta.num_rows
         fsize = os.path.getsize(path)
         stats: dict[int, dict[str, Any]] = {}
+        nan_sides: set[tuple[int, str]] = set()
         for rg in range(meta.num_row_groups):
             g = meta.row_group(rg)
             for ci in range(g.num_columns):
@@ -541,10 +542,17 @@ def _collect_file_stats(paths: list[str], name_to_fid: dict[str, int],
                             mn, mx = s.min_raw, s.max_raw
                         else:
                             continue
+                    # a NaN footer bound (Spark's writer records NaN as a
+                    # double column's max) is unordered: that side of the
+                    # file's bounds stays absent, as the Iceberg spec has it
+                    nan_sides.update((fid, side) for side, v in (("min", mn), ("max", mx))
+                                     if v != v)
                     if mn is not None and (entry["min"] is None or mn < entry["min"]):
                         entry["min"] = mn
                     if mx is not None and (entry["max"] is None or mx > entry["max"]):
                         entry["max"] = mx
+        for fid, side in nan_sides:
+            stats[fid][side] = None
         for name in exact_bound_names:
             fid = name_to_fid.get(name)
             if fid is None or fid not in stats or name not in pf.schema_arrow.names:

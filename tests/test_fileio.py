@@ -107,6 +107,39 @@ def test_s3_delete_and_list(s3io):
     assert not s3io.exists("s3://warehouse/d/a")
 
 
+@pytest.fixture(params=["local", "s3"])
+def store(request, tmp_path):
+    """(FileIO, root) for each implementation, for the behaviour both share."""
+    if request.param == "local":
+        return LocalFileIO(), str(tmp_path)
+    return request.getfixturevalue("s3io"), "s3://warehouse/root"
+
+
+def test_exclusive_create_on_existing_path_leaves_no_temp_file(store):
+    io, root = store
+    p = f"{root}/m/v1.json"
+    io.create(p, b"one")
+    with pytest.raises(FileExistsError):
+        io.create(p, b"two")
+    assert io.read(p) == b"one"
+    assert io.list(f"{root}/m") == [p]
+
+
+def test_overwrite_replaces_content_and_leaves_no_temp_file(store):
+    io, root = store
+    p = f"{root}/m/list.json"
+    io.create(p, b"first")
+    io.create(p, b"second", overwrite=True)
+    assert io.read(p) == b"second"
+    assert io.list(f"{root}/m") == [p]
+
+
+def test_read_of_missing_path_raises_file_not_found(store):
+    io, root = store
+    with pytest.raises(FileNotFoundError):
+        io.read(f"{root}/m/absent.json")
+
+
 def test_s3_uri_validation():
     from go_iceberg_spark.io.fileio import parse_s3_uri
 

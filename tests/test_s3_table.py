@@ -99,6 +99,25 @@ def test_s3_commit_conflict_via_conditional_put(spark, s3cat):
     assert t2.scan().count() == 10
 
 
+def test_s3_stale_handle_append_lands_after_retention_trim(spark, s3cat):
+    """A handle whose loaded version was retention-trimmed behind newer
+    commits conflicts instead of failing as if the table were gone: the
+    retry reloads and the append's rows land."""
+    cat, _ = s3cat
+    cat.create_table("db", "stale", from_spark_schema(_proto(spark).schema), properties={
+        "write.metadata.delete-after-commit.enabled": "true",
+        "write.metadata.previous-versions-max": "1",
+    })
+    a = cat.load_table("db", "stale")
+    b = cat.load_table("db", "stale")
+    for k in range(3):
+        b.append(_proto(spark, 2, off=10 * k))
+    a.append(_proto(spark, 2, off=990))
+    assert a.version == b.version + 1
+    fresh = cat.load_table("db", "stale")
+    assert sorted(r.id for r in fresh.to_df().collect()) == [0, 1, 10, 11, 20, 21, 990, 991]
+
+
 def test_s3_expire_reclaims_s3_manifests_and_local_data(spark, s3cat, tmp_path):
     cat, io = s3cat
     t = cat.create_table("db", "exp", from_spark_schema(_proto(spark).schema))

@@ -1897,9 +1897,9 @@ def test_add_files_rejects_nonfitting_physical_types(spark, catalog, tmp_path):
 def test_stale_handle_cannot_resurrect_dropped_table(spark, catalog):
     """r6 probe: committing through a handle loaded BEFORE a drop/rename
     recreated the old metadata directory (makedirs in commit_metadata) — a
-    zombie table the catalog no longer knows about. Non-initial commits now
-    require the metadata tree to still exist and raise TableNotFoundError
-    (same guard on the S3 path via io.exists on the expected version)."""
+    zombie table the catalog no longer knows about. A non-initial commit
+    requires its expected version to exist; with no version left at all it
+    raises TableNotFoundError before writing anything."""
     import os
 
     df = spark.createDataFrame([(1, "a")], "id bigint, v string")
@@ -1908,6 +1908,56 @@ def test_stale_handle_cannot_resurrect_dropped_table(spark, catalog):
     with pytest.raises(TableNotFoundError, match="dropped or renamed"):
         t.set_properties({"zombie": "yes"})
     assert not os.path.isdir(os.path.join(t.location, "metadata"))
+
+
+def test_stale_handle_append_lands_after_retention_trim(spark, catalog):
+    """A handle whose loaded version was retention-trimmed behind newer
+    commits must not publish into the trimmed version slot: no reader picks
+    that version over the newer ones, so the append would report success
+    while its rows are lost. The commit conflicts instead, the retry
+    reloads, and the rows land."""
+    def rows(k):
+        return spark.createDataFrame([(k,)], "k bigint")
+
+    catalog.create_table("db", "stale", from_spark_schema(rows(0).schema), properties={
+        "write.metadata.delete-after-commit.enabled": "true",
+        "write.metadata.previous-versions-max": "1",
+    })
+    a = catalog.load_table("db", "stale")
+    b = catalog.load_table("db", "stale")
+    for k in (1, 2, 3):
+        b.append(rows(k))
+    a.append(rows(99))
+    assert a.version == b.version + 1
+    fresh = catalog.load_table("db", "stale")
+    assert fresh.version == a.version
+    assert sorted(r.k for r in fresh.to_df().collect()) == [1, 2, 3, 99]
+
+
+def test_nan_footer_bound_is_stored_absent(spark, catalog):
+    """Spark's parquet writer records NaN as a double column's max. NaN is
+    unordered, so that side of the file's bounds is stored absent (None),
+    and the Avro manifest carries no upper bound for the field, as the
+    Iceberg spec has it; the NaN-free side stays a bound."""
+    from go_iceberg_spark.avro import read_ocf
+    from go_iceberg_spark.table.manifest_avro import member_manifest_paths
+
+    df = spark.range(100).selectExpr(
+        "id", "CASE WHEN id = 50 THEN double('NaN') ELSE double(id) END AS v").coalesce(1)
+    t = catalog.create_table("db", "nanbound", from_spark_schema(df.schema))
+    t.append(df)
+    fid = t.schema.find_field("v").field_id
+    (entry,) = t.live_entries()
+    assert entry.column_stats[fid]["min"] == 0.0
+    assert entry.column_stats[fid]["max"] is None
+
+    avro_list = t.current_snapshot().avro_list
+    (member,) = member_manifest_paths(t.location, avro_list)
+    _, _, records = read_ocf(os.path.join(t.location, member))
+    data_file = records[0]["data_file"]
+    assert fid in {kv["key"] for kv in data_file["lower_bounds"]}
+    assert fid not in {kv["key"] for kv in data_file["upper_bounds"] or []}
+    assert [r.id for r in t.scan().filter(E.col("v").gt(1000.0)).to_df().collect()] == [50]
 
 
 def test_stamp_refuses_overwriting_resolved_width(spark, catalog):
