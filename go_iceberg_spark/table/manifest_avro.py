@@ -912,7 +912,8 @@ def _partition_stat_value(pf, t, v):
 # ---------------------------------------------------------------------------
 
 
-def read_avro_manifest_tree(location: str, list_rel_path: str, io: FileIO = LOCAL_IO) -> list[DataFileEntry]:
+def read_avro_manifest_tree(location: str, list_rel_path: str,
+                            io: FileIO = LOCAL_IO) -> list[DataFileEntry]:
     """Manifest list → manifests → DataFileEntry list (the inverse of
     ``write_avro_manifests``; reference: spec/avro.go:178-244 + :435-534).
     The manifest-list sequence number is passed down for the spec's

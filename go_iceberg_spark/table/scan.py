@@ -557,7 +557,7 @@ class ScanBuilder:
         members = None
         if (os.path.join(table.location, snap.manifest_path) not in table._manifest_cache
                 and isinstance(table.io, LocalFileIO)):
-            members = manifest_members(table.location, snap)
+            members = manifest_members(table.location, snap, table.io)
         if members is None:
             entries = table.manifest_entries(snap)
             total = sum(e.record_count for e in entries if e.content == CONTENT_DATA)
