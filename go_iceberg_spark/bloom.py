@@ -36,8 +36,8 @@ def bloom_key(value) -> str:
 
     Integral numerics canonicalize to the int rendering: Spark coerces
     ``int_col = 5.0`` to a match, so a float/decimal literal must probe the
-    same key the int column's writer hashed (pre-r6 ``str(5.0)`` = "5.0"
-    missed the stored "5" — a bloom false NEGATIVE, i.e. silent row loss).
+    same key the int column's writer hashed (``str(5.0)`` = "5.0" would
+    miss the stored "5" — a bloom false NEGATIVE, i.e. silent row loss).
     Non-integral numerics keep their rendering: they can never equal an int
     value, so a miss is correct."""
     if isinstance(value, bool):

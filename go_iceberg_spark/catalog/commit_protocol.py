@@ -9,9 +9,7 @@ the update actions an Iceberg catalog service expects
 (reference: catalog/catalog.go:131-180 TableRequirement/TableUpdate,
 :172-280 the requirement/update constructors).
 
-Used by ``rest_server.py`` (check + apply) and ``rest.py`` (diff + send),
-replacing the earlier whole-metadata + expected-version commit body. The
-legacy body is still accepted by the server for compatibility.
+Used by ``rest_server.py`` (check + apply) and ``rest.py`` (diff + send).
 """
 
 from __future__ import annotations

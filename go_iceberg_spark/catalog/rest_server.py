@@ -16,8 +16,8 @@ protocol assumes). Endpoints:
     GET|HEAD|DELETE /v1/namespaces/{ns}/tables/{t}
     POST   /v1/namespaces/{ns}/tables/{t}/commit
            {"requirements": [...], "updates": [...]}  (Iceberg wire shape;
-           requirement failure or CAS race -> 409). The pre-protocol body
-           {"expected-version": N, "metadata": {...}} is still accepted.
+           requirement failure or CAS race -> 409; a body with neither
+           key -> 400).
     POST   /v1/tables/rename
 
 Commit vocabulary (assert-create / assert-table-uuid / assert-ref-snapshot-id
@@ -224,27 +224,22 @@ class _Handler(BaseHTTPRequestHandler):
         if current_metadata_version(loc) == 0:
             return self._error(404, f"table {ns}.{name} not found")
         body = self._body()
-        if "requirements" in body or "updates" in body:
-            # Iceberg REST wire shape: assert requirements against the
-            # service's current metadata, apply update actions to it
-            # (reference: catalog/catalog.go:131-280)
-            from .commit_protocol import apply_updates, check_requirements
+        if "requirements" not in body and "updates" not in body:
+            return self._error(400, "commit body needs requirements or updates")
+        # Iceberg REST wire shape: assert requirements against the service's
+        # current metadata, apply update actions to it
+        # (reference: catalog/catalog.go:131-280)
+        from .commit_protocol import apply_updates, check_requirements
 
-            base, base_v = load_metadata(loc)
-            try:
-                check_requirements(base, body.get("requirements", []))
-                md = apply_updates(base, body.get("updates", []))
-                v = commit_metadata(loc, md, base_v)
-            except (RequirementFailedError, CommitConflictError) as e:
-                return self._error(409, str(e))
-            return self._send(200, {"metadata-location": loc,
-                                    "metadata": md.to_json(), "version": v})
-        md = TableMetadata.from_json(body["metadata"])
+        base, base_v = load_metadata(loc)
         try:
-            v = commit_metadata(loc, md, int(body["expected-version"]))
-        except CommitConflictError as e:
+            check_requirements(base, body.get("requirements", []))
+            md = apply_updates(base, body.get("updates", []))
+            v = commit_metadata(loc, md, base_v)
+        except (RequirementFailedError, CommitConflictError) as e:
             return self._error(409, str(e))
-        return self._send(200, {"metadata-location": loc, "version": v})
+        return self._send(200, {"metadata-location": loc,
+                                "metadata": md.to_json(), "version": v})
 
     def _rename(self):
         st = self.state

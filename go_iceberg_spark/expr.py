@@ -385,7 +385,7 @@ def might_match(e: Expression, stats: dict[str, ColumnStats]) -> bool:
     if lo is None or hi is None:
         return True
 
-    # NaN guard (r6, mirrors must_match's): Spark/Iceberg order NaN ABOVE
+    # NaN guard (mirrors must_match's): Spark/Iceberg order NaN ABOVE
     # every float, but parquet min/max bounds EXCLUDE NaN — so a float file
     # whose non-NaN max is 5 can still hold rows satisfying x > 100 (its NaN
     # rows). Pruning on the HIGH side, or on a NaN literal, is only legal

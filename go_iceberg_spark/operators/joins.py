@@ -145,8 +145,8 @@ def salted_join(
     if salt_source is None:
         salt_source = next((c for c in left.columns if c not in on), None)
     if salt_source is None:
-        # key-only left side (same fallback as hot_key_isolated_join, r6
-        # ADVICE): nothing to hash — spread rows round-robin by row id; the
+        # key-only left side (same fallback as hot_key_isolated_join):
+        # nothing to hash — spread rows round-robin by row id; the
         # salt never reaches the output so nondeterminism across runs is fine
         salt_expr = F.pmod(F.monotonically_increasing_id(), F.lit(salt_buckets))
     else:
@@ -193,7 +193,7 @@ def hot_key_isolated_join(
     ``salt_source`` must be HIGH-CARDINALITY among the hot rows — the salt
     is ``xxhash64(salt_source) % salt_buckets``, so a constant or
     low-cardinality column lands every hot row in one bucket and silently
-    defeats the isolation (r5 ADVICE). Auto-pick uses the first non-key
+    defeats the isolation. Auto-pick uses the first non-key
     column; when the left side has ONLY key columns it falls back to a
     per-row ``monotonically_increasing_id`` spread, which is always evenly
     distributed and never changes the result (the salt column is dropped
@@ -205,22 +205,22 @@ def hot_key_isolated_join(
         sample = left.select(*on)
         if sample_fraction is not None:
             sample = sample.sample(fraction=sample_fraction, seed=7)
-        # ONE detection collect (r12; was two — mean, then top-k filter —
-        # over the recomputed count table): union the global-mean row with
+        # ONE detection collect, not two (mean, then top-k filter, over
+        # the recomputed count table): union the global-mean row with
         # the overall top max_hot_keys rows. Thresholding client-side is
         # EQUIVALENT to filter-then-top-k because the predicate
         # (count > mean*factor) is monotone in the ordering key: any
         # survivor outside the overall top-k is outranked by k rows that
         # all survive too, so survivors-top-k == top-k ∩ survivors.
         #
-        # r13: the count table is EAGERLY localCheckpoint'ed before the
-        # union — the r12 shape used a lazy persist() read by BOTH union
-        # branches, and under AQE sibling subtrees materialize concurrently
-        # from the coordinator pool, so both branches could miss the
-        # still-empty cache and run the corpus-wide groupBy twice inside
-        # the one job (the same race dedup.py:388 documents for the minhash
-        # signature self-join; the r12 driver bench measured this query
-        # 25% SLOWER than the two-action r11 shape). The checkpoint
+        # The count table is EAGERLY localCheckpoint'ed before the union.
+        # A lazy persist() read by BOTH union branches races: under AQE
+        # sibling subtrees materialize concurrently from the coordinator
+        # pool, so both branches can miss the still-empty cache and run the
+        # corpus-wide groupBy twice inside the one job (the same race
+        # dedup.py documents for the minhash signature self-join; the
+        # driver bench measured that shape 25% SLOWER than two separate
+        # actions). The checkpoint
         # materializes the distinct-keys-sized count table exactly once
         # (executor-local blocks, freed by GC); both branches then read
         # blocks, not lineage.
@@ -299,7 +299,7 @@ def fuzzy_match_join(
     ``dist``.
 
     The explode(array(levenshtein)) wrapper is a pushdown barrier (same
-    pattern as the cosine pair streams, r7): without it Catalyst pushes the
+    pattern as the cosine pair streams): without it Catalyst pushes the
     ``dist <= max_dist`` filter into the hash-join condition, evaluating
     the O(len²) levenshtein TWICE per in-block pair — once in the condition
     and again for the output column. The Generate pipelines in the join
@@ -328,7 +328,7 @@ def scd2_lookup(
     end_col: str = "valid_to_seq",
     how: str = "left",
 ) -> DataFrame:
-    """Point-in-time dimension lookup against an SCD2 history (r11): each
+    """Point-in-time dimension lookup against an SCD2 history: each
     fact joins the version row whose validity interval
     ``[start_col, end_col)`` contains the fact's ``seq_col`` — the
     consumer side of ``Table.scd2_apply`` (reproducible training joins:
@@ -411,8 +411,8 @@ def bloom_prefilter(
     bit_or-aggregates them into <= n_bits/64 words. ``n_bits=None``
     (default) AUTO-SIZES from a distinct-count of the build keys via
     ``bloom_size_bits`` — a fixed 2^17 is right for ~10^4 keys and
-    saturates uselessly at 10^6 (r10 judge). The sizing count is
-    ``approx_count_distinct`` (r12): a single partial-aggregated pass on
+    saturates uselessly at 10^6. The sizing count is
+    ``approx_count_distinct``: a single partial-aggregated pass on
     the SMALL side with a one-row exchange, instead of distinct().count()
     which shuffled every distinct key just to size a power-of-two bitmap
     (guide §2.3 — the ±2% HLL error is absorbed by the power-of-two
@@ -430,9 +430,9 @@ def bloom_prefilter(
     build = small.na.drop(subset=on)
     hashes = None
     if n_bits is None:
-        # Single-pass build for small key sets (r12, guide §3.2 — the old
-        # shape scanned the build side twice before the join even ran:
-        # once to size, once to aggregate the bitmap): collect the
+        # Single-pass build for small key sets (guide §3.2; sizing and
+        # aggregating separately would scan the build side twice before
+        # the join even ran): collect the
         # DISTINCT xxhash64 values themselves while they fit in a bounded
         # budget (<= 2^16 hashes = 512 KB — the same driver-boundedness
         # contract as the bitmap collect below) and assemble the bitmap
@@ -480,7 +480,7 @@ def bloom_prefilter(
 
     # temp names derived AWAY from the probe frame's columns: withColumn
     # REPLACES same-named columns, so fixed names would silently drop a
-    # user column that happened to be called _bf_h (r10 ADVICE)
+    # user column that happened to be called _bf_h
     taken = set(big.columns)
 
     def uniq(base: str) -> str:
@@ -494,7 +494,7 @@ def bloom_prefilter(
         # ONE parsed SQL literal, not F.lit(list): PySpark's F.lit on a
         # Python list issues one py4j call per element — measured 1.3-2.4 s
         # of driver round-trips for 2048 words vs ~5 ms for a single
-        # F.expr parse (r12; the array constant-folds to the identical
+        # F.expr parse (the array constant-folds to the identical
         # Literal either way, so the plan and results are unchanged)
         probe, bitmap = big, F.expr(
             "array(" + ",".join(f"{w}L" for w in arr) + ")")
@@ -507,7 +507,7 @@ def bloom_prefilter(
         probe, bitmap = big.crossJoin(F.broadcast(bm_df)), F.col(bm_col)
 
     # THREE batched plan nodes (hash select -> positions select -> filter)
-    # instead of 9 chained withColumns (r12): every withColumn re-analyzes
+    # instead of 9 chained withColumns: every withColumn re-analyzes
     # the growing plan, and with a 2048-element bitmap array in the tree
     # each pass re-visits those child literals — measured ~0.5 s of pure
     # driver analysis per invocation at the minimum bitmap size

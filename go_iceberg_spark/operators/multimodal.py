@@ -90,7 +90,7 @@ def extract_features(df: DataFrame, id_col: str, bytes_col: str = "media_bytes")
 
     # NULL payloads (fetch failures are routine in media tables) have no
     # features — drop them BEFORE the Arrow batch instead of len(None)-ing
-    # inside it (r6 probe)
+    # inside it
     return (df.select(id_col, bytes_col)
             .filter(F.col(bytes_col).isNotNull())
             .mapInPandas(process, out_schema))
@@ -98,7 +98,7 @@ def extract_features(df: DataFrame, id_col: str, bytes_col: str = "media_bytes")
 
 def parse_image_header(b: bytes) -> tuple[str | None, int | None, int | None]:
     """REAL (format, width, height) from container header bytes — stdlib
-    ``struct`` only, no codec (r11, VERDICT task #5): PNG IHDR, JPEG SOFn
+    ``struct`` only, no codec: PNG IHDR, JPEG SOFn
     segment walk, GIF logical-screen descriptor, BMP info header. Returns
     (None, None, None) for unrecognized/truncated payloads — metadata
     extraction over a 100 TB media crawl must tolerate garbage rows, not
@@ -219,7 +219,7 @@ def attach_synthetic_images(df: DataFrame, id_col: str) -> DataFrame:
 
 
 def synth_bmp_bytes(width: int, height: int, seed: int) -> bytes:
-    """Fixture builder (r12): a REAL uncompressed 24-bit BMP —
+    """Fixture builder: a REAL uncompressed 24-bit BMP —
     BITMAPFILEHEADER + BITMAPINFOHEADER, BI_RGB, bottom-up rows padded to 4
     bytes — whose pixel (x, y) is the closed form
     R=(7x+13y+seed)%256, G=(3x+5y+seed)%256, B=(x+y+seed)%256, so any
@@ -297,7 +297,7 @@ def attach_synthetic_bmps(df: DataFrame, id_col: str) -> DataFrame:
 
 def decode_image(df: DataFrame, id_col: str, bytes_col: str = "media_bytes",
                  *, skip_unsupported: bool = False) -> DataFrame:
-    """PIXEL decode (r12, VERDICT r11 task #7): uncompressed 24-bit BMP
+    """PIXEL decode: uncompressed 24-bit BMP
     decodes for REAL with stdlib ``struct`` (``decode_bmp_pixels`` — BGR
     flip, bottom-up flip, stride un-padding); PNG/JPEG/GIF still need
     codec libraries absent in this container, so those payloads RAISE
@@ -347,7 +347,7 @@ def resize_images(
     df: DataFrame, id_col: str, bytes_col: str = "media_bytes", *, width: int = 224, height: int = 224
 ) -> DataFrame:
     """Image resize over mapInPandas. Uncompressed 24-bit BMP payloads get a
-    REAL nearest-neighbor resample (r12: decode via ``decode_bmp_pixels``,
+    REAL nearest-neighbor resample (decode via ``decode_bmp_pixels``,
     source index sx = xo*src_w//out_w — pure integer arithmetic, pinned
     byte-for-byte by the ``multimodal_bmp_resize_checksum`` oracle); other
     formats fall back to the deterministic byte-cycle stub (codecs absent

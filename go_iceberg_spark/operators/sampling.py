@@ -26,9 +26,9 @@ from .dedup import portable_hash60
 # NULL ids must hash DETERMINISTICALLY (all NULL-id rows share one hash and
 # keep or drop together per rate), not silently vanish from every sample:
 # hash(NULL) is NULL, NULL < rate is NULL, and a NULL filter condition drops
-# the row — the r7 degenerate sweep's silent-loss class (resample_locf's
-# twin). Oracles mirror the same sentinel. Collision with a real string id
-# literally equal to '<<null>>' is accepted and documented.
+# the row (resample_locf guards NULL keys for the same reason). Oracles
+# mirror the same sentinel. Collision with a real string id literally equal
+# to '<<null>>' is accepted and documented.
 NULL_ID_SENTINEL = "<<null>>"
 
 

@@ -33,9 +33,9 @@ def kmv_distinct(df: DataFrame, group_cols: list[str], value_col: str, *, k: int
     # md5 needs string/binary input; numeric keys hash via their decimal
     # string form (matches the oracle's CAST(x AS VARCHAR)). NULL values
     # are NOT distinct values (COUNT DISTINCT semantics) — and their NULL
-    # hash used to inflate n_exact past the sketch's size while
-    # collect_list dropped it, so a group with exactly k distincts plus a
-    # NULL crashed ANSI element_at(_mins, k) (r7 degenerate sweep).
+    # hash would inflate n_exact past the sketch's size while
+    # collect_list drops it, so a group with exactly k distincts plus a
+    # NULL would crash ANSI element_at(_mins, k).
     h = portable_hash60(F.col(value_col).cast("string"))
     g = (df.filter(F.col(value_col).isNotNull())
          .select(*group_cols, h.alias("_h")).distinct())
@@ -75,7 +75,7 @@ def kmv_set_ops(a: DataFrame, b: DataFrame, value_col: str, *, k: int = 64) -> D
     the set algebra is array expressions over the two single rows — nothing
     corpus-sized ever joins or aggregates."""
     def sketch(df: DataFrame, name: str) -> DataFrame:
-        # NULLs are not set members (kmv_distinct's r7 NULL rule)
+        # NULLs are not set members (kmv_distinct's NULL rule)
         h = portable_hash60(F.col(value_col).cast("string"))
         return (
             df.filter(F.col(value_col).isNotNull())
@@ -100,7 +100,7 @@ def kmv_set_ops(a: DataFrame, b: DataFrame, value_col: str, *, k: int = 64) -> D
     ))
     est_u = est(F.col("_mu"), F.col("_nu"))
     # two empty audiences: union sketch is empty — Jaccard is defined as
-    # 0.0 rather than crashing ANSI division (r7 degenerate sweep)
+    # 0.0 rather than crashing ANSI division
     jacc = F.when(F.col("_nu") > 0,
                   inter.cast("double") / F.col("_nu")).otherwise(F.lit(0.0))
     return out.select(
@@ -136,9 +136,9 @@ def histogram_quantiles(
     construction), then all quantile arithmetic runs on the tiny bin
     table. Nothing else touches the corpus. Output: (q, est).
 
-    Degenerate guards (r8 sweep): hi <= lo silently produced negative-
-    width-bin garbage (hi == lo was an ANSI DIVIDE_BY_ZERO job kill),
-    bins < 1 a raw ZeroDivisionError — all rejected driver-side."""
+    Degenerate guards: hi <= lo would produce negative-width-bin garbage
+    (hi == lo an ANSI DIVIDE_BY_ZERO job kill), bins < 1 a raw
+    ZeroDivisionError — all rejected driver-side."""
     from ..errors import ValidationError
 
     if not hi > lo:
@@ -253,7 +253,7 @@ def cms_sketch(df: DataFrame, value_col: str, *, d: int = 4, w: int = 256,
     data. No per-value state anywhere (the CMS point: frequency estimates
     over an unbounded key domain in O(d*w) memory).
 
-    ``pre_aggregate`` (r12): when the caller KNOWS the value domain is
+    ``pre_aggregate``: when the caller KNOWS the value domain is
     bounded (an enum, a bucketed/modulo key), count per distinct value
     first and hash each value once — d md5 calls per DISTINCT value
     instead of per ROW (the graded %97 fixture: 6M md5 calls -> ~400).
@@ -283,7 +283,7 @@ def cms_estimate(sketch: DataFrame, candidates: DataFrame, value_col: str, *,
     hash evaluations and a map-side join — no shuffle of the candidates.
 
     Probing with d/w different from the build's silently turns misses into
-    est=0 and drops true heavy hitters (r10 ADVICE), so the plan carries a
+    est=0 and drops true heavy hitters, so the plan carries a
     consistency guard: the sketch's observed max row must be exactly d-1
     (every row index is populated by any non-trivial input) and its max
     bucket must be < w — violated, the query RAISES instead of returning

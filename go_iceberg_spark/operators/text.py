@@ -438,8 +438,8 @@ def repetition_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     linear in corpus size, no Python in the loop."""
     # coalesce: NULL-text docs must score (as empty), not vanish. Bigrams
     # via slice+zip_with, not sequence(1, size-1): Spark's sequence runs
-    # DESCENDING when start > stop, so a one-token doc produced [1, 0] and
-    # element_at(_t, 2) crashed with an out-of-bounds (r6 probe); slice with
+    # DESCENDING when start > stop, so a one-token doc would produce [1, 0]
+    # and element_at(_t, 2) would fail out of bounds; slice with
     # length 0 just yields no bigrams.
     toks = F.split(F.coalesce(F.col(text_col), F.lit("")), " ")
     base = df.select(F.col(id_col), toks.alias("_t"))

@@ -52,7 +52,7 @@ def resample_locf(
     w = Window.partitionBy("_k").orderBy("_b").rowsBetween(Window.unboundedPreceding, 0)
     # null-SAFE key equality: a NULL key is a legal group (groupBy keeps it),
     # but a null-unsafe spine join would never match it — its cells all came
-    # back n=0 with the events silently zeroed (r7 degenerate sweep find).
+    # back n=0 with the events silently zeroed.
     # _b needs no null-safety (spine buckets come from sequence(), never NULL;
     # NULL-ts events have no grid cell and stay out by design).
     return (
@@ -78,7 +78,7 @@ def resample_interpolate(
     decimals: int = 4,
 ) -> DataFrame:
     """Resample to a fixed ``bucket`` grid per key with LINEAR interpolation
-    across interior gaps (r11 — the numeric complement of
+    across interior gaps (the numeric complement of
     ``resample_locf``): each empty cell between two observed cells takes
     the time-weighted value between its nearest observed neighbors;
     cells before the first / after the last observation stay NULL
@@ -148,9 +148,9 @@ def merge_intervals(
     gaps-and-islands primitive behind session stitching, speech/VAD segment
     coalescing, and per-user activity spans. ``start_col``/``end_col`` are
     numeric (convert timestamps to epoch seconds first; keeps the arithmetic
-    engine-portable). Inverted intervals (end < start) are dropped, the
-    r7 range-join rule. Output: (key, island_start, island_end, n_intervals)
-    with one row per merged island.
+    engine-portable). Inverted intervals (end < start) are dropped, as
+    ``range_join_days`` drops them. Output: (key, island_start, island_end,
+    n_intervals) with one row per merged island.
 
     Shape: one running-max window per key ordered by (start, end) marks
     island heads (start > max(end) of everything before + gap), a running

@@ -74,8 +74,8 @@ def _lineage(md: TableMetadata, from_id: int | None, to_id: int | None) -> list[
         # the checkpoint's offset snapshot was EXPIRED: its manifest (the
         # only record of what the stream already delivered) is gone, so an
         # incremental resume cannot be reconstructed — say that, instead of
-        # the misleading "not an ancestor" a failed ancestry walk produces
-        # (r6 probe). Protect streams by retaining at least the checkpoint
+        # the misleading "not an ancestor" a failed ancestry walk
+        # produces. Protect streams by retaining at least the checkpoint
         # horizon (retain_last / a branch ref on the offset snapshot).
         raise ValidationError(
             f"stream offset snapshot {from_id} has been expired from the "
@@ -122,7 +122,7 @@ class SnapshotStreamReader(DataSourceStreamReader):
         self.skip_non_append = str(options.get("skip-non-append", "false")).lower() == "true"
         start = options.get("start-snapshot-id")
         self.start_snapshot_id = int(start) if start is not None else None
-        # r12 (VERDICT r11 task #8): maxFilesPerTrigger-style backpressure.
+        # maxFilesPerTrigger-style backpressure.
         # Offsets carry (snapshot_id, file_cursor): cursor K means "the
         # first K ADDED files of that snapshot are delivered", None means
         # the snapshot is complete — so one compaction-sized snapshot

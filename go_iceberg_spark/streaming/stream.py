@@ -70,9 +70,9 @@ def _ancestry_ids(md) -> set:
 
 def _batch_already_committed(table: Table, ckpt_id: str, batch_id: int) -> bool:
     """A replayed batch is detected by EITHER signal: the per-checkpoint
-    high-water property (survives snapshot expiry — r6 probe found that an
-    expire_snapshots between crash and restart could remove the marker
-    snapshot and let the replay double-apply), or the (ckpt, batch) marker
+    high-water property (survives snapshot expiry: an expire_snapshots
+    between crash and restart can remove the marker snapshot, and the
+    replay would then double-apply), or the (ckpt, batch) marker
     in a snapshot summary ON THE CURRENT LINEAGE (covers tables whose
     properties were hand-edited; abandoned rollback branches don't count —
     their batches are no longer in the table state). Batch ids are
@@ -110,9 +110,9 @@ def rebased_stream_high_water(md, new_head_id: int) -> dict[str, str]:
     even though its marker snapshot is gone (e.g. rollback to a tag-
     retained snapshot across an expired gap), so keeping the mark would
     permanently dedupe a legitimately replayable batch — silent stream
-    data loss (r6 ADVICE). The mark drops to what retained in-ancestry
-    markers prove (or is removed). Legacy tables without the seq property
-    keep the old behavior (expired ⇒ assume applied)."""
+    data loss. The mark drops to what retained in-ancestry markers prove
+    (or is removed). A mark without its seq property keeps the
+    expired ⇒ applied rule."""
     props = dict(md.properties)
     by_id = {s.snapshot_id: s for s in md.snapshots}
     anc, sid = set(), new_head_id
@@ -132,7 +132,7 @@ def rebased_stream_high_water(md, new_head_id: int) -> dict[str, str]:
         else:
             abandoned.setdefault(ckpt, []).append(int(b))
     # property-only checkpoints (all markers expired) must be re-examined
-    # too — they were the r6 blind spot
+    # too: no marker snapshot names them
     prop_ckpts = {k[len(HIGH_WATER_PROP):] for k in props if k.startswith(HIGH_WATER_PROP)}
     for ckpt in set(in_anc) | set(abandoned) | prop_ckpts:
         key = HIGH_WATER_PROP + ckpt
@@ -219,7 +219,7 @@ def dedup_stream(df: DataFrame, table: Table, checkpoint_dir: str, keys: list[st
                  event_time_col: str | None = None,
                  watermark_delay: str = "10 minutes",
                  trigger_once: bool = False, processing_time: str | None = None):
-    """Streaming cross-batch DEDUPLICATION sink (r11): re-observed keys are
+    """Streaming cross-batch DEDUPLICATION sink: re-observed keys are
     filtered by the streaming state store — no table read per batch — and
     surviving first-seen rows append exactly-once (same checkpoint +
     snapshot-marker scheme as ``append_stream``). This is the streaming
@@ -258,7 +258,7 @@ def dedup_stream(df: DataFrame, table: Table, checkpoint_dir: str, keys: list[st
 def scd2_stream(df: DataFrame, table: Table, checkpoint_dir: str, keys: list[str], *,
                 seq_col: str, drop_unchanged: bool = False,
                 trigger_once: bool = False, processing_time: str | None = None):
-    """Streaming SCD TYPE-2 sink (r11): each micro-batch of versioned
+    """Streaming SCD TYPE-2 sink: each micro-batch of versioned
     updates applies through ``scd2_apply`` — one merge snapshot per batch,
     versions chained within the batch, the key's open row closed at the
     batch's first new sequence. Exactly-once leans on TWO layers: the
@@ -320,7 +320,7 @@ def upsert_stream(df: DataFrame, table: Table, checkpoint_dir: str, keys: list[s
             )
         else:
             # key-only batch: every row of a key is identical — the window
-            # form crashed on its empty ORDER BY (r7 degenerate sweep)
+            # form would crash on its empty ORDER BY
             latest = batch_df.dropDuplicates(keys)
         table.upsert(latest, keys,
                      summary_extra={BATCH_MARKER_KEY: f"{ckpt_id}:{batch_id}"},
@@ -421,7 +421,7 @@ def agg_view_stream(df: DataFrame, table: Table, checkpoint_dir: str,
                     count_col: str, sum_cols: dict[str, str] | None = None,
                     trigger_once: bool = False,
                     processing_time: str | None = None):
-    """Streaming AGGREGATE-VIEW maintenance sink (r9): each micro-batch
+    """Streaming AGGREGATE-VIEW maintenance sink: each micro-batch
     reduces to per-group partials (count + sums) that MERGE into the view
     table ADDITIVELY — matched groups add the partials, new groups insert —
     one snapshot per batch. The streaming complement of
@@ -455,7 +455,7 @@ def hll_view_stream(df: DataFrame, table: Table, checkpoint_dir: str,
                     group_keys: list[str], value_col: str, *, p: int = 9,
                     trigger_once: bool = False,
                     processing_time: str | None = None):
-    """Streaming DISTINCT-COUNT view via HyperLogLog registers (r10): each
+    """Streaming DISTINCT-COUNT view via HyperLogLog registers: each
     micro-batch's (group, bucket, register) rows MERGE into the view table
     by GREATEST — the table holds the live registers, and
     ``hll_view_estimate`` turns them into per-group distinct estimates at
@@ -531,10 +531,10 @@ def agg_view_commit_batch(table: Table, ckpt_id: str, batch_df: DataFrame,
                           count_col: str,
                           sum_cols: dict[str, str] | None = None) -> bool:
     """The agg-view sink's per-batch commit path (module-level so the model
-    fuzz walk can drive the REAL code with crash-replays — r10, VERDICT r9
-    task #5). Returns True when the batch applied, False when the
-    exactly-once check deduplicated it (marker snapshot, or — after that
-    snapshot expired — the high-water property)."""
+    fuzz walk can drive the REAL code with crash-replays). Returns True
+    when the batch applied, False when the exactly-once check deduplicated
+    it (marker snapshot, or — after that snapshot expired — the high-water
+    property)."""
     from pyspark.sql import functions as F
 
     from ..table.table import COMMIT_SEQ_PLACEHOLDER

@@ -27,12 +27,10 @@ the CoW changelog path, each bounded by the size of one snapshot's rewrite.
 
 from __future__ import annotations
 
-import decimal
-
 from pyspark.sql import DataFrame, functions as F
 
 from ..errors import ValidationError
-from ..schema import DecimalType, FixedType, PrimitiveType, to_spark_type
+from ..schema import FixedType, PrimitiveType, to_spark_type
 from .metadata import (
     CONTENT_DATA,
     CONTENT_EQUALITY_DELETES,
@@ -81,9 +79,9 @@ def snapshots_between(table, from_snapshot_id: int | None, to_snapshot_id: int |
 
 
 def _entry_diff(table, snap: Snapshot) -> tuple[list[DataFileEntry], list[DataFileEntry]]:
-    """(added, removed) entries of one snapshot vs its parent — the manifest
-    is the full live set (single-manifest design), so the delta is a path
-    set difference."""
+    """(added, removed) entries of one snapshot vs its parent — each
+    snapshot's manifest tree lists its full live set, so the delta is a
+    path set difference."""
     cur = {e.file_path: e for e in table.manifest_entries(snap)}
     if snap.parent_snapshot_id is None:
         return list(cur.values()), []
@@ -136,20 +134,13 @@ def _bound_key(schema, fid: int, v):
     """Decode an ``encode_stat`` bound (write.py:362-392) into a value whose
     </> order matches the column's REAL order, or None to refuse (caller
     keeps the file). Ints/bools/dates/timestamps ride as ints; decimals as
-    unscaled ints (str(Decimal) would sort '200' < '99' lexicographically;
-    legacy str bounds from older manifests decode back to Decimal,
-    numerically comparable with the ints); genuine strings and hex-encoded
-    binary/fixed are lexicographic by construction; floats are NaN-unsafe
-    (NaN hides from min/max, so a bound could lose rows) and refuse."""
+    unscaled ints (str(Decimal) would sort '200' < '99' lexicographically);
+    genuine strings and hex-encoded binary/fixed are lexicographic by
+    construction; floats are NaN-unsafe (NaN hides from min/max, so a bound
+    could lose rows) and refuse."""
     f = schema.find_field_by_id(fid)
     if f is None:  # dropped/unknown field: can't reason
         return None
-    if isinstance(f.type, DecimalType) and isinstance(v, str):
-        try:  # legacy manifest: str(Decimal) bound
-            return decimal.Decimal(v).scaleb(
-                f.type.scale, decimal.Context(prec=60))
-        except decimal.InvalidOperation:
-            return None
     if isinstance(v, bool) or isinstance(v, int):
         return v
     if isinstance(v, str) and (
@@ -271,7 +262,7 @@ def changelog_scan(
                 # position deletes name their target files — prune the
                 # before/after read to just those (an equality delete can
                 # hit any older file, so bounds do the pruning below)
-                hit = {r[0] for r in read_tombstones(table, new_dels, live_data)
+                hit = {r[0] for r in read_tombstones(table, new_dels)
                        .select(POS_DELETE_FILE_COL).distinct().collect()}
                 live_data = [e for e in live_data
                              if _file_key(table.location, e.file_path) in hit]

@@ -331,7 +331,7 @@ def rewrite_data_files(table, *, target_file_size_bytes: int = 128 * 1024 * 1024
             keep_pos: set[str] = set()
             if pos_dels and untouched:
                 live = [_file_key(table.location, u.file_path) for u in untouched]
-                keep_pos = {r[0] for r in read_tombstones(table, pos_dels, untouched)
+                keep_pos = {r[0] for r in read_tombstones(table, pos_dels)
                             .filter(F.col(POS_DELETE_FILE_COL).isin(live))
                             .select("_delete_file").distinct().collect()}
             kept_deletes = [
@@ -385,7 +385,7 @@ def rewrite_position_deletes(table):
                  if e.content not in (CONTENT_DATA, CONTENT_POSITION_DELETES)]
         if not pos:
             return None
-        tomb = read_tombstones(table, pos, data)
+        tomb = read_tombstones(table, pos)
         fseq = table.spark.createDataFrame(
             [(_file_key(table.location, e.file_path), e.sequence_number) for e in data],
             "file_path string, _fseq long")
@@ -594,7 +594,7 @@ def manifests_df(table) -> DataFrame:
         if members is None:
             groups = [(snap.manifest_path, table.manifest_entries(snap), None)]
         else:
-            groups = [(m["path"], table._member_entries(m["path"]), m.get("bounds"))
+            groups = [(m["path"], table._member_entries(m["path"]), m["bounds"])
                       for m in members]
         for rel, entries, bounds in groups:
             n_data = sum(1 for e in entries if e.content == 0)

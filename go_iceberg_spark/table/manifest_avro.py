@@ -32,9 +32,9 @@ Mapping to the engine's model:
   [null, string] fallback is a partition field whose SOURCE is unknown
   to the schema (``_typed_partition_type`` returns None) — there the
   engine string passes through untouched.
-  Manifests written BEFORE a type gained its typed form declare
-  [null, string] in their OCF writer schema; the reader keys off that
-  schema and passes those legacy string values through unconverted.
+  A manifest whose OCF writer schema declares a partition field
+  [null, string] (an external writer's) keeps its string values: the
+  reader keys off that schema and passes them through unconverted.
 
 Float/double and binary/fixed partitions are typed too. Java 17's
 ``Float/Double.toString`` dir-name rendering (e.g. ``1.23456792E8``)
@@ -48,10 +48,6 @@ construction — the dir name on disk keeps Java's spelling, the metadata
 never depends on it. binary/fixed reuse the engine's hex stat-space
 convention (Spark cannot ``partitionBy`` binary, so these arise only via
 constructed specs/manifests — the wire form is spec-typed either way).
-Tables whose float/double partitions were written before that canonical
-rendering hold legacy Java strings in their NATIVE metadata; their Avro
-manifests declare string and read through unconverted, while REWRITING such
-manifests normalizes the dict to the canonical rendering (same value).
 """
 
 from __future__ import annotations
@@ -119,14 +115,9 @@ def bound_to_bytes(t: IcebergType, enc_val: Any) -> bytes | None:
 
     if isinstance(t, FixedType):
         return bytes.fromhex(enc_val)  # engine stat space stores hex
-    if isinstance(t, DecimalType):
-        if isinstance(enc_val, int):  # engine stat space: unscaled int
-            unscaled = enc_val
-        else:  # legacy str(Decimal) bounds, from before unscaled ints
-            unscaled = int(decimal.Decimal(str(enc_val))
-                           .scaleb(t.scale, decimal.Context(prec=60)).to_integral_value())
-        length = max(1, (unscaled.bit_length() + 8) // 8)  # two's-complement minimal
-        return unscaled.to_bytes(length, "big", signed=True)
+    if isinstance(t, DecimalType) and isinstance(enc_val, int):  # unscaled int
+        length = max(1, (enc_val.bit_length() + 8) // 8)  # two's-complement minimal
+        return enc_val.to_bytes(length, "big", signed=True)
     return None
 
 
@@ -471,11 +462,11 @@ def _partition_record(spec: PartitionSpec, schema: Schema, partition: dict) -> d
 def _partition_from_record(spec_fields: list, schema: Schema, rec: dict,
                            writer_types: dict | None = None) -> dict:
     """``writer_types`` maps partition field name → the non-null Avro branch
-    the WRITER declared. A member written before a type gained its typed
-    form encodes the value as [null, string]; converting such a legacy
-    string through the typed path would corrupt it (e.g. year "2024" →
-    "3994"), so the raw string passes through when the writer schema says
-    string but the current typed form is not."""
+    the WRITER declared. A writer may encode a value as [null, string]
+    where the spec form is typed; converting that string through the typed
+    path would corrupt it (e.g. year "2024" → "3994"), so the raw string
+    passes through when the writer schema says string but the typed form
+    is not."""
     from .metadata import PartitionField
 
     out = {}
@@ -483,7 +474,7 @@ def _partition_from_record(spec_fields: list, schema: Schema, rec: dict,
         pf = PartitionField(fj["source-id"], fj["field-id"], fj["transform"], fj["name"])
         v = rec.get(pf.name)
         typed = _typed_partition_type(pf, schema)
-        legacy = (
+        as_string = (
             typed is not None
             and writer_types is not None
             and writer_types.get(pf.name) == "string"
@@ -491,7 +482,7 @@ def _partition_from_record(spec_fields: list, schema: Schema, rec: dict,
         )
         out[pf.name] = (
             _typed_to_partition_value(pf, typed[0], v)
-            if typed and v is not None and not legacy else v
+            if typed and v is not None and not as_string else v
         )
     return out
 
@@ -931,7 +922,7 @@ def read_avro_manifest_tree(location: str, list_rel_path: str,
 
 def _writer_partition_types(ocf_schema) -> dict:
     """Partition field name → the writer's declared non-null Avro branch
-    (legacy [null, string] members are detected from this)."""
+    ([null, string] members are detected from this)."""
     try:
         dfs = next(f for f in ocf_schema["fields"] if f["name"] == "data_file")["type"]
         prec = next(f for f in dfs["fields"] if f["name"] == "partition")["type"]

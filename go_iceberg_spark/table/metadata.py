@@ -10,14 +10,16 @@ Spark-first storage design:
   reference gets from REST assert-ref-snapshot-id requirements
   (reference: table/table.go:163-176, catalog/rest.go:425-445);
 - each snapshot's live data / delete files, with full per-column stats, are
-  listed in parquet member manifests named by a JSON manifest list (a legacy
-  snapshot names one parquet manifest directly); ``manifest_members`` is the
-  one place that tells the layouts apart. Parquet because at 100 TB a
-  manifest of ~1M files is itself analytic data: the scan planner can load
-  it AS a Spark DataFrame and prune distributively, while small tables prune
-  driver-side with pyarrow. The Iceberg-spec Avro tree (``manifest_avro.py``)
-  is written beside the parquet members for external readers, or instead of
-  them under ``manifest-format=avro``.
+  listed in parquet member manifests named by a JSON manifest list;
+  ``manifest_members`` reads that list (None for an Avro-only snapshot).
+  Every member carries every ``_MANIFEST_ARROW_SCHEMA`` column, and every
+  list record its path, entry count, delete-entry count and bounds.
+  Parquet because at 100 TB a manifest of ~1M files is itself analytic
+  data: the scan planner can load it AS a Spark DataFrame and prune
+  distributively, while small tables prune driver-side with pyarrow. The
+  Iceberg-spec Avro tree (``manifest_avro.py``) is written beside the
+  parquet members for external readers, or instead of them under
+  ``manifest-format=avro``.
 - snapshot ids are random 63-bit ints — fixing the reference's collision-prone
   wall-clock-nanos ids (reference: table/table.go:301, SURVEY §2.6.8).
 
@@ -351,33 +353,20 @@ def write_manifest(path: str, entries: list[DataFileEntry], io: FileIO = LOCAL_I
 
 
 def _entry_from_columns(d: dict, i: int) -> DataFileEntry:
-    """Build one DataFileEntry from ``to_pydict`` columns (either layout)."""
-    if "stats_json" in d:  # legacy blob layout (pre-columnar manifests)
-        stats = {int(k): v for k, v in json.loads(d["stats_json"][i]).items()}
-    else:
-        blooms = d.get("stats_blooms")  # absent in pre-bloom manifests
-        stats = {
-            int(fid): {
-                "min": json.loads(d["stats_min_json"][i][j]),
-                "max": json.loads(d["stats_max_json"][i][j]),
-                "null_count": d["stats_null_counts"][i][j],
-                "value_count": d["stats_value_counts"][i][j],
-                # blooms[i] itself is None for a pre-bloom member read under
-                # the manifest schema (null row-level array)
-                **({"bloom": blooms[i][j]}
-                   if blooms is not None and blooms[i] is not None and blooms[i][j]
-                   else {}),
-                **({"nan_count": nans[i][j]}
-                   if (nans := d.get("stats_nan_counts")) is not None
-                   and nans[i] is not None and nans[i][j] is not None and nans[i][j] >= 0
-                   else {}),
-                **({"bounds_exact": True}
-                   if (bex := d.get("stats_bounds_exact")) is not None
-                   and bex[i] is not None and bex[i][j]
-                   else {}),
-            }
-            for j, fid in enumerate(d["stats_fids"][i])
+    """Build one DataFileEntry from ``to_pydict`` columns of a manifest."""
+    blooms, nans, bex = d["stats_blooms"][i], d["stats_nan_counts"][i], d["stats_bounds_exact"][i]
+    stats = {
+        int(fid): {
+            "min": json.loads(d["stats_min_json"][i][j]),
+            "max": json.loads(d["stats_max_json"][i][j]),
+            "null_count": d["stats_null_counts"][i][j],
+            "value_count": d["stats_value_counts"][i][j],
+            **({"bloom": blooms[j]} if blooms[j] else {}),
+            **({"nan_count": nans[j]} if nans[j] >= 0 else {}),
+            **({"bounds_exact": True} if bex[j] else {}),
         }
+        for j, fid in enumerate(d["stats_fids"][i])
+    }
     return DataFileEntry(
         content=d["content"][i],
         file_path=d["file_path"][i],
@@ -399,14 +388,13 @@ MANIFEST_LIST_SUFFIX = ".manifest-list.json"
 def write_manifest_list(path: str, members: list[dict], io: FileIO = LOCAL_IO) -> None:
     """Manifest list: JSON array of {"path": <rel manifest>, "n": <entries>,
     "nd": <delete entries>, "bounds": <aggregate column-bounds JSON>}. "nd"
-    and "bounds" (optional: older lists lack them) are the
-    Iceberg manifest-list partition-summary analogue: scans skip READING a
-    delete-free member whose bounds contradict the filter (scan.py). The
-    list is O(commits since last compaction); member manifests are
-    immutable and REUSED across snapshots — an append commit writes one new
-    member for the added files instead of rewriting the full live set
-    (single-manifest design made incremental; Iceberg's manifest-list role,
-    reference: spec/manifest.go:152-205)."""
+    and "bounds" are the Iceberg manifest-list partition-summary analogue:
+    scans skip READING a delete-free member whose bounds contradict the
+    filter (scan.py). The list is O(commits since last compaction); member
+    manifests are immutable and REUSED across snapshots — an append commit
+    writes one new member for the added files instead of rewriting the full
+    live set (Iceberg's manifest-list role, reference:
+    spec/manifest.go:152-205)."""
     io.create(path, json.dumps(members).encode(), overwrite=True)
 
 
@@ -417,16 +405,10 @@ def read_manifest_list(path: str, io: FileIO = LOCAL_IO) -> list[dict]:
 def manifest_members(location: str, snap: Snapshot, io: FileIO = LOCAL_IO) -> list[dict] | None:
     """A snapshot's parquet member manifests as manifest-list records
     (``{"path", "n", "nd", "bounds"}``, paths relative to ``location``), or
-    None for an Avro-only snapshot, which has no parquet members. A legacy
-    single parquet manifest is one record without "nd" or "bounds", so no
-    bounds check can skip it."""
-    rel = snap.manifest_path
-    if rel.endswith(".avro"):
+    None for an Avro-only snapshot, which has no parquet members."""
+    if snap.manifest_path.endswith(".avro"):
         return None
-    path = os.path.join(location, rel)
-    if rel.endswith(MANIFEST_LIST_SUFFIX):
-        return read_manifest_list(path, io)
-    return [{"path": rel, "n": pq.read_metadata(pa.BufferReader(io.read(path))).num_rows}]
+    return read_manifest_list(os.path.join(location, snap.manifest_path), io)
 
 
 def read_manifest_tree(location: str, snap: Snapshot, io: FileIO = LOCAL_IO) -> list[DataFileEntry]:
@@ -665,12 +647,6 @@ class TableMetadata:
     @staticmethod
     def new(location: str, schema: Schema, spec: PartitionSpec = UNPARTITIONED,
             sort_order: SortOrder = UNSORTED, properties: dict[str, str] | None = None) -> "TableMetadata":
-        # bucket ordinals are physical layout, so the hash function's int
-        # width is RECORDED at creation rather than implied by engine
-        # version: new tables hash int bucket sources at long width (ordinals
-        # survive int->long widening); tables whose metadata lacks the stamp
-        # keep the legacy int-width hash (write.resolve_bucket_fn)
-        properties = {"write.bucket-hash-width": "long", **(properties or {})}
         validate_partition_spec(schema, spec)
         return TableMetadata(
             table_uuid=str(uuid_mod.uuid4()),

@@ -12,10 +12,9 @@ four tiers:
 2. Otherwise the parquet members of the snapshot's manifest list are
    checked against their own aggregate bounds (the reference's per-manifest
    partition summaries, spec/manifest.go:152-205) and a member they rule
-   out is never read. Members holding delete entries, members without
-   bounds and a legacy single manifest are always kept. The kept members'
-   entry count then picks the tier, for a local table whose whole entry
-   set is not already cached:
+   out is never read. Members holding delete entries are always kept. The
+   kept members' entry count then picks the tier, for a local table whose
+   whole entry set is not already cached:
 
    - above ``DISTRIBUTED_THRESHOLD``: distributed — ``plan_distributed``
      reads the members AS a Spark DataFrame and prunes with a Catalyst
@@ -55,9 +54,9 @@ from .metadata import (
 
 # Above this many kept entries the driver prune is replaced by a Spark job
 # over the members. The job bounds driver MEMORY: the driver prune holds a
-# whole member as arrow (~280 B/entry; a legacy single manifest is one
-# member, ~150 MB at 550k entries) and builds entries in Python, while the
-# job brings only survivors to the driver. Measured on the 550k-entry
+# whole member as arrow (~280 B/entry, ~150 MB for a compacted 550k-entry
+# member) and builds entries in Python, while the job brings only
+# survivors to the driver. Measured on the 550k-entry
 # table_scan table (139 members, 4 cores, a point filter on an unclustered
 # column, one survivor, warm session): the driver prune takes 3.3-4.0
 # µs/entry (1.8-2.2 s), plan_distributed 2.4-3.8 µs/entry (1.3-2.1 s, of
@@ -125,11 +124,8 @@ class _ColArrays:
         _, self.maxs = pick("stats_max_json", dec_num)
         _, self.nulls = pick("stats_null_counts", dec_int)
         _, self.vals = pick("stats_value_counts", dec_int)
-        # NaN counts: -1/absent = unknown (see metadata.MANIFEST_SCHEMA)
-        if "stats_nan_counts" in t.column_names:
-            _, self.nans = pick("stats_nan_counts", dec_int)
-        else:
-            self.nans = np.full(len(sel), -1.0)
+        # NaN counts: -1 = unknown (see metadata._MANIFEST_ARROW_SCHEMA)
+        _, self.nans = pick("stats_nan_counts", dec_int)
         self.rows = rows
         self.n = n
 
@@ -253,14 +249,6 @@ def prune_manifest_driver(path: str, flt: Expression, schema: Schema) -> list[Da
     import pyarrow.parquet as pq
 
     t = pq.read_table(path)
-    if "stats_json" in t.column_names:  # legacy blob manifests: no lazy path
-        d = t.to_pydict()
-        entries = [_entry_from_columns(d, i) for i in range(t.num_rows)]
-        return [
-            e for e in entries
-            if e.content != CONTENT_DATA or might_match(flt, _stats_by_name(e, schema))
-        ]
-
     content = t.column("content").to_numpy()
     is_data = content == CONTENT_DATA
     try:
@@ -284,36 +272,22 @@ def _perrow_match(flt: Expression, t, schema: Schema):
     maxs_l = t.column("stats_max_json").to_pylist()
     nulls_l = t.column("stats_null_counts").to_pylist()
     vals_l = t.column("stats_value_counts").to_pylist()
-    nans_l = (t.column("stats_nan_counts").to_pylist()
-              if "stats_nan_counts" in t.column_names else None)
+    nans_l = t.column("stats_nan_counts").to_pylist()
     out = np.zeros(n, dtype=bool)
     for i in range(n):
         stats: dict[str, ColumnStats] = {}
         for j, fid in enumerate(fids_l[i]):
             name = needed.get(fid)
             if name is not None:
-                nan_ct = nans_l[i][j] if nans_l is not None else None
+                nan_ct = nans_l[i][j]
                 stats[name] = ColumnStats(
                     min=json.loads(mins_l[i][j]),
                     max=json.loads(maxs_l[i][j]),
                     null_count=nulls_l[i][j],
                     value_count=vals_l[i][j],
-                    nan_count=nan_ct if nan_ct is not None and nan_ct >= 0 else None,
+                    nan_count=nan_ct if nan_ct >= 0 else None,
                 )
         out[i] = might_match(flt, stats)
-    return out
-
-
-def _stats_by_name(e: DataFileEntry, schema: Schema) -> dict[str, ColumnStats]:
-    out: dict[str, ColumnStats] = {}
-    for fid, s in e.column_stats.items():
-        f = schema.find_field_by_id(fid)
-        if f is not None:
-            out[f.name] = ColumnStats(
-                min=s.get("min"), max=s.get("max"),
-                null_count=s.get("null_count"), value_count=s.get("value_count"),
-                nan_count=s.get("nan_count"),
-            )
     return out
 
 
@@ -508,12 +482,10 @@ def _bucket_partition_pred(flt: Expression, specs, schema: Schema, bucket_fn: st
 
 def _distributed_frame(spark, paths: list[str], flt: Expression, schema: Schema,
                        specs=(), bucket_fn: str = "spark"):
-    """The entries of columnar-stats members that might match ``flt``, as a
-    DataFrame: the stats predicate (and the bucket-partition predicate) over
-    the members, delete entries always kept. The members are read under the
-    manifest schema, so no schema-inference job runs; member manifests are
-    immutable and reused across snapshots, and a column an older member lacks
-    (pre-bloom members have no ``stats_blooms``) reads as NULL."""
+    """The entries of the members that might match ``flt``, as a DataFrame:
+    the stats predicate (and the bucket-partition predicate) over the
+    members, delete entries always kept. The members are read under the
+    manifest schema, so no schema-inference job runs."""
     from pyspark.sql import functions as F
     from pyspark.sql.pandas.types import from_arrow_schema
 
@@ -531,11 +503,7 @@ def plan_distributed(spark, path: str | list[str], flt: Expression, schema: Sche
     """Prune a huge manifest (or manifest-list members) with a Spark job:
     filter the entry DataFrame by the stats predicate, collect only
     survivors, build entries from them."""
-    import pyarrow.parquet as pq
-
     paths = path if isinstance(path, list) else [path]
-    if "stats_json" in pq.read_schema(paths[0]).names:  # legacy: no array columns
-        return [e for p in paths for e in prune_manifest_driver(p, flt, schema)]
     df = _distributed_frame(spark, paths, flt, schema, specs, bucket_fn)
     rows = df.collect()
     cols = {name: [r[name] for r in rows] for name in df.columns}

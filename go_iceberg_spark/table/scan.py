@@ -43,7 +43,7 @@ from pyspark.sql import types as T
 from ..errors import NoSuchSnapshotError, ValidationError
 from ..expr import ALWAYS_TRUE, ColumnStats, Expression, might_match, simplify, to_column
 from ..io.fileio import LocalFileIO
-from ..schema import DecimalType, FixedType, PrimitiveType, Schema, to_spark_type
+from ..schema import FixedType, PrimitiveType, Schema, to_spark_type
 from .metadata import (
     CONTENT_DATA,
     CONTENT_EQUALITY_DELETES,
@@ -214,37 +214,24 @@ def scan_tasks(data_files: list[DataFileEntry],
     return tasks
 
 
-def read_tombstones(table, pos_entries: list[DataFileEntry],
-                    data_files: list[DataFileEntry]) -> DataFrame:
+def read_tombstones(table, pos_entries: list[DataFileEntry]) -> DataFrame:
     """Every row of the given position-delete files, in one read under the
     position-delete schema ``(file_path string, pos long)``, with the
     ``_file_key`` of the delete file the row came from (``_delete_file``)
     and that file's sequence number (``_dseq``, looked up in a literal map,
     which costs no Spark job where a broadcast join of a local frame costs
     one). A delete file whose path matches no entry of ``pos_entries``
-    raises rather than lose its tombstones.
-
-    ``file_path`` is the ``_file_key`` of the data file the row names.
-    Older versions of the engine stored the URL-encoded path Spark reports
-    instead, so a path holding '%' is decoded, unless it is the key of one
-    of ``data_files`` (a partition value with an escaped character puts a
-    literal '%' in the path). Rows naming a file outside ``data_files``
-    keep a key that may be decoded wrongly; they name no file the caller
-    matches against."""
+    raises rather than lose its tombstones. ``file_path`` is the
+    ``_file_key`` of the data file the row names."""
     loc = table.location
     keys = [_file_key(loc, d.file_path) for d in pos_entries]
     seqs = F.create_map(*[F.lit(x) for k, d in zip(keys, pos_entries)
                           for x in (k, d.sequence_number)])
     src = _rel_file_expr(loc)
-    raw = F.col(POS_DELETE_FILE_COL)
-    literal = [k for k in (_file_key(loc, e.file_path) for e in data_files) if "%" in k]
-    key = (F.when(raw.isin(literal), raw)
-           .when(raw.contains("%"), _relative(_url_decode(raw), loc))
-           .otherwise(_relative(raw, loc)))
     return (table.spark.read
             .schema(f"{POS_DELETE_FILE_COL} string, {POS_DELETE_POS_COL} long")
             .parquet(*[os.path.join(loc, d.file_path) for d in pos_entries])
-            .withColumn(POS_DELETE_FILE_COL, key)
+            .withColumn(POS_DELETE_FILE_COL, _relative(F.col(POS_DELETE_FILE_COL), loc))
             .withColumn("_delete_file", F.when(src.isin(keys), src).otherwise(F.raise_error(
                 F.concat(F.lit("position-delete file not in the manifest: "), src))))
             .withColumn("_dseq", seqs[F.col("_delete_file")]))
@@ -279,7 +266,7 @@ def read_files(table, tasks: list[FileScanTask], schema: Schema,
         groups.setdefault(key, []).append(t)
     pos_all = {d.file_path: d for t in tasks for d in t.delete_files
                if d.content == CONTENT_POSITION_DELETES}
-    tombstones = (read_tombstones(table, list(pos_all.values()), [t.file for t in tasks])
+    tombstones = (read_tombstones(table, list(pos_all.values()))
                   if pos_all else None)
 
     parts: list[DataFrame] = []
@@ -478,11 +465,10 @@ class ScanBuilder:
             # every entry already cached, or an Avro-only snapshot
             entries = table.manifest_entries(snap)
         else:
-            # members holding delete entries (nd > 0) or without stamped
-            # bounds are always read; entries of a skipped member provably
-            # fail might_match, since each entry's interval lies inside the
-            # member's aggregate bounds
-            members = [m for m in members if m.get("nd", 1) or "bounds" not in m
+            # members holding delete entries (nd > 0) are always read;
+            # entries of a skipped member provably fail might_match, since
+            # each entry's interval lies inside the member's aggregate bounds
+            members = [m for m in members if m["nd"]
                        or planning.summary_might_match(m["bounds"], enc, proj)]
             if isinstance(table.io, LocalFileIO):
                 paths = [os.path.join(table.location, m["path"]) for m in members]
@@ -618,23 +604,8 @@ class ScanBuilder:
         # value-derived bounds for columns listed in
         # write.exact-bounds-columns and stamps them ``bounds_exact`` —
         # only stats carrying that marker may serve the class; unmarked
-        # stats (add_files imports, manifests written before the marker
-        # existed) stay refused.
+        # stats (add_files imports) stay refused.
         is_float = isinstance(f.type, PrimitiveType) and f.type.name in ("float", "double")
-
-        def _nb(v):
-            # normalize a bound into the current int encode space: legacy
-            # manifests store decimals as str(Decimal), which compares
-            # LEXICOGRAPHICALLY — decode to the unscaled int
-            if isinstance(f.type, DecimalType) and isinstance(v, str):
-                import decimal as _dec
-
-                try:
-                    return int(_dec.Decimal(v).scaleb(
-                        f.type.scale, _dec.Context(prec=60)))
-                except _dec.InvalidOperation:
-                    return None
-            return v
 
         entries = self._table.manifest_entries(snap)
         if any(e.content != CONTENT_DATA for e in entries):
@@ -649,7 +620,7 @@ class ScanBuilder:
             nulls, vals = s.get("null_count"), s.get("value_count")
             if nulls is not None and vals is not None and nulls >= vals:
                 continue  # all-NULL file: contributes no values
-            mn, mx = _nb(s.get("min")), _nb(s.get("max"))
+            mn, mx = s.get("min"), s.get("max")
             if mn is None or mx is None:
                 return None
             if needs_exact_marker and not s.get("bounds_exact"):

@@ -252,7 +252,7 @@ class Table:
         # aggregates the entries directly.
         from .planning import merge_summary_bounds, summary_bounds
 
-        if members_out is not None and all("bounds" in m for m in members_out):
+        if members_out is not None:
             summary["bounds"] = merge_summary_bounds(
                 [m["bounds"] for m in members_out])
         else:
@@ -285,16 +285,11 @@ class Table:
     # planning never walks an unbounded member chain
     MANIFEST_COMPACT_THRESHOLD = 32
 
-    def _member_dict(self, rel: str, mentries: list[DataFileEntry],
-                     parent_dict: dict | None = None) -> dict:
+    def _member_dict(self, rel: str, mentries: list[DataFileEntry]) -> dict:
         """Manifest-list member record: path, entry count, delete-entry
         count, and aggregate column bounds — the Iceberg manifest-list
         partition-summary analogue (spec/manifest.go:152-205) that lets
-        scans SKIP reading a member whose bounds contradict the filter.
-        ``parent_dict`` short-circuits the bounds recompute for members
-        reused unchanged across commits."""
-        if parent_dict is not None and "bounds" in parent_dict:
-            return parent_dict
+        scans SKIP reading a member whose bounds contradict the filter."""
         from .planning import summary_bounds
 
         return {"path": rel, "n": len(mentries),
@@ -338,7 +333,7 @@ class Table:
             if not surv:
                 continue
             if len(surv) == len(mentries):
-                members.append(self._member_dict(pm["path"], surv, pm))
+                members.append(pm)  # reused unchanged, bounds included
             else:
                 rel = os.path.join("metadata", f"m-{sid}-{part}.parquet")
                 part += 1
@@ -378,45 +373,6 @@ class Table:
                 self.refresh()
 
     # -- writes ------------------------------------------------------------
-    def _bucket_fn(self) -> str:
-        """Resolved bucket-hash mode: "spark" (F.hash, int-as-long width),
-        "spark-int" (declared-legacy int-width layout), "spark-unstamped"
-        (no width stamp — int-bucket literal pruning disabled) or
-        "iceberg" (spec Appendix B — ordinals recomputable by third-party
-        readers). See write.resolve_bucket_fn."""
-        from .write import resolve_bucket_fn
-
-        return resolve_bucket_fn(self.metadata.properties)
-
-    def stamp_bucket_hash_width(self, width: str, *, force: bool = False) -> None:
-        """Migration for pre-stamp tables: declare the hash width their
-        int-sourced bucket files were actually laid out with, re-enabling
-        literal bucket pruning (disabled on unstamped tables because the
-        two pre-stamp write generations — hash(int) vs hash(long) — are
-        indistinguishable from metadata). Only the OWNER of the table's
-        history can know the width; stamping the wrong one silently prunes
-        live files. ``rewrite_data_files`` on an unstamped table rewrites
-        at int width, after which ``"int"`` is provably correct.
-
-        Only ``spark-unstamped`` tables may be stamped: a table already
-        resolved to a width ("spark"/"spark-int") has correct pruning, and
-        overwriting its stamp would silently re-enable WRONG-width literal
-        pruning (rows lost). Pass ``force=True`` only to correct a stamp
-        you know was itself wrong."""
-        if width not in ("int", "long"):
-            raise ValidationError(
-                f"bucket hash width must be 'int' or 'long', got {width!r}")
-        mode = self._bucket_fn()
-        if mode not in ("spark-unstamped", "spark-int", "spark"):
-            raise ValidationError(
-                "bucket hash width applies only to write.bucket-function=spark tables")
-        if mode != "spark-unstamped" and not force:
-            raise ValidationError(
-                f"table already resolves to bucket width {mode!r}; re-stamping would "
-                "change which files literal pruning keeps — pass force=True only if "
-                "the existing stamp is known-wrong")
-        self.set_properties({"write.bucket-hash-width": width})
-
     def append(self, df: DataFrame, summary_extra: dict[str, str] | None = None,
                properties_extra: dict[str, str] | None = None,
                pre_commit_check=None) -> Snapshot | None:
@@ -1024,7 +980,6 @@ class SchemaUpdate:
     def __init__(self, table: Table):
         self.table = table
         self._fields: list[NestedField] = list(table.schema.fields)
-        self._retyped: set[str] = set()
         # never reuse an id, even from dropped columns of older schemas
         self._next_id = max(s.highest_field_id() for s in table.metadata.schemas)
 
@@ -1052,7 +1007,6 @@ class SchemaUpdate:
 
     def update_column_type(self, name: str, type_: IcebergType) -> "SchemaUpdate":
         # permit widening (int->long, float->double) like Iceberg
-        self._retyped.add(name)
         self._fields = [
             NestedField(f.field_id, f.name, type_, f.required, f.doc) if f.name == name else f for f in self._fields
         ]
@@ -1076,23 +1030,6 @@ class SchemaUpdate:
                     f"partition field {pf.name!r} ({pf.transform}) of the default "
                     "spec derives from it; update the partition spec first"
                 )
-        # on a legacy table (no write.bucket-hash-width=long stamp) bucket
-        # ordinals were computed at the source column's int width — widening
-        # a bucket source would re-hash future literals/writes at long width
-        # while the existing files keep hash(int) ordinals, silently losing
-        # rows to pruning. Require a rewrite_data_files migration instead.
-        if t._bucket_fn() in ("spark-int", "spark-unstamped"):
-            for pf in (f for s in t.metadata.partition_specs for f in s.fields):
-                src = t.schema.find_field_by_id(pf.source_id)
-                if (src is not None and src.name in self._retyped
-                        and pf.transform.startswith("bucket[")
-                        and getattr(src.type, "name", "") == "int"):
-                    raise ValidationError(
-                        f"cannot widen bucket-source column {src.name!r} on a "
-                        "table without the write.bucket-hash-width=long stamp: "
-                        "its files hold int-width bucket ordinals; run "
-                        "rewrite_data_files and set the property first"
-                    )
         new_schema = Schema(
             schema_id=max(s.schema_id for s in t.metadata.schemas) + 1,
             struct=StructType(tuple(self._fields)),

@@ -33,24 +33,22 @@ properties it honours, for data files only:
   counts are collected;
 - ``write.exact-bounds-columns``: string/binary columns whose bounds are
   computed from the values and marked exact;
-- ``write.bucket-function`` / ``write.bucket-hash-width``: the bucket hash
-  (``resolve_bucket_fn``).
+- ``write.bucket-function``: the bucket hash, ``spark`` (default) or
+  ``iceberg`` (``resolve_bucket_fn``).
 
 Delete files keep the plain layout: no sort, no distribution, default size,
 footer stats only. ``write.data.path`` (an alternate root for the data and
 delete trees, ``data_path``) applies to both.
 
 Stats are encoded order-preservingly per Iceberg type (timestamps→µs,
-dates→days, decimal→string-decimal) and keyed by FIELD ID so renames keep
+dates→days, decimals→unscaled ints) and keyed by FIELD ID so renames keep
 pruning valid (reference: spec/manifest.go:121-136).
 """
 
 from __future__ import annotations
 
-import base64
 import datetime as dt
 import decimal
-import json
 import os
 import re
 import shutil
@@ -64,7 +62,6 @@ from ..errors import ValidationError
 from ..schema import (
     DATE,
     TIMESTAMP,
-    TIMESTAMPTZ,
     DecimalType,
     IcebergType,
     PrimitiveType,
@@ -125,38 +122,11 @@ def spark_murmur3_long(value: int, seed: int = 42) -> int:
     return _mm3_signed(_mm3_fmix(h1, 8))
 
 
-def spark_murmur3_int(value: int, seed: int = 42) -> int:
-    """Spark's ``F.hash`` for an IntegerType value (one 32-bit word),
-    driver-side mirror — the LEGACY bucket hash for int sources on tables
-    created before ``write.bucket-hash-width=long`` was stamped at
-    creation. Kept so pruning on those tables recomputes the ordinals
-    their files were actually laid out with."""
-    h1 = _mm3_mix_h1(seed, _mm3_mix_k1(value & _M32))
-    return _mm3_signed(_mm3_fmix(h1, 4))
-
-
 def resolve_bucket_fn(properties: dict) -> str:
     """Table properties → the bucket-hash mode every write/prune site must
-    agree on: "iceberg" (spec Appendix B), "spark" (F.hash, int sources
-    cast to long — width-invariant, stamped on tables created with
-    ``write.bucket-hash-width=long``), "spark-int" (F.hash with int
-    sources hashed at int width — a legacy layout DECLARED by stamping
-    ``write.bucket-hash-width=int``, e.g. via
-    ``Table.stamp_bucket_hash_width``), or "spark-unstamped" (no stamp at
-    all: the table predates the stamp and its int-bucket files could hold
-    EITHER hash(int) or hash(long) ordinals — the two pre-stamp write
-    generations are indistinguishable from metadata, so literal pruning on
-    int-sourced buckets is DISABLED (scan everything, never lose rows) and
-    appends keep int-width hashing until the user stamps the real width)."""
-    fn = properties.get("write.bucket-function", "spark")
-    if fn == "spark":
-        width = properties.get("write.bucket-hash-width")
-        if width == "long":
-            return "spark"
-        if width == "int":
-            return "spark-int"
-        return "spark-unstamped"
-    return fn
+    agree on: "spark" (default: ``F.hash``, int sources cast to long so
+    ordinals survive int→long widening) or "iceberg" (spec Appendix B)."""
+    return properties.get("write.bucket-function", "spark")
 
 
 # ---------------------------------------------------------------------------
@@ -306,16 +276,6 @@ def bucket_for_literal(v: Any, n: int, source_type: IcebergType,
         return None
     if not isinstance(v, int) or isinstance(v, bool):
         return None
-    if source_type.name == "int" and bucket_fn == "spark-unstamped":
-        # unstamped pre-stamp table: files could hold hash(int) OR
-        # hash(long) ordinals (two write generations, indistinguishable
-        # from metadata) — guessing a width would silently prune live
-        # files, so never prune; None makes plan_files keep the file
-        return None
-    if source_type.name == "int" and bucket_fn == "spark-int":
-        # declared-legacy table (write.bucket-hash-width=int stamped by a
-        # migration): files hold hash(int) ordinals — recompute the SAME one
-        return spark_murmur3_int(v) % n
     if source_type.name in ("int", "long"):
         # int hashes as long — width-invariant, see transform_column
         return spark_murmur3_long(v) % n
@@ -340,12 +300,7 @@ def transform_column(transform: str, source: Column, source_type: IcebergType,
         # must not re-bucket existing data — Spark's hash(int) != hash(long)
         # for the same value, and int-width hashing would lose rows to
         # pruning after a widen (literal hashed under the new type).
-        # Tables created BEFORE the width was stamped keep int-width hashing
-        # ("spark-int" declared-legacy / "spark-unstamped", resolve_bucket_fn)
-        # so a true-legacy layout stays consistent; widening THEIR bucket
-        # source requires a rewrite migration and is rejected by SchemaUpdate.
-        if (bucket_fn not in ("spark-int", "spark-unstamped")
-                and isinstance(source_type, PrimitiveType) and source_type.name == "int"):
+        if isinstance(source_type, PrimitiveType) and source_type.name == "int":
             source = source.cast("long")
         return F.pmod(F.hash(source), F.lit(int(m.group(1)))).cast("int")
     m = _TRUNCATE_RE.match(transform)
@@ -433,10 +388,8 @@ def decode_stat(v: Any, t: IcebergType | None = None) -> Any:
     binary hex→bytes); everything else passes through."""
     if v is None:
         return None
-    if isinstance(t, DecimalType):
-        if isinstance(v, int):
-            return decimal.Decimal(v).scaleb(-t.scale, decimal.Context(prec=60))
-        return decimal.Decimal(str(v))  # legacy str(Decimal) bound
+    if isinstance(t, DecimalType) and isinstance(v, int):
+        return decimal.Decimal(v).scaleb(-t.scale, decimal.Context(prec=60))
     if isinstance(t, PrimitiveType):
         n = t.name
         if n == "date":
@@ -800,6 +753,40 @@ def _column_list(properties: dict, key: str) -> tuple[str, ...]:
     return tuple(c.strip() for c in raw.split(",") if c.strip())
 
 
+def _estimated_files(df: DataFrame, target_file_size: int) -> int | None:
+    """How many ``target_file_size`` files ``df`` fills by Catalyst's size
+    estimate, or None when the plan has none (parallelized local data
+    reports Long.MaxValue). The estimate is the smaller of the plan's own
+    and the sum of its leaves': without statistics a join estimates the
+    PRODUCT of its children's sizes (an 82 KB scan joined to a 1.5 KB one
+    estimates 98 MB), while the rows written come from those leaves. Read
+    from the optimized plan, so it runs no Spark job; asking the input for
+    its partition count would run its adaptive plan (broadcasts, sort
+    sampling, shuffle map stages) once before the write runs it again."""
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan()
+        leaves = plan.collectLeaves()
+        est = min(int(plan.stats().sizeInBytes()),
+                  sum(int(leaves.apply(i).stats().sizeInBytes())
+                      for i in range(leaves.size())))
+    except Exception:
+        return None  # estimation is best-effort; never fail a write over it
+    if 0 < est < (1 << 50):
+        return min(est // target_file_size + 1, (1 << 31) - 1)
+    return None
+
+
+def _range_distribute(df: DataFrame, n_files: int | None, keys: list) -> DataFrame:
+    """``df`` range-partitioned on ``keys`` into ``n_files`` tasks (the
+    ``_estimated_files`` count), so the files' key ranges are disjoint.
+    One file needs no shuffle: a coalesce and the local sort give the same
+    layout. Without an estimate the input keeps its own partition count,
+    which runs its plan once to count them."""
+    if n_files == 1:
+        return df.coalesce(1)
+    return df.repartitionByRange(n_files or df.rdd.getNumPartitions(), *keys)
+
+
 def write_data_files(
     table,
     df: DataFrame,
@@ -881,48 +868,31 @@ def write_data_files(
             c = c.desc() if sf.direction == "desc" else c.asc()
             sort_exprs.append(c)
 
-    if part_cols:
-        if distribution_mode == "range" and sort_exprs:
-            # Iceberg write.distribution-mode=range on a PARTITIONED table:
-            # range-shuffle on (partition, sort key) so rows of one
-            # partition still co-locate AND each task owns a disjoint sort
-            # range within its partition — per-file bounds are disjoint
-            # inside every partition, so a partition-pruned point scan
-            # reads ~1 file instead of every file of the partition.
-            df = df.repartitionByRange(
-                df.rdd.getNumPartitions(),
-                *[F.col(c) for c in part_cols], *sort_exprs)
-        else:
-            # hash co-location: rows of one partition into few tasks →
-            # few, large files (Iceberg write.distribution-mode=hash; the
-            # default here because unclustered partitioned writes spray
-            # every partition across every task — small-files storm)
-            df = df.repartition(*[F.col(c) for c in part_cols])
-    else:
-        # honor the target file size for unpartitioned writes when Catalyst
-        # can estimate the input (parquet-scan-rooted plans): without this,
-        # every input partition becomes a file no matter how small (the
-        # reference's writer ignores its size config the same way —
-        # table/writer.go:57-59). Parallelized local data reports UNKNOWN
-        # (Long.MaxValue) and is handled by post-write consolidation below.
-        # The count comes from the estimate alone: asking the input for its
-        # partition count would run its adaptive plan (broadcasts, sort
-        # sampling, shuffle map stages) once before the write runs it again,
-        # and a narrow coalesce never raises the partition count anyway.
-        try:
-            est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        except Exception:
-            est = 0  # estimation is best-effort; never fail a write over it
-        if 0 < est < (1 << 50):
-            df = df.coalesce(min(est // target_file_size + 1, (1 << 31) - 1))
+    # Iceberg write.distribution-mode=range: range-shuffle on (partition,
+    # sort key) so each task owns a disjoint key range (within its
+    # partition, partitions still co-locating) — per-file min/max become
+    # disjoint and point scans prune to ~1 file. Without it
+    # sortWithinPartitions only clusters locally and shuffled input still
+    # gives every file full-domain bounds.
+    range_keys = ([*map(F.col, part_cols), *sort_exprs]
+                  if distribution_mode == "range" and sort_exprs else [])
+    if range_keys:
+        df = _range_distribute(df, _estimated_files(df, target_file_size), range_keys)
+    elif part_cols:
+        # hash co-location: rows of one partition into few tasks →
+        # few, large files (Iceberg write.distribution-mode=hash; the
+        # default here because unclustered partitioned writes spray
+        # every partition across every task — small-files storm)
+        df = df.repartition(*[F.col(c) for c in part_cols])
+    elif n_files := _estimated_files(df, target_file_size):
+        # honor the target file size for unpartitioned writes: without
+        # this, every input partition becomes a file no matter how small
+        # (the reference's writer ignores its size config the same way —
+        # table/writer.go:57-59). Input without an estimate is handled by
+        # post-write consolidation below; a narrow coalesce never raises
+        # the partition count.
+        df = df.coalesce(n_files)
     if sort_exprs:
-        if distribution_mode == "range" and not part_cols:
-            # Iceberg write.distribution-mode=range: range-shuffle on the
-            # sort key so each task owns a disjoint key range — per-file
-            # min/max become disjoint and point scans prune to ~1 file.
-            # Without it sortWithinPartitions only clusters locally and
-            # shuffled input still gives every file full-domain bounds.
-            df = df.repartitionByRange(df.rdd.getNumPartitions(), *sort_exprs)
         df = df.sortWithinPartitions(*sort_exprs)
 
     writer = df.write.mode("append")

@@ -141,12 +141,11 @@ def test_bound_bytes_are_little_endian_spec_encoding():
     assert bound_to_bytes(LONG, 1) == b"\x01" + b"\x00" * 7
     assert bound_to_bytes(BOOLEAN, True) == b"\x01"
     assert bound_to_bytes(STRING, "ab") == b"ab"
-    # decimal: minimal two's-complement big-endian unscaled value; legacy
-    # str(Decimal) bounds from pre-r9 manifests write the same bytes
+    # decimal: minimal two's-complement big-endian unscaled value; a bound
+    # outside the unscaled-int space writes no bound (the file is kept)
     assert bound_to_bytes(DecimalType(9, 2), 100) == b"\x64"
     assert bound_to_bytes(DecimalType(9, 2), -100) == b"\x9c"
-    assert bound_to_bytes(DecimalType(9, 2), "1.00") == b"\x64"
-    assert bound_to_bytes(DecimalType(9, 2), "-1.00") == b"\x9c"
+    assert bound_to_bytes(DecimalType(9, 2), "1.00") is None
 
 
 def _entry(path, seq, content=CONTENT_DATA, schema_id=0, partition=None, stats=None):

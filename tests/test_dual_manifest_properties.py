@@ -20,6 +20,7 @@ from pyspark.sql import Row
 import go_iceberg_spark as gi
 from go_iceberg_spark.schema import from_spark_schema
 from go_iceberg_spark.table.manifest_avro import read_avro_manifest_tree
+from test_manifest_tree import assert_current_layout
 
 SEED = 414243
 N_OPS = 14
@@ -108,6 +109,7 @@ def test_dialects_agree_across_random_crud(spark, catalog):
     # for external readers too)
     for snap in t.snapshots():
         _assert_trees_agree(t, snap)
+        assert_current_layout(t, snap)
     assert len(set(ops_run)) >= 4, f"seed exercised too few op kinds: {ops_run}"
 
 

@@ -549,34 +549,6 @@ def test_changes_nets_rows_deleted_inside_expired_gap(spark, catalog):
     assert sorted(r.k for r in t.scan().use_ref("dev").to_df().collect()) == [0, 1, 2, 3, 4]
 
 
-def test_unstamped_bucket_table_rewrite_then_stamp_migration(spark, catalog):
-    """r6 probe: the documented migration path for pre-stamp bucket tables —
-    rewrite_data_files on an unstamped table lays every file out at int
-    width, after which stamping 'int' is provably correct and re-enables
-    pruning; no key becomes unreachable at any step."""
-    from go_iceberg_spark.table.metadata import PartitionField, PartitionSpec
-    from go_iceberg_spark.table.write import spark_murmur3_int
-
-    df = spark.range(0, 100).selectExpr("CAST(id AS INT) AS k", "CAST(id AS DOUBLE) AS v")
-    sch = from_spark_schema(df.schema)
-    fid = {f.name: f.field_id for f in sch.fields}
-    spec = PartitionSpec(0, (PartitionField(fid["k"], 1000, "bucket[8]", "kb"),))
-    t = catalog.create_table("db", "mig_stamp", sch, spec=spec)
-    t.append(df)                                  # stamped default: long-width
-    t.remove_properties(["write.bucket-hash-width"])
-    assert t._bucket_fn() == "spark-unstamped"
-
-    t.rewrite_data_files()
-    int_parts = {str(spark_murmur3_int(v) % 8) for v in range(100)}
-    assert {e.partition["kb"] for e in t.live_entries()} <= int_parts
-    assert t.scan().count() == 100
-
-    t.stamp_bucket_hash_width("int")
-    tasks = t.scan().filter(gi.eq("k", 42)).plan_files()
-    assert len(tasks) < len(t.live_entries())
-    assert all(t.scan().filter(gi.eq("k", v)).count() == 1 for v in range(0, 100, 7))
-
-
 def test_selective_overwrite_and_update_across_rename(spark, catalog):
     """r6 probe (passed as designed, pinned): selective overwrite and
     update() filtered on a RENAMED column still rewrite the matching rows

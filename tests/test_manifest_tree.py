@@ -1,21 +1,19 @@
 """Incremental manifest layout: append commits write O(added) metadata and
 REUSE parent member manifests; deletes rewrite only affected members; the
-member list compacts past a threshold; legacy single-manifest snapshots
-still read."""
+member list compacts past a threshold; every commit writes the one member
+and list-record layout the readers rely on."""
 
 from __future__ import annotations
 
-import json
 import os
 
+import pytest
 from pyspark.sql import Row
 
 import go_iceberg_spark as gi
 from go_iceberg_spark.table.metadata import (
     MANIFEST_LIST_SUFFIX,
-    Snapshot,
     read_manifest_list,
-    write_manifest,
 )
 
 
@@ -32,6 +30,60 @@ def members_of(t):
     snap = t.current_snapshot()
     assert snap.manifest_path.endswith(MANIFEST_LIST_SUFFIX)
     return read_manifest_list(os.path.join(t.location, snap.manifest_path))
+
+
+# per-field arrays whose elements entry building reads without a None check
+_INDEXED_STATS = ("stats_fids", "stats_min_json", "stats_max_json", "stats_blooms",
+                  "stats_nan_counts", "stats_bounds_exact")
+
+
+def assert_current_layout(t, snap):
+    """The layout the manifest readers assume: the snapshot names a
+    manifest list, every record of which has path, n, nd and bounds, and
+    every parquet member it names has every ``_MANIFEST_ARROW_SCHEMA``
+    column, non-null in every row."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from go_iceberg_spark.table.metadata import _MANIFEST_ARROW_SCHEMA
+
+    assert snap.manifest_path.endswith(MANIFEST_LIST_SUFFIX), snap.manifest_path
+    for m in read_manifest_list(os.path.join(t.location, snap.manifest_path)):
+        assert {"path", "n", "nd", "bounds"} <= set(m), m
+        tbl = pq.read_table(os.path.join(t.location, m["path"]))
+        assert [(f.name, f.type) for f in tbl.schema] == \
+            [(f.name, f.type) for f in _MANIFEST_ARROW_SCHEMA], m["path"]
+        for name in _MANIFEST_ARROW_SCHEMA.names:
+            assert tbl.column(name).null_count == 0, (m["path"], name)
+        for name in _INDEXED_STATS:
+            assert pc.list_flatten(tbl.column(name)).null_count == 0, (m["path"], name)
+        n_deletes = sum(1 for c in tbl.column("content").to_pylist() if c != 0)
+        assert (m["n"], m["nd"]) == (tbl.num_rows, n_deletes), m
+
+
+@pytest.mark.parametrize("fmt", ["dual", "parquet"])
+def test_every_commit_writes_the_current_layout(spark, catalog, fmt):
+    """Appends, merge-on-read and copy-on-write deletes, both
+    rewrite_manifests shapes and a forced compaction each leave a snapshot
+    whose list records and members carry every field the readers use."""
+    from go_iceberg_spark.schema import from_spark_schema
+
+    df = spark.createDataFrame([Row(id=i, v=float(i)) for i in range(10)])
+    t = catalog.create_table("db", f"layout_{fmt}", from_spark_schema(df.schema),
+                             properties={"manifest-format": fmt})
+    steps = [
+        lambda: t.append(df),
+        lambda: t.append(spark.createDataFrame([Row(id=10 + i, v=float(i)) for i in range(10)])),
+        lambda: t.delete(gi.eq("id", 3), mode="merge-on-read"),
+        lambda: t.delete(gi.gte("id", 15)),
+        lambda: t.rewrite_manifests(target_entries_per_manifest=1),
+        lambda: t.rewrite_manifests(),
+        lambda: t.rewrite_data_files(min_input_files=1),
+    ]
+    for step in steps:
+        step()
+        assert_current_layout(t, t.current_snapshot())
+    assert sorted(r.id for r in t.to_df().collect()) == [i for i in range(15) if i != 3]
 
 
 def test_append_reuses_parent_members(spark, catalog):
@@ -75,35 +127,6 @@ def test_member_list_compacts_past_threshold(spark, catalog):
         assert t.to_df().count() == 16
     finally:
         Table.MANIFEST_COMPACT_THRESHOLD = old_threshold
-
-
-def test_legacy_single_manifest_snapshot_reads(spark, catalog):
-    """A snapshot whose manifest_path is a plain parquet manifest (the
-    pre-manifest-list layout) still scans, diffs, and expires."""
-    from dataclasses import replace
-
-    t = mk(spark, catalog, "legacy")
-    entries = t.live_entries()
-    rel = "metadata/snap-legacy.parquet"
-    write_manifest(os.path.join(t.location, rel), entries)
-    snap = t.current_snapshot()
-    legacy = Snapshot(
-        snapshot_id=snap.snapshot_id + 1, parent_snapshot_id=snap.snapshot_id,
-        sequence_number=snap.sequence_number + 1, timestamp_ms=snap.timestamp_ms + 1,
-        operation="append", manifest_path=rel, schema_id=snap.schema_id,
-        summary=dict(snap.summary))
-    md = replace(t.metadata,
-                 snapshots=(*t.metadata.snapshots, legacy),
-                 current_snapshot_id=legacy.snapshot_id,
-                 refs={**t.metadata.refs},
-                 last_sequence_number=legacy.sequence_number)
-    t.version = t._commit_fn(md, t.version)
-    t.metadata = md
-    assert t.to_df().count() == 10
-    # an append on top of the legacy snapshot folds it into the new layout
-    t.append(spark.createDataFrame([Row(id=999, v=9.0)]))
-    assert t.current_snapshot().manifest_path.endswith(MANIFEST_LIST_SUFFIX)
-    assert t.to_df().count() == 11
 
 
 def test_rewrite_manifests_compacts_chain(spark, catalog):

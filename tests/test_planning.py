@@ -227,43 +227,6 @@ def test_scan_uses_bounds_short_circuit(spark, catalog):
     assert len(t.scan().filter(gi.gt("id", 25)).plan_files()) >= 1
 
 
-def test_legacy_blob_manifest_still_reads_and_prunes(spark, tmp_path):
-    """Manifests written before the columnar-stats layout (stats_json blob
-    per entry) still read and prune — tables from older engine versions keep
-    working without a rewrite."""
-    import json
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from go_iceberg_spark.table.metadata import read_manifest
-
-    entries = make_entries(20, with_deletes=False)
-    cols = {
-        "content": [e.content for e in entries],
-        "file_path": [e.file_path for e in entries],
-        "file_format": ["parquet"] * 20,
-        "spec_id": [0] * 20,
-        "schema_id": [0] * 20,
-        "record_count": [e.record_count for e in entries],
-        "file_size": [e.file_size for e in entries],
-        "partition_json": ["{}"] * 20,
-        "stats_json": [json.dumps({str(k): v for k, v in e.column_stats.items()})
-                       for e in entries],
-        "sequence_number": [1] * 20,
-        "equality_ids_json": ["[]"] * 20,
-    }
-    p = str(tmp_path / "legacy.parquet")
-    pq.write_table(pa.table(cols), p)
-
-    got = read_manifest(p)
-    assert got == entries
-    pruned = prune_manifest_driver(p, enc(gt("x", 100)), SCHEMA)
-    assert sorted(e.file_path for e in pruned) == sorted(e.file_path for e in entries[10:])
-    # the distributed tier hands a legacy manifest to the driver prune
-    assert plan_distributed(spark, p, enc(gt("x", 100)), SCHEMA) == pruned
-
-
 def test_distributed_over_manifest_list_members(spark, tmp_path):
     """The distributed planner accepts a manifest-LIST's member paths (the
     incremental commit layout) and prunes across all of them in one job."""
@@ -283,28 +246,6 @@ def test_distributed_over_manifest_list_members(spark, tmp_path):
     both = {e.file_path for e in plan_distributed(spark, [p1, p2], enc(gt("x", 2000)), SCHEMA)}
     assert both == single1 | single2
     assert any(fp.startswith("g2/") for fp in both) and len(both) > 0
-
-
-def test_distributed_mixed_prebloom_members(spark, tmp_path):
-    """Manifest lists REUSE immutable member manifests across snapshots, so
-    one plan can read members written before the stats_blooms column existed
-    next to new ones. plan_distributed reads them under the manifest schema,
-    where a column a member lacks reads as NULL, and entry building must
-    tolerate a null row-level blooms array."""
-    import pyarrow.parquet as pq
-
-    p_new = str(tmp_path / "new.parquet")
-    write_manifest(p_new, make_entries(10, with_deletes=False))
-    # simulate a pre-bloom member: same manifest minus the stats_blooms column
-    p_old = str(tmp_path / "old.parquet")
-    tbl = pq.read_table(p_new)
-    pq.write_table(tbl.drop_columns(["stats_blooms"]), p_old)
-
-    for f in (gt("x", 30), is_null("x")):
-        a = {e.file_path for e in prune_manifest_driver(p_new, enc(f), SCHEMA)}
-        both = {e.file_path
-                for e in plan_distributed(spark, [p_old, p_new], enc(f), SCHEMA)}
-        assert both == a  # same logical entries in both members
 
 
 def test_distributed_tier_prunes_bucket_partitions(spark, catalog, monkeypatch):
@@ -431,44 +372,26 @@ def test_member_bounds_skip_ratio_clustered_vs_path_ordered(spark, tmp_path):
     assert len(ents) == 1 and ents[0].file_path == "data/f2500.parquet"
 
 
-
-@pytest.mark.parametrize("layout, tier", [("legacy", "driver_prune"), ("avro", "memory")])
+@pytest.mark.parametrize("layout, tier", [("avro", "memory")])
 def test_tier_rule_per_manifest_layout(spark, catalog, monkeypatch, layout, tier):
-    """The tier rule on the layouts beside the manifest list, with the cache
+    """The tier rule on the layout beside the manifest list, with the cache
     limit forced to 0 and the large tiers spied on (the pattern of
-    test_member_level_skip_reads_only_matching_manifests): a legacy single
-    parquet manifest is one unbounded member, so it takes the driver prune;
-    an Avro-only snapshot has no parquet members and always plans in memory.
-    Either way plan_files keeps exactly the might_match survivors."""
-    from dataclasses import replace
-
+    test_member_level_skip_reads_only_matching_manifests): an Avro-only
+    snapshot has no parquet members and always plans in memory, keeping
+    exactly the might_match survivors."""
     from pyspark.sql import Row
 
     import go_iceberg_spark.table.planning as P
     from go_iceberg_spark.expr import might_match
     from go_iceberg_spark.schema import from_spark_schema
-    from go_iceberg_spark.table.metadata import Snapshot
     from go_iceberg_spark.table.scan import ScanBuilder, _stats_for_pruning
 
     df0 = spark.createDataFrame([Row(id=0, v=0.0)])
-    props = {"manifest-format": "avro"} if layout == "avro" else {}
     t = catalog.create_table("db", f"tier_{layout}", from_spark_schema(df0.schema),
-                             properties=props)
+                             properties={"manifest-format": layout})
     for b in range(3):  # disjoint id ranges, so the filter prunes files
         t.append(spark.createDataFrame([Row(id=b * 10 + i, v=float(i)) for i in range(10)]))
-    if layout == "legacy":
-        rel = "metadata/snap-legacy.parquet"
-        write_manifest(os.path.join(t.location, rel), t.live_entries())
-        snap = t.current_snapshot()
-        legacy = replace(snap, snapshot_id=snap.snapshot_id + 1,
-                         parent_snapshot_id=snap.snapshot_id, manifest_path=rel,
-                         avro_manifest_path=None)
-        md = replace(t.metadata, snapshots=(*t.metadata.snapshots, legacy),
-                     current_snapshot_id=legacy.snapshot_id)
-        t.version = t._commit_fn(md, t.version)
-        t.metadata = md
-    else:
-        assert t.current_snapshot().avro_list == t.current_snapshot().manifest_path
+    assert t.current_snapshot().avro_list == t.current_snapshot().manifest_path
 
     monkeypatch.setattr(ScanBuilder, "_CACHE_ENTRY_LIMIT", 0)
     t._manifest_cache.clear()
@@ -488,9 +411,8 @@ def test_tier_rule_per_manifest_layout(spark, catalog, monkeypatch, layout, tier
 
     flt = gt("id", 15)
     planned = sorted(task.file.file_path for task in t.scan().filter(flt).plan_files())
-    expected_reads = [os.path.join(t.location, t.current_snapshot().manifest_path)]
-    assert reads == {"driver_prune": expected_reads if tier == "driver_prune" else [],
-                     "distributed": []}
+    # the memory tier reads nothing through the two large tiers
+    assert tier == "memory" and reads == {"driver_prune": [], "distributed": []}
     entries = t.manifest_entries(t.current_snapshot())
     e = _encode_filter(simplify(flt), t.schema)
     expected = sorted(x.file_path for x in entries

@@ -175,6 +175,25 @@ def test_iceberg_wire_commit_shapes(spark, service, rcat):
     assert r.status_code in (400, 500)
 
 
+def test_commit_body_without_requirements_or_updates_is_rejected(spark, service, rcat):
+    """The commit endpoint speaks only the Iceberg requirements/updates
+    shape: a whole-metadata body with an expected version is a 400, and the
+    table is left as it was."""
+    import requests
+
+    t = rcat.create_table("db", "oldbody", from_spark_schema(proto_df(spark).schema))
+    t.append(proto_df(spark))
+    url = f"{service}/v1/namespaces/db/tables/oldbody"
+    cur = requests.get(url).json()
+    md = dict(cur["metadata"], properties={**cur["metadata"]["properties"], "x": "1"})
+    r = requests.post(f"{url}/commit", json={"expected-version": cur["version"],
+                                             "metadata": md})
+    assert r.status_code == 400
+    after = requests.get(url).json()
+    assert after["version"] == cur["version"]
+    assert after["metadata"] == cur["metadata"]
+
+
 def test_wire_commit_full_crud_through_client(spark, rcat):
     """The client now commits via requirements/updates for every mutation
     class: snapshot-producing ops, schema evolution, properties, rollback,

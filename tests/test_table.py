@@ -1451,89 +1451,6 @@ def test_iceberg_bucket_hashes_uuid_bytes(spark, catalog):
     assert all(f.file.partition["ub"] == str(want) for f in files)
 
 
-def test_legacy_tables_keep_int_width_bucket_hash(spark, catalog):
-    from go_iceberg_spark.errors import ValidationError
-    """r6 (r5 ADVICE): an UNSTAMPED spark-mode table could hold EITHER
-    hash(int) or hash(long) ordinals (two pre-stamp write generations,
-    indistinguishable from metadata), so literal bucket pruning on its
-    int sources is DISABLED — every file scanned, no rows silently lost —
-    and widening its bucket source is rejected. Stamping the true width
-    (stamp_bucket_hash_width migration) re-enables pruning at that width."""
-    from go_iceberg_spark.schema import LONG as LONG_T
-    from go_iceberg_spark.table.write import spark_murmur3_int
-
-    df = spark.range(0, 100).selectExpr("CAST(id AS INT) AS k", "CAST(id AS DOUBLE) AS v")
-    schema = from_spark_schema(df.schema)
-    fid = {f.name: f.field_id for f in schema.fields}
-    spec = PartitionSpec(0, (PartitionField(fid["k"], 1000, "bucket[8]", "kb"),))
-    t = catalog.create_table("db", "legacybkt", schema, spec=spec)
-    t.remove_properties(["write.bucket-hash-width"])  # simulate a pre-stamp table
-    assert t._bucket_fn() == "spark-unstamped"
-    t.append(df)
-
-    # unstamped appends keep int-width layout (true-legacy compatible)
-    assert {e.partition["kb"] for e in t.live_entries()} <= {
-        str(spark_murmur3_int(v) % 8) for v in range(100)}
-    # correctness first: the row is found, but NO file is pruned — the
-    # width guess that r5 made here silently dropped live files on tables
-    # written in the long-width pre-stamp generation
-    assert t.scan().filter(E.eq("k", 42)).count() == 1
-    tasks = t.scan().filter(E.eq("k", 42)).plan_files()
-    assert len(tasks) == len(t.live_entries()), "unstamped table must not bucket-prune"
-
-    # widening the bucket source would desync literal hashing from layout
-    with pytest.raises(ValidationError, match="bucket-hash-width"):
-        t.update_schema().update_column_type("k", LONG_T).commit()
-
-    # the owner declares the true width -> pruning resumes at that width
-    with pytest.raises(ValidationError, match="int.*long|'int' or 'long'"):
-        t.stamp_bucket_hash_width("short")
-    t.stamp_bucket_hash_width("int")
-    assert t._bucket_fn() == "spark-int"
-    tasks = t.scan().filter(E.eq("k", 42)).plan_files()
-    assert all(f.file.partition["kb"] == str(spark_murmur3_int(42) % 8) for f in tasks)
-    assert len(tasks) < len(t.live_entries()), "bucket pruning inactive after stamp"
-    assert t.scan().filter(E.eq("k", 42)).count() == 1
-
-    # a stamped table (the default) widens fine — covered by
-    # test_bucket_ordinals_survive_int_to_long_widening
-
-
-def test_unstamped_long_generation_table_loses_no_rows(spark, catalog):
-    """r6 (r5 ADVICE medium #1, the actual failure shape): a table whose
-    files were written in the PRE-STAMP LONG-WIDTH generation (r4 code:
-    int sources cast to long on write, no stamp yet). r5 guessed int
-    width for these and pruned live files; now the unstamped mode never
-    prunes, so every row stays reachable, and stamping "long" restores
-    pruning with the correct hash."""
-    from go_iceberg_spark.table.write import spark_murmur3_long
-
-    df = spark.range(0, 100).selectExpr("CAST(id AS INT) AS k", "CAST(id AS DOUBLE) AS v")
-    schema = from_spark_schema(df.schema)
-    fid = {f.name: f.field_id for f in schema.fields}
-    spec = PartitionSpec(0, (PartitionField(fid["k"], 1000, "bucket[8]", "kb"),))
-    # create stamped (today's default => long-width files), then strip the
-    # stamp to reproduce the r4-generation metadata exactly
-    t = catalog.create_table("db", "legacybkt_long", schema, spec=spec)
-    t.append(df)
-    assert {e.partition["kb"] for e in t.live_entries()} <= {
-        str(spark_murmur3_long(v) % 8) for v in range(100)}
-    t.remove_properties(["write.bucket-hash-width"])
-    assert t._bucket_fn() == "spark-unstamped"
-
-    # r5 would have pruned with hash(int) here and lost the row whenever
-    # hash_int(42)%8 != hash_long(42)%8; now: no pruning, row found
-    tasks = t.scan().filter(E.eq("k", 42)).plan_files()
-    assert len(tasks) == len(t.live_entries())
-    assert t.scan().filter(E.eq("k", 42)).count() == 1
-
-    t.stamp_bucket_hash_width("long")
-    assert t._bucket_fn() == "spark"
-    tasks = t.scan().filter(E.eq("k", 42)).plan_files()
-    assert len(tasks) < len(t.live_entries())
-    assert t.scan().filter(E.eq("k", 42)).count() == 1
-
-
 def test_merge_not_matched_by_source_clause_matrix(spark, catalog):
     """r5 (VERDICT r4 task #4): WHEN NOT MATCHED BY SOURCE — delete-all,
     conditional delete, update, and delete+update combinations, alongside
@@ -1958,36 +1875,6 @@ def test_nan_footer_bound_is_stored_absent(spark, catalog):
     assert fid in {kv["key"] for kv in data_file["lower_bounds"]}
     assert fid not in {kv["key"] for kv in data_file["upper_bounds"] or []}
     assert [r.id for r in t.scan().filter(E.col("v").gt(1000.0)).to_df().collect()] == [50]
-
-
-def test_stamp_refuses_overwriting_resolved_width(spark, catalog):
-    """r6 ADVICE (low): stamping a width over a table that already RESOLVES
-    to one ("spark" long / "spark-int") would silently re-enable wrong-width
-    literal pruning and lose rows — only "spark-unstamped" tables may be
-    stamped; correcting a known-wrong stamp needs force=True."""
-    from go_iceberg_spark.errors import ValidationError
-
-    df = spark.range(0, 10).selectExpr("CAST(id AS INT) AS k", "CAST(id AS DOUBLE) AS v")
-    schema = from_spark_schema(df.schema)
-    fid = {f.name: f.field_id for f in schema.fields}
-    spec = PartitionSpec(0, (PartitionField(fid["k"], 1000, "bucket[8]", "kb"),))
-    t = catalog.create_table("db", "stampguard", schema, spec=spec)
-    t.append(df)
-    assert t._bucket_fn() == "spark"  # default stamped long
-
-    with pytest.raises(ValidationError, match="already resolves"):
-        t.stamp_bucket_hash_width("int")
-    assert t._bucket_fn() == "spark"
-
-    t.stamp_bucket_hash_width("int", force=True)
-    assert t._bucket_fn() == "spark-int"
-    with pytest.raises(ValidationError, match="already resolves"):
-        t.stamp_bucket_hash_width("long")
-
-    t.remove_properties(["write.bucket-hash-width"])
-    assert t._bucket_fn() == "spark-unstamped"
-    t.stamp_bucket_hash_width("long")  # unstamped: no force needed
-    assert t._bucket_fn() == "spark"
 
 
 def test_full_overwrite_retry_restamps_sequence(spark, catalog):
@@ -2591,6 +2478,25 @@ def test_small_append_runs_one_spark_job(spark, catalog):
     assert entry.record_count == 10_000
     assert entry.column_stats[fid["id"]]["min"] == 0
     assert entry.column_stats[fid["id"]]["max"] == 9_999
+
+
+def test_range_append_of_a_joined_frame_runs_its_plan_once(spark, catalog):
+    """A write.distribution-mode=range append sizes its range partitions
+    from the input's size estimate, so the input's adaptive plan (here one
+    broadcast join) runs once, inside the write, and not a second time to
+    count its partitions first."""
+    from go_iceberg_spark.plans import inspect as P
+
+    facts = spark.range(0, 20_000, numPartitions=2).selectExpr("id", "id % 10 AS k")
+    dims = spark.range(0, 10).selectExpr("id AS k", "CAST(id AS DOUBLE) AS v")
+    df = facts.join(F.broadcast(dims), "k").select("id", "k", "v")
+    t = catalog.create_table("db", "budget_range", from_spark_schema(df.schema),
+                             properties={"write.distribution-mode": "range"})
+    t.replace_sort_order("id")
+    with P.spark_jobs(spark) as jobs:
+        t.append(df)
+    assert t.scan().count() == 20_000
+    P.assert_max_jobs(jobs, 2)
 
 
 def _force_harvest_tier(monkeypatch, tier):
