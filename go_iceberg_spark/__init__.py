@@ -13,6 +13,7 @@ from .errors import (
     CommitConflictError,
     IcebergError,
     NamespaceAlreadyExistsError,
+    NamespaceNotEmptyError,
     NamespaceNotFoundError,
     NoSuchSnapshotError,
     RequirementFailedError,

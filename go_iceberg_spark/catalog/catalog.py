@@ -1,11 +1,12 @@
-"""Catalog interface + filesystem catalog.
+"""Catalog interface + the warehouse catalog.
 
 Re-expresses the reference catalog surface (reference: catalog/catalog.go:11-53
 interface — namespaces list/create/drop/exists/properties, tables
-create/load/drop/rename/exists, commit) over a warehouse directory, mirroring
-how the reference's LocalFileIO-backed flows work without a REST service
-(reference: io/local.go). A REST catalog client with the same interface lives
-in ``rest.py`` (reference: catalog/rest.go).
+create/load/drop/rename/exists, commit) over a warehouse on any FileIO: a
+local directory (reference: io/local.go) or an object-store prefix
+(reference: io/s3.go), without a REST service. A REST catalog client with the
+same interface lives in ``rest.py`` (reference: catalog/rest.go), and the
+service it speaks to (``rest_server.py``) runs this catalog.
 
 Layout: ``<warehouse>/<ns parts...>/<table>/metadata/v{N}.metadata.json``.
 Namespace properties live in ``<ns>/.namespace.json``.
@@ -15,16 +16,21 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
+from dataclasses import replace
 
 from pyspark.sql import SparkSession
 
 from ..errors import (
+    CommitConflictError,
+    IcebergError,
     NamespaceAlreadyExistsError,
+    NamespaceNotEmptyError,
     NamespaceNotFoundError,
     TableAlreadyExistsError,
     TableNotFoundError,
+    ValidationError,
 )
+from ..io.fileio import LocalFileIO, for_location, strip_file_scheme
 from ..schema import Schema
 from ..table.metadata import (
     PartitionSpec,
@@ -34,6 +40,8 @@ from ..table.metadata import (
     UNSORTED,
     commit_metadata,
     current_metadata_version,
+    load_metadata,
+    now_ms,
 )
 from ..table.table import Table
 
@@ -71,7 +79,7 @@ class Catalog:
     def load_table(self, ns: tuple[str, ...], name: str) -> Table:
         raise NotImplementedError
 
-    def drop_table(self, ns: tuple[str, ...], name: str, purge: bool = True) -> None:
+    def drop_table(self, ns: tuple[str, ...], name: str) -> None:
         raise NotImplementedError
 
     def rename_table(self, ns: tuple[str, ...], old: str, new_ns: tuple[str, ...], new: str) -> None:
@@ -88,152 +96,37 @@ def _norm_ns(ns) -> tuple[str, ...]:
 
 
 class FilesystemCatalog(Catalog):
-    """Warehouse-directory catalog (the reference's local-FS deployment mode,
-    reference: io/local.go + examples/basic)."""
-
-    def __init__(self, spark: SparkSession, warehouse: str):
-        self.spark = spark
-        self.warehouse = os.path.abspath(warehouse)
-        os.makedirs(self.warehouse, exist_ok=True)
-
-    # -- paths -------------------------------------------------------------
-    def _ns_path(self, ns) -> str:
-        return os.path.join(self.warehouse, *_norm_ns(ns))
-
-    def _table_path(self, ns, name: str) -> str:
-        return os.path.join(self._ns_path(ns), name)
-
-    # -- namespaces --------------------------------------------------------
-    def list_namespaces(self) -> list[tuple[str, ...]]:
-        out = []
-        for root, dirs, files in os.walk(self.warehouse):
-            if _NS_FILE in files:
-                rel = os.path.relpath(root, self.warehouse)
-                out.append(tuple(rel.split(os.sep)))
-        return sorted(out)
-
-    def create_namespace(self, ns, properties: dict | None = None) -> None:
-        path = self._ns_path(ns)
-        marker = os.path.join(path, _NS_FILE)
-        if os.path.exists(marker):
-            raise NamespaceAlreadyExistsError(f"namespace {ns} exists")
-        os.makedirs(path, exist_ok=True)
-        with open(marker, "w") as f:
-            json.dump({"properties": properties or {}}, f)
-
-    def drop_namespace(self, ns) -> None:
-        path = self._ns_path(ns)
-        if not os.path.exists(os.path.join(path, _NS_FILE)):
-            raise NamespaceNotFoundError(f"namespace {ns} not found")
-        if self.list_tables(ns):
-            raise NamespaceNotFoundError(f"namespace {ns} not empty")
-        shutil.rmtree(path)
-
-    def namespace_exists(self, ns) -> bool:
-        return os.path.exists(os.path.join(self._ns_path(ns), _NS_FILE))
-
-    def namespace_properties(self, ns) -> dict:
-        marker = os.path.join(self._ns_path(ns), _NS_FILE)
-        if not os.path.exists(marker):
-            raise NamespaceNotFoundError(f"namespace {ns} not found")
-        with open(marker) as f:
-            return json.load(f).get("properties", {})
-
-    # -- tables ------------------------------------------------------------
-    def list_tables(self, ns) -> list[str]:
-        path = self._ns_path(ns)
-        if not os.path.isdir(path):
-            return []
-        out = []
-        for name in os.listdir(path):
-            if current_metadata_version(os.path.join(path, name)) > 0:
-                out.append(name)
-        return sorted(out)
-
-    def create_table(self, ns, name: str, schema: Schema, spec: PartitionSpec = UNPARTITIONED,
-                     sort_order: SortOrder = UNSORTED, properties: dict | None = None) -> Table:
-        if not self.namespace_exists(ns):
-            self.create_namespace(ns)
-        loc = self._table_path(ns, name)
-        if current_metadata_version(loc) > 0:
-            raise TableAlreadyExistsError(f"table {ns}.{name} exists")
-        md = TableMetadata.new(loc, schema, spec, sort_order, properties)
-        v = commit_metadata(loc, md, 0)
-        return Table(self.spark, (*_norm_ns(ns), name), loc, md, v)
-
-    def load_table(self, ns, name: str) -> Table:
-        loc = self._table_path(ns, name)
-        if current_metadata_version(loc) == 0:
-            raise TableNotFoundError(f"table {ns}.{name} not found")
-        return Table.load(self.spark, loc, (*_norm_ns(ns), name))
-
-    def drop_table(self, ns, name: str, purge: bool = True) -> None:
-        loc = self._table_path(ns, name)
-        if current_metadata_version(loc) == 0:
-            raise TableNotFoundError(f"table {ns}.{name} not found")
-        shutil.rmtree(loc)
-
-    def rename_table(self, ns, old: str, new_ns, new: str) -> None:
-        src = self._table_path(ns, old)
-        dst = self._table_path(new_ns, new)
-        if current_metadata_version(src) == 0:
-            raise TableNotFoundError(f"table {ns}.{old} not found")
-        if os.path.exists(dst):
-            raise TableAlreadyExistsError(f"table {new_ns}.{new} exists")
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        os.rename(src, dst)
-        # rewrite metadata.location to the destination: Table.load uses the
-        # directory path, but the metadata FILE still names the source dir,
-        # and REST attachments and external readers resolving relative paths
-        # against `location` would read (and write) under the stale directory
-        from dataclasses import replace as _rpl
-
-        from ..table.metadata import load_metadata, now_ms
-        for _ in range(5):
-            md, v = load_metadata(dst)
-            if md.location == dst:
-                break
-            try:
-                commit_metadata(dst, _rpl(md, location=dst, last_updated_ms=now_ms()), v)
-                break
-            except CommitConflictError:
-                continue
-
-    def table_exists(self, ns, name: str) -> bool:
-        return current_metadata_version(self._table_path(ns, name)) > 0
-
-
-class ObjectStoreCatalog(Catalog):
-    """Warehouse catalog on object storage (``s3://bucket/prefix`` — the
-    reference's S3 deployment, reference: io/s3.go): every byte of METADATA
-    goes through a FileIO, and the table commit uses S3 conditional PUT
-    (If-None-Match: *) as its optimistic-concurrency primitive — the same
-    commit protocol ``FilesystemCatalog`` tables run through
-    ``LocalFileIO``'s exclusive create.
+    """Warehouse catalog over a FileIO (the reference's local-FS and S3
+    deployment modes, reference: io/local.go, io/s3.go + examples/basic).
+    ``io`` defaults to the warehouse scheme's FileIO; namespace markers and
+    table commits use its exclusive create as the optimistic-concurrency
+    primitive (a link on local disk, a conditional PUT on S3).
 
     Data files are written by Spark executors; without a Hadoop S3A
     deployment they cannot land on ``s3://`` directly, so tables default
     their ``write.data.path`` to ``data_path`` (a Hadoop-visible root) when
-    one is configured. On a real cluster with S3A jars, omit ``data_path``
-    and data lives under the table location like any Iceberg table.
+    one is configured.
 
-    Object stores have no rename; ``rename_table`` raises (use a REST
+    Object stores have no rename; there ``rename_table`` raises (use a REST
     catalog for metadata-pointer renames — catalog/rest.py)."""
 
     def __init__(self, spark: SparkSession, warehouse: str, io=None,
                  data_path: str | None = None):
-        from ..io.fileio import for_location
-
         self.spark = spark
-        self.warehouse = warehouse.rstrip("/")
-        self.io = io or for_location(self.warehouse)
+        self.io = io or for_location(warehouse)
+        self.warehouse = (os.path.abspath(strip_file_scheme(warehouse))
+                          if isinstance(self.io, LocalFileIO) else warehouse.rstrip("/"))
         self.data_path = data_path
 
+    # -- paths -------------------------------------------------------------
     def _ns_path(self, ns) -> str:
         return "/".join((self.warehouse, *_norm_ns(ns)))
 
     def _table_path(self, ns, name: str) -> str:
         return f"{self._ns_path(ns)}/{name}"
+
+    def _marker(self, ns) -> str:
+        return self._table_path(ns, _NS_FILE)
 
     # -- namespaces --------------------------------------------------------
     def list_namespaces(self) -> list[tuple[str, ...]]:
@@ -245,37 +138,39 @@ class ObjectStoreCatalog(Catalog):
         return sorted(out)
 
     def create_namespace(self, ns, properties: dict | None = None) -> None:
-        marker = f"{self._ns_path(ns)}/{_NS_FILE}"
         try:
-            self.io.create(marker, json.dumps({"properties": properties or {}}).encode())
+            self.io.create(self._marker(ns), json.dumps({"properties": properties or {}}).encode())
         except FileExistsError:
             raise NamespaceAlreadyExistsError(f"namespace {ns} exists") from None
 
     def drop_namespace(self, ns) -> None:
-        marker = f"{self._ns_path(ns)}/{_NS_FILE}"
+        """Drop an empty namespace: one holding anything besides its own
+        marker (a table, a child namespace, a stray file) raises and is left
+        as it is."""
+        marker = self._marker(ns)
         if not self.io.exists(marker):
             raise NamespaceNotFoundError(f"namespace {ns} not found")
-        if self.list_tables(ns):
-            raise NamespaceNotFoundError(f"namespace {ns} not empty")
+        if any(p != marker for p in self.io.list(self._ns_path(ns) + "/")):
+            raise NamespaceNotEmptyError(f"namespace {ns} not empty")
         self.io.delete(marker)
 
     def namespace_exists(self, ns) -> bool:
-        return self.io.exists(f"{self._ns_path(ns)}/{_NS_FILE}")
+        return self.io.exists(self._marker(ns))
 
     def namespace_properties(self, ns) -> dict:
-        marker = f"{self._ns_path(ns)}/{_NS_FILE}"
-        if not self.io.exists(marker):
-            raise NamespaceNotFoundError(f"namespace {ns} not found")
-        return json.loads(self.io.read(marker)).get("properties", {})
+        try:
+            raw = self.io.read(self._marker(ns))
+        except FileNotFoundError:
+            raise NamespaceNotFoundError(f"namespace {ns} not found") from None
+        return json.loads(raw).get("properties", {})
 
     # -- tables ------------------------------------------------------------
     def list_tables(self, ns) -> list[str]:
         base = self._ns_path(ns) + "/"
         names = set()
         for p in self.io.list(base):
-            rest = p[len(base):]
-            parts = rest.split("/")
-            if len(parts) >= 3 and parts[1] == "metadata" and parts[2].endswith(".metadata.json"):
+            parts = p[len(base):].split("/")
+            if len(parts) == 3 and parts[1] == "metadata" and parts[2].endswith(".metadata.json"):
                 names.add(parts[0])
         return sorted(names)
 
@@ -283,41 +178,71 @@ class ObjectStoreCatalog(Catalog):
                      sort_order: SortOrder = UNSORTED, properties: dict | None = None) -> Table:
         if not self.namespace_exists(ns):
             self.create_namespace(ns)
-        loc = self._table_path(ns, name)
-        if current_metadata_version(loc, self.io) > 0:
-            raise TableAlreadyExistsError(f"table {ns}.{name} exists")
         props = dict(properties or {})
         if self.data_path and "write.data.path" not in props:
             props["write.data.path"] = "/".join(
                 (self.data_path.rstrip("/"), *_norm_ns(ns), name))
-        md = TableMetadata.new(loc, schema, spec, sort_order, props)
-        v = commit_metadata(loc, md, 0, io=self.io)
+        md = TableMetadata.new(self._table_path(ns, name), schema, spec, sort_order, props)
+        return self._register(ns, name, md)
+
+    def _register(self, ns, name: str, md: TableMetadata) -> Table:
+        """Commit ``md`` as version 1 of a new table ``ns.name``."""
+        loc = self._table_path(ns, name)
+        if md.location != loc:
+            raise ValidationError(f"metadata location {md.location!r} must be {loc!r}")
+        if current_metadata_version(loc, self.io) > 0:
+            raise TableAlreadyExistsError(f"table {ns}.{name} exists")
+        try:
+            v = commit_metadata(loc, md, 0, io=self.io)
+        except CommitConflictError:
+            raise TableAlreadyExistsError(f"table {ns}.{name} exists") from None
         return Table(self.spark, (*_norm_ns(ns), name), loc, md, v, io=self.io)
 
     def load_table(self, ns, name: str) -> Table:
         loc = self._table_path(ns, name)
         if current_metadata_version(loc, self.io) == 0:
             raise TableNotFoundError(f"table {ns}.{name} not found")
-        from ..table.metadata import load_metadata
-
         md, v = load_metadata(loc, self.io)
         return Table(self.spark, (*_norm_ns(ns), name), loc, md, v, io=self.io)
 
-    def drop_table(self, ns, name: str, purge: bool = True) -> None:
+    def drop_table(self, ns, name: str) -> None:
+        """Drop a table and everything under its location."""
         loc = self._table_path(ns, name)
-        objs = self.io.list(loc + "/")
         if current_metadata_version(loc, self.io) == 0:
             raise TableNotFoundError(f"table {ns}.{name} not found")
-        if purge:
-            for p in objs:
-                self.io.delete(p)
+        self.io.delete_tree(loc)
 
     def rename_table(self, ns, old: str, new_ns, new: str) -> None:
-        from ..errors import ValidationError
-
-        raise ValidationError(
-            "object stores cannot rename prefixes; use a REST catalog "
-            "(catalog/rest.py) for metadata-pointer renames")
+        if not isinstance(self.io, LocalFileIO):
+            raise ValidationError(
+                "object stores cannot rename prefixes; use a REST catalog "
+                "(catalog/rest.py) for metadata-pointer renames")
+        src = self._table_path(ns, old)
+        dst = self._table_path(new_ns, new)
+        if current_metadata_version(src, self.io) == 0:
+            raise TableNotFoundError(f"table {ns}.{old} not found")
+        if os.path.exists(dst):
+            raise TableAlreadyExistsError(f"table {new_ns}.{new} exists")
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        os.rename(src, dst)
+        # the moved metadata still records the SOURCE location, and readers
+        # resolving relative manifest and data paths against `location` (REST
+        # attachments, external readers) would read and write under the stale
+        # directory: commit a location rewrite as a new version at the
+        # destination; a concurrent commit that takes that version first gets
+        # the rewrite re-applied on its successor
+        for _ in range(5):
+            md, v = load_metadata(dst, self.io)
+            if md.location == dst:
+                return
+            try:
+                commit_metadata(dst, replace(md, location=dst, last_updated_ms=now_ms()), v,
+                                io=self.io)
+                return
+            except CommitConflictError:
+                continue
+        raise IcebergError(f"renamed {src} to {dst} but lost every commit race "
+                           "rewriting its location")
 
     def table_exists(self, ns, name: str) -> bool:
         return current_metadata_version(self._table_path(ns, name), self.io) > 0

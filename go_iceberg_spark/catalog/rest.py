@@ -16,13 +16,12 @@ deployment split.
 
 from __future__ import annotations
 
-import os
-
 import requests
 
 from ..errors import (
     CommitConflictError,
     NamespaceAlreadyExistsError,
+    NamespaceNotEmptyError,
     NamespaceNotFoundError,
     TableAlreadyExistsError,
     TableNotFoundError,
@@ -96,7 +95,7 @@ class RESTCatalog(Catalog):
 
     def drop_namespace(self, ns) -> None:
         self._req("DELETE", f"/v1/namespaces/{self._ns_seg(ns)}",
-                  not_found=NamespaceNotFoundError, conflict=NamespaceNotFoundError)
+                  not_found=NamespaceNotFoundError, conflict=NamespaceNotEmptyError)
 
     def namespace_exists(self, ns) -> bool:
         try:
@@ -115,7 +114,7 @@ class RESTCatalog(Catalog):
         return sorted(i["name"] for i in out.get("identifiers", []))
 
     def _table_location(self, ns, name: str) -> str:
-        return os.path.join(self.warehouse, *_norm_ns(ns), name)
+        return "/".join((self.warehouse, *_norm_ns(ns), name))
 
     def _attach(self, ns, name: str, md: TableMetadata, version: int) -> Table:
         """Build a Table whose metadata pointer I/O goes through the service."""
@@ -172,7 +171,7 @@ class RESTCatalog(Catalog):
                         not_found=TableNotFoundError)
         return self._attach(ns, name, TableMetadata.from_json(out["metadata"]), out["version"])
 
-    def drop_table(self, ns, name: str, purge: bool = True) -> None:
+    def drop_table(self, ns, name: str) -> None:
         self._req("DELETE", f"/v1/namespaces/{self._ns_seg(ns)}/tables/{name}",
                   not_found=TableNotFoundError)
 

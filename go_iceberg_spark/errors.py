@@ -30,6 +30,11 @@ class NamespaceAlreadyExistsError(IcebergError):
     """Raised on create of an existing namespace."""
 
 
+class NamespaceNotEmptyError(IcebergError):
+    """Raised on drop of a namespace that still holds tables or child
+    namespaces."""
+
+
 class NoSuchSnapshotError(IcebergError):
     """Raised when a snapshot id / as-of timestamp resolves to nothing
     (reference: table/table.go:98-121 error path)."""

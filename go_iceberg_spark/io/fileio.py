@@ -25,6 +25,7 @@ Both raise ``FileNotFoundError`` when reading a missing path and
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
 
 from ..errors import ValidationError
@@ -70,6 +71,11 @@ class FileIO:
 
     def list(self, prefix: str) -> list[str]:
         raise NotImplementedError
+
+    def delete_tree(self, prefix: str) -> None:
+        """Delete everything under the directory ``prefix``."""
+        for p in self.list(prefix.rstrip("/") + "/"):
+            self.delete(p)
 
 
 class LocalFileIO(FileIO):
@@ -129,6 +135,9 @@ class LocalFileIO(FileIO):
             for fn in files:
                 out.append(os.path.join(root, fn))
         return sorted(out)
+
+    def delete_tree(self, prefix: str) -> None:
+        shutil.rmtree(self._p(prefix))
 
 
 def parse_s3_uri(path: str) -> tuple[str, str]:
@@ -226,7 +235,7 @@ class S3FileIO(FileIO):
         paginator = self._s3.get_paginator("list_objects_v2")
         for page in paginator.paginate(Bucket=bucket, Prefix=key):
             for obj in page.get("Contents", []):
-                out.append(f"s3://{bucket}/{obj['Key']}")
+                out.append(f"{scheme}{bucket}/{obj['Key']}")
         return sorted(out)
 
 

@@ -93,14 +93,6 @@ class Table:
         self._load_fn = loader or (lambda: load_metadata(self.location, io=self.io))
 
     # -- loading ----------------------------------------------------------
-    @staticmethod
-    def load(spark: SparkSession, location: str, identifier: tuple[str, ...] = ()) -> "Table":
-        from ..io.fileio import for_location
-
-        io = for_location(location)
-        md, v = load_metadata(location, io=io)
-        return Table(spark, identifier or (os.path.basename(location),), location, md, v, io=io)
-
     def refresh(self) -> "Table":
         """Reload metadata (reference: table/table.go:134-141)."""
         self.metadata, self.version = self._load_fn()

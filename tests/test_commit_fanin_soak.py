@@ -134,15 +134,15 @@ def test_fanin_mixed_ops_s3(spark, tmp_path):
     moto = pytest.importorskip("moto")
     import boto3
 
-    from go_iceberg_spark.catalog.catalog import ObjectStoreCatalog
+    from go_iceberg_spark.catalog.catalog import FilesystemCatalog
     from go_iceberg_spark.io.fileio import S3FileIO
 
     with moto.mock_aws():
         client = boto3.client("s3", region_name="us-east-1")
         client.create_bucket(Bucket="fanin")
         io = S3FileIO(client=client)
-        cat = ObjectStoreCatalog(spark, "s3://fanin/wh", io=io,
-                                 data_path=str(tmp_path / "dataroot"))
+        cat = FilesystemCatalog(spark, "s3://fanin/wh", io=io,
+                                data_path=str(tmp_path / "dataroot"))
         _run_mixed_soak(spark, cat, "fanin_s3")
 
 

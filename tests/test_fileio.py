@@ -107,6 +107,12 @@ def test_s3_delete_and_list(s3io):
     assert not s3io.exists("s3://warehouse/d/a")
 
 
+def test_s3_list_keeps_the_prefix_scheme(s3io):
+    s3io.create("s3a://warehouse/d/a", b"1")
+    assert s3io.list("s3a://warehouse/d/") == ["s3a://warehouse/d/a"]
+    assert s3io.list("s3://warehouse/d/") == ["s3://warehouse/d/a"]
+
+
 @pytest.fixture(params=["local", "s3"])
 def store(request, tmp_path):
     """(FileIO, root) for each implementation, for the behaviour both share."""
@@ -148,3 +154,11 @@ def test_s3_uri_validation():
         parse_s3_uri("s3://bucketonly")
     with pytest.raises(ValidationError):
         parse_s3_uri("/local/path")
+
+
+def test_delete_tree_removes_only_its_directory(store):
+    io, root = store
+    for p in ("t/a", "t/sub/b", "t2/c"):
+        io.create(f"{root}/{p}", b"x")
+    io.delete_tree(f"{root}/t")
+    assert io.list(root) == [f"{root}/t2/c"]

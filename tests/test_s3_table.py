@@ -25,15 +25,15 @@ moto = pytest.importorskip("moto")
 def s3cat(spark, tmp_path):
     import boto3
 
-    from go_iceberg_spark.catalog.catalog import ObjectStoreCatalog
+    from go_iceberg_spark.catalog.catalog import FilesystemCatalog
     from go_iceberg_spark.io.fileio import S3FileIO
 
     with moto.mock_aws():
         client = boto3.client("s3", region_name="us-east-1")
         client.create_bucket(Bucket="lake")
         io = S3FileIO(client=client)
-        yield ObjectStoreCatalog(spark, "s3://lake/wh", io=io,
-                                 data_path=str(tmp_path / "dataroot")), io
+        yield FilesystemCatalog(spark, "s3://lake/wh", io=io,
+                                data_path=str(tmp_path / "dataroot")), io
 
 
 def _proto(spark, n=20, off=0):
