@@ -146,13 +146,21 @@ class FilesystemCatalog(Catalog):
     def drop_namespace(self, ns) -> None:
         """Drop an empty namespace: one holding anything besides its own
         marker (a table, a child namespace, a stray file) raises and is left
-        as it is."""
+        as it is. On a local warehouse the namespace's empty directories go
+        too, bottom-up and one ``rmdir`` each, so a table created under it
+        concurrently keeps its files."""
         marker = self._marker(ns)
         if not self.io.exists(marker):
             raise NamespaceNotFoundError(f"namespace {ns} not found")
         if any(p != marker for p in self.io.list(self._ns_path(ns) + "/")):
             raise NamespaceNotEmptyError(f"namespace {ns} not empty")
         self.io.delete(marker)
+        if isinstance(self.io, LocalFileIO):
+            for d, _, _ in os.walk(self._ns_path(ns), topdown=False):
+                try:
+                    os.rmdir(d)
+                except OSError:  # not empty: something landed meanwhile
+                    pass
 
     def namespace_exists(self, ns) -> bool:
         return self.io.exists(self._marker(ns))

@@ -26,6 +26,7 @@ from ..table.metadata import (
     SortOrder,
     TableMetadata,
     now_ms,
+    without_snapshots,
 )
 
 # ---------------------------------------------------------------------------
@@ -142,29 +143,8 @@ def apply_updates(md: TableMetadata, updates: list[dict]) -> TableMetadata:
             refs.pop(up["ref-name"], None)
             md = replace(md, refs=refs)
         elif action == "remove-snapshots":
-            doomed = set(up["snapshot-ids"])
-            # rewire each retained snapshot's parent to its nearest retained
-            # ANCESTOR (walking the original chain through doomed ids) — the
-            # same rule expire_snapshots applies locally; without it the
-            # server-side metadata keeps parents pointing at removed ids and
-            # every incremental/changelog read over the gap breaks
-            orig_by_id = {s.snapshot_id: s for s in md.snapshots}
-
-            def _nearest_retained(s):
-                cur = s.parent_snapshot_id
-                while cur is not None and cur in doomed:
-                    parent = orig_by_id.get(cur)
-                    cur = parent.parent_snapshot_id if parent is not None else None
-                return cur
-
-            md = replace(
-                md,
-                snapshots=tuple(
-                    replace(s, parent_snapshot_id=_nearest_retained(s))
-                    if s.parent_snapshot_id in doomed else s
-                    for s in md.snapshots if s.snapshot_id not in doomed),
-                snapshot_log=tuple(e for e in md.snapshot_log if e["snapshot-id"] not in doomed),
-            )
+            # the same rewire and parent-rewired stamp as a local expiry
+            md = without_snapshots(md, up["snapshot-ids"])
         elif action == "set-location":
             md = replace(md, location=up["location"])
         elif action == "set-properties":

@@ -3,9 +3,9 @@
 The reference has NO streaming surface (SURVEY §2.7); this module supplies the
 Spark-native one the north-star engine needs:
 
-- ``read_stream``: file-based streaming source over a table's data directory
-  (new data files are discovered as they are appended — the same mechanism
-  Spark's file source uses; exactly-once per file);
+- ``read_stream``: file-based streaming source over an append-only table's
+  data directory (new data files are discovered as they are appended — the
+  same mechanism Spark's file source uses; exactly-once per file);
 - ``append_stream`` / ``write_stream``: foreachBatch sink that commits each
   micro-batch as one table snapshot — giving the streaming write path the
   same snapshot isolation + optimistic commit as batch writes;
@@ -32,16 +32,24 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..table.metadata import ancestors
 from ..table.table import Table
+from ..table.write import data_path
 
 
 def read_stream(spark: SparkSession, table: Table) -> DataFrame:
-    """Streaming read of a table's data files as they appear.
+    """Streaming read of an APPEND-ONLY table's data files as they appear.
 
     Uses Spark's file streaming source rooted at the table's data directory
-    with the table's current Spark schema. Late-arriving files from older
-    snapshots are still picked up exactly once (file-log semantics)."""
-    data_dir = os.path.join(table.location, "data")
+    (under ``write.data.path`` when the table sets it) with the table's
+    current Spark schema. Each new file is read exactly once (file-log
+    semantics), so the contract holds for append-only tables only: a
+    copy-on-write delete or update writes the surviving rows into new
+    files, and the stream delivers them again. For a stream of committed
+    snapshots that refuses or skips such commits, use
+    ``source.read_snapshot_stream``."""
+    root = data_path(table.metadata.properties) or table.location
+    data_dir = os.path.join(root, "data")
     os.makedirs(data_dir, exist_ok=True)
     return (
         spark.readStream.schema(table.spark_schema())
@@ -56,16 +64,6 @@ HIGH_WATER_PROP = "streaming.batch-high-water."  # + ckpt_id -> max batch_id
 # atomically via COMMIT_SEQ_PLACEHOLDER): lets rollback_to prove whether the
 # mark's batch data survives a rollback even after its marker snapshot expired
 HIGH_WATER_SEQ_PROP = "streaming.batch-high-water-seq."  # + ckpt_id -> seq
-
-
-def _ancestry_ids(md) -> set:
-    """Snapshot ids on the current head's parent chain (the MAIN lineage)."""
-    by_id = {s.snapshot_id: s for s in md.snapshots}
-    out, sid = set(), md.current_snapshot_id
-    while sid in by_id:
-        out.add(sid)
-        sid = by_id[sid].parent_snapshot_id
-    return out
 
 
 def _batch_already_committed(table: Table, ckpt_id: str, batch_id: int) -> bool:
@@ -85,9 +83,9 @@ def _batch_already_committed(table: Table, ckpt_id: str, batch_id: int) -> bool:
     if hw is not None and batch_id <= int(hw):
         return True
     marker = f"{ckpt_id}:{batch_id}"
-    anc = _ancestry_ids(table.metadata)
+    md = table.metadata
     return any(s.summary.get(BATCH_MARKER_KEY) == marker
-               for s in table.snapshots() if s.snapshot_id in anc)
+               for s in ancestors(md, md.current_snapshot_id))
 
 
 def rebased_stream_high_water(md, new_head_id: int) -> dict[str, str]:
@@ -114,12 +112,9 @@ def rebased_stream_high_water(md, new_head_id: int) -> dict[str, str]:
     (or is removed). A mark without its seq property keeps the
     expired ⇒ applied rule."""
     props = dict(md.properties)
-    by_id = {s.snapshot_id: s for s in md.snapshots}
-    anc, sid = set(), new_head_id
-    while sid in by_id:
-        anc.add(sid)
-        sid = by_id[sid].parent_snapshot_id
-    target_seq = by_id[new_head_id].sequence_number if new_head_id in by_id else 0
+    chain = ancestors(md, new_head_id)
+    anc = {s.snapshot_id for s in chain}
+    target_seq = chain[0].sequence_number if chain else 0
     in_anc: dict[str, list[tuple[int, int]]] = {}  # ckpt -> [(batch, seq)]
     abandoned: dict[str, list[int]] = {}
     for s in md.snapshots:

@@ -6,13 +6,15 @@ shapes the Iceberg ecosystem layers on top of the same metadata tree, and
 that a training-data pipeline consuming a continuously-appended table needs:
 
 - ``incremental_append_scan``: rows ADDED between two snapshots (Iceberg's
-  ``start-snapshot-id``/``end-snapshot-id`` read). Planning is a lineage
-  walk; each snapshot contributes the data files present in its manifest
-  but not its parent's — a driver-side set difference over file paths, then
-  one read through the scan reader (``scan.read_files``). No shuffle at all.
+  ``start-snapshot-id``/``end-snapshot-id`` read). Planning walks the range
+  with ``metadata.snapshots_between`` and takes each snapshot's appended
+  data files by ``metadata.appended_entries`` — the append-only rule the
+  snapshot stream source applies too — then does one read through the scan
+  reader (``scan.read_files``). No shuffle at all.
 
 - ``changelog_scan``: row-level inserts AND deletes per snapshot (Iceberg's
-  ``create_changelog_view`` procedure). Copy-on-write rewrites copy every
+  ``create_changelog_view`` procedure), from each snapshot's
+  ``metadata.snapshot_delta`` against its parent. Copy-on-write rewrites copy every
   surviving row into new files, so the raw file diff shows them as
   delete+insert pairs; carryover elimination removes those pairs with two
   ``exceptAll`` passes — multiset semantics, fully distributed, no driver
@@ -35,61 +37,17 @@ from .metadata import (
     CONTENT_DATA,
     CONTENT_EQUALITY_DELETES,
     CONTENT_POSITION_DELETES,
-    OP_APPEND,
-    OP_REPLACE,
     DataFileEntry,
-    Snapshot,
+    appended_entries,
+    parent_of,
+    snapshot_delta,
+    snapshots_between,
     writer_schema,
 )
 from .scan import POS_DELETE_FILE_COL, _file_key, read_files, read_tombstones, scan_tasks
 
 CHANGE_TYPE_COL = "_change_type"
 CHANGE_ORDINAL_COL = "_change_ordinal"
-
-
-def snapshots_between(table, from_snapshot_id: int | None, to_snapshot_id: int | None) -> list[Snapshot]:
-    """Snapshot lineage (from, to]: walk parent pointers back from ``to``
-    until ``from`` (exclusive), oldest first. ``None`` from = table start;
-    ``None`` to = current."""
-    md = table.metadata
-    if to_snapshot_id is None:
-        cur = md.current_snapshot()
-        if cur is None:
-            return []
-        to_snapshot_id = cur.snapshot_id
-    by_id = {s.snapshot_id: s for s in table.snapshots()}
-    if to_snapshot_id not in by_id:
-        raise ValidationError(f"unknown to_snapshot_id {to_snapshot_id}")
-    if from_snapshot_id is not None and from_snapshot_id not in by_id:
-        raise ValidationError(f"unknown from_snapshot_id {from_snapshot_id}")
-    chain: list[Snapshot] = []
-    cursor: int | None = to_snapshot_id
-    while cursor is not None and cursor != from_snapshot_id:
-        snap = by_id.get(cursor)
-        if snap is None:  # expired ancestor — range no longer reconstructible
-            raise ValidationError(
-                f"snapshot {cursor} in range is no longer retained")
-        chain.append(snap)
-        cursor = snap.parent_snapshot_id
-    if from_snapshot_id is not None and cursor != from_snapshot_id:
-        raise ValidationError(
-            f"from_snapshot_id {from_snapshot_id} is not an ancestor of {to_snapshot_id}")
-    chain.reverse()
-    return chain
-
-
-def _entry_diff(table, snap: Snapshot) -> tuple[list[DataFileEntry], list[DataFileEntry]]:
-    """(added, removed) entries of one snapshot vs its parent — each
-    snapshot's manifest tree lists its full live set, so the delta is a
-    path set difference."""
-    cur = {e.file_path: e for e in table.manifest_entries(snap)}
-    if snap.parent_snapshot_id is None:
-        return list(cur.values()), []
-    parent = table.snapshot_by_id(snap.parent_snapshot_id)
-    prev = {e.file_path: e for e in table.manifest_entries(parent)}
-    added = [e for p, e in cur.items() if p not in prev]
-    removed = [e for p, e in prev.items() if p not in cur]
-    return added, removed
 
 
 def incremental_append_scan(
@@ -103,30 +61,13 @@ def incremental_append_scan(
     ``ignore_non_append``, which skips them — Iceberg's incremental append
     scan contract."""
     spark = table.spark
-    chain = snapshots_between(table, from_snapshot_id, to_snapshot_id)
-    added_entries: list[DataFileEntry] = []
-    for snap in chain:
-        if (snap.operation == OP_REPLACE
-                and snap.summary.get("rows-preserved") == "true"):
-            # file-level reorganizations (compaction, Z-order rewrite,
-            # rewrite_manifests) stamp rows-preserved: their added files
-            # hold no NEW rows, so the incremental read skips them —
-            # Iceberg's incremental scan treats compaction the same way.
-            # The marker matters: UPDATE also commits a replace but
-            # CHANGES row values, so skipping on the operation alone would
-            # silently drop updated rows from incremental consumers.
-            continue
-        if snap.operation != OP_APPEND:
-            if ignore_non_append:
-                continue
-            raise ValidationError(
-                f"snapshot {snap.snapshot_id} is {snap.operation!r}, not append; "
-                "pass ignore_non_append=True to skip it")
-        added, _ = _entry_diff(table, snap)
-        added_entries.extend(e for e in added if e.content == CONTENT_DATA)
-    df = read_files(table, scan_tasks(added_entries, []), table.metadata.current_schema)
+    md = table.metadata
+    added_entries = [
+        e for snap in snapshots_between(md, from_snapshot_id, to_snapshot_id)
+        for e in appended_entries(md, snap, table.manifest_entries, ignore_non_append)]
+    df = read_files(table, scan_tasks(added_entries, []), md.current_schema)
     if df is None:
-        return spark.createDataFrame([], to_spark_type(table.metadata.current_schema.struct))
+        return spark.createDataFrame([], to_spark_type(md.current_schema.struct))
     return df
 
 
@@ -220,21 +161,18 @@ def changelog_scan(
     spark = table.spark
     md = table.metadata
     schema = md.current_schema
-    chain = snapshots_between(table, from_snapshot_id, to_snapshot_id)
+    chain = snapshots_between(md, from_snapshot_id, to_snapshot_id)
 
     parts: list[DataFrame] = []
     for ordinal, snap in enumerate(chain):
-        added, removed = _entry_diff(table, snap)
+        added, removed = snapshot_delta(md, snap, table.manifest_entries)
         # removed files are read with the PARENT's MoR deletes applied:
         # a compaction that materializes delete files also drops them in
         # the same snapshot, and the already-suppressed rows must not
         # resurface as phantom deletes (they were never logically live)
-        parent_deletes = []
-        if snap.parent_snapshot_id is not None:
-            parent_deletes = [
-                e for e in table.manifest_entries(table.snapshot_by_id(snap.parent_snapshot_id))
-                if e.content != CONTENT_DATA
-            ]
+        parent = parent_of(md, snap)
+        parent_deletes = [] if parent is None else [
+            e for e in table.manifest_entries(parent) if e.content != CONTENT_DATA]
         ins = read_files(table, scan_tasks(
             [e for e in added if e.content == CONTENT_DATA], []), schema)
         dels = read_files(table, scan_tasks(

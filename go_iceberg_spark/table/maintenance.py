@@ -20,14 +20,13 @@ import datetime as dt
 import os
 import re
 import warnings
-from dataclasses import replace
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..errors import ValidationError
-from .metadata import MAIN_BRANCH, now_ms
+from .metadata import MAIN_BRANCH, ancestors, now_ms, without_snapshots
 from .write import data_path, write_data_files
 
 # manifest artifacts under metadata/: parquet members (m-{sid}-*.parquet),
@@ -54,24 +53,15 @@ def expire_snapshots(table, *, older_than: dt.datetime | int | None = None,
     if retain_last < 1:
         raise ValidationError("retain_last must be >= 1")
     md = table.metadata
-    snaps = sorted(md.snapshots, key=lambda s: s.timestamp_ms)
     if isinstance(older_than, dt.datetime):
         older_than = int(older_than.timestamp() * 1000)
     cutoff = older_than if older_than is not None else now_ms() + 1
-    current_id = md.current_snapshot_id
-    by_id = {s.snapshot_id: s for s in snaps}
     # retain_last counts ANCESTORS of the current snapshot (Iceberg
     # expire_snapshots retainLast semantics), not newest-N by timestamp:
     # an abandoned branch head that happens to be the newest snapshot must
     # not dodge expiry once its ref is dropped (otherwise a forgotten audit
     # branch pins its staged files forever).
-    keep: set[int] = set()
-    cur = by_id.get(current_id) if current_id is not None else None
-    while cur is not None and len(keep) < retain_last:
-        keep.add(cur.snapshot_id)
-        cur = by_id.get(cur.parent_snapshot_id) if cur.parent_snapshot_id else None
-    if current_id is not None:
-        keep.add(current_id)
+    keep = {s.snapshot_id for s in ancestors(md, md.current_snapshot_id)[:retain_last]}
     # every branch/tag head stays live (Iceberg ref retention): expiring a
     # staged WAP branch's head out from under its ref would corrupt the ref
     keep |= {r.snapshot_id for r in md.refs.values()}
@@ -83,8 +73,7 @@ def expire_snapshots(table, *, older_than: dt.datetime | int | None = None,
     for r in md.refs.values():
         if r.min_snapshots_to_keep is None and r.max_snapshot_age_ms is None:
             continue
-        cur, kept_n = by_id.get(r.snapshot_id), 0
-        while cur is not None:
+        for kept_n, cur in enumerate(ancestors(md, r.snapshot_id)):
             young = (r.max_snapshot_age_ms is not None
                      and now - cur.timestamp_ms <= r.max_snapshot_age_ms)
             within_min = (r.min_snapshots_to_keep is not None
@@ -92,13 +81,8 @@ def expire_snapshots(table, *, older_than: dt.datetime | int | None = None,
             if not (young or within_min or cur.snapshot_id == r.snapshot_id):
                 break
             keep.add(cur.snapshot_id)
-            kept_n += 1
-            cur = by_id.get(cur.parent_snapshot_id) if cur.parent_snapshot_id else None
-    retained = tuple(s for s in snaps if s.snapshot_id in keep or s.timestamp_ms >= cutoff)
-    # even with nothing to expire, the metadata-dir sweep below still runs:
-    # a crashed commit leaves manifests (both dialects) of a snapshot that
-    # never landed, and no future expire would otherwise reclaim them
-    expired_any = len(retained) != len(snaps)
+    expired = {s.snapshot_id for s in md.snapshots
+               if s.snapshot_id not in keep and s.timestamp_ms < cutoff}
 
     def _manifest_paths(s) -> set[str]:
         """A snapshot's manifest files across BOTH dialects — each list plus
@@ -132,15 +116,15 @@ def expire_snapshots(table, *, older_than: dt.datetime | int | None = None,
 
     kept_files: set[str] = set()
     kept_manifests: set[str] = set()
-    for s in retained:
-        kept_manifests |= _manifest_paths(s)
-        kept_files |= {e.file_path for e in table.manifest_entries(s)}
     doomed_files: set[str] = set()
     doomed_manifests: set[str] = set()
-    for s in snaps:
-        if s not in retained:
+    for s in md.snapshots:
+        if s.snapshot_id in expired:
             doomed_manifests |= _manifest_paths(s)
             doomed_files |= {e.file_path for e in table.manifest_entries(s)}
+        else:
+            kept_manifests |= _manifest_paths(s)
+            kept_files |= {e.file_path for e in table.manifest_entries(s)}
     doomed_files -= kept_files
     doomed_manifests -= kept_manifests
 
@@ -165,42 +149,12 @@ def expire_snapshots(table, *, older_than: dt.datetime | int | None = None,
             continue
         doomed_manifests.add(rel)
 
-    if expired_any:
-        # fix parent pointers across the removal gap, keep refs valid.
-        # Each retained snapshot's new parent is its nearest retained
-        # ANCESTOR on the ORIGINAL parent chain — never "the previous
-        # retained snapshot in timestamp order", which with interleaved
-        # main/branch commits wires a main snapshot onto a branch snapshot
-        # and leaks branch-only rows into the main changelog as phantom
-        # insert+delete pairs.
-        retained_ids = {s.snapshot_id for s in retained}
-        orig_by_id = {s.snapshot_id: s for s in snaps}
-
-        def nearest_retained_ancestor(s):
-            cur = s.parent_snapshot_id
-            while cur is not None and cur not in retained_ids:
-                parent = orig_by_id.get(cur)
-                cur = parent.parent_snapshot_id if parent is not None else None
-            return cur
-
-        def _fix(s):
-            if s.parent_snapshot_id is None or s.parent_snapshot_id in retained_ids:
-                return s
-            # stamp the rewiring: a rewired snapshot's entries-minus-
-            # parent-entries diff no longer equals "what this commit added"
-            # — cherrypick refuses stamped snapshots instead of silently
-            # re-registering files the gap's commits added (row duplication)
-            return replace(s, parent_snapshot_id=nearest_retained_ancestor(s),
-                           summary={**s.summary, "parent-rewired": "true"})
-
-        fixed = [_fix(s) for s in retained]
-        refs = {name: r for name, r in md.refs.items()
-                if r.snapshot_id in retained_ids or name == MAIN_BRANCH}
-        new_md = replace(
-            md, snapshots=tuple(fixed), refs=refs,
-            snapshot_log=tuple(e for e in md.snapshot_log if e["snapshot-id"] in retained_ids),
-            last_updated_ms=now_ms(),
-        )
+    # even with nothing to expire, the metadata-dir sweep above still runs:
+    # a crashed commit leaves manifests (both dialects) of a snapshot that
+    # never landed, and no future expire would otherwise reclaim them
+    if expired:
+        # refs stay valid: every ref head is in ``keep``
+        new_md = without_snapshots(md, expired)
         table.version = table._commit_fn(new_md, table.version)
         table.metadata = new_md
         table._manifest_cache.clear()

@@ -19,7 +19,7 @@ Mapping to the engine's model:
 - bounds are serialized with the spec's binary single-value encoding, keyed
   by field id; uuid bounds use the spec's 16-byte big-endian form, binary
   bounds decode the engine's hex stat space;
-- partition values serialize as the spec's TYPED partition struct (r102):
+- partition values serialize as the spec's TYPED partition struct (field 102):
   each field's Avro type is the transform RESULT type (bucket→int,
   year/month/hour→int ordinals since 1970, day→date, identity→source type,
   timestamp→timestamp-micros, time→time-micros, decimal→fixed decimal
@@ -436,7 +436,7 @@ def _typed_to_partition_value(pf, t, v):
 
 
 def partition_record_schema(spec: PartitionSpec, schema: Schema | None = None) -> dict:
-    """r102 partition tuple — the spec's TYPED partition struct: each field
+    """The partition tuple (field 102) — the spec's TYPED partition struct: each field
     is the transform's result type (reference partition-aware schema:
     spec/avro.go:302-335). Fields whose engine string encoding has no
     unambiguous typed round-trip stay [null, string]."""

@@ -684,6 +684,154 @@ class TableMetadata:
 
 
 # ---------------------------------------------------------------------------
+# Snapshot lineage
+#
+# A table's history is a chain of snapshots linked by parent id (reference:
+# spec/snapshot.go:43-51). Every walk of that chain, every snapshot-vs-parent
+# delta and the expiry rewire live here, Spark-free, so the driver, the REST
+# server and the streaming source's planner apply one set of rules.
+# ---------------------------------------------------------------------------
+
+
+def ancestors(md: TableMetadata, snapshot_id: int | None) -> list[Snapshot]:
+    """``snapshot_id``'s snapshot and its retained parents, newest first.
+    The walk stops at the first parent that is no longer in ``md``."""
+    by_id = {s.snapshot_id: s for s in md.snapshots}
+    out: list[Snapshot] = []
+    snap = by_id.get(snapshot_id)
+    while snap is not None and len(out) < len(by_id):  # bounded on a cycle
+        out.append(snap)
+        snap = by_id.get(snap.parent_snapshot_id)
+    return out
+
+
+def snapshots_between(md: TableMetadata, from_id: int | None,
+                      to_id: int | None) -> list[Snapshot]:
+    """The lineage range (from, to], oldest first. ``None`` from is the
+    table start; ``None`` to is the current snapshot. Raises when either end
+    is unknown or expired, when ``from`` is not an ancestor of ``to``, or
+    when a snapshot between them is no longer retained."""
+    if to_id is None:
+        to_id = md.current_snapshot_id
+        if to_id is None:
+            return []
+    ids = {s.snapshot_id for s in md.snapshots}
+    if to_id not in ids:
+        raise ValidationError(f"unknown to_snapshot_id {to_id}: it does not "
+                              "exist or has been expired")
+    if from_id is not None and from_id not in ids:
+        # the start's manifest (what a reader already consumed) is gone, so
+        # the range cannot be reconstructed; a stream restarts from a fresh
+        # checkpoint, and expiry retention should cover readers' start ids
+        raise ValidationError(
+            f"unknown from_snapshot_id {from_id}: it does not exist or has "
+            "been expired from the table's history; the range cannot be "
+            "reconstructed (restart a stream with a fresh checkpoint, and "
+            "size expire_snapshots retention to cover readers' start)")
+    chain: list[Snapshot] = []
+    for snap in ancestors(md, to_id):
+        if snap.snapshot_id == from_id:
+            return chain[::-1]
+        chain.append(snap)
+    gap = chain[-1].parent_snapshot_id
+    if gap is not None:
+        raise ValidationError(f"snapshot {gap} in range ({from_id}, {to_id}] "
+                              "is no longer retained")
+    if from_id is not None:
+        raise ValidationError(
+            f"from_snapshot_id {from_id} is not an ancestor of {to_id}")
+    return chain[::-1]
+
+
+def parent_of(md: TableMetadata, snap: Snapshot) -> Snapshot | None:
+    """``snap``'s parent, or None for the first snapshot of a lineage.
+    Raises when the parent is no longer retained."""
+    if snap.parent_snapshot_id is None:
+        return None
+    try:
+        return md.snapshot_by_id(snap.parent_snapshot_id)
+    except NoSuchSnapshotError:
+        raise ValidationError(
+            f"parent snapshot {snap.parent_snapshot_id} of {snap.snapshot_id} "
+            "is no longer retained; cannot compute the snapshot's delta — "
+            "start from a retained snapshot instead") from None
+
+
+def snapshot_delta(md: TableMetadata, snap: Snapshot, entries_of
+                   ) -> tuple[list[DataFileEntry], list[DataFileEntry]]:
+    """(added, removed) entries of ``snap`` against its parent, added in
+    ``snap``'s manifest order. Each snapshot's manifest tree lists its full
+    live set, so the delta is a path set difference. ``entries_of(snap)``
+    reads a snapshot's entries. Raises when the parent is no longer
+    retained: diffing against nothing would report the whole live set as
+    added."""
+    cur = {e.file_path: e for e in entries_of(snap)}
+    parent = parent_of(md, snap)
+    if parent is None:
+        return list(cur.values()), []
+    prev = {e.file_path: e for e in entries_of(parent)}
+    return ([e for p, e in cur.items() if p not in prev],
+            [e for p, e in prev.items() if p not in cur])
+
+
+def appended_entries(md: TableMetadata, snap: Snapshot, entries_of,
+                     skip_non_append: bool) -> list[DataFileEntry]:
+    """The data files ``snap`` appends, for an append-only read (an
+    incremental scan or a snapshot stream).
+
+    A ``rows-preserved`` replace (compaction, Z-order or manifest rewrite)
+    moves rows between files without adding any, so it contributes nothing.
+    Any other non-append snapshot changes rows an append-only read cannot
+    represent: it is skipped under ``skip_non_append`` and raises otherwise.
+    UPDATE also commits a replace, but without the marker, so updated rows
+    are never silently dropped."""
+    if snap.operation == OP_REPLACE and snap.summary.get("rows-preserved") == "true":
+        return []
+    if snap.operation != OP_APPEND:
+        if skip_non_append:
+            return []
+        raise ValidationError(
+            f"snapshot {snap.snapshot_id} is {snap.operation!r}, not append; "
+            "an append-only read cannot represent it — skip it with "
+            "ignore_non_append=True (incremental scan) or "
+            ".option('skip-non-append', 'true') (stream), or read "
+            "table.changes() for row-level CDC")
+    added, _ = snapshot_delta(md, snap, entries_of)
+    return [e for e in added if e.content == CONTENT_DATA]
+
+
+def without_snapshots(md: TableMetadata, doomed_ids) -> TableMetadata:
+    """``md`` without the ``doomed_ids`` snapshots and their log entries.
+
+    Each retained snapshot whose parent is gone points at its nearest
+    retained ancestor on the original chain (None past the oldest), never
+    at the previous retained snapshot by time, which with interleaved
+    branch commits would wire a main snapshot onto a branch one. A rewired
+    snapshot is stamped ``parent-rewired``: its delta against the new
+    parent includes what the removed gap added, so it no longer says what
+    the snapshot itself committed (cherrypick refuses it)."""
+    doomed = set(doomed_ids)
+    by_id = {s.snapshot_id: s for s in md.snapshots}
+    kept = by_id.keys() - doomed
+
+    def rewired(s: Snapshot) -> Snapshot:
+        pid = s.parent_snapshot_id
+        if pid is None or pid in kept:
+            return s
+        while pid is not None and pid not in kept:
+            pid = by_id[pid].parent_snapshot_id if pid in by_id else None
+        return replace(s, parent_snapshot_id=pid,
+                       summary={**s.summary, "parent-rewired": "true"})
+
+    return replace(
+        md,
+        snapshots=tuple(rewired(s) for s in md.snapshots if s.snapshot_id in kept),
+        snapshot_log=tuple(e for e in md.snapshot_log if e["snapshot-id"] in kept),
+        last_updated_ms=now_ms(),
+    )
+
+
+# ---------------------------------------------------------------------------
 # Commit protocol
 #
 # A table's metadata is the highest ``v{N}.metadata.json`` in its metadata

@@ -43,12 +43,14 @@ from .metadata import (
     SnapshotRef,
     SortOrder,
     TableMetadata,
+    ancestors,
     commit_metadata,
     load_metadata,
     manifest_members,
     new_snapshot_id,
     now_ms,
     read_manifest,
+    snapshot_delta,
     write_manifest,
     write_manifest_list,
 )
@@ -694,20 +696,10 @@ class Table:
             raise ValidationError(f"ref {from_ref!r} does not exist")
         new_head = md.refs[from_ref].snapshot_id
         old = md.refs.get(to_ref)
-        if old is not None and old.snapshot_id != new_head:
-            # ancestry walk: old head must appear on new head's parent chain
-            seen = set()
-            cur: int | None = new_head
-            while cur is not None and cur not in seen:
-                if cur == old.snapshot_id:
-                    break
-                seen.add(cur)
-                cur = md.snapshot_by_id(cur).parent_snapshot_id
-            else:
-                cur = None
-            if cur != old.snapshot_id:
-                raise ValidationError(
-                    f"{to_ref!r} is not an ancestor of {from_ref!r} — not a fast-forward")
+        if old is not None and all(s.snapshot_id != old.snapshot_id
+                                   for s in ancestors(md, new_head)):
+            raise ValidationError(
+                f"{to_ref!r} is not an ancestor of {from_ref!r} — not a fast-forward")
         refs = dict(md.refs)
         refs[to_ref] = SnapshotRef(new_head, "branch")
         new_md = replace(md, refs=refs, last_updated_ms=now_ms())
@@ -747,12 +739,7 @@ class Table:
                 f"cherrypick: snapshot {snapshot_id}'s original parent was "
                 "expired and its lineage rewired; the snapshot's own added "
                 "files can no longer be determined — re-stage the change")
-        cur = {e.file_path: e for e in self.manifest_entries(snap)}
-        prev: set[str] = set()
-        if snap.parent_snapshot_id is not None:
-            parent = self.snapshot_by_id(snap.parent_snapshot_id)
-            prev = {e.file_path for e in self.manifest_entries(parent)}
-        added = [e for p, e in cur.items() if p not in prev]
+        added, _ = snapshot_delta(self.metadata, snap, self.manifest_entries)
 
         def commit():
             live = self.live_entries()
@@ -767,15 +754,13 @@ class Table:
             # summaries for a prior pick of this snapshot (re-picking then
             # would silently duplicate rows). Retention-bounded like
             # Iceberg's wap.id dedup: an expired marker can't be checked.
-            by_id = {s.snapshot_id: s for s in self.metadata.snapshots}
-            cur = self.metadata.current_snapshot()
-            while cur is not None:
-                if cur.summary.get("cherry-picked-from") == str(snapshot_id):
+            md = self.metadata
+            for s in ancestors(md, md.current_snapshot_id):
+                if s.summary.get("cherry-picked-from") == str(snapshot_id):
                     raise ValidationError(
                         f"cherrypick: snapshot {snapshot_id} was already "
-                        f"picked onto this branch (commit {cur.snapshot_id}) "
+                        f"picked onto this branch (commit {s.snapshot_id}) "
                         "(double-pick)")
-                cur = by_id.get(cur.parent_snapshot_id)
             return self._commit_snapshot(
                 OP_APPEND, live + added,
                 summary_extra={"cherry-picked-from": str(snapshot_id)})

@@ -1048,7 +1048,7 @@ def streaming_upsert_sink_q(spark, sf):
     """,
 )
 def streaming_dedup_sink_q(spark, sf):
-    """Streaming cross-batch DEDUP sink (r11): ``dropDuplicates`` state in
+    """Streaming cross-batch DEDUP sink: ``dropDuplicates`` state in
     the stream filters re-observed keys, survivors append exactly-once —
     the ingestion-time exact dedup of a training-data firehose, with the
     state store (not the table) carrying the seen-keys set. The output
@@ -1097,7 +1097,7 @@ def streaming_dedup_sink_q(spark, sf):
     """,
 )
 def streaming_agg_view_sink_q(spark, sf):
-    """Streaming AGGREGATE-VIEW maintenance sink (r9): micro-batches reduce
+    """Streaming AGGREGATE-VIEW maintenance sink: micro-batches reduce
     to per-group partials that MERGE into an engine table ADDITIVELY —
     the streaming complement of the changelog-based aggregate IVM, with
     the TABLE as the only state (no Spark state store). Exactly-once is
@@ -1172,7 +1172,7 @@ def _hll_oracle_part(grp_expr: str, value_col: str, where: str = "",
     + "\n    ORDER BY grp",
 )
 def streaming_hll_view_sink_q(spark, sf):
-    """Streaming DISTINCT-COUNT view via HLL registers (r10): micro-batch
+    """Streaming DISTINCT-COUNT view via HLL registers: micro-batch
     registers MERGE into an engine table by GREATEST, and the view's
     estimate equals the batch HLL over the drained stream. The point vs
     the additive agg sink: register max-merge is IDEMPOTENT by algebra,
@@ -1656,7 +1656,7 @@ def timeseries_resample_q(spark, sf):
     """,
 )
 def timeseries_interpolate_q(spark, sf):
-    """Linear gap interpolation on the hourly grid (r11 — the numeric
+    """Linear gap interpolation on the hourly grid (the numeric
     complement of LOCF): interior gaps take the time-weighted value
     between their nearest observed neighbors; edges stay NULL
     (interpolation, never extrapolation). The stream is THINNED
@@ -2027,7 +2027,7 @@ def _simhash_wide_oracle_sql() -> str:
 
 @query("dedup_simhash_wide", _simhash_wide_oracle_sql())
 def simhash_wide_q(spark, sf):
-    """120-bit SimHash near-dup pairs (r12, the SCALING_r12 named fix):
+    """120-bit SimHash near-dup pairs (the fix SCALING_r12.json names):
     dedup_simhash's 15-bit band keys saturate at ~2^15 docs — beyond that,
     RANDOM band collisions grow candidates quadratically (measured sf3→sf10,
     the audit's one super-linear query). The wide variant votes two 60-bit
@@ -2199,7 +2199,7 @@ def _lsh_topk_oracle_sql(qmax: int = 10) -> str:
 @query("similarity_lsh_topk", _lsh_topk_oracle_sql())
 def lsh_topk_q(spark, sf):
     """Random-hyperplane LSH ANN: bucket equi-join + in-bucket rerank.
-    ``dim=64`` asserts the fixture's embedding width (r13) so the plane
+    ``dim=64`` asserts the fixture's embedding width so the plane
     literals embed 8x64 doubles instead of 8x1024 — bit-identical buckets
     (planes are sliced to each vector's length either way; a wider vector
     now fails loudly), ~0.5 s less static analyzer time per invocation."""
@@ -2432,7 +2432,7 @@ def int8_quantize_q(spark, sf):
     no shuffle. The operator returns (vec_id, qvec array<int>, norm); the
     GRADED shape posexplodes qvec to scalar (vec_id, i, q, norm) rows
     because the driver's canonicalizer sorts/hashes column values and
-    cannot order an array column (r5's only never-green row)."""
+    cannot order an array column."""
     out = S.quantize_int8(load(spark, sf, "embeddings"))
     return out.select(
         "vec_id",
@@ -2766,9 +2766,8 @@ def multimodal_resize_q(spark, sf):
     """,
 )
 def multimodal_bmp_resize_q(spark, sf):
-    """REAL pixel decode + nearest-neighbor resize (r12, VERDICT r11 task
-    #7): per doc, a genuine uncompressed 24-bit BMP (closed-form pixels,
-    dimensions 4+id%13 x 4+id%11) is decoded with stdlib struct — BGR
+    """REAL pixel decode + nearest-neighbor resize: per doc, a genuine
+    uncompressed 24-bit BMP (closed-form pixels, dimensions 4+id%13 x 4+id%11) is decoded with stdlib struct — BGR
     flip, bottom-up flip, stride un-padding — and resampled to 8x8 with
     integer nearest-neighbor (sx = xo*w//8). The oracle recomputes every
     RGB byte arithmetically and md5s the hex stream, so one flipped
@@ -2826,8 +2825,7 @@ def multimodal_frame_sample_q(spark, sf):
     """,
 )
 def multimodal_header_metadata_q(spark, sf):
-    """REAL image-header metadata extraction (r11, VERDICT task #5 —
-    replaces the 'decode raises' stand-in): PNG IHDR / JPEG SOFn segment
+    """REAL image-header metadata extraction: PNG IHDR / JPEG SOFn segment
     walk / GIF screen descriptor parsed with stdlib struct inside an
     Arrow-batched mapInPandas — no codec needed for format/width/height.
     The fixture payloads carry REAL container headers built from doc_id
@@ -2961,8 +2959,8 @@ def _cc_adversarial_oracle_sql() -> str:
 
 @query("dedup_cc_adversarial", _cc_adversarial_oracle_sql())
 def dedup_cc_adversarial_q(spark, sf):
-    """Connected components on a PLANTED adversarial graph (r12, VERDICT r11
-    task #3): a 50-hop chain (the 51 smallest doc_ids linked consecutively)
+    """Connected components on a PLANTED adversarial graph: a 50-hop chain
+    (the 51 smallest doc_ids linked consecutively)
     unioned with a maximal star (every event_id attached to the smallest,
     ~10k-degree hub at sf0.01). Min-label propagation needs diameter = 50
     rounds on the chain and melts on the hub's degree; the alternating
@@ -3319,7 +3317,7 @@ def _ivf_trained_oracle_sql(updates: int = 2, n_probe: int = 2) -> str:
 
 @query("similarity_ivf_trained_topk", _ivf_trained_oracle_sql())
 def ivf_trained_topk_q(spark, sf):
-    """Lloyd-TRAINED IVF-flat ANN (r12, VERDICT r11 task #4): the coarse
+    """Lloyd-TRAINED IVF-flat ANN: the coarse
     quantizer is refined with 2 k-means centroid-update rounds
     (``clustering.kmeans_train`` — the bit-reproducible trainer behind
     cluster_kmeans_topics) before list assignment, instead of raw
@@ -3356,7 +3354,7 @@ def _ivf_near_dup_oracle_sql(threshold: float = 0.4, n_probe: int = 2) -> str:
 
 @query("dedup_embedding_ivf", _ivf_near_dup_oracle_sql())
 def emb_ivf_dedup_q(spark, sf):
-    """Semantic near-dup at SCALE (r4): IVF-bucketed cosine pairs — the
+    """Semantic near-dup at SCALE: IVF-bucketed cosine pairs — the
     100 TB path for embedding dedup, vs dedup_embedding_cosine's explicit
     O(n²/2) verification baseline. Multi-probe (2 lists per vector) keeps
     near-boundary pairs co-bucketed; the oracle reproduces the identical
@@ -3389,7 +3387,7 @@ def _ivf_near_dup_trained_oracle_sql(threshold: float = 0.4, n_probe: int = 2,
 
 @query("dedup_embedding_ivf_trained", _ivf_near_dup_trained_oracle_sql())
 def emb_ivf_dedup_trained_q(spark, sf):
-    """SemDeDup-shaped semantic dedup (r12): the IVF-bucketed near-dup query
+    """SemDeDup-shaped semantic dedup: the IVF-bucketed near-dup query
     with a Lloyd-TRAINED coarse quantizer (2 ``kmeans_train`` rounds, the
     bit-reproducible trainer behind cluster_kmeans_topics and
     similarity_ivf_trained_topk) instead of raw hash-spread seeds — cluster
@@ -3408,7 +3406,7 @@ def emb_ivf_dedup_trained_q(spark, sf):
 
 @query("dedup_embedding_ivf_gemm", _ivf_near_dup_oracle_sql())
 def emb_ivf_dedup_gemm_q(spark, sf):
-    """r5 (VERDICT r4 task #6): the SAME IVF near-dup query executed through
+    """The SAME IVF near-dup query executed through
     ``assignment="gemm"`` — the Arrow-batched numpy list assignment that is
     the actual path at n_lists in the hundreds (the literal projection
     collapses there, measured in similarity._assign_lists_gemm) — graded
@@ -3591,7 +3589,7 @@ def similarity_recall_q(spark, sf):
     construction — the CONTRACT is that both engines compute the identical
     number.
 
-    r13 (within-invocation sharing, guide §5 caching rule): every method's
+    Within-invocation sharing (guide §5 caching rule): every method's
     pair table and the exact baseline are EAGERLY localCheckpoint'ed once —
     the lazy union referenced the exact-cosine subtree 6x (once per method's
     hit-join + once for n_exact) and each method's subtree 2x (n_pairs +
@@ -3681,7 +3679,7 @@ def kmeans_topics_q(spark, sf):
 
 @query("cluster_kmeans_topics_gemm", _kmeans_oracle_sql())
 def kmeans_topics_gemm_q(spark, sf):
-    """r5 (VERDICT r4 tasks #2+#6): k-means with ``assignment="gemm"`` —
+    """K-means with ``assignment="gemm"`` —
     the Arrow-batched numpy argmin that survives k in the hundreds
     (measured at 20k vectors: k=256 literal 41.9 s vs 0.94 s GEMM, clustering.py) — graded
     against the SAME oracle as the literal mode, so the scale path is
@@ -3779,8 +3777,8 @@ def sketch_kmv_q(spark, sf):
     bench=True,
 )
 def sketch_hll_q(spark, sf):
-    """HyperLogLog distinct estimates with the PORTABLE md5 hash (r9 —
-    completes the sketch family: KMV set algebra, mergeable histograms,
+    """HyperLogLog distinct estimates with the PORTABLE md5 hash (part of
+    the sketch family: KMV set algebra, mergeable histograms,
     HLL fixed-memory registers). Spark's own approx_count_distinct is an
     HLL++ with engine-private hashing, so it can never hash-match an
     oracle; this one reproduces bit-for-bit in DuckDB because the register
@@ -3794,7 +3792,7 @@ def sketch_hll_q(spark, sf):
     (test_hll_register_merge_equals_one_pass): the former INLINE assert
     re-hashed the whole corpus twice more and ran two exceptAll counts on
     every invocation — 3x the md5 work and 2 extra driver round-trips per
-    bench run for a data-independent algebraic property (r12, guide §1:
+    bench run for a data-independent algebraic property (guide §1:
     the timed region must measure the operator, not its self-tests)."""
     from .operators import sketch as K
 
@@ -3838,7 +3836,7 @@ def _cms_oracle(d: int = 4, w: int = 256, threshold: int = 20) -> str:
 
 @query("sketch_cms_heavy_hitters", _cms_oracle(), bench=True)
 def sketch_cms_heavy_hitters_q(spark, sf):
-    """Count-Min heavy hitters with the PORTABLE md5 hash (r10 — extends
+    """Count-Min heavy hitters with the PORTABLE md5 hash (part of
     the sketch family: KMV set algebra, mergeable histograms, HLL
     registers, CMS frequencies): d x w integer counters reproduce
     bit-for-bit in DuckDB; est(v) = min over rows is ALWAYS >= the true
@@ -3846,8 +3844,8 @@ def sketch_cms_heavy_hitters_q(spark, sf):
     pinned for every candidate in pytest, with mergeability (sketches
     built on two disjoint halves and summed elementwise equal the
     one-pass sketch — how shard sketches combine at 100 TB; also its own
-    graded row, sketch_cms_merge). Both were INLINE asserts until r12:
-    the guarantee check ran a full exact groupBy + join + count and the
+    graded row, sketch_cms_merge). Neither is an INLINE assert: as one,
+    the guarantee check would run a full exact groupBy + join + count and the
     mergeability check three extra sketch builds + two exceptAll counts
     on EVERY invocation — ~19 extra Spark jobs per bench run for
     data-independent properties (guide §1: measure the operator, not its
@@ -3862,9 +3860,9 @@ def sketch_cms_heavy_hitters_q(spark, sf):
     # estimate references the sketch TWICE (broadcast probe + consistency
     # guard agg); eager-checkpoint the <= d*w-row counter table so the
     # corpus-wide md5 build runs once, with no CacheManager entry left
-    # behind (the pre-r12 persist() was never released)
+    # behind (a persist() here would never be released)
     # pre_aggregate: ck_mod is a KNOWN 97-value domain (built by the %97
-    # right above), so hash each value once, not once per row (r12)
+    # right above), so hash each value once, not once per row
     sk = K.cms_sketch(src, "ck_mod", d=d, w=w,
                       pre_aggregate=True).localCheckpoint(eager=True)
     est = K.cms_estimate(sk, src, "ck_mod", d=d, w=w)
@@ -3909,8 +3907,8 @@ def _cms_merge_oracle(d: int = 4, w: int = 256, threshold: int = 10) -> str:
 
 @query("sketch_cms_merge", _cms_merge_oracle())
 def sketch_cms_merge_q(spark, sf):
-    """CMS shard-merge as its own graded row (r11, VERDICT task #6 —
-    promotes the inline mergeability assert to a first-class query): two
+    """CMS shard-merge as its own graded row (the mergeability check as a
+    first-class query): two
     Count-Min sketches built INDEPENDENTLY over disjoint halves of orders
     (even/odd o_orderkey — on a cluster these are different table
     partitions that never co-reside), combined by cell-wise SUM
@@ -4000,7 +3998,7 @@ def sketch_kmv_set_ops_q(spark, sf):
     """,
 )
 def sketch_histogram_quantiles_q(spark, sf):
-    """Quantiles from a fixed-width MERGEABLE histogram (r8): the
+    """Quantiles from a fixed-width MERGEABLE histogram: the
     distribution sketch behind corpus-scale quality gates. Spark's
     approx_percentile (GK) has engine-internal tie-breaks no oracle can
     reproduce; the fixed [0, 1024)/256-bin histogram bins identically in
@@ -4044,7 +4042,7 @@ def sketch_histogram_quantiles_q(spark, sf):
     """,
 )
 def similarity_hybrid_rrf_q(spark, sf):
-    """Reciprocal-rank fusion (r8) — the standard hybrid-search combiner:
+    """Reciprocal-rank fusion — the standard hybrid-search combiner:
     two retriever rankings (users by exact spend-cents, users by event
     count — integer metrics so cross-engine rank ties cannot flip) are
     truncated to top-50 lists and fused with RRF k=60; contributions are
@@ -4097,7 +4095,7 @@ def similarity_hybrid_rrf_q(spark, sf):
     """,
 )
 def timeseries_merge_intervals_q(spark, sf):
-    """Merge overlapping per-user activity intervals (r8) — the
+    """Merge overlapping per-user activity intervals — the
     gaps-and-islands primitive behind session stitching and speech-segment
     coalescing. Each event opens [epoch(ts), epoch(ts) + 10*value] seconds;
     intervals closer than 300 s merge into one island. Two window passes
@@ -4185,7 +4183,7 @@ def join_hot_key_isolated_q(spark, sf):
     bench=True,
 )
 def join_bloom_prefiltered_q(spark, sf):
-    """Bloom-prefiltered join (r10): the small side's keys aggregate into
+    """Bloom-prefiltered join: the small side's keys aggregate into
     one bitmap (1 codegen'd xxhash64, 4 probe windows per key — the
     bitmap is engine-internal, so no portable hash) and the BIG side drops
     provably-unmatched rows with codegen'd expressions BEFORE the join
@@ -4194,9 +4192,9 @@ def join_bloom_prefiltered_q(spark, sf):
     negatives, so the result is EXACTLY the plain join (the oracle) —
     pinned by a plan contract in pytest: the optimized plan carries the
     bit-test filter on the probe side, so the shuffle sees only can-match
-    rows (test_bloom_prefilter_filters_probe_before_join — until r12
-    this was an INLINE optimizedPlan().toString() assert that re-ran the
-    whole optimizer and stringified four 16 KB bitmap literals on every
+    rows (test_bloom_prefilter_filters_probe_before_join — not an
+    INLINE optimizedPlan().toString() assert, which would re-run the
+    whole optimizer and stringify four 16 KB bitmap literals on every
     invocation; guide §1: the timed region must measure the operator).
     At 100 TB the driver cost is one <= n_bits/64-word collect (~16 KB),
     never data-sized."""
@@ -4304,12 +4302,12 @@ def crud_delete_scan(spark, sf):
     """,
 )
 def float_nan_pruning_scan(spark, sf):
-    """NaN scan semantics under the oracle gate (r6 probe fix): Spark and
+    """NaN scan semantics under the oracle gate: Spark and
     DuckDB both order NaN ABOVE every double, while parquet min/max bounds
     EXCLUDE NaN — so `x > 1e6` must return exactly the NaN rows even though
-    every file's recorded max is far below the threshold. Pre-r6 all three
-    prune tiers dropped those files (silent row loss; expr.might_match NaN
-    guard, planning.py numpy + Catalyst twins)."""
+    every file's recorded max is far below the threshold. All three prune
+    tiers keep those files (a dropped file is silent row loss; the
+    expr.might_match NaN guard, planning.py numpy + Catalyst twins)."""
     base = load(spark, sf, "orders").filter(F.col("o_orderkey") < 3000).select(
         "o_orderkey",
         F.when(F.col("o_orderkey") % 7 == 0, F.lit(float("nan")))
@@ -4351,7 +4349,7 @@ def crud_avro_manifest_scan(spark, sf):
     """,
 )
 def distributed_plan_scan_q(spark, sf):
-    """Planning-tier crossover under the graded gate (VERDICT r3 task #7):
+    """Planning-tier crossover under the graded gate:
     the snapshot's manifest carries >DISTRIBUTED_THRESHOLD entries — 250k
     metadata-only phantom files whose o_orderkey stats exclude the scan
     filter — so plan_files() MUST run as a Spark job over the entry
@@ -4555,7 +4553,7 @@ def crud_merge_scan(spark, sf):
     """,
 )
 def crud_merge_nmbs_scan(spark, sf):
-    """r5 (VERDICT r4 task #4): MERGE's fourth clause family — WHEN NOT
+    """MERGE's fourth clause family — WHEN NOT
     MATCHED BY SOURCE, the CDC full-sync shape. Target keys absent from the
     source are reconciled in the SAME commit: urgent ones deleted
     (conditional), the rest marked stale (o_totalprice := 0). Matched rows
@@ -4642,7 +4640,7 @@ def _scratch_table_sorted(spark, name: str, df: DataFrame):
     """,
 )
 def partitioned_range_write_pruned_scan_q(spark, sf):
-    """r7: write.distribution-mode=range on a PARTITIONED table — rows
+    """write.distribution-mode=range on a PARTITIONED table — rows
     range-shuffle on (partition, sort key), so each partition's files carry
     disjoint o_orderkey bounds. Asserted inline: a (partition, key-range)
     filter reads a strict subset of the URGENT partition's files AND never
@@ -4760,7 +4758,7 @@ def wap_branch_publish_scan_q(spark, sf):
     """,
 )
 def wap_cherrypick_scan_q(spark, sf):
-    """Cherry-pick publish (Iceberg cherrypick_snapshot; r9) — the WAP
+    """Cherry-pick publish (Iceberg cherrypick_snapshot) — the WAP
     flavor fast_forward cannot express: TWO batches land on the audit
     branch, only the FIRST passes audit and is cherry-picked onto main as
     a new metadata-only commit; the second stays unpublished. Main readers
@@ -4920,14 +4918,14 @@ def incremental_join_view_refresh_q(spark, sf):
     """,
 )
 def incremental_join_view_refresh_mutable_q(spark, sf):
-    """Incremental JOIN-view maintenance over MUTABLE bases (r8, VERDICT r7
-    task #2): the append-only delta-join above raises the moment either
+    """Incremental JOIN-view maintenance over MUTABLE bases: the append-only
+    delta-join above raises the moment either
     base takes a delete/update/overwrite; here the CHANGELOG's signed row
     multisets (insert = +1, delete = −1) ride through both join legs
     instead — M1 = M0 + (δA ⋈ B1) + (A0 ⋈ δB) with counting-semantics
     merge — so the full CRUD mix maintains the view exactly. The setup
     drives every mutation class: A takes an append, a copy-on-write
-    DELETE, and an UPDATE (a row-changing REPLACE — the op r7's
+    DELETE, and an UPDATE (a row-changing REPLACE — the op the
     rows-preserved marker must NOT let consumers skip); B takes an UPSERT
     (overwrite) and a merge-on-read DELETE. Inline assert: the refreshed
     view is multiset-equal to the full recompute. At 100 TB the join legs
@@ -4979,8 +4977,8 @@ def incremental_join_view_refresh_mutable_q(spark, sf):
     """,
 )
 def incremental_agg_refresh_mutable_q(spark, sf):
-    """Incremental GROUP-BY-view maintenance over a MUTABLE base (r9,
-    VERDICT r8 task #3 — the most common materialized view in practice):
+    """Incremental GROUP-BY-view maintenance over a MUTABLE base (the
+    most common materialized view in practice):
     the append-only ``incremental_agg_refresh`` above merges partial
     aggregates of the incremental scan and raises the moment the base
     takes a delete or update; here the signed CHANGELOG (+1 insert / −1
@@ -5045,7 +5043,7 @@ def incremental_agg_refresh_mutable_q(spark, sf):
 )
 def incremental_agg_refresh_minmax_q(spark, sf):
     """Incremental MIN/MAX-view maintenance over a MUTABLE base via the
-    GENERIC (re-aggregate) strategy (r10, VERDICT r9 task #2 — the graded
+    GENERIC (re-aggregate) strategy (the graded
     ``incremental_agg_refresh_mutable`` covers only the algebraic
     count/sum path): MIN/MAX is not additive, so when a delete KILLS a
     group's current max, merging signed deltas by addition cannot recover
@@ -5117,7 +5115,7 @@ def incremental_agg_refresh_minmax_q(spark, sf):
     """,
 )
 def incremental_topk_refresh_mutable_q(spark, sf):
-    """Incremental TOP-K-view maintenance over a MUTABLE base (r10) — the
+    """Incremental TOP-K-view maintenance over a MUTABLE base — the
     leaderboard materialized view: top-3 orders per customer by price.
     Top-k is neither additive nor a single-row-per-group aggregate, but
     the generic IVM strategy covers it because ``untouched``/``touched``
@@ -5185,8 +5183,8 @@ def incremental_topk_refresh_mutable_q(spark, sf):
     """,
 )
 def changelog_eq_delete_scan_q(spark, sf):
-    """Row-level CDC over an EQUALITY delete (r9, VERDICT r8 task #1 — the
-    r8 bounds-pruning path had tests but no graded query): two appends
+    """Row-level CDC over an EQUALITY delete (the graded query of the
+    changelog's bounds-pruning path): two appends
     land disjoint key-range files (plus one NULL-keyed row), then an
     eq-delete keyed on {min key of the high range, NULL} commits. The
     changelog must surface exactly the keyed row AND the NULL row as
@@ -5249,16 +5247,15 @@ def changelog_cdc_scan_q(spark, sf):
     """,
 )
 def metadata_min_max_scan_q(spark, sf):
-    """Metadata-only MIN/MAX (r9 — the natural extension of the
+    """Metadata-only MIN/MAX (the natural extension of the
     reference's metadata-only count, table/scan.go:234-250): answered
     from manifest bounds with ZERO data read, but only when metadata can
     PROVE exactness — the float column requires proven-zero NaN counts
     (write.nan-count-columns), and a live MoR delete file must flip the
     answer to "fall back to the scan" (asserted: a suppressed row could
     be the extremum). Compaction materializes the deletes and the
-    metadata path lights up again, now reflecting them. r10 (VERDICT r9
-    task #4) extends the proof to a STRING column: parquet writers may
-    truncate string footer bounds, so the engine serves them only when
+    metadata path lights up again, now reflecting them. The proof extends
+    to a STRING column: parquet writers may truncate string footer bounds, so the engine serves them only when
     write.exact-bounds-columns made the writer compute the bound from the
     VALUES and stamp ``bounds_exact`` — asserted both ways (unmarked
     stats refused, marked stats served and scan-identical)."""
@@ -5370,7 +5367,7 @@ def crud_schema_evolution_scan(spark, sf):
     """,
 )
 def crud_eq_delete_rename_scan(spark, sf):
-    """Equality deletes across a column RENAME (r5 probe bug fix): keys are
+    """Equality deletes across a column RENAME: keys are
     field ids, so a delete written before the rename (physical column
     o_orderpriority) and one written after it (physical column priority)
     must BOTH apply to the same pre-rename data files. Before the fix the
@@ -5396,7 +5393,7 @@ def crud_eq_delete_rename_scan(spark, sf):
     """,
 )
 def time_travel_schema_scan(spark, sf):
-    """Time travel pins the SNAPSHOT's schema (r5 probe bug fix): a column
+    """Time travel pins the SNAPSHOT's schema: a column
     added after the target snapshot must not leak into the historical read
     (Iceberg read-schema rule: use_snapshot/as_of/tag -> snapshot schema,
     branch/current -> current schema)."""
@@ -5543,7 +5540,7 @@ def q9(spark, sf):
     shuffle is the (nation, year) aggregate.
 
     The per-row amount (a double) accumulates in EXACT decimal arithmetic
-    in BOTH engines (r12): a parallel double sum is summation-order-
+    in BOTH engines: a parallel double sum is summation-order-
     dependent, and with 175 (nation, year) groups a round(·, 2) boundary
     row eventually lands on opposite sides in the two engines (measured at
     sf0.001/local[32]: one group off by one cent). The hash-match is
@@ -5551,9 +5548,8 @@ def q9(spark, sf):
     both engines, (b) decimal sums are exact and order-free, and (c) BOTH
     engines round decimals half-away-from-zero, so even a sum landing
     exactly on an x.xx5 boundary (possible — dyadic values like 0.125 cast
-    exactly to 0.1250000000) rounds the same way in both (r13, ADVICE:
-    the earlier note wrongly claimed such ties are impossible; it is the
-    matching rounding mode that carries the boundary case, not
+    exactly to 0.1250000000) rounds the same way in both (such ties are
+    possible; it is the matching rounding mode that carries the boundary case, not
     tie-impossibility). The rounded 2-digit total converts back to double
     exactly (< 2^52/100)."""
     l = load(spark, sf, "lineitem")
@@ -6407,7 +6403,7 @@ def partitioned_scan_pruning_q(spark, sf):
     """,
 )
 def metadata_partitions_scan_q(spark, sf):
-    """``partitions`` metadata table graded (r11): per-partition file/record
+    """``partitions`` metadata table graded: per-partition file/record
     rollup aggregated from MANIFEST ENTRIES only — zero data files opened,
     the planning input for compaction/skew decisions at 100 TB (entry
     counts are metadata-scale, bounded by file count). The fixture appends
@@ -6463,7 +6459,7 @@ def metadata_partitions_scan_q(spark, sf):
     """,
 )
 def crud_scd2_history_scan_q(spark, sf):
-    """SCD TYPE 2 dimension maintenance (r11): versioned updates close the
+    """SCD TYPE 2 dimension maintenance: versioned updates close the
     key's open row and insert chained version rows — ONE merge snapshot
     per batch. The fixture seeds customer balances as version 0, then
     applies order-derived updates in TWO batches split by sequence, so
@@ -6526,7 +6522,7 @@ def crud_scd2_history_scan_q(spark, sf):
     """,
 )
 def join_scd2_asof_lookup_q(spark, sf):
-    """Point-in-time dimension lookup against SCD2 history (r11 — the
+    """Point-in-time dimension lookup against SCD2 history (the
     consumer side of ``scd2_apply``): each fact order joins the balance
     version VALID AT its own sequence, not today's — the reproducible
     training join (features as-of the example's event). Facts span the
@@ -6585,7 +6581,7 @@ _NDV_KMV_SQL = """(
     """,
 )
 def metadata_ndv_stats_scan_q(spark, sf):
-    """Incremental table statistics (r11 — the engine's ANALYZE TABLE /
+    """Incremental table statistics (the engine's ANALYZE TABLE /
     Puffin-NDV role): per-column KMV distinct sketches live in table
     properties, refreshed INCREMENTALLY — the second refresh here scans
     only the appended delta and merges k-min sets, and because k smallest
@@ -6632,9 +6628,9 @@ def partition_evolution_scan_q(spark, sf):
     generations (old entries keep spec 0, new carry spec 1) while pruning
     the new generation by partition value — asserted, then hash-matched."""
     base = load(spark, sf, "orders").filter(F.col("o_orderkey") < 4000).select(*_CRUD_COLS)
-    # split point derived from the data, not hard-coded (r12): at sf0.001
-    # orders holds keys 0..1499, so a fixed >= 2000 second batch was EMPTY
-    # and the mixed-specs assertion below could never pass at that SF. The
+    # split point derived from the data, not hard-coded: at sf0.001
+    # orders holds keys 0..1499, so a fixed >= 2000 second batch would be
+    # EMPTY and the mixed-specs assertion below could never pass at that SF. The
     # OUTPUT is invariant to the split (b1 ∪ b2 == base either way); only
     # the two generations' row assignment moves.
     mid = (base.agg(F.max("o_orderkey")).first()[0] or 0) // 2  # 1-row scalar
@@ -6686,7 +6682,7 @@ def maintenance_compaction_scan_q(spark, sf):
     """,
 )
 def maintenance_selective_compaction_scan_q(spark, sf):
-    """SELECTIVE compaction (r9 — the 100 TB form of rewrite_data_files;
+    """SELECTIVE compaction (the 100 TB form of rewrite_data_files;
     full-table rewrites are not an operation you can run at scale): one
     big file plus many tiny appends and a MoR delete spanning both; binpack
     rewrites ONLY the files outside the 75-180% size band — the big file
@@ -6764,8 +6760,8 @@ def maintenance_expire_scan_q(spark, sf):
     """,
 )
 def maintenance_branch_expire_scan_q(spark, sf):
-    """DROP BRANCH → expiry reclamation under the graded gate (r10, VERDICT
-    r9 task #3 — the r9 remove_ref motivation graded end-to-end): two WAP
+    """DROP BRANCH → expiry reclamation under the graded gate (remove_ref
+    graded end-to-end): two WAP
     batches stage on an audit branch, the audit is abandoned. While the
     ref LIVES, expiry must NOT touch the staged files (ref retention —
     asserted). After ``remove_ref`` drops the branch, the same expiry
@@ -6834,7 +6830,7 @@ def maintenance_branch_expire_scan_q(spark, sf):
 )
 def maintenance_rewrite_pos_deletes_scan_q(spark, sf):
     """rewrite_position_deletes under the graded gate (Iceberg
-    rewrite_position_delete_files procedure; r10): three MoR deletes leave
+    rewrite_position_delete_files procedure): three MoR deletes leave
     three small tombstone files — each a separate parquet read + anti-join
     build side on EVERY scan — then a selective compaction rewrites one
     data file, stranding that file's tombstone rows as dangling. The
@@ -7024,7 +7020,7 @@ def bucket_partition_pruning_scan_q(spark, sf):
 )
 def iceberg_bucket_pruning_scan_q(spark, sf):
     """Same bucket-pruning contract as bucket_partition_pruning_scan, but
-    with ``write.bucket-function=iceberg`` (r4): partitions land by the
+    with ``write.bucket-function=iceberg``: partitions land by the
     Iceberg-spec bucket hash (Appendix B murmur3, codegen'd Catalyst bit
     arithmetic on the write path), the planner recomputes the same ordinals
     driver-side for the IN literals, and — unlike the default Spark hash —
@@ -7130,170 +7126,114 @@ def bench_queries() -> dict[str, QuerySpec]:
 # locally by scripts/parity.py, just not driver-graded.
 # ---------------------------------------------------------------------------
 
-# r6 rotation (VERDICT r5 tasks #1/#3): embedding_int8_quantize leads (the
-# only row never driver-green — output now scalar and canonicalizable),
-# then fresh rows over every scan path r5's bug fixes rewired (eq-delete
-# field-id resolution, snapshot-pinned schemas, changelog per-file delete
-# grouping, bucket hash-width tri-state), then the r5 flagships for one
-# more green round, then pass-prior rows cycling back so no query goes
-# many rounds ungraded. Displaced: rows driver-green in ≥2 recent rounds.
+# The window opens with one row per operator family beyond the table core
+# (sketches, multimodal decoding, metadata tables, streaming sinks, SCD2
+# maintenance, similarity, incremental views), each grading a path no other
+# row reaches, then closes with table-format rows: compaction, manifest
+# rewrites, range writes, NaN pruning, MERGE, deletes, partition evolution
+# and WAP publish.
 _GRADED_FIRST = [
-    # --- r11 VERDICT r10 task #6: the CMS shard-merge as its own row —
-    #     two disjoint-shard sketches SUM-merged, estimates from the
-    #     merged counters, merge replayed in the oracle SQL (displaced:
-    #     text_hashing_vectorize — green r6..r10, path untouched r11) ---
+    # CMS shard-merge: two disjoint-shard sketches SUM-merged, estimates
+    # from the merged counters, the merge replayed in the oracle SQL
     "sketch_cms_merge",
-    # --- r11 VERDICT r10 task #5: REAL image-header metadata (PNG IHDR /
-    #     JPEG SOFn walk / GIF descriptor via stdlib struct in an Arrow
-    #     batch; garbage rows pin the NULL-tolerance path). Displaced:
-    #     cluster_kmeans_topics — green r6..r10, path untouched r11 ---
+    # image-header metadata (PNG IHDR / JPEG SOFn walk / GIF descriptor via
+    # stdlib struct in an Arrow batch); garbage rows pin NULL tolerance
     "multimodal_header_metadata",
-    # --- r11 NEW graded row: the partitions metadata table (manifest-only
-    #     per-partition rollup; record counts tracked through a CoW
-    #     delete). Displaced: join_hot_key_isolated — green r9/r10 AND
-    #     still benched (timed + executed) every round ---
+    # the partitions metadata table: a manifest-only per-partition rollup,
+    # record counts tracked through a CoW delete
     "metadata_partitions_scan",
-    # --- r11 NEW operator: streaming cross-batch dedup sink (state-store
-    #     seen-keys, exactly-once survivors, watermark-bounded variant
-    #     pinned in pytest). Displaced: maintenance_expire_scan — green
-    #     r7..r10, expiry path additionally exercised this round by the
-    #     branch-expire row and three interplay probes ---
+    # streaming cross-batch dedup sink: state-store seen keys, exactly-once
+    # survivors (the watermark-bounded variant is pinned in pytest)
     "streaming_dedup_sink_scan",
-    # --- r11 NEW operator: SCD type-2 dimension maintenance (one MERGE
-    #     per batch; cross-batch chain == the oracle's single-shot window
-    #     chain; replay/no-op/duplicate contracts pinned in pytest).
-    #     Displaced: incremental_join_view_refresh — green r6..r10 and the
-    #     harder counting-semantics variant stays in the window ---
+    # SCD type-2 dimension maintenance: one MERGE per batch, the
+    # cross-batch chain equal to the oracle's single-shot window chain
     "crud_scd2_history_scan",
-    # --- r11 NEW scale path: GEMM kNN (BLAS scoring, <= k candidates per
-    #     query per batch; same oracle as the fold row — grading pins that
-    #     summation-order noise never crosses a top-k margin). Displaced:
-    #     incremental_agg_refresh — green r6..r10, and the harder
-    #     minmax/mutable IVM variants stay in the window ---
+    # GEMM kNN: BLAS scoring, <= k candidates per query per batch, graded
+    # on the fold row's oracle, so summation-order noise must never cross
+    # a top-k margin
     "similarity_knn_gemm",
-    # --- r11 NEW operator: point-in-time SCD2 lookup (interval-filtered
-    #     equi join; facts hit closed AND open versions). Displaced:
-    #     incremental_append_scan — green r6..r10, exercised inside the
-    #     IVM rows still in the window ---
+    # point-in-time SCD2 lookup: an interval-filtered equi join whose facts
+    # hit closed and open versions
     "join_scd2_asof_lookup",
-    # --- r11 NEW operator: incremental NDV statistics (KMV sketches in
-    #     table properties; the k-min merge is hash-pinned against the
-    #     one-pass oracle). Displaced: changelog_cdc_scan — green
-    #     r6..r10, and the harder eq-delete changelog variant plus three
-    #     changelog-consuming IVM rows stay in the window ---
+    # incremental NDV statistics: KMV sketches in table properties, the
+    # k-min merge hash-pinned against the one-pass oracle
     "metadata_ndv_stats_scan",
-    # --- r11 NEW operator: linear gap interpolation on the resample grid
-    #     (floor-based cross-engine rounding; thinned fixture guarantees
-    #     interior gaps). Displaced: text_repetition_scores — green
-    #     r6..r10, path untouched r11 ---
+    # linear gap interpolation on the resample grid: floor-based
+    # cross-engine rounding, a thinned fixture with interior gaps
     "timeseries_resample_interpolate",
-    # --- r10 VERDICT r9 tasks #2/#3: the generic (agg_fn) aggregate-IVM
-    #     strategy (MIN/MAX view whose standing max a delete KILLS) and
-    #     DROP BRANCH -> expiry reclamation (ancestor-based retain_last).
-    #     Displaced: similarity_lsh_topk and dedup_embedding_ivf_gemm —
-    #     both green r7 sweep + r9 driver, cosine plan family untouched
-    #     r10. ---
+    # the generic (agg_fn) aggregate-IVM strategy on a MIN/MAX view whose
+    # standing max a delete kills, and DROP BRANCH -> expiry reclamation
+    # (ancestor-based retain_last)
     "incremental_agg_refresh_minmax",
     "maintenance_branch_expire_scan",
-    # --- r10 NEW: top-k (leaderboard) view IVM via the generic strategy
-    #     (displaced: pack_token_budget_bins — green r8 AND r9, sampling
-    #     path untouched r10) ---
+    # a top-k (leaderboard) view maintained by the generic strategy
     "incremental_topk_refresh_mutable",
-    # --- r10 NEW operators: Count-Min heavy hitters (portable md5
-    #     counters, one-sided guarantee + mergeability inline-asserted)
-    #     and rewrite_position_deletes (tombstone compaction + dangling-row
-    #     drop, zero data movement). Displaced: dedup_embedding_cosine and
-    #     dedup_embedding_ivf — both green r7 sweep + r9 driver, cosine
-    #     plan family untouched r10. ---
+    # Count-Min heavy hitters (portable md5 counters, the one-sided
+    # guarantee and mergeability pinned in pytest) and
+    # rewrite_position_deletes (tombstone compaction and dangling-row
+    # drop, zero data movement)
     "sketch_cms_heavy_hitters",
     "maintenance_rewrite_pos_deletes_scan",
-    # --- r10 NEW operator: bloom-prefiltered join (probe-side bit-test
-    #     before the shuffle; displaced: streaming_table_sink_scan —
-    #     green r7/r8/r9, append-sink path untouched r10) ---
+    # bloom-prefiltered join: a probe-side bit test before the shuffle
     "join_bloom_prefiltered",
-    # --- r10 NEW operator: streaming HLL distinct-count view (idempotent
-    #     max-merge registers — replay safety by ALGEBRA, inline-asserted
-    #     by a forced marker-bypassing re-merge; displaced:
-    #     streaming_upsert_table_sink_scan — green r7/r8/r9, upsert-sink
-    #     path untouched r10 and still fuzz-covered every walk) ---
+    # streaming HLL distinct-count view: idempotent max-merge registers,
+    # replay-safe by algebra (a forced marker-bypassing re-merge is
+    # asserted inline)
     "streaming_hll_view_sink_scan",
-    # --- r9 VERDICT r8 task #1: grade the changelog-over-eq-deletes path
-    #     (bounds pruning with NULL + non-NULL keys), rotate
-    #     crud_delete_mor_scan back in (its WRITE path changed in r8 —
-    #     writer-side tombstone dedup — the same round it left the window),
-    #     and grade the new aggregate-view IVM over mutable bases (r8
-    #     task #3). Displaced: q3_shipping_priority,
-    #     window_running_and_lag, sample_temperature_mix — all green in
-    #     r8 AND ≥2 earlier rounds, paths untouched r9. ---
+    # the changelog over equality deletes (bounds pruning with NULL and
+    # non-NULL keys), the MoR delete write path (writer-side tombstone
+    # dedup) and the aggregate-view IVM over mutable bases
     "changelog_eq_delete_scan",
     "crud_delete_mor_scan",
     "incremental_agg_refresh_mutable",
-    # --- r9 NEW operators: portable HLL (exact-integer register sums)
-    #     and cherry-pick publish (the non-fast-forward WAP flavor;
-    #     displaced: funnel_view_click_purchase and
-    #     timeseries_resample_locf — both green r5, r6 AND r8, paths
-    #     untouched r9) ---
+    # portable HLL (exact-integer register sums) and cherry-pick publish
+    # (the non-fast-forward WAP flavor)
     "sketch_hll_distinct",
     "wap_cherrypick_scan",
-    # --- r9: selective (binpack/where) compaction is NEW and the full
-    #     compaction path flows through the same rewritten function —
-    #     grade both (displaced: asof_join_purchase_to_view and
-    #     dedup_keep_best_quality, green r8 + earlier, untouched r9) ---
+    # selective (binpack/where) compaction and the full compaction that
+    # runs through the same function
     "maintenance_selective_compaction_scan",
     "maintenance_compaction_scan",
-    # --- r9 NEW operators: kNN classification over embeddings +
-    #     metadata-only MIN/MAX with its exactness proof (displaced:
-    #     text_hashing_ann_topk and q8_market_share — green r7 sweep/r6
-    #     AND r8, untouched r9) ---
+    # kNN classification over embeddings, and metadata-only MIN/MAX with
+    # its exactness proof
     "similarity_knn_classify",
     "metadata_min_max_scan",
-    # --- r9 NEW operator: streaming aggregate-view maintenance sink
-    #     (additive exactly-once MERGE; displaced: dedup_simhash — green
-    #     every round since r4 and still benched per-round) ---
+    # streaming aggregate-view maintenance sink (additive exactly-once MERGE)
     "streaming_agg_view_sink_scan",
-    # --- r9 NEW operator: MMR diversity re-ranking (displaced:
-    #     dedup_minhash_lsh — green every round since r3 AND still
-    #     benched per-round) ---
+    # MMR diversity re-ranking
     "similarity_mmr_rerank",
-    # --- r7 task #1: the cosine single-evaluation rewrite (all six
-    #     pair-cosine plans re-shaped this round) ---
+    # the single-evaluation pair-cosine plans
     "similarity_cosine_topk",
     "similarity_ivf_topk",
-    # --- r7 ADVICE fixes: streaming exactly-once (high-water seq, racing
-    #     replay recheck) + rollback rebase + overwrite retry restamp ---
+    # streaming exactly-once (high-water seq, racing replay recheck),
+    # rollback rebase and overwrite retry restamp
     "streaming_interval_join",
     "streaming_session_window",
-    # --- r8 NEW operator: counting-semantics delta-join IVM over mutable
-    #     bases (changelog through both join legs) ---
+    # counting-semantics delta-join IVM over mutable bases (the changelog
+    # through both join legs)
     "incremental_join_view_refresh_mutable",
-    # --- r8 VERDICT task #3: r7-fixed-but-unwindowed rows — the sampling
-    #     NULL-sentinel fix, the KMV NULL/empty-degenerate fixes, the
-    #     inverted-interval range-join fix, and the token-packing family
-    #     (displaced: time_travel_rollback_scan, crud_overwrite_scan,
-    #     crud_upsert_scan, crud_delete_mor_scan, crud_schema_evolution_scan,
-    #     crud_add_files_scan, q1_pricing_summary — all green r6 AND r7,
-    #     paths unchanged r8) ---
+    # sampling's NULL sentinel, KMV's NULL and empty degenerate inputs,
+    # inverted-interval range joins and the token-packing family
     "sample_stratified_mix",
     "sample_split_train_eval",
     "sketch_kmv_distinct",
     "sketch_kmv_set_ops",
     "range_join_errors_followups",
-    # --- r8 NEW operators: mergeable-histogram quantiles + interval
-    #     merging (displaced: maintenance_zorder_scan,
-    #     cluster_kmeans_topics_gemm — green r6 AND r7, untouched r8) ---
+    # mergeable-histogram quantiles, interval merging, rank fusion and
+    # multimodal features
     "sketch_histogram_quantiles",
     "timeseries_merge_intervals",
     "similarity_hybrid_rrf",
     "multimodal_extract_features",
     "multimodal_feature_ann_topk",
-    # --- r7 NEW operators: manifest-list bounds + member-clustering
-    #     rewrite (touches every commit's manifest tree) and DSIR
-    #     importance scoring (displaced: embedding_int8_quantize,
-    #     crud_merge_scan — both green r5+r6, paths unchanged r7) ---
+    # manifest-list bounds and the member-clustering rewrite (every
+    # commit's manifest tree), DSIR importance scoring and range-distributed
+    # partitioned writes
     "maintenance_rewrite_manifests_scan",
     "text_dsir_importance",
     "partitioned_range_write_pruned_scan",
-    # --- keep one more green round on recent fixes ---
+    # NaN pruning, MERGE's not-matched-by-source clause, equality deletes,
+    # partition evolution and WAP branch publish
     "float_nan_pruning_scan",
     "crud_merge_not_matched_by_source_scan",
     "crud_delete_eq_scan",

@@ -1,5 +1,5 @@
 """Generate larger scale fixtures from sf0.1 with join-consistent key offsets
-(r12) — the recipe of scripts/make_sf1.py (copies with strided keys, shared
+— the recipe of scripts/make_sf1.py (copies with strided keys, shared
 region/nation dims), generalized to ANY copy count and rewritten to stream
 one copy per row group through a ParquetWriter instead of concatenating all
 copies in memory (100 copies of sf0.1 would otherwise hold ~10x sf1 in RAM).
@@ -60,11 +60,11 @@ def mark_text(text: str, k: int) -> str:
     copy — two docs in the same copy have the same shingle-match structure
     as their base-corpus originals).
 
-    Why not marker INSERTION (the first r12 recipe, a marker token after
+    Why not marker INSERTION (a marker token after
     every MARK_EVERY words): it only dilutes cross-copy Jaccard (J ~ 0.14
     at MARK_EVERY=3), and the 4x4 LSH banding turns ~4*J^4 ~ 0.2% of the
     QUADRATICALLY-growing cross-copy pair count into candidates. Measured
-    in the r12 scaling audit: within-copy candidates exactly linear (256
+    in the scaling audit (SCALING_r12.json): within-copy candidates exactly linear (256
     per copy at 10/30/100 copies), cross-copy candidates exactly quadratic
     (701 -> 6,115 -> 69,356; ratios 8.7 and 11.3 vs 9 and 11.1 predicted)
     — by sf10 the fixture artifact dominated the verification join's

@@ -1,7 +1,7 @@
 """Regenerate the /tmp/sf1 soak fixture (10x sf0.1 with join-consistent key
 offsets) — the dataset behind SOAK.md / SOAK_sf1.json / BENCH_sf1_r*.json.
 
-Recipe (r2, kept stable so round-over-round sf1 numbers stay comparable):
+Recipe (kept stable so sf1 numbers stay comparable across runs):
 - every table except region/nation is replicated 10x; copy k offsets every
   *key* column (ids and foreign keys alike) by k * 10_000_000, so joins
   stay consistent within a copy and never cross copies;

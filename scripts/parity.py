@@ -5,7 +5,7 @@ names, and an order-insensitive value multiset (floats with tolerance).
 Usage: python scripts/parity.py [sf_dir] [query ...]
        python scripts/parity.py --bench [sf_dir] [--out artifact.json]
 
-``--bench`` (r11, VERDICT task #3) runs the 26 HEADLINE (benched) queries at
+``--bench`` runs the 26 HEADLINE (benched) queries at
 sf0.1 by default — ten times the data the driver's sf0.01 gate sees. The
 point is the failure class sf0.01 cannot witness: scale-dependent
 nondeterminism (localCheckpoint replay in the MMR greedy, bloom

@@ -1,4 +1,4 @@
-"""Adversarial-skew soak for the dedup family (VERDICT r3 task #4).
+"""Adversarial-skew soak for the dedup family.
 
 The sf1 soak corpus keeps near-dups *within* replicated copies; real web
 corpora have power-law duplicate clusters. This soak builds the hostile
@@ -7,7 +7,7 @@ shape on purpose:
 - ONE hot cluster: N identical documents (default 10,000) — every LSH band
   bucket for that text holds the whole cluster, so candidate generation
   must stream C(N,2) ≈ 50M pairs through one logical bucket without
-  materializing per-bucket arrays (the r3 groupBy+collect_list shape died
+  materializing per-bucket arrays (a groupBy+collect_list shape dies
   exactly here) and AQE must be able to skew-split the hot partition;
 - ONE universal boilerplate sentence appended to EVERY document — its
   shingles sit in every shingle set, occasionally dominating whole minhash

@@ -1,4 +1,4 @@
-"""Streaming throughput soak (VERDICT r3 task #9): a 1M-event replay with
+"""Streaming throughput soak: a 1M-event replay with
 rate limiting through the three stateful streaming shapes the workload
 grades on small replays — tumbling window agg, session windows, watermarked
 dedup — recording per-batch durations and state-store sizes, and asserting

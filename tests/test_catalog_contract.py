@@ -129,6 +129,18 @@ def test_drop_parent_namespace_keeps_children(cat, schema):
     assert cat.list_namespaces() == []
 
 
+def test_local_drop_namespace_removes_its_directories(spark, tmp_path, schema):
+    wh = tmp_path / "wh"
+    cat = FilesystemCatalog(spark, str(wh))
+    cat.create_namespace(("a",))
+    cat.create_table(("a", "b"), "t", schema)
+    cat.drop_table(("a", "b"), "t")
+    cat.drop_namespace(("a", "b"))
+    cat.drop_namespace(("a",))
+    assert not (wh / "a").exists()
+    assert wh.is_dir()
+
+
 def _lose_rename_races(monkeypatch, n):
     """Make the catalog's next ``n`` metadata commits lose their race."""
     import go_iceberg_spark.catalog.catalog as catalog_mod

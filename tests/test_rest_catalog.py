@@ -263,7 +263,9 @@ def test_rest_expire_rewires_parents_and_changes_work(spark, rcat):
     client rewires locally, but modified-retained snapshots are neither
     added nor removed on the wire) — every changelog/incremental read over
     the gap then died with 'no longer retained'. The applier now rewires by
-    original ancestry, converging with the local expire result."""
+    original ancestry, converging with the local expire result, and stamps
+    each rewired snapshot ``parent-rewired`` as the local expiry does, so a
+    rewired branch snapshot refuses cherrypick under both catalogs."""
     import time
 
     rcat.create_namespace(("db",))
@@ -279,6 +281,7 @@ def test_rest_expire_rewires_parents_and_changes_work(spark, rcat):
     parents = {s.snapshot_id: s.parent_snapshot_id for s in t2.snapshots()}
     assert set(parents) == {s2.snapshot_id, s3.snapshot_id}
     assert parents[s2.snapshot_id] is None     # rewired past the expired root
+    assert t2.snapshot_by_id(s2.snapshot_id).summary.get("parent-rewired") == "true"
     ch = sorted((r.id, r["_change_type"]) for r in t2.changes().collect())
     assert ch == [(0, "insert"), (1, "insert"), (2, "insert")]
 
@@ -294,6 +297,20 @@ def test_rest_expire_rewires_parents_and_changes_work(spark, rcat):
     assert t3.metadata.properties.get(HIGH_WATER_PROP + "ck") == "1"
     assert append_batch_exactly_once(
         t3, spark.createDataFrame([Row(id=9, name="z")]), "ck", 1) is False
+
+    # a branch snapshot whose parent a REST expiry removed: its delta against
+    # the rewired parent holds the gap's rows too, so the pick is refused
+    tp = rcat.create_table(("db",), "rpick", from_spark_schema(df.schema))
+    p1 = tp.append(spark.createDataFrame([Row(id=1, name="a")]))
+    tp.create_tag("base", p1.snapshot_id)
+    tp.create_branch("audit", p1.snapshot_id)
+    tp.append_to_branch("audit", spark.createDataFrame([Row(id=2, name="b")]))
+    p3 = tp.append_to_branch("audit", spark.createDataFrame([Row(id=3, name="c")]))
+    tp.expire_snapshots(older_than=int(time.time() * 1000) + 1_000, retain_last=1)
+    tp = rcat.load_table(("db",), "rpick")
+    with pytest.raises(ValidationError, match="rewired"):
+        tp.cherrypick(p3.snapshot_id)
+    assert [r.id for r in tp.to_df().collect()] == [1]
 
 
 def test_rename_rewrites_location_and_data_follows(spark, rcat):

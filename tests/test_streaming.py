@@ -78,6 +78,20 @@ def test_stream_incremental_batches(spark, catalog, events_table, tmp_path):
     assert out.refresh().scan().count() == 250  # only the 50 new rows added
 
 
+def test_read_stream_follows_write_data_path(spark, catalog, tmp_path):
+    """A table whose data lives under ``write.data.path`` streams all its
+    rows: the file source watches that root's data directory."""
+    df = events_df(spark, 100)
+    t = catalog.create_table("db", "events_dp", from_spark_schema(df.schema),
+                             properties={"write.data.path": str(tmp_path / "data_root")})
+    t.append(df)
+    src = ST.read_stream(spark, t)
+    out = catalog.create_table("db", "events_dp_copy", from_spark_schema(src.schema))
+    q = ST.append_stream(src, out, str(tmp_path / "ckpt"), trigger_once=True)
+    q.awaitTermination(120)
+    assert out.refresh().scan().count() == 100
+
+
 def test_sessionize_stream(spark, events_table, tmp_path):
     src = ST.read_stream(spark, events_table)
     sess = ST.sessionize(src, "ts", "user_id", gap="30 minutes")
