@@ -44,7 +44,14 @@ from .metadata import (
     snapshots_between,
     writer_schema,
 )
-from .scan import POS_DELETE_FILE_COL, _file_key, read_files, read_tombstones, scan_tasks
+from .scan import (
+    POS_DELETE_FILE_COL,
+    _file_key,
+    empty_frame,
+    read_files,
+    read_tombstones,
+    scan_tasks,
+)
 
 CHANGE_TYPE_COL = "_change_type"
 CHANGE_ORDINAL_COL = "_change_ordinal"
@@ -67,7 +74,7 @@ def incremental_append_scan(
         for e in appended_entries(md, snap, table.manifest_entries, ignore_non_append)]
     df = read_files(table, scan_tasks(added_entries, []), md.current_schema)
     if df is None:
-        return spark.createDataFrame([], to_spark_type(md.current_schema.struct))
+        return empty_frame(spark, to_spark_type(md.current_schema.struct))
     return df
 
 
@@ -230,9 +237,9 @@ def changelog_scan(
                              .withColumn(CHANGE_ORDINAL_COL, F.lit(ordinal)))
 
     if not parts:
-        base = spark.createDataFrame([], to_spark_type(schema.struct))
-        return (base.withColumn(CHANGE_TYPE_COL, F.lit(""))
-                .withColumn(CHANGE_ORDINAL_COL, F.lit(0)).limit(0))
+        return (empty_frame(spark, to_spark_type(schema.struct))
+                .withColumn(CHANGE_TYPE_COL, F.lit(""))
+                .withColumn(CHANGE_ORDINAL_COL, F.lit(0)))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

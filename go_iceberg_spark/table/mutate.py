@@ -51,6 +51,7 @@ from .scan import (
     POS_DELETE_POS_COL,
     _encode_filter,
     _stats_for_pruning,
+    empty_frame,
     read_files,
     scan_tasks,
 )
@@ -445,7 +446,7 @@ def merge(table, source: DataFrame, on: list[str], *,
 
         target = read_files(table, scan_tasks(candidates, _other_deletes(table)), schema)
         if target is None:
-            target = table.spark.createDataFrame([], table.spark_schema())
+            target = empty_frame(table.spark, table.spark_schema())
 
         # SQL MERGE cardinality rule: multiple source rows matching ONE
         # target row is an error, not a row multiplication (the full-outer

@@ -19,7 +19,9 @@ four tiers:
    - above ``DISTRIBUTED_THRESHOLD``: distributed — ``plan_distributed``
      reads the members AS a Spark DataFrame and prunes with a Catalyst
      predicate over the parallel-array stats columns, collecting only the
-     survivors;
+     survivors. The member paths are listed on the driver
+     (``scan.read_parquet``), not by a Spark listing job, so the collect
+     is the tier's one job;
    - above ``ScanBuilder._CACHE_ENTRY_LIMIT``: driver prune —
      ``prune_manifest_driver`` reads each member with pyarrow, decodes
      bound values ONLY for filter-referenced fields, and builds
@@ -56,13 +58,13 @@ from .metadata import (
 # over the members. The job bounds driver MEMORY: the driver prune holds a
 # whole member as arrow (~280 B/entry, ~150 MB for a compacted 550k-entry
 # member) and builds entries in Python, while the job brings only
-# survivors to the driver. Measured on the 550k-entry
-# table_scan table (139 members, 4 cores, a point filter on an unclustered
-# column, one survivor, warm session): the driver prune takes 3.3-4.0
-# µs/entry (1.8-2.2 s), plan_distributed 2.4-3.8 µs/entry (1.3-2.1 s, of
-# which ~0.8 s is Spark's parallel listing of the member paths). The member
-# bounds skip runs first either way: a clustered manifest list prunes 99/100
-# members on a point scan before any tier runs.
+# survivors to the driver. Measured on the 550k-entry table_scan table (139
+# members, 4 cores, a point filter on an unclustered column, one survivor,
+# warm session): the driver prune takes 3.3-4.0 µs/entry (1.8-2.2 s),
+# plan_distributed 0.7-1.2 µs/entry (0.37-0.63 s: 0.07-0.18 s to build the
+# frame, whose member paths are listed on the driver, and the rest its one
+# collect job). The member bounds skip runs first either way: a clustered
+# manifest list prunes 99/100 members on a point scan before any tier runs.
 DISTRIBUTED_THRESHOLD = 500_000
 
 
@@ -485,16 +487,20 @@ def _distributed_frame(spark, paths: list[str], flt: Expression, schema: Schema,
     """The entries of the members that might match ``flt``, as a DataFrame:
     the stats predicate (and the bucket-partition predicate) over the
     members, delete entries always kept. The members are read under the
-    manifest schema, so no schema-inference job runs."""
+    manifest schema, so no schema-inference job runs, and listed on the
+    driver, so no listing job runs: the distributed tier plans local tables
+    only."""
     from pyspark.sql import functions as F
     from pyspark.sql.pandas.types import from_arrow_schema
+
+    from .scan import read_parquet
 
     pred = _stats_predicate(flt, schema)
     if specs:
         bp = _bucket_partition_pred(flt, specs, schema, bucket_fn=bucket_fn)
         if bp is not None:
             pred = pred & bp
-    df = spark.read.schema(from_arrow_schema(_MANIFEST_ARROW_SCHEMA)).parquet(*paths)
+    df = read_parquet(spark, paths, from_arrow_schema(_MANIFEST_ARROW_SCHEMA), local=True)
     return df.filter((F.col("content") != CONTENT_DATA) | pred)
 
 

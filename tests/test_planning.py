@@ -7,6 +7,7 @@ these tests pin the scale behavior the engine replaces that with."""
 
 from __future__ import annotations
 
+import contextlib
 import os
 import time
 
@@ -21,7 +22,7 @@ from go_iceberg_spark.table.planning import (
     summary_bounds,
     summary_might_match,
 )
-from go_iceberg_spark.table.scan import _encode_filter
+from go_iceberg_spark.table.scan import LISTING_THRESHOLD, _encode_filter, read_files, scan_tasks
 
 SCHEMA = Schema(0, StructType((
     NestedField(1, "x", LONG, False),
@@ -419,3 +420,252 @@ def test_tier_rule_per_manifest_layout(spark, catalog, monkeypatch, layout, tier
                       if x.content == 0 and might_match(e, _stats_for_pruning(x, t.schema)))
     assert planned == expected
     assert 0 < len(expected) < len(entries)
+
+
+# ---------------------------------------------------------------------------
+# Frames built without a Spark job that does no work: member and data paths
+# listed on the driver, empty frames over an empty RDD
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def members_40(tmp_path_factory):
+    """40 manifest members of 5 data entries each, more paths than Spark's
+    default listing threshold of 32."""
+    d = tmp_path_factory.mktemp("m40")
+    paths = []
+    for j in range(40):
+        p = str(d / f"m{j:02d}.parquet")
+        write_manifest(p, [
+            DataFileEntry(e.content, f"g{j}/" + e.file_path, e.file_format, e.spec_id,
+                          e.schema_id, e.record_count, e.file_size, e.partition,
+                          e.column_stats, e.sequence_number, e.equality_ids)
+            for e in make_entries(5, with_deletes=False)])
+        paths.append(p)
+    return paths
+
+
+@pytest.fixture(scope="module")
+def table_40(spark, tmp_path_factory):
+    """A local table of 40 engine-written data files (a one-byte target file
+    size keeps every write task's file)."""
+    from go_iceberg_spark.catalog.catalog import FilesystemCatalog
+    from go_iceberg_spark.schema import from_spark_schema
+
+    cat = FilesystemCatalog(spark, str(tmp_path_factory.mktemp("wh40")))
+    df = spark.range(0, 400, numPartitions=40).selectExpr("id", "CAST(id AS DOUBLE) AS v")
+    t = cat.create_table("db", "files40", from_spark_schema(df.schema),
+                         properties={"write.target-file-size-bytes": "1"})
+    t.append(df)
+    assert len(t.live_entries()) == 40
+    return t
+
+
+def _plan_40(spark, paths):
+    # x > 30 keeps entries 3 and 4 of each member
+    got = plan_distributed(spark, paths, enc(gt("x", 30)), SCHEMA)
+    assert len(got) == 2 * len(paths)
+
+
+@contextlib.contextmanager
+def _threshold(spark, value):
+    """Set (or with None, unset) the session's listing threshold for the
+    block; unset it after."""
+    if value is not None:
+        spark.conf.set(LISTING_THRESHOLD, value)
+    try:
+        yield
+    finally:
+        spark.conf.unset(LISTING_THRESHOLD)
+
+
+def test_plan_distributed_jobs_over_40_members(spark, members_40):
+    """The members are listed on the driver: planning is the collect alone,
+    with no listing job before it."""
+    from go_iceberg_spark.plans import inspect as P
+
+    assert len(members_40) > int(spark.conf.get(LISTING_THRESHOLD))
+    with P.spark_jobs(spark) as jobs:
+        _plan_40(spark, members_40)
+    assert len(jobs) == 1, jobs
+
+
+def test_read_files_over_40_data_files_builds_without_jobs(spark, table_40):
+    """Building a frame over the 40 data files of a local table lists them
+    on the driver and starts no Spark job; a scan's frame neither."""
+    from go_iceberg_spark.plans import inspect as P
+
+    t = table_40
+    tasks = scan_tasks(t.live_entries(), [])
+    with P.spark_jobs(spark) as jobs:
+        df = read_files(t, tasks, t.schema)
+        scanned = t.scan().to_df()
+    assert jobs == []
+    assert df.count() == 400 and scanned.count() == 400
+
+
+def test_listing_threshold_reads_the_same_after_planning(spark, members_40, table_40):
+    before = (spark.conf.get(LISTING_THRESHOLD, None), spark.conf.get(LISTING_THRESHOLD))
+    _plan_40(spark, members_40)
+    read_files(table_40, scan_tasks(table_40.live_entries(), []), table_40.schema)
+    assert (spark.conf.get(LISTING_THRESHOLD, None), spark.conf.get(LISTING_THRESHOLD)) == before
+    assert before == (None, "32")
+
+
+@pytest.mark.parametrize("value", ["8", "1000"])
+def test_listing_threshold_user_value_survives_planning(spark, members_40, value):
+    """A user value below the path count is raised for the read and put
+    back; one above it is left alone. Either way the members are listed on
+    the driver."""
+    from go_iceberg_spark.plans import inspect as P
+
+    with _threshold(spark, value):
+        with P.spark_jobs(spark) as jobs:
+            _plan_40(spark, members_40)
+        assert spark.conf.get(LISTING_THRESHOLD) == value
+    assert len(jobs) == 1, jobs
+
+
+@pytest.mark.parametrize("value", [None, "8"])
+def test_listing_threshold_restored_when_the_read_raises(spark, members_40, table_40, value):
+    """A missing member or data file still fails the read (the benchmark's
+    phantom-file check relies on it), and the threshold is restored."""
+    from go_iceberg_spark.table.metadata import CONTENT_DATA
+
+    t = table_40
+    real = t.live_entries()
+    phantom = DataFileEntry(
+        content=CONTENT_DATA, file_path=os.path.join(t.location, "data", "phantom.parquet"),
+        file_format="parquet", spec_id=0, schema_id=real[0].schema_id, record_count=1,
+        file_size=1, partition={}, column_stats={}, sequence_number=1)
+    missing = os.path.join(os.path.dirname(members_40[0]), "missing.parquet")
+    with _threshold(spark, value):
+        with pytest.raises(Exception, match="(?i)not.*exist|not.*found"):
+            _plan_40(spark, members_40 + [missing])
+        assert spark.conf.get(LISTING_THRESHOLD, None) == value
+        with pytest.raises(Exception, match="(?i)not.*exist|not.*found"):
+            read_files(t, scan_tasks(real + [phantom], []), t.schema).collect()
+        assert spark.conf.get(LISTING_THRESHOLD, None) == value
+
+
+def test_listing_threshold_restored_after_concurrent_planning(spark, members_40, table_40):
+    """Six threads (more than the box's cores) planning and reading at once
+    on one session, each over a different number of paths above the
+    threshold, get their rows and leave the threshold as they found it: a
+    restore lost between two threads would leave it raised."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    def plan(n):
+        for _ in range(3):
+            _plan_40(spark, members_40[:n])
+            df = read_files(table_40, scan_tasks(table_40.live_entries()[:n], []),
+                            table_40.schema)
+            assert df.count() == 10 * n
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for value in (None, "36"):
+            with _threshold(spark, value):
+                with ThreadPoolExecutor(6) as pool:
+                    for f in [pool.submit(plan, n) for n in range(35, 41)]:
+                        f.result(timeout=300)
+                assert spark.conf.get(LISTING_THRESHOLD, None) == value
+    finally:
+        sys.setswitchinterval(interval)
+
+
+def test_table_layer_listing_and_empty_frames_come_from_two_helpers():
+    """Every parquet frame of ``table/`` over a path list is built inside
+    ``scan.read_parquet``, and no empty frame by a Python-worker job."""
+    import ast
+
+    import go_iceberg_spark.table as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    reads = []
+    for name in sorted(os.listdir(root)):
+        if not name.endswith(".py"):
+            continue
+        with open(os.path.join(root, name)) as fh:
+            src = fh.read()
+        assert "createDataFrame([]" not in src, name
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.FunctionDef) and node.name == "read_parquet":
+                helper = (name, node.lineno, node.end_lineno)
+            if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "parquet"
+                    and any(isinstance(a, ast.Starred) for a in node.args)):
+                reads.append((name, node.lineno))
+    assert reads and all(f == helper[0] and helper[1] <= line <= helper[2]
+                         for f, line in reads), (helper, reads)
+
+
+def _assert_empty(spark, df, schema):
+    """``df`` has no rows, exactly the Spark type ``schema``, and its
+    collect runs no Spark task."""
+    from go_iceberg_spark.plans import inspect as P
+
+    assert df.schema == schema
+    with P.spark_jobs(spark) as jobs:
+        assert df.collect() == []
+    assert P.stage_metrics(spark, jobs)["tasks"] == 0
+
+
+@pytest.fixture()
+def kv_table(spark, catalog):
+    from pyspark.sql import Row
+
+    from go_iceberg_spark.schema import from_spark_schema
+
+    df = spark.createDataFrame([Row(k=i, v=float(i)) for i in range(6)])
+    t = catalog.create_table("db", "kv", from_spark_schema(df.schema))
+    return t, df
+
+
+def test_empty_frame_scan_of_snapshot_skip_and_snapshotless_table(spark, kv_table):
+    from go_iceberg_spark.schema import to_spark_type
+
+    t, df = kv_table
+    _assert_empty(spark, t.scan().to_df(), to_spark_type(t.schema.struct))
+    t.append(df)
+    scan = t.scan().filter(gt("k", 10**6))
+    assert scan.plan_files() == []  # the snapshot bounds skip
+    _assert_empty(spark, scan.to_df(), to_spark_type(t.schema.struct))
+
+
+def test_empty_frame_incremental_and_changelog(spark, kv_table):
+    from pyspark.sql import types as T
+
+    from go_iceberg_spark.schema import to_spark_type
+    from go_iceberg_spark.table.incremental import changelog_scan, incremental_append_scan
+
+    t, df = kv_table
+    t.append(df)
+    s1 = t.current_snapshot().snapshot_id
+    data_t = to_spark_type(t.schema.struct)
+    _assert_empty(spark, incremental_append_scan(t, s1, s1), data_t)
+    _assert_empty(spark, changelog_scan(t, s1, s1), T.StructType([
+        *data_t.fields,
+        T.StructField("_change_type", T.StringType(), False),
+        T.StructField("_change_ordinal", T.IntegerType(), False)]))
+
+
+def test_empty_frame_upsert_into_empty_table(spark, kv_table, monkeypatch):
+    """An upsert into a table with no rows merges the source against an
+    empty target frame of the table's Spark type."""
+    import go_iceberg_spark.table.mutate as M
+
+    t, df = kv_table
+    made, real = [], M.empty_frame
+
+    def spy(spark_, schema):
+        made.append(real(spark_, schema))
+        return made[-1]
+
+    monkeypatch.setattr(M, "empty_frame", spy)
+    t.upsert(df, ["k"])
+    assert len(made) == 1
+    _assert_empty(spark, made[0], t.spark_schema())
+    assert sorted((r.k, r.v) for r in t.to_df().collect()) == [(i, float(i)) for i in range(6)]
